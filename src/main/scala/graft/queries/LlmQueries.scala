@@ -169,6 +169,11 @@ object LlmQueries {
     pinCache.values.forEach(df => { df.unpersist(); () })
     pinCache.clear()
     pinCountCache.clear()
+    Seq(lshIdxCache, ivfIdxDfCache, pqIdxDfCache).foreach { c =>
+      c.values.forEach(df => { df.unpersist(); () })
+      c.clear()
+    }
+    bpeCache.clear()
   }
 
   /** Force-build every shared derivation (tokenized corpus, shingle

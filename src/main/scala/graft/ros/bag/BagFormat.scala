@@ -321,7 +321,16 @@ object BagFormat {
   def writeBag(connections: Seq[BagConnection],
                messages: Seq[WriteMessage],
                messagesPerChunk: Int = 100,
-               compression: String = "none"): Array[Byte] = {
+               compression: String = "none"): Array[Byte] =
+    writeBagChunks(connections, messages.grouped(messagesPerChunk).toSeq, compression)
+
+  /** [[writeBag]] with explicit chunking — one entry per chunk, empty
+    * chunks included (their chunk-info times are 0, as foreign writers
+    * stamp them).
+    */
+  def writeBagChunks(connections: Seq[BagConnection],
+                     chunks: Seq[Seq[WriteMessage]],
+                     compression: String = "none"): Array[Byte] = {
     val out = new ByteArrayOutputStream()
     out.write(Magic.getBytes(StandardCharsets.UTF_8))
 
@@ -330,7 +339,7 @@ object BagFormat {
       "op" -> Array(OpBagHeader),
       "index_pos" -> le64(0L),
       "conn_count" -> le32(connections.size),
-      "chunk_count" -> le32((messages.size + messagesPerChunk - 1) / messagesPerChunk))
+      "chunk_count" -> le32(chunks.size))
     val pad = 4096 - 8 - bagHeaderFields.length
     writeRecord(out, bagHeaderFields, Array.fill(pad)(' '.toByte))
 
@@ -346,7 +355,7 @@ object BagFormat {
     }
 
     val chunkInfos = scala.collection.mutable.ArrayBuffer[(Long, (Int, Int), (Int, Int), Seq[(Int, Int)])]()
-    messages.grouped(messagesPerChunk).foreach { group =>
+    chunks.foreach { group =>
       val chunkBody = new ByteArrayOutputStream()
       connRecords.foreach { case (h, d) => writeRecord(chunkBody, h, d) }
       group.foreach { m =>
@@ -360,8 +369,9 @@ object BagFormat {
         "size" -> le32(body.length))
       val posBefore = out.size().toLong
       writeRecord(out, ch, compressChunk(compression, body))
-      val st = group.map(m => (m.timeSec, m.timeNsec)).min
-      val et = group.map(m => (m.timeSec, m.timeNsec)).max
+      val times = group.map(m => (m.timeSec, m.timeNsec))
+      val st = if (times.isEmpty) (0, 0) else times.min
+      val et = if (times.isEmpty) (0, 0) else times.max
       val perConn = group.groupBy(_.connId).view.mapValues(_.size).toSeq.sortBy(_._1)
       chunkInfos += ((posBefore, st, et, perConn))
     }

@@ -202,7 +202,7 @@ object RosbagColumnarRead {
   * nullable header stamps from the 12-byte wire prefix, the raw blob
   * by reference-free byte append.
   */
-class RosbagMetaColumnarReader(p: RosbagInputPartition, required: StructType,
+class RosbagMetaColumnarReader(p: InputPartition, required: StructType,
     filters: Array[org.apache.spark.sql.sources.Filter], limit: Int,
     batchSize: Int = 4096, batchBytes: Long = 32L << 20)
     extends PartitionReader[ColumnarBatch] {
@@ -210,74 +210,56 @@ class RosbagMetaColumnarReader(p: RosbagInputPartition, required: StructType,
   private val vectors: Array[OnHeapColumnVector] =
     OnHeapColumnVector.allocateColumns(batchSize, required)
   private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
-
-  private lazy val connHasHeader: Map[Int, Boolean] =
-    p.conns.map { case (id, c) =>
-      id -> RosbagDataSource.startsWithHeader(c.datatype, c.msgDef)
-    }
-  private val topicBytes: Map[Int, Array[Byte]] =
-    p.conns.map { case (id, c) =>
-      id -> c.topic.getBytes(java.nio.charset.StandardCharsets.UTF_8) }
-  private val datatypeBytes: Map[Int, Array[Byte]] =
-    p.conns.map { case (id, c) =>
-      id -> c.datatype.getBytes(java.nio.charset.StandardCharsets.UTF_8) }
-  private val pathBytes: Array[Byte] =
-    p.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val cur = new BagCursor(p, RosbagPartitionReader.keepFor(filters), limit)
 
   private def stamp(m: BagFormat.BagMessage, v: OnHeapColumnVector, off: Int): Unit =
-    if (connHasHeader(m.connId) && m.data.length >= 12)
+    if (cur.ctx.hasHeader(m.connId) && m.data.length >= 12)
       v.appendInt(RosbagDataSource.leInt(m.data, off))
     else v.appendNull()
+
+  private def appendBytes(v: OnHeapColumnVector, b: Array[Byte]): Unit = {
+    v.appendByteArray(b, 0, b.length); ()
+  }
 
   private val writers: Array[BagFormat.BagMessage => Unit] =
     required.fields.zipWithIndex.map { case (f, i) =>
       val v = vectors(i)
       f.name match {
-        case "bag_path" => (_: BagFormat.BagMessage) =>
-          v.appendByteArray(pathBytes, 0, pathBytes.length)
-        case "chunk_idx" => (_: BagFormat.BagMessage) => v.appendInt(p.chunkIdx)
+        case "bag_path" => (_: BagFormat.BagMessage) => appendBytes(v, cur.ctx.pathBytes)
+        case "chunk_idx" => (_: BagFormat.BagMessage) => v.appendInt(cur.part.chunkIdx)
         case "offset" => (m: BagFormat.BagMessage) => v.appendInt(m.offsetInChunk)
         case "time_sec" => (m: BagFormat.BagMessage) => v.appendInt(m.timeSec)
         case "time_nsec" => (m: BagFormat.BagMessage) => v.appendInt(m.timeNsec)
         case "size" => (m: BagFormat.BagMessage) => v.appendInt(m.data.length)
         case "connection_id" => (m: BagFormat.BagMessage) => v.appendInt(m.connId)
-        case "topic" => (m: BagFormat.BagMessage) => {
-          val b = topicBytes(m.connId); v.appendByteArray(b, 0, b.length) }
-        case "datatype" => (m: BagFormat.BagMessage) => {
-          val b = datatypeBytes(m.connId); v.appendByteArray(b, 0, b.length) }
+        case "topic" => (m: BagFormat.BagMessage) =>
+          appendBytes(v, cur.ctx.topicBytes(m.connId))
+        case "datatype" => (m: BagFormat.BagMessage) =>
+          appendBytes(v, cur.ctx.datatypeBytes(m.connId))
         case "header_stamp_sec" => (m: BagFormat.BagMessage) => stamp(m, v, 4)
         case "header_stamp_nsec" => (m: BagFormat.BagMessage) => stamp(m, v, 8)
         case "data_crc32" => (m: BagFormat.BagMessage) =>
           v.appendLong(RosbagDataSource.crc32(m.data))
-        case "data" => (m: BagFormat.BagMessage) =>
-          v.appendByteArray(m.data, 0, m.data.length)
+        case "data" => (m: BagFormat.BagMessage) => appendBytes(v, m.data)
+        case RosbagSeqno.Column => (_: BagFormat.BagMessage) => v.appendLong(cur.seqno)
       }
     }
   private val dataRequired = required.fieldNames.contains("data")
 
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    val all = BagFormat.chunkMessages(p.chunk, data).iterator
-    val filtered = all.filter { m =>
-      val conn = p.conns.getOrElse(m.connId,
-        throw new IllegalStateException(s"message references unknown connection ${m.connId}"))
-      filters.forall(f => RosbagFilters.eval(f, m, conn, p.path))
-    }
-    if (limit >= 0) filtered.take(limit) else filtered
-  }
-
   override def next(): Boolean = {
-    if (!messages.hasNext) return false
+    if (!cur.next()) return false
     var i = 0
     while (i < vectors.length) { vectors(i).reset(); i += 1 }
     var n = 0
     var bytes = 0L
-    while (n < batchSize && bytes < batchBytes && messages.hasNext) {
-      val m = messages.next()
+    var more = true
+    while (more) {
+      val m = cur.msg
       if (dataRequired) bytes += m.data.length
       var j = 0
       while (j < writers.length) { writers(j)(m); j += 1 }
       n += 1
+      more = n < batchSize && bytes < batchBytes && cur.next()
     }
     batch.setNumRows(n)
     true
@@ -289,7 +271,7 @@ class RosbagMetaColumnarReader(p: RosbagInputPartition, required: StructType,
 }
 
 /** Batch-at-a-time columnar reader for typed bag scans. */
-class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
+class RosbagTypedColumnarReader(p: InputPartition, datatype: String,
     msgDef: String, required: StructType, includeRaw: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter],
     batchSize: Int = 4096, batchBytes: Long = 32L << 20)
@@ -311,25 +293,18 @@ class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
   // the typed schema (RosbagTypedRead.typedSchema) — look them up
   // under the renamed column
   private val metaNames = Set("bag_path", "chunk_idx", "offset", "time_sec", "time_nsec",
-    "connection_id", "data")
-  private val reservedPayload = metaNames + "seqno"
+    "connection_id", "data", RosbagSeqno.Column)
   private val ops: Array[Op] =
     compile(bundle, bundle.root, prefix = "",
-      name => vec(if (reservedPayload(name)) name + "_field" else name)).toArray
+      name => vec(if (metaNames(name)) name + "_field" else name)).toArray
   // wire-walk needed at all? (meta-only scans skip the decode entirely)
   private val needsWalk: Boolean =
     required.fieldNames.exists(n => !metaNames(n))
 
-  private lazy val typeConns = p.conns.filter(_._2.datatype == datatype).keySet
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    BagFormat.chunkMessages(p.chunk, data).iterator
-      .filter(m => typeConns.contains(m.connId))
-      .filter(m => filters.forall(f => RosbagFilters.eval(f, m, p.conns(m.connId), p.path)))
-  }
+  private val cur = new BagCursor(p, RosbagTypedRead.keepFor(datatype, filters))
 
   private val bagPathV = vec("bag_path").orNull
-  private val bagPathBytes = p.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val seqnoV = vec(RosbagSeqno.Column).orNull
   private val chunkIdxV = vec("chunk_idx").orNull
   private val offsetV = vec("offset").orNull
   private val timeSecV = vec("time_sec").orNull
@@ -338,11 +313,12 @@ class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
   private val rawV = if (includeRaw) vec("data").orNull else null
 
   override def next(): Boolean = {
-    if (!messages.hasNext) return false
+    if (!cur.next()) return false
     var i = 0
     while (i < vectors.length) { vectors(i).reset(); i += 1 }
     var n = 0
     var bytes = 0L
+    var more = true
     // row AND byte budget: blob-dominated types (images) would blow the
     // ~2 GB contiguous capacity of a single child vector — and hold the
     // heap — at 4096 rows x MB-scale messages. Each batch stops at
@@ -350,11 +326,14 @@ class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
     // Meta-only scans materialize nothing from the payload, so they
     // keep full-size batches regardless of message size.
     val payloadMaterialized = needsWalk || rawV != null
-    while (n < batchSize && bytes < batchBytes && messages.hasNext) {
-      val m = messages.next()
+    while (more) {
+      val m = cur.msg
       if (payloadMaterialized) bytes += m.data.length
-      if (bagPathV != null) bagPathV.appendByteArray(bagPathBytes, 0, bagPathBytes.length)
-      if (chunkIdxV != null) chunkIdxV.appendInt(p.chunkIdx)
+      if (bagPathV != null) {
+        val b = cur.ctx.pathBytes; bagPathV.appendByteArray(b, 0, b.length)
+      }
+      if (seqnoV != null) seqnoV.appendLong(cur.seqno)
+      if (chunkIdxV != null) chunkIdxV.appendInt(cur.part.chunkIdx)
       if (offsetV != null) offsetV.appendInt(m.offsetInChunk)
       if (timeSecV != null) timeSecV.appendInt(m.timeSec)
       if (timeNsecV != null) timeNsecV.appendInt(m.timeNsec)
@@ -368,6 +347,7 @@ class RosbagTypedColumnarReader(p: RosbagInputPartition, datatype: String,
           s"decode did not consume buffer: ${buf.remaining} bytes left of ${m.data.length}")
       }
       n += 1
+      more = n < batchSize && bytes < batchBytes && cur.next()
     }
     batch.setNumRows(n)
     true

@@ -10,7 +10,6 @@ import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, Greate
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.ros.MsgDefParser
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 `rosbag` batch source — the Spark re-expression of the
   * reference's scan loop (reference rosbag2parquet.cpp:41-63): one
@@ -28,6 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    Spark re-applies all filters above);
   *  - limit: per-partition early stop (the reference's --max_mbs,
   *    main.cpp:26).
+  *
+  * Metadata column `seqno` (`df.metadataColumn("seqno")`): the message's
+  * position in the whole load's merge-time order, numbered from the
+  * chunk index inside the scan (RosbagSeqno). Selecting it plans whole
+  * overlap groups of chunks instead of single chunks.
   *
   * Usage: spark.read.format("rosbag").load(path). Connections are
   * exposed separately via `RosbagTables.connections(spark, path)`.
@@ -119,6 +123,16 @@ object RosbagDataSource {
     StructField("data_crc32", LongType, nullable = false),
     StructField("data", BinaryType, nullable = false)))
 
+  /** Dense 0-based position of the message in the load's merge-time
+    * order — the reference's seqno, numbered from the chunk index
+    * inside the scan (RosbagSeqno).
+    */
+  object SeqnoColumn extends org.apache.spark.sql.connector.catalog.MetadataColumn {
+    override def name(): String = RosbagSeqno.Column
+    override def dataType(): DataType = LongType
+    override def isNullable(): Boolean = false
+  }
+
   /** Does this connection's type start with a std_msgs/Header field?
     * (ROS convention: Header, if present, is the first field — only
     * then is the stamp at a fixed wire offset.) Memoized JVM-wide: the
@@ -159,7 +173,8 @@ object RosbagDataSource {
 class RosbagTable(path: String, datatype: Option[String] = None,
                   includeRaw: Boolean = false, md5: Option[String] = None)
     extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    with org.apache.spark.sql.connector.catalog.SupportsWrite
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   // typed reads resolve (datatype, md5 variant) -> one msg def + the
   // bags that carry it, ONCE per table (multi-bag loads with schema
   // drift pick a variant via option("md5", prefix))
@@ -175,6 +190,12 @@ class RosbagTable(path: String, datatype: Option[String] = None,
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.STREAMING_WRITE)
+  // the global seqno (RosbagSeqno), read with
+  // Dataset.metadataColumn("seqno"): never part of `SELECT *`, so every
+  // scan that does not ask for it plans and reads as before
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(RosbagDataSource.SeqnoColumn)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new RosbagScanBuilder(path, schema(), target, includeRaw)
   override def newWriteBuilder(
@@ -193,6 +214,7 @@ class RosbagScanBuilder(path: String, fullSchema: StructType,
     with SupportsPushDownAggregates {
   private var required: StructType = fullSchema
   private var pushed: Array[Filter] = Array.empty
+  private var seqnoFilters: Array[Filter] = Array.empty
   private var limit: Int = -1
   private var agg: Option[(StructType, Seq[Seq[Any]])] = None
 
@@ -212,7 +234,8 @@ class RosbagScanBuilder(path: String, fullSchema: StructType,
   override def pushAggregation(
       a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
     import graft.ros.MetadataAgg
-    if (typed.isDefined || pushed.nonEmpty || limit >= 0) return false
+    if (typed.isDefined || pushed.nonEmpty || seqnoFilters.nonEmpty || limit >= 0)
+      return false
     MetadataAgg.parse(a,
         Set("bag_path", "topic", "datatype", "connection_id"),
         Set("time_sec")) match {
@@ -277,6 +300,9 @@ class RosbagScanBuilder(path: String, fullSchema: StructType,
       else RosbagFilters.supported
     val (supported, residual) = filters.partition(pushable)
     pushed = supported
+    // seqno bounds prune whole overlap groups at planning (never
+    // evaluated per row: Spark re-applies them above the scan)
+    seqnoFilters = filters.filter(RosbagSeqno.isSeqnoFilter)
     residual ++ supported // conservatively keep all as residual upstream
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -286,7 +312,8 @@ class RosbagScanBuilder(path: String, fullSchema: StructType,
   override def build(): Scan = agg match {
     case Some((sch, rows)) =>
       new graft.ros.MetadataAggScan(sch, rows, s"rosbag $path")
-    case None => new RosbagScan(path, required, pushed, limit, typed, includeRaw)
+    case None => new RosbagScan(path, required, pushed, limit, typed, includeRaw,
+      seqnoFilters)
   }
 }
 
@@ -397,11 +424,13 @@ final case class RosbagInputPartition(path: String, chunkIdx: Int,
   extends InputPartition
 
 class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limit: Int,
-    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false)
+    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false,
+    seqnoFilters: Array[Filter] = Array.empty)
     extends Scan with Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   override def readSchema(): StructType = required
+  private val numbered = required.fieldNames.contains(RosbagSeqno.Column)
 
   // Runtime (DPP-style) filters from joins against selective
   // dimensions (RosbagTables.connections, a fleet manifest):
@@ -443,6 +472,8 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    if (numbered) throw new UnsupportedOperationException(
+      "the seqno metadata column numbers a whole batch load; streams cannot select it")
     // a single existing FILE is tailed as one growing bag; a directory
     // or glob streams as a fleet-ingest archive — new bags AND new
     // chunks of known bags are picked up per trigger
@@ -485,15 +516,34 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
         index.chunks.zipWithIndex
           .filter { case (c, _) => filters.forall(f => RosbagFilters.chunkMayMatch(f, c)) }
           .map { case (c, i) =>
-            (RosbagInputPartition(bag, i, c, conns): InputPartition,
-              c.uncompressedSize.toLong)
+            (RosbagInputPartition(bag, i, c, conns), c.uncompressedSize.toLong)
           }
       }
     // rosbag1's DEFAULT chunk threshold is 768 KB — one task per
     // chunk plans millions of partitions on a real fleet; pack
     // consecutive chunks to Spark's file-split budget (see
     // graft.ros.PartitionPacking); pruning above ran per chunk
-    graft.ros.PartitionPacking.packPartitions(perChunk)
+    graft.ros.PartitionPacking.packPartitions(
+      if (numbered) seqnoGroups(perChunk.map(_._1))
+      else perChunk.map { case (p, n) => (p: InputPartition, n) })
+  }
+
+  /** A numbered scan reads whole overlap groups of the WHOLE load —
+    * whatever datatype, md5 or filters narrow its output — so each
+    * message's rank counts every message of its group. Groups with no
+    * chunk this scan emits, or outside its seqno bounds, drop.
+    */
+  private def seqnoGroups(emitted: Seq[RosbagInputPartition]): Seq[(InputPartition, Long)] = {
+    val byChunk = emitted.map(p => (p.path, p.chunkIdx) -> p).toMap
+    RosbagSeqno.scanGroups(RosbagIO.scanIndexes(RosbagIO.resolveBags(path)))
+      .filter(g => seqnoFilters.forall(RosbagSeqno.groupMayMatch(_, g)) &&
+        g.chunks.exists(c => byChunk.contains((c._1, c._2))))
+      .map { g =>
+        val parts = RosbagSeqno.tieBreakOrder(g.chunks).map { case (b, i, c) =>
+          byChunk.getOrElse((b, i), RosbagInputPartition(b, i, c, Map.empty)) }
+        (RosbagSeqnoPartition(g.base, parts.toArray,
+          parts.map(p => byChunk.contains((p.path, p.chunkIdx))).toArray), g.bytes)
+      }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = typed match {
@@ -503,7 +553,8 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
 
   override def description(): String =
     s"rosbag $path${typed.map(t => s" typed=${t.datatype}").getOrElse("")}, " +
-      s"pushedFilters=[${filters.mkString(", ")}], limit=$limit"
+      s"pushedFilters=[${filters.mkString(", ")}], limit=$limit" +
+      (if (numbered) ", seqno" else "")
 }
 
 class RosbagReaderFactory(required: StructType, filters: Array[Filter], limit: Int)
@@ -512,8 +563,7 @@ class RosbagReaderFactory(required: StructType, filters: Array[Filter], limit: I
     partition match {
       case p: graft.ros.PackedPartition =>
         graft.ros.ConcatPartitionReader.rows(p, createReader)
-      case p => new RosbagPartitionReader(p.asInstanceOf[RosbagInputPartition],
-        required, filters, limit)
+      case p => new RosbagPartitionReader(p, required, filters, limit)
     }
 
   // every spine column vectorizes (ints / interned strings / nullable
@@ -525,66 +575,56 @@ class RosbagReaderFactory(required: StructType, filters: Array[Filter], limit: I
     partition match {
       case p: graft.ros.PackedPartition =>
         graft.ros.ConcatPartitionReader.batches(p, createColumnarReader)
-      case p => new RosbagMetaColumnarReader(
-        p.asInstanceOf[RosbagInputPartition], required, filters, limit)
+      case p => new RosbagMetaColumnarReader(p, required, filters, limit)
     }
 }
 
-class RosbagPartitionReader(p: RosbagInputPartition, required: StructType,
+object RosbagPartitionReader {
+  /** The spine scan's row filter for one chunk: every message must
+    * reference a catalogued connection; pushed filters drop rows before
+    * any column is built.
+    */
+  def keepFor(filters: Array[Filter])(c: RosbagInputPartition)
+      : BagFormat.BagMessage => Boolean = { m =>
+    val conn = c.conns.getOrElse(m.connId,
+      throw new IllegalStateException(s"message references unknown connection ${m.connId}"))
+    filters.forall(f => RosbagFilters.eval(f, m, conn, c.path))
+  }
+}
+
+class RosbagPartitionReader(p: InputPartition, required: StructType,
     filters: Array[Filter], limit: Int) extends PartitionReader[InternalRow] {
 
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    val all = BagFormat.chunkMessages(p.chunk, data).iterator
-    val filtered = all.filter { m =>
-      val conn = p.conns.getOrElse(m.connId,
-        throw new IllegalStateException(s"message references unknown connection ${m.connId}"))
-      filters.forall(f => RosbagFilters.eval(f, m, conn, p.path))
-    }
-    if (limit >= 0) filtered.take(limit) else filtered
-  }
-  private var current: BagFormat.BagMessage = _
-
-  // per-connection "first field is a Header" memo (startsWithHeader is
-  // itself JVM-memoized; this map is just the per-connId view)
-  private lazy val connHasHeader: Map[Int, Boolean] =
-    p.conns.map { case (id, c) =>
-      id -> RosbagDataSource.startsWithHeader(c.datatype, c.msgDef)
-    }
+  private val cur = new BagCursor(p, RosbagPartitionReader.keepFor(filters), limit)
 
   private def headerStamp(nsec: Boolean): Any =
-    if (connHasHeader(current.connId) && current.data.length >= 12)
-      RosbagDataSource.leInt(current.data, if (nsec) 8 else 4)
+    if (cur.ctx.hasHeader(cur.msg.connId) && cur.msg.data.length >= 12)
+      RosbagDataSource.leInt(cur.msg.data, if (nsec) 8 else 4)
     else null
 
-  override def next(): Boolean =
-    if (messages.hasNext) { current = messages.next(); true } else false
+  override def next(): Boolean = cur.next()
 
   // The projection compiles ONCE per reader into an extractor array —
   // no per-row per-field name dispatch, no Seq allocation. UTF8 topic/
   // datatype strings are interned per connection, not re-encoded per
   // row. This is the spine-scan hot path: every ETL meta pass and every
   // query-in-place meta projection runs through here.
-  private val topicUtf8: Map[Int, UTF8String] =
-    p.conns.map { case (id, c) => id -> UTF8String.fromString(c.topic) }
-  private val datatypeUtf8: Map[Int, UTF8String] =
-    p.conns.map { case (id, c) => id -> UTF8String.fromString(c.datatype) }
-  private val pathUtf8: UTF8String = UTF8String.fromString(p.path)
   private val extractors: Array[() => Any] = required.fields.map { f =>
     f.name match {
-      case "bag_path" => () => pathUtf8
-      case "chunk_idx" => () => p.chunkIdx
-      case "offset" => () => current.offsetInChunk
-      case "time_sec" => () => current.timeSec
-      case "time_nsec" => () => current.timeNsec
-      case "size" => () => current.data.length
-      case "connection_id" => () => current.connId
-      case "topic" => () => topicUtf8(current.connId)
-      case "datatype" => () => datatypeUtf8(current.connId)
+      case "bag_path" => () => cur.ctx.pathUtf8
+      case "chunk_idx" => () => cur.part.chunkIdx
+      case "offset" => () => cur.msg.offsetInChunk
+      case "time_sec" => () => cur.msg.timeSec
+      case "time_nsec" => () => cur.msg.timeNsec
+      case "size" => () => cur.msg.data.length
+      case "connection_id" => () => cur.msg.connId
+      case "topic" => () => cur.ctx.topicUtf8(cur.msg.connId)
+      case "datatype" => () => cur.ctx.datatypeUtf8(cur.msg.connId)
       case "header_stamp_sec" => () => headerStamp(nsec = false)
       case "header_stamp_nsec" => () => headerStamp(nsec = true)
-      case "data_crc32" => () => RosbagDataSource.crc32(current.data)
-      case "data" => () => current.data
+      case "data_crc32" => () => RosbagDataSource.crc32(cur.msg.data)
+      case "data" => () => cur.msg.data
+      case RosbagSeqno.Column => () => cur.seqno
     }
   }
 

@@ -68,6 +68,17 @@ object RosbagTypedRead {
     TypedTarget(datatype, vs.head._2, m, vs.map(_._3).distinct)
   }
 
+  /** The typed scan's row filter for one chunk: messages of this
+    * datatype's connections that pass the pushed meta filters — skipped
+    * before any decode cost.
+    */
+  def keepFor(datatype: String, filters: Array[org.apache.spark.sql.sources.Filter])(
+      c: RosbagInputPartition): BagFormat.BagMessage => Boolean = {
+    val typeConns = c.conns.filter(_._2.datatype == datatype).keySet
+    m => typeConns.contains(m.connId) &&
+      filters.forall(f => RosbagFilters.eval(f, m, c.conns(m.connId), c.path))
+  }
+
   def bundleFor(path: String, datatype: String): RosMsgBundle = {
     val t = resolveTarget(path, datatype, None)
     MsgDefParser.parse(datatype, t.msgDef)
@@ -101,8 +112,7 @@ class RosbagTypedReaderFactory(datatype: String, msgDef: String,
     partition match {
       case p: graft.ros.PackedPartition =>
         graft.ros.ConcatPartitionReader.rows(p, createReader)
-      case p => new RosbagTypedPartitionReader(
-        p.asInstanceOf[RosbagInputPartition], datatype, msgDef, required,
+      case p => new RosbagTypedPartitionReader(p, datatype, msgDef, required,
         includeRaw, filters)
     }
 
@@ -118,13 +128,12 @@ class RosbagTypedReaderFactory(datatype: String, msgDef: String,
     partition match {
       case p: graft.ros.PackedPartition =>
         graft.ros.ConcatPartitionReader.batches(p, createColumnarReader)
-      case p => new RosbagTypedColumnarReader(
-        p.asInstanceOf[RosbagInputPartition], datatype, msgDef, required,
+      case p => new RosbagTypedColumnarReader(p, datatype, msgDef, required,
         includeRaw, filters)
     }
 }
 
-class RosbagTypedPartitionReader(p: RosbagInputPartition, datatype: String,
+class RosbagTypedPartitionReader(p: InputPartition, datatype: String,
     msgDef: String, required: StructType, includeRaw: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter])
     extends PartitionReader[InternalRow] {
@@ -132,23 +141,12 @@ class RosbagTypedPartitionReader(p: RosbagInputPartition, datatype: String,
 
   private lazy val bundle = MsgDefParser.parse(datatype, msgDef)
   private lazy val fullSchema = typedSchema(bundle, includeRaw)
-  // index of each required column in the full typed row
-  private lazy val projection: Array[Int] =
-    required.fields.map(f => fullSchema.fieldIndex(f.name))
-  private lazy val typeConns = p.conns.filter(_._2.datatype == datatype).keySet
+  // index of each required column in the full typed row; -1 = seqno
+  private lazy val projection: Array[Int] = required.fields.map(f =>
+    if (f.name == RosbagSeqno.Column) -1 else fullSchema.fieldIndex(f.name))
+  private val cur = new BagCursor(p, keepFor(datatype, filters))
 
-  private lazy val messages: Iterator[BagFormat.BagMessage] = {
-    val data = RosbagIO.readChunkData(p.path, p.chunk)
-    BagFormat.chunkMessages(p.chunk, data).iterator
-      .filter(m => typeConns.contains(m.connId))
-      // pushed meta filters skip whole messages BEFORE the decode cost
-      .filter(m => filters.forall(f => RosbagFilters.eval(f, m, p.conns(m.connId), p.path)))
-  }
-  private var current: BagFormat.BagMessage = _
-  private val pathUtf8 = UTF8String.fromString(p.path)
-
-  override def next(): Boolean =
-    if (messages.hasNext) { current = messages.next(); true } else false
+  override def next(): Boolean = cur.next()
 
   // column pruning: decode the payload only when a payload column is
   // actually required (meta-only scans — counts, time filters — keep
@@ -158,10 +156,11 @@ class RosbagTypedPartitionReader(p: RosbagInputPartition, datatype: String,
       !(includeRaw && i == fullSchema.size - 1))
 
   override def get(): InternalRow = {
+    val current = cur.msg
     val nFields = fullSchema.size
     val full = new Array[Any](nFields)
-    full(0) = pathUtf8
-    full(1) = p.chunkIdx; full(2) = current.offsetInChunk
+    full(0) = cur.ctx.pathUtf8
+    full(1) = cur.part.chunkIdx; full(2) = current.offsetInChunk
     full(3) = current.timeSec; full(4) = current.timeNsec; full(5) = current.connId
     if (includeRaw) full(nFields - 1) = current.data
     if (needsPayload) {
@@ -171,7 +170,7 @@ class RosbagTypedPartitionReader(p: RosbagInputPartition, datatype: String,
       while (it.hasNext) { full(MetaFields.size + i) = it.next(); i += 1 }
     }
     InternalRow.fromSeq(projection.toSeq.map { i =>
-      toCatalyst(full(i), fullSchema.fields(i).dataType)
+      if (i < 0) cur.seqno else toCatalyst(full(i), fullSchema.fields(i).dataType)
     })
   }
 

@@ -1,6 +1,6 @@
 package graft.ros.etl
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.Seqno
@@ -12,13 +12,22 @@ import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
   * and write `Messages`, `Connections` and one flattened parquet table
   * per datatype (snappy, like TableBuffer.cpp:49-51).
   *
-  * Scale shape: the bag scan parallelizes per chunk; seqno is the
-  * prefix-sum operator (no single-partition stage); each per-type table
-  * is a filter + mapPartitions decode of only that type's rows (the
-  * reference's route-by-type, FlattenedRosWriter.cpp:273-289, becomes
-  * predicate pushdown into the source); Connections is driver-side tiny.
+  * Scale shape: the bag scan parallelizes per overlap group of chunks
+  * and numbers the seqno itself from the chunk index (the source's
+  * `seqno` metadata column, graft.ros.bag.RosbagSeqno) — no shuffle, no
+  * staging, no join. Each table is one scan job, all of them concurrent:
+  * Messages from the meta-only scan, each per-type table from a typed
+  * scan that decodes only that type's rows (the reference's
+  * route-by-type, FlattenedRosWriter.cpp:273-289, becomes predicate
+  * pushdown into the source); Connections is driver-side tiny and lands
+  * last. Loads the index cannot number cheaply (a chunk without
+  * chunk-info, or a multi-chunk overlap group over the partition byte
+  * budget) stage the spine and number it with the Seqno range-shuffle
+  * operator instead, then join each table to a seqno map.
   */
 object BagEtl {
+  private val logger = org.slf4j.LoggerFactory.getLogger(BagEtl.getClass)
+
   /** The reference's `info` result (rosbag2parquet.h:6-10) plus the
     * per-file checksum of reference TODO rosbag2parquet.cpp:28 ("and
     * while we are at it: per file crc"): `crcXor` is the bit-xor of all
@@ -43,7 +52,8 @@ object BagEtl {
 
   /** Run the conversion; returns the reference's `info` result
     * (rosbag2parquet.h:6-10). `maxMessages` mirrors --max_mbs's
-    * test-scope-limiting role (main.cpp:26) with row granularity.
+    * test-scope-limiting role (main.cpp:26) with row granularity: every
+    * table keeps the first n messages in merge-time order (seqno < n).
     */
   /** @param keepRawBlob retain the raw serialized `data` column on
     *        per-type tables (reference README.md:106 "you don't lose
@@ -62,18 +72,18 @@ object BagEtl {
     *        table joins back on seqno when they do. Requires
     *        keepRawBlob (no blob column to externalize otherwise).
     * @param stagedByType single-pass mode: ONE scan of the bag writes
-    *        (spine meta, datatype, raw bytes) to a parquet staging
-    *        table partitioned by datatype; the spine reads just its
-    *        meta columns back (parquet column pruning skips the blob
-    *        pages) and each per-type table decodes only its own
+    *        (seqno, spine meta, datatype, raw bytes) to a parquet
+    *        staging table partitioned by datatype; Messages reads just
+    *        its meta columns back (parquet column pruning skips the
+    *        blob pages) and each per-type table decodes only its own
     *        partition's bytes. Every bag chunk is read — and, for
     *        bz2/lz4 bags, decompressed — exactly ONCE for the whole
     *        ETL: the reference's serial read-once economics
     *        (rosbag2parquet.cpp:41-63) at cluster parallelism. Costs
-    *        one extra write of the payload bytes, so it wins when the
-    *        bag has many datatypes or compressed chunks; the default
-    *        per-type re-scan wins for small uncompressed bags with
-    *        one or two types.
+    *        one extra write and read of the payload bytes, so it wins
+    *        when the bag has many datatypes or large compressed
+    *        chunks; the default per-table scans win for bags with few
+    *        types.
     */
   /** @param nativeTimestamp additionally emit `time` as a parquet
     *        TIMESTAMP (micros, NTZ) derived from time_sec/time_nsec
@@ -607,16 +617,7 @@ object BagEtl {
     // naming this increment's files, so repairCrashedIncrement can
     // purge its debris from footer metadata alone.
     writeCommitRecord(out, seqnoOffset - 1, bags)
-    // opt-in phase timing for throughput work (GRAFT_ETL_TIMING=1)
-    val timing = sys.env.contains("GRAFT_ETL_TIMING")
-    var tLast = System.nanoTime()
-    def lap(phase: String): Unit = if (timing) {
-      val now = System.nanoTime()
-      System.err.println(f"[etl-timing] $phase%-22s ${(now - tLast) / 1e9}%6.2fs")
-      tLast = now
-    }
     val indexes = graft.ros.bag.RosbagIO.scanIndexes(bags)
-    lap("scanIndex")
 
     // Connections dimension (reference FlattenedRosWriter.cpp:209-224),
     // keyed (bag_path, connection_id) — connection ids are per-bag.
@@ -657,211 +658,218 @@ object BagEtl {
       }
     }
 
+    // Global seqno in merge-time order with storage-order tie-break —
+    // rosbag::View semantics (reference rosbag2parquet.cpp:45-52; seqno
+    // FlattenedRosWriter.cpp:195,256), bag_path breaking equal-time ties
+    // across bags. Numbered inside the scan from the chunk index
+    // (RosbagSeqno) whenever the index can do it cheaply; otherwise the
+    // spine is staged and numbered by the Seqno range-shuffle operator.
+    val numbering = graft.ros.bag.RosbagSeqno.cheapGroups(indexes)
+    logger.info(numbering.fold(
+      why => s"seqno: staged spine + Seqno.globalSeqno, because $why",
+      gs => s"seqno: numbered in the scan from the chunk index (${gs.size} overlap groups)"))
+    val indexed = numbering.isRight
+    // maxMessages keeps the first n messages in merge-time order;
+    // incremental appends continue the dense seqno after the existing max
+    def kept(seqno: Column): Column = maxMessages.fold(lit(true))(n => seqno < n)
+    def numberedFrom(df: DataFrame, seqno: Column, cols: Seq[Column]): DataFrame =
+      df.select(seqno.as("seqno") +: cols: _*).filter(kept(col("seqno")))
+        .withColumn("seqno", col("seqno") + lit(seqnoOffset))
+    val bagsOpt = graft.ros.bag.RosbagDataSource.bagsSpec(bags)
     // ONE scan relation over the whole bag list (the "bags" option) —
     // not an N-way union, which bloats the analyzer at fleet scale
-    val raw0 = spark.read.format("rosbag")
-      .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(bags)).load()
-    val raw = maxMessages.map(n => raw0.limit(n.toInt).toDF()).getOrElse(raw0)
+    def scan(typed: Option[(String, String)]): DataFrame = {
+      val r = spark.read.format("rosbag").option("bags", bagsOpt)
+      typed.fold(r)(t => r.option("datatype", t._1).option("md5", t._2)
+        .option("includeRaw", keepRawBlob.toString)).load()
+    }
+    // `cols` of a scan, led by the seqno it numbers
+    def numbered(df: DataFrame, cols: Seq[Column]): DataFrame =
+      numberedFrom(df, df.metadataColumn(graft.ros.bag.RosbagSeqno.Column), cols)
 
-    // Stage the spine meta to parquet BEFORE the seqno operator. The
-    // range-partition seqno needs two passes over its input (bound
-    // sampling + shuffle write); run those against a kilobytes-per-
-    // million-rows parquet staging table instead of the bag source, so
-    // every bag chunk is read (and decompressed) exactly ONCE for the
-    // spine. Meta-only projection: the source's column pruning skips
-    // payload decode entirely. In stagedByType mode the same single
-    // pass ALSO stages the raw bytes partitioned by datatype — the
-    // only bag scan of the whole ETL.
-    val stageDir = s"$out/_spine"
     val metaCols = Seq(col("bag_path"), col("chunk_idx"), col("offset"), col("time_sec"),
       col("time_nsec"), col("size"), col("connection_id"),
       col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
-    // staging dirs are scratch: Overwrite, so a hard crash that never
-    // reached the cleanup cannot fail the redo with "path exists"
-    if (stagedByType)
-      raw.select(metaCols :+ col("datatype") :+ col("data"): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy("datatype")
-        .option("compression", "snappy").parquet(stageDir)
-    else
-      raw.select(metaCols: _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "snappy").parquet(stageDir)
-    lap("spine-stage-write")
-
-    // Global seqno in merge-time order with storage-order tie-break —
-    // rosbag::View semantics (reference rosbag2parquet.cpp:45-52;
-    // seqno FlattenedRosWriter.cpp:195,256). The meta select prunes
-    // the staged blob pages out of the read in stagedByType mode.
-    // bag_path in the tie-break: rosbag::View merge-time order within a
-    // bag, deterministic (name-sorted) interleave across equal-time
-    // rows from different bags.
-    val spine0 = Seqno.globalSeqno(
-      spark.read.parquet(stageDir).select(metaCols: _*),
-      Seq(col("time_sec"), col("time_nsec"), col("bag_path"), col("chunk_idx"), col("offset")))
-    // incremental appends continue the dense seqno after the existing
-    // table's maximum
-    val spine = if (seqnoOffset == 0L) spine0
-      else spine0.withColumn("seqno", col("seqno") + lit(seqnoOffset))
-
-    // Messages fact table (reference FlattenedRosWriter.cpp:49-87), plus
-    // the sensor-time header stamp (nullable; reference TODO
-    // rosbag2parquet.cpp:28-30) read in the source from the wire prefix.
-    val messages0 = spine.select(
-      col("seqno"), col("bag_path"), col("time_sec"), col("time_nsec"), col("size"),
-      col("connection_id"),
-      col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
-    val messages = if (nativeTimestamp)
-      // floor-to-micros. Built with pure NTZ arithmetic (timestampadd on
-      // an NTZ epoch literal): a timestamp_micros→NTZ cast would render
-      // the instant in the WRITER's session timezone and shift the
-      // stored value for any non-UTC session — this form is
-      // timezone-independent by construction.
-      messages0.withColumn("time",
-        expr("timestampadd(MICROSECOND, " +
-          "cast(time_sec as bigint) * 1000000 + time_nsec div 1000, " +
-          "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
-    else messages0
+    val identity = Seq("bag_path", "chunk_idx", "offset")
+    // scratch dirs, Overwrite: a hard crash that never reached the
+    // cleanup cannot fail the redo with "path exists"
+    val stageDir = s"$out/${if (indexed) "_bytype" else "_spine"}"
+    val seqnoDir = s"$out/_seqno"
+    def stage(df: DataFrame, dir: String, byType: Boolean): Unit = {
+      val w = df.write.mode(SaveMode.Overwrite)
+      (if (byType) w.partitionBy("datatype") else w)
+        .option("compression", "snappy").parquet(dir)
+    }
 
     val writeMode = if (append) SaveMode.Append else SaveMode.ErrorIfExists
+    val ddl = new StringBuilder
+    val info = org.apache.spark.sql.Observation(s"etl-info-${java.util.UUID.randomUUID()}")
+    try {
+      // stagedByType: ONE bag scan stages (meta, datatype, raw bytes)
+      // partitioned by datatype; Messages prunes to the meta columns
+      // and each per-type table decodes only its own partition
+      if (stagedByType)
+        stage(if (indexed) numbered(scan(None), metaCols :+ col("datatype") :+ col("data"))
+          else scan(None).select(metaCols :+ col("datatype") :+ col("data"): _*),
+          stageDir, byType = true)
+      // fallback: the range-partition seqno needs two passes over its
+      // input (bound sampling + shuffle write); run them against a
+      // meta-only parquet staging of the spine, not the bag, and hand the
+      // per-type tables a (bag_path, chunk_idx, offset) -> seqno map so
+      // the blobs never ride the shuffle
+      val spine: Option[DataFrame] = if (indexed) None else {
+        if (!stagedByType) stage(scan(None).select(metaCols: _*), stageDir, byType = false)
+        val s = Seqno.globalSeqno(spark.read.parquet(stageDir).select(metaCols: _*),
+          Seq(col("time_sec"), col("time_nsec"), col("bag_path"), col("chunk_idx"), col("offset")))
+        val numberedSpine = numberedFrom(s, col("seqno"), metaCols)
+        stage(numberedSpine.select((col("seqno") +: identity.map(col)): _*),
+          seqnoDir, byType = false)
+        Some(numberedSpine)
+      }
+      def seqnoMap = spark.read.parquet(seqnoDir)
 
-    // Seqno map: (chunk_idx, offset) -> seqno, ints only — the blobs
-    // never ride a seqno shuffle. Each per-type table is a TYPED
-    // source read (decode happens inside the PartitionReader as
-    // InternalRows — no Row/encoder boxing) joined to the seqno map on
-    // the stable storage identity. The reference's route-by-type
-    // dispatch (FlattenedRosWriter.cpp:273-289) is the datatype option
-    // pushed into the source.
-    val seqnoDir = s"$out/_seqno"
-    spine.select(col("bag_path"), col("chunk_idx"), col("offset"), col("seqno"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy").parquet(seqnoDir)
-    lap("seqno-map-write")
-    val seqnoMap = spark.read.parquet(seqnoDir)
+      // Messages fact table (reference FlattenedRosWriter.cpp:49-87), plus
+      // the sensor-time header stamp (nullable; reference TODO
+      // rosbag2parquet.cpp:28-30) read in the source from the wire prefix
+      val msgCols = Seq(col("seqno"), col("bag_path"), col("time_sec"), col("time_nsec"),
+        col("size"), col("connection_id"), col("header_stamp_sec"),
+        col("header_stamp_nsec"), col("data_crc32"))
+      val messages0 = spine.getOrElse(
+        if (stagedByType) spark.read.parquet(stageDir) else numbered(scan(None), metaCols)
+      ).select(msgCols: _*)
+      val messages1 = if (nativeTimestamp)
+        // floor-to-micros. Built with pure NTZ arithmetic (timestampadd on
+        // an NTZ epoch literal): a timestamp_micros→NTZ cast would render
+        // the instant in the WRITER's session timezone and shift the
+        // stored value for any non-UTC session — this form is
+        // timezone-independent by construction.
+        messages0.withColumn("time",
+          expr("timestampadd(MICROSECOND, " +
+            "cast(time_sec as bigint) * 1000000 + time_nsec div 1000, " +
+            "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
+      else messages0
+      // Info and the commit record's new max come from the write itself
+      val messages = messages1.observe(info, count(lit(1)).as("n"),
+        coalesce(sum(col("size").cast("long")), lit(0L)).as("bytes"),
+        coalesce(expr("bit_xor(data_crc32)"), lit(0L)).as("crc"),
+        max(col("seqno")).as("last"))
 
-    // one table per DATATYPE (two same-type connections may carry
-    // textually different but md5-equal definition strings). The
-    // per-type jobs are independent (distinct output dirs, shared
-    // read-only seqno map), so they run CONCURRENTLY: Spark's scheduler
-    // interleaves their stages, overlapping one job's write/commit
-    // stalls with another's scan — on a cluster this keeps executors
-    // busy across the per-type tail. DDL is collected per type and
-    // appended in the original datatype order for deterministic output.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // one job group for all per-type jobs: on any failure the siblings
-    // are cancelled instead of racing caller teardown (job groups are
-    // thread-local, so each future sets it)
-    val jobGroup = s"graft-etl-${java.util.UUID.randomUUID()}"
-    val typeDdl = typeGroups.map { case (datatype, md5, groupMsgDef, groupBags, tableName) =>
-      Future { scala.concurrent.blocking {   // blocking{}: Spark actions
-        // park threads — without it the global EC caps concurrency at
-        // CPU count and starves other users of the pool
-        spark.sparkContext.setJobGroup(jobGroup, s"per-type $tableName",
-          interruptOnCancel = true)
-        try {
-        val tTable = System.nanoTime()
-        val ddl = new StringBuilder
-        // `joined`: the per-type frame. `rawForSide`: a lineage for the
-        // side-table write that does NOT pay the payload decode. In scan
-        // mode Catalyst pruning on the typed source gives that for free
-        // (the side write prunes to seqno+data, skipping the wire walk);
-        // in staged mode decodeRows goes through an RDD that is opaque
-        // to pruning, so the side table reads the staged bytes directly.
-        val (joined, rawForSide) = if (stagedByType) {
+      // One table per (datatype, md5) variant. `joined`: the per-type
+      // frame. `rawForSide`: a lineage for the side-table write that
+      // does NOT pay the payload decode. In scan mode Catalyst pruning on
+      // the typed source gives that for free (the side write prunes to
+      // seqno+data, skipping the wire walk); in staged mode decodeRows
+      // goes through an RDD that is opaque to pruning, so the side table
+      // reads the staged bytes directly.
+      def typeFrames(datatype: String, md5: String, groupMsgDef: String,
+          groupBags: Seq[String]): (DataFrame, DataFrame) =
+        if (stagedByType) {
           // decode this variant's bytes from its staging partition — the
           // bags themselves are never re-read. bag_path narrows to the
           // bags carrying THIS md5 variant (within a bag the md5 is
           // unique per datatype, so bag_path fully disambiguates).
-          val bundle = MsgDefParser.parse(datatype, groupMsgDef)
-          val part = spark.read.parquet(stageDir)
+          val staged = spark.read.parquet(stageDir)
             .filter(col("datatype") === datatype && col("bag_path").isin(groupBags: _*))
-            .join(seqnoMap, Seq("bag_path", "chunk_idx", "offset"))
+          val part = (if (indexed) staged else staged.join(seqnoMap, identity))
             .select(col("seqno"), col("connection_id"), col("bag_path"), col("data"))
-          val decoded = decodeRows(spark, part, bundle)
+          val decoded = decodeRows(spark, part, MsgDefParser.parse(datatype, groupMsgDef))
           (if (keepRawBlob) decoded else decoded.drop("data"), part)
         } else {
-          val typed = spark.read.format("rosbag")
-            .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(groupBags))
-            .option("datatype", datatype).option("md5", md5)
-            .option("includeRaw", keepRawBlob.toString)
-            .load()
+          // a TYPED source read: decode happens inside the PartitionReader
+          // as InternalRows; the reference's route-by-type dispatch
+          // (FlattenedRosWriter.cpp:273-289) is the datatype option
+          // pushed into the source
+          val typed = scan(Some((datatype, md5)))
           val payload = typed.columns.filterNot(Set(
             "bag_path", "chunk_idx", "offset", "time_sec", "time_nsec",
-            "connection_id", "data"))
-          val frame = col("seqno") +: payload.map(col).toSeq :+
-            col("connection_id") :+ col("bag_path")
-          val j = typed
-            .join(seqnoMap, Seq("bag_path", "chunk_idx", "offset"))
-            .select((if (keepRawBlob) frame :+ col("data") else frame): _*)
+            "connection_id", "data")).map(col).toSeq
+          val frame = payload :+ col("connection_id") :+ col("bag_path")
+          val cols = if (keepRawBlob) frame :+ col("data") else frame
+          val j =
+            if (indexed) numbered(typed, cols)
+            else typed.join(seqnoMap, identity).select(col("seqno") +: cols: _*)
           (j, j)
         }
-        val df =
-          if (blobSideTable) {
-            val (slim, sideFromJoined) = graft.multimodal.MultimodalOps
-              .externalizeBlobs(joined, "data", "seqno", blobThreshold)
-            // scan mode: the returned side prunes to seqno+data through
-            // the typed source (no payload decode). Staged mode: decode
-            // is RDD-opaque to pruning, so build the side from the
-            // staged bytes — same isBigBlob cutoff, different lineage.
-            val side =
-              if (stagedByType) rawForSide
-                .filter(graft.multimodal.MultimodalOps.isBigBlob(col("data"), blobThreshold))
-                .select(col("seqno"), col("data"))
-              else sideFromJoined
-            val sideNew = !append || !tableExists(s"$out/${tableName}_blobs.parquet")
-            side.write.mode(writeMode)
-              .option("compression", "snappy")
-              .parquet(s"$out/${tableName}_blobs.parquet")
-            if (sideNew)
-              ddl ++= VerticaDdl.createTable(tableName + "_blobs", side.schema) ++= "\n"
-            slim
-          } else joined
-        // DDL describes tables, not rows: appends to an existing table
-        // must not re-emit its CREATE statement
-        val tableNew = !append || !tableExists(s"$out/$tableName.parquet")
-        df.write.mode(writeMode)
-          .option("compression", "snappy").parquet(s"$out/$tableName.parquet")
-        if (tableNew)
-          ddl ++= VerticaDdl.createTable(tableName, df.schema) ++= "\n"
-        // per-table wall time is measured locally (the shared lap()
-        // deltas would be garbage under concurrency)
-        if (timing) System.err.println(
-          f"[etl-timing] table:$tableName%-16s ${(System.nanoTime() - tTable) / 1e9}%6.2fs")
-        ddl.toString
-        // pooled EC thread: clear the thread-local group so later Spark
-        // work on this thread isn't attributed to a dead ETL group with
-        // interruptOnCancel it never asked for
-        } finally spark.sparkContext.clearJobGroup()
-    } } }
-    val ddl = new StringBuilder
-    try {
-      Await.result(Future.sequence(typeDdl), Duration.Inf).foreach(ddl ++= _)
-      // Connections (written last, below) is the increment's COMMIT
-      // RECORD: runIncremental derives its done-set from
-      // Connections.bag_path alone, so it must land only AFTER every
-      // other write succeeded — Messages included — and a crash mid-
-      // increment (even between the Messages and Connections writes)
-      // leaves the work unrecorded and the next increment redoes those
-      // bags. (The redo can duplicate Messages/per-type rows the
-      // crashed attempt had already appended; they carry the same
-      // (bag_path, chunk_idx-derived seqno) identity, so dropDuplicates
-      // recovers — the alternative ordering loses rows SILENTLY, which
-      // is not recoverable.) Written inside the try: the lineage reads
-      // the staging dirs the finally deletes.
-      messages.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Messages.parquet")
-      lap("messages-write")
+
+      // The table writes are independent (distinct output dirs), so they
+      // run CONCURRENTLY: Spark's scheduler interleaves their stages,
+      // overlapping one job's write/commit stalls with another's scan.
+      // DDL is collected per table and appended in datatype order, for
+      // deterministic output.
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      implicit val ec: ExecutionContext = ExecutionContext.global
+      // one job group for all table jobs: on any failure the siblings
+      // are cancelled instead of racing caller teardown (job groups are
+      // thread-local, so each future sets it)
+      val jobGroup = s"graft-etl-${java.util.UUID.randomUUID()}"
+      def inGroup(desc: String)(body: => String): Future[String] =
+        Future { scala.concurrent.blocking {   // blocking{}: Spark actions
+          // park threads — without it the global EC caps concurrency at
+          // CPU count and starves other users of the pool
+          spark.sparkContext.setJobGroup(jobGroup, desc, interruptOnCancel = true)
+          // pooled EC thread: clear the thread-local group so later Spark
+          // work on this thread isn't attributed to a dead ETL group
+          try body finally spark.sparkContext.clearJobGroup()
+        } }
+      val typeDdl = typeGroups.map { case (datatype, md5, groupMsgDef, groupBags, tableName) =>
+        inGroup(s"per-type $tableName") {
+          val tableDdl = new StringBuilder
+          val (joined, rawForSide) = typeFrames(datatype, md5, groupMsgDef, groupBags)
+          val df =
+            if (blobSideTable) {
+              val (slim, sideFromJoined) = graft.multimodal.MultimodalOps
+                .externalizeBlobs(joined, "data", "seqno", blobThreshold)
+              // staged mode: decode is RDD-opaque to pruning, so build the
+              // side from the staged bytes — same isBigBlob cutoff
+              val side =
+                if (stagedByType) rawForSide
+                  .filter(graft.multimodal.MultimodalOps.isBigBlob(col("data"), blobThreshold))
+                  .select(col("seqno"), col("data"))
+                else sideFromJoined
+              val sideNew = !append || !tableExists(s"$out/${tableName}_blobs.parquet")
+              side.write.mode(writeMode)
+                .option("compression", "snappy")
+                .parquet(s"$out/${tableName}_blobs.parquet")
+              if (sideNew)
+                tableDdl ++= VerticaDdl.createTable(tableName + "_blobs", side.schema) ++= "\n"
+              slim
+            } else joined
+          // DDL describes tables, not rows: appends to an existing table
+          // must not re-emit its CREATE statement
+          val tableNew = !append || !tableExists(s"$out/$tableName.parquet")
+          df.write.mode(writeMode)
+            .option("compression", "snappy").parquet(s"$out/$tableName.parquet")
+          if (tableNew)
+            tableDdl ++= VerticaDdl.createTable(tableName, df.schema) ++= "\n"
+          tableDdl.toString
+        }
+      }
+      val messagesWrite = inGroup("Messages") {
+        messages.write.mode(writeMode)
+          .option("compression", "snappy").parquet(s"$out/Messages.parquet")
+        ""
+      }
+      try {
+        Await.result(Future.sequence(typeDdl :+ messagesWrite), Duration.Inf)
+          .foreach(ddl ++= _)
+      } catch { case e: Throwable =>
+        // fail fast AND stop the siblings — AndFutureJobs so siblings
+        // between jobs can't keep submitting against the dirs the finally
+        // below deletes
+        spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
+        throw e
+      }
+      // Connections (written last) is the increment's COMMIT RECORD:
+      // runIncremental derives its done-set from Connections.bag_path
+      // alone, so it must land only AFTER every other write succeeded —
+      // Messages included. A crash mid-increment leaves the work
+      // unrecorded and the next increment's repair purges the dead
+      // attempt's rows before redoing those bags.
       connections.write.mode(writeMode)
         .option("compression", "snappy").parquet(s"$out/Connections.parquet")
-    } catch { case e: Throwable =>
-      // fail fast AND stop the siblings — AndFutureJobs so siblings
-      // between jobs can't keep submitting against the dirs the finally
-      // below deletes
-      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-      throw e
     } finally {
-      // drop the temp staging dirs even on failure (file:// and remote)
+      // drop the scratch dirs even on failure (file:// and remote)
       Seq(seqnoDir, stageDir).foreach { d =>
         val p = new org.apache.hadoop.fs.Path(d)
         p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).delete(p, true)
@@ -874,22 +882,17 @@ object BagEtl {
     writeManifest(out, naming ++
       typeGroups.map { case (dt, md5, _, _, name) => (dt, md5) -> name })
 
-    // info from the written Messages table (columnar) — not a bag
-    // re-scan; in append mode the slice covers only THIS run's bags
-    val msgs0 = spark.read.parquet(s"$out/Messages.parquet")
-    val msgs = if (append) msgs0.filter(col("bag_path").isin(bags: _*)) else msgs0
-    val r = msgs
-      .agg(count(lit(1)), coalesce(sum(col("size").cast("long")), lit(0L)),
-        coalesce(expr("bit_xor(data_crc32)"), lit(0L)), max(col("seqno"))).head()
-    val (cnt, size, crc) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    // info from the Messages write's observed metrics — no re-read; in
+    // append mode they cover only THIS run's bags
+    val r = info.get
+    val last = Option(r("last")).map(_.asInstanceOf[Long])
     // commit-record protocol, step 2: the dimension landed above, so
     // the increment is committed — finalize the record with the new
     // max. (A crash before this line resolves via inflight ⊆ done:
     // repair recovers the max from the Messages footers.)
-    writeCommitRecord(out,
-      if (r.isNullAt(3)) seqnoOffset - 1
-      else math.max(seqnoOffset - 1, r.getLong(3)), Nil)
-    (Info(bagName, cnt, size, crc),
+    writeCommitRecord(out, last.fold(seqnoOffset - 1)(math.max(seqnoOffset - 1, _)), Nil)
+    (Info(bagName, r("n").asInstanceOf[Long], r("bytes").asInstanceOf[Long],
+        r("crc").asInstanceOf[Long]),
       typeGroups.map { case (dt, md5, _, _, name) => (dt, md5, name) })
   }
 

@@ -475,4 +475,25 @@ class LlmQueriesSpec extends SparkTestBase {
     assert(after3 == after1,
       s"persisted-RDD count grew across invocations: $after1 -> $after3")
   }
+
+  test("invalidateCaches leaves no memo behind and unpersists what they pinned") {
+    val s = spark.newSession()
+    Seq("q31_ann_lsh", "q42_ann_ivf", "q53_ann_pq", "q100_bpe_train_apply")
+      .foreach(n => LlmQueries.all(n)(s, sf).count())
+    // every java.util.Map field of the object is a (session, dir) memo
+    val memos = LlmQueries.getClass.getDeclaredFields.toSeq
+      .filter(f => classOf[java.util.Map[_, _]].isAssignableFrom(f.getType))
+      .map { f => f.setAccessible(true)
+        f.getName.split('$').last -> f.get(LlmQueries).asInstanceOf[java.util.Map[_, _]] }
+    def filled = memos.filter(_._2.size > 0).map(_._1).toSet
+    assert(Set("lshIdxCache", "ivfIdxDfCache", "pqIdxDfCache", "bpeCache").subsetOf(filled),
+      s"filled memos: $filled")
+    val pinned = memos.flatMap { case (_, m) =>
+      m.values.toArray.toSeq.collect { case df: org.apache.spark.sql.Dataset[_] => df } }
+      .filter(_.storageLevel.isValid)
+    assert(pinned.nonEmpty)
+    LlmQueries.invalidateCaches()
+    assert(filled.isEmpty, s"memos surviving invalidateCaches: $filled")
+    assert(pinned.forall(!_.storageLevel.isValid), "a memoized relation is still persisted")
+  }
 }

@@ -391,6 +391,36 @@ class BagSpec extends SparkTestBase {
     assert(m.toSeq == Seq(100, 200, 300, 400))
   }
 
+  test("maxMessages = n keeps the first n messages in merge-time order, on both seqno paths") {
+    // two overlapping chunks (times 100,300 | 200,400): one ~6 KB
+    // overlap group, so a 2 KB partition budget forces the Seqno fallback
+    val conn = BagConnection(0, "/a", "sensor_msgs/Imu", Fixtures.imuMd5, Fixtures.imuDef, "")
+    val msgs = Seq(100, 300, 200, 400).zipWithIndex.map { case (t, i) =>
+      WriteMessage(0, t, 0, imuBytes(i.toLong, t, 0, s"m$i", 0)) }
+    val p = Files.createTempFile("graft_maxmsgs", ".bag")
+    Files.write(p, BagFormat.writeBag(Seq(conn), msgs, messagesPerChunk = 2))
+    def firstThree(conf: Seq[(String, String)]): Unit = {
+      val out = Files.createTempDirectory("graft_maxmsgs").toString + "/out"
+      val prev = conf.map { case (k, _) => k -> spark.conf.getOption(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      val info = try graft.ros.etl.BagEtl.run(spark, p.toString, out, maxMessages = Some(3L))
+        finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      assert(info.count == 3)
+      Seq("Messages" -> "time_sec", "sensor_msgs_Imu" -> "header_stamp_sec").foreach {
+        case (t, time) =>
+        val r = spark.read.parquet(s"$out/$t.parquet").orderBy("seqno")
+          .select("seqno", time).collect().map(x => (x.getLong(0), x.getInt(1)))
+        assert(r.toSeq == Seq((0L, 100), (1L, 200), (2L, 300)), s"$t under $conf")
+      }
+    }
+    firstThree(Nil)
+    firstThree(Seq("spark.sql.files.maxPartitionBytes" -> "2048",
+      "spark.graft.chunkOpenCostBytes" -> "0"))
+  }
+
   test("multi-bag directory: pruned spine, md5-namespaced tables, per-bag ETL equivalence") {
     // three bags in one dir; bag c's test_msgs/Point definition drifted
     // (SURVEY §7.4.3: a fleet with a mid-life message-definition change)

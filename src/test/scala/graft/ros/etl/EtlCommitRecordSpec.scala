@@ -42,20 +42,7 @@ class EtlCommitRecordSpec extends SparkTestBase {
     out
   }
 
-  /** Count Spark jobs launched while `body` runs. */
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener bus is async: drain before reading the counter
-      org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
+  private def countJobs(body: => Unit): Int = EtlCommitRecordSpec.countJobs(spark)(body)
 
   test("steady-state repair is metadata-only: zero Spark jobs, record-supplied max") {
     val dir = Files.createTempDirectory("graft_cr_steady")
@@ -211,4 +198,26 @@ class EtlCommitRecordSpec extends SparkTestBase {
     // a dimension-shaped dir (no seqno) reports None
     assert(BagEtl.footerSeqnoRanges(s"$out/Connections.parquet").isEmpty)
   }
+}
+
+object EtlCommitRecordSpec {
+  /** The jobs Spark starts while `body` runs. */
+  def jobStarts(spark: org.apache.spark.sql.SparkSession)(body: => Unit)
+      : Seq[SparkListenerJobStart] = {
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = { started.add(js); () }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // listener bus is async: drain before reading what it saw
+      org.apache.spark.GraftTestAccess.drainListenerBus(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    started.toArray(Array.empty[SparkListenerJobStart]).toSeq
+  }
+
+  /** Count Spark jobs launched while `body` runs. */
+  def countJobs(spark: org.apache.spark.sql.SparkSession)(body: => Unit): Int =
+    jobStarts(spark)(body).size
 }
