@@ -29,7 +29,7 @@ object RosbagSeqno {
   val Column = "seqno"
 
   /** One overlap group: its chunks as (bag, chunk_idx, chunk), the seqno
-    * of its first message, and its message count (-1 when unknown).
+    * of its first message, and its message count.
     */
   final case class Group(base: Long, count: Long,
       chunks: Seq[(String, Int, BagFormat.BagChunk)]) {
@@ -78,39 +78,40 @@ object RosbagSeqno {
     }
   }
 
-  /** Groups for a scan that selects `seqno`: the index's when it can
-    * number the load, else the whole load as one group (one task sorts
-    * it — correct at any shape, cheap only for small loads).
+  /** The groups when per-type numbered scans can number the load
+    * cheaply — every chunk indexed, and no group that is:
+    *  - more than one chunk over the partition byte budget
+    *    (`graft.ros.PartitionPacking.budgetBytes`), where one task would
+    *    serialise a fleet-wide merge. A single-chunk group is never
+    *    refused: the plain scan reads one chunk per task anyway;
+    *  - messages from bags carrying different (datatype, md5) sets
+    *    (say, concurrent recordings with different topics per bag): a
+    *    numbered typed scan reads every chunk of its groups, so each
+    *    per-type scan would decompress the other bags' chunks too.
+    * Left carries the reason for the caller's log.
     */
-  def scanGroups(indexes: Seq[(String, BagFormat.BagIndex)]): Seq[Group] =
-    groups(indexes).getOrElse {
-      val all = indexes.flatMap { case (bag, index) =>
-        index.chunks.zipWithIndex.map { case (c, i) => (bag, i, c) } }
-      if (all.isEmpty) Nil else Seq(Group(0L, -1L, all))
-    }
-
-  /** The groups when the scan can number the load cheaply — every chunk
-    * indexed, and no multi-chunk group over the partition byte budget
-    * (`graft.ros.PartitionPacking.budgetBytes`), where one task would
-    * serialise a fleet-wide merge. A single-chunk group is never
-    * refused: the plain scan reads one chunk per task anyway. Left
-    * carries the reason for the caller's log.
-    */
-  def cheapGroups(indexes: Seq[(String, BagFormat.BagIndex)]): Either[String, Seq[Group]] =
+  def cheapGroups(indexes: Seq[(String, BagFormat.BagIndex)]): Either[String, Seq[Group]] = {
+    val types = indexes.map { case (bag, index) =>
+      bag -> index.connections.map(c => (c.datatype, c.md5sum)).toSet }.toMap
     groups(indexes).flatMap { gs =>
       val budget = graft.ros.PartitionPacking.budgetBytes(gs.iterator.map(_.bytes).sum)._1
-      gs.find(g => g.chunks.size > 1 && g.bytes > budget) match {
-        case Some(g) => Left(s"an overlap group of ${g.chunks.size} chunks holds " +
+      def bagsOf(g: Group) = g.chunks.filter(c => msgCount(c._3) > 0).map(_._1).distinct
+      (gs.find(g => g.chunks.size > 1 && g.bytes > budget),
+       gs.find(g => bagsOf(g).map(types).distinct.size > 1)) match {
+        case (Some(g), _) => Left(s"an overlap group of ${g.chunks.size} chunks holds " +
           s"${g.bytes} uncompressed bytes, over the $budget-byte partition budget")
-        case None => Right(gs)
+        case (_, Some(g)) => Left("an overlap group holds messages of bags with different " +
+          s"message types (${bagsOf(g).mkString(", ")})")
+        case _ => Right(gs)
       }
     }
+  }
 
   /** Group-level pruning by a filter on `seqno`: a group holds seqnos
     * [base, base + count).
     */
   def groupMayMatch(f: Filter, g: Group): Boolean = {
-    val last = if (g.count < 0) Long.MaxValue else g.base + g.count - 1
+    val last = g.base + g.count - 1
     f match {
       case LessThan(Column, v: Number) => g.base < v.longValue()
       case LessThanOrEqual(Column, v: Number) => g.base <= v.longValue()

@@ -31,7 +31,9 @@ import graft.ros.MsgDefParser
   * Metadata column `seqno` (`df.metadataColumn("seqno")`): the message's
   * position in the whole load's merge-time order, numbered from the
   * chunk index inside the scan (RosbagSeqno). Selecting it plans whole
-  * overlap groups of chunks instead of single chunks.
+  * overlap groups of chunks instead of single chunks; a load with a
+  * chunk that lacks its chunk-info record (an unclosed recording)
+  * cannot select it.
   *
   * Usage: spark.read.format("rosbag").load(path). Connections are
   * exposed separately via `RosbagTables.connections(spark, path)`.
@@ -530,12 +532,17 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
 
   /** A numbered scan reads whole overlap groups of the WHOLE load —
     * whatever datatype, md5 or filters narrow its output — so each
-    * message's rank counts every message of its group. Groups with no
-    * chunk this scan emits, or outside its seqno bounds, drop.
+    * message's rank counts every message of its group, other bags'
+    * included. Groups with no chunk this scan emits, or outside its
+    * seqno bounds, drop. A load its index cannot number (a chunk
+    * without chunk-info) fails here, at planning.
     */
   private def seqnoGroups(emitted: Seq[RosbagInputPartition]): Seq[(InputPartition, Long)] = {
     val byChunk = emitted.map(p => (p.path, p.chunkIdx) -> p).toMap
-    RosbagSeqno.scanGroups(RosbagIO.scanIndexes(RosbagIO.resolveBags(path)))
+    RosbagSeqno.groups(RosbagIO.scanIndexes(RosbagIO.resolveBags(path)))
+      .fold(why => throw new UnsupportedOperationException(
+        s"the seqno column numbers a load from its bag index, which cannot number this one: $why"),
+        identity)
       .filter(g => seqnoFilters.forall(RosbagSeqno.groupMayMatch(_, g)) &&
         g.chunks.exists(c => byChunk.contains((c._1, c._2))))
       .map { g =>

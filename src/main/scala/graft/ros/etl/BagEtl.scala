@@ -21,9 +21,11 @@ import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
   * route-by-type, FlattenedRosWriter.cpp:273-289, becomes predicate
   * pushdown into the source); Connections is driver-side tiny and lands
   * last. Loads the index cannot number cheaply (a chunk without
-  * chunk-info, or a multi-chunk overlap group over the partition byte
-  * budget) stage the spine and number it with the Seqno range-shuffle
-  * operator instead, then join each table to a seqno map.
+  * chunk-info, a multi-chunk overlap group over the partition byte
+  * budget, or a group mixing bags with different message types — see
+  * RosbagSeqno.cheapGroups) stage the spine and number it with the
+  * Seqno range-shuffle operator instead, then join each table to a
+  * seqno map.
   */
 object BagEtl {
   private val logger = org.slf4j.LoggerFactory.getLogger(BagEtl.getClass)
@@ -693,7 +695,7 @@ object BagEtl {
     val identity = Seq("bag_path", "chunk_idx", "offset")
     // scratch dirs, Overwrite: a hard crash that never reached the
     // cleanup cannot fail the redo with "path exists"
-    val stageDir = s"$out/${if (indexed) "_bytype" else "_spine"}"
+    val stageDir = s"$out/_spine"
     val seqnoDir = s"$out/_seqno"
     def stage(df: DataFrame, dir: String, byType: Boolean): Unit = {
       val w = df.write.mode(SaveMode.Overwrite)

@@ -33,8 +33,7 @@ class RosbagSeqnoSpec extends SparkTestBase {
     * second in every bag, mostly step forward by 0-2 s on a 500 ms
     * grid and sometimes step back — equal times across bags and chunks,
     * out-of-order times inside a chunk, and chunk intervals that are
-    * disjoint, touching or overlapping. Some chunks are empty; some
-    * uncompressed bags lose their chunk-info records.
+    * disjoint, touching or overlapping. Some chunks are empty.
     */
   private def randomLoad(rng: scala.util.Random): Path = {
     val dir = Files.createTempDirectory("graft_seqno_prop")
@@ -50,10 +49,8 @@ class RosbagSeqnoSpec extends SparkTestBase {
             else RosSchemaMapper.encode(bBundle, Seq(rng.nextDouble(), "s")))
         }
       }
-      val compression = if (rng.nextBoolean()) "none" else "lz4"
-      val bytes = BagFormat.writeBagChunks(conns, chunks, compression)
-      Files.write(dir.resolve(s"b$b.bag"),
-        if (compression == "none" && rng.nextInt(4) == 0) stripChunkInfo(bytes) else bytes)
+      Files.write(dir.resolve(s"b$b.bag"), BagFormat.writeBagChunks(conns, chunks,
+        if (rng.nextBoolean()) "none" else "lz4"))
     }
     dir
   }
@@ -143,7 +140,24 @@ class RosbagSeqnoSpec extends SparkTestBase {
       (10L, 2L, Set(("b", 1)))))
     val unindexed = BagIndex(Nil, Seq(chunk((1, 0), (2, 0), 1).copy(connCounts = None)))
     assert(RosbagSeqno.groups(Seq("c" -> unindexed)).left.toOption.get.contains("no chunk-info"))
-    assert(RosbagSeqno.scanGroups(Seq("c" -> unindexed)).map(_.count) == Seq(-1L))
+  }
+
+  test("a load with a chunk lacking chunk-info fails numbered scans at planning") {
+    val dir = Files.createTempDirectory("graft_seqno_strip")
+    val msgs = (0 until 6).map(i => WriteMessage(i % 2, 10 + i, 0,
+      if (i % 2 == 0) RosSchemaMapper.encode(aBundle, Seq(i))
+      else RosSchemaMapper.encode(bBundle, Seq(i.toDouble, "s"))))
+    val bytes = BagFormat.writeBag(conns, msgs, messagesPerChunk = 2)
+    Files.write(dir.resolve("a.bag"), bytes)
+    Files.write(dir.resolve("b.bag"), stripChunkInfo(bytes))   // an unclosed recording
+    val spine = spark.read.format("rosbag").load(dir.toString)
+    assert(spine.count() == 12)   // unnumbered scans read it as before
+    val typed = spark.read.format("rosbag").option("datatype", "test_msgs/B").load(dir.toString)
+    Seq(spine, typed).foreach { df =>
+      val e = intercept[Exception](df.select(df.metadataColumn("seqno")).collect())
+      assert(causeMessages(e).contains("cannot number this one: chunk 0 of"), causeMessages(e))
+      assert(causeMessages(e).contains("has no chunk-info record"))
+    }
   }
 
   test("a chunk that contradicts its chunk-info record fails the numbered scan") {

@@ -101,6 +101,34 @@ class BagEtlSeqnoSpec extends SparkTestBase {
     }
   }
 
+  test("bags with different message types number in the scan only while their chunks stay apart") {
+    // one datatype per bag, like concurrent recordings split by sensor
+    def load(bSec: Int): Path = {
+      val dir = Files.createTempDirectory("graft_etlseq_types")
+      Files.write(dir.resolve("a.bag"), BagFormat.writeBagChunks(conns.take(1),
+        Seq(Seq(msg(0, 10), msg(0, 11)), Seq(msg(0, 12), msg(0, 13)))))
+      Files.write(dir.resolve("b.bag"), BagFormat.writeBagChunks(conns.drop(1),
+        Seq(Seq(msg(1, bSec), msg(1, bSec + 1, 500)))))
+      dir
+    }
+    val apart = load(20)
+    assert(numbering(apart).isRight)
+    assert(etl(apart, out("graft_etlseq_apart")) == 0)
+
+    val overlapping = load(11)
+    assert(numbering(overlapping).left.toOption.exists(_.contains("different message types")))
+    val o = out("graft_etlseq_types")
+    assert(etl(overlapping, o) > 0, "the mixed-types fallback did not run the Seqno shuffle")
+    val spine = spark.read.format("rosbag").load(overlapping.toString)
+    val cols = Seq("seqno", "bag_path", "time_sec", "time_nsec", "connection_id")
+    assert(spark.read.parquet(s"$o/Messages.parquet").select(cols.map(col): _*)
+        .orderBy("seqno").collect().toSeq ==
+      spine.select(spine.metadataColumn("seqno").as("seqno") +: cols.tail.map(col): _*)
+        .orderBy("seqno").collect().toSeq)
+    assert(spark.read.parquet(s"$o/test_msgs_A.parquet").count() == 4 &&
+      spark.read.parquet(s"$o/test_msgs_B.parquet").count() == 2)
+  }
+
   test("an indexed one-bag ETL runs no shuffle stage and at most one job per table") {
     val p = Files.createTempFile("graft_etlseq_shape", ".bag")
     Files.write(p, BagFormat.writeBag(conns,
