@@ -23,19 +23,19 @@ import org.apache.spark.sql.functions._
   *    unavoidable by definition; what matters is that it is spread
   *    over (f/cap)²/2 tasks instead of one.
   *
-  * ROUTING IS FULLY IN-PLAN (round 19): one bounded-collect
-  * aggregation per invocation yields every bucket's exact count and —
-  * within the cap — its members, so small buckets are materialized by
-  * the same pass that sizes them, and only the over-cap keys (reduced
-  * to key + count, buffer-bounded) feed a lazily-broadcast re-route
-  * of the hot rows. Building the pair DataFrame launches ZERO eager
-  * jobs and collects NOTHING to the driver. (Rounds 2–18 ran an eager
-  * counting job per invocation, collected the over-cap keys to the
-  * driver and broadcast them into TWO routing joins — a full input
-  * pass per build at any scale, plus a driver-memory ceiling,
-  * `maxHotKeys`, on how many keys could exceed the cap. Now the only
-  * driver state is the in-plan hot-list broadcast, loudly guarded by
-  * Spark's broadcast limits.)
+  * ROUTING IS FULLY IN-PLAN (round 19): a bounded-collect
+  * aggregation yields every bucket's exact count and — within the cap
+  * — its members, so small buckets are materialized by the same
+  * aggregate that sizes them, and only the over-cap keys (reduced to
+  * key + count, buffer-bounded) feed a lazily-broadcast re-route of
+  * the hot rows. The plan reads that aggregate TWICE (the small arm
+  * and the hot-key broadcast) and scans the input a further time for
+  * the hot-row join, so unless Spark reuses the aggregate's exchange
+  * it runs more than once per action — callers whose input is
+  * expensive to recompute pin it first. Building the pair DataFrame
+  * launches ZERO eager jobs and collects NOTHING to the driver; the
+  * only driver state is the in-plan hot-list broadcast, loudly
+  * guarded by Spark's broadcast limits.
   *
   * Every unordered pair {x, y} of rows sharing a key is emitted
   * exactly once per key, ordered `pa < pb` by the payload's natural
@@ -61,15 +61,10 @@ object KeyedPairs {
     *                must be a unique, orderable id (pair order + the
     *                block-split hash derive from the whole payload)
     * @param cap     max members expanded in one task (≥ 2)
-    * @param maxHotKeys retained for source compatibility; UNUSED since
-    *                the round-19 in-plan routing (nothing is collected
-    *                at build time — the execution-time hot-list
-    *                broadcast is guarded by Spark's broadcast limits)
     * @return columns `pa`, `pb` (payload type), one row per (key, pair)
     */
-  def pairs(df: DataFrame, keys: Seq[String], payload: Column, cap: Int,
-            maxHotKeys: Int = 1 << 20): DataFrame =
-    pairsGrouped(df, keys, payload, cap, maxHotKeys)
+  def pairs(df: DataFrame, keys: Seq[String], payload: Column, cap: Int): DataFrame =
+    pairsGrouped(df, keys, payload, cap)
       .select(explode(org.apache.spark.sql.graftfns.PairFunctions
         .pairExpand(col("as_"), col("bs"), col("diag"))).as(PR))
       .select(col(s"$PR.pa").as("pa"), col(s"$PR.pb").as("pb"))
@@ -84,12 +79,11 @@ object KeyedPairs {
     * into one expression over the arrays instead of materializing
     * cap² pair structs per task — for embedding payloads that is the
     * difference between a sparse survivor graph and gigabytes of
-    * transient two-embedding pair rows. Routing is one bounded-collect
-    * aggregation (see the object doc); [[pairs]] itself is the
-    * pairExpand of this relation.
+    * transient two-embedding pair rows. Routing rides the
+    * bounded-collect aggregate (see the object doc for what it costs);
+    * [[pairs]] itself is the pairExpand of this relation.
     */
-  def pairsGrouped(df: DataFrame, keys: Seq[String], payload: Column, cap: Int,
-                   maxHotKeys: Int = 1 << 20): DataFrame = {
+  def pairsGrouped(df: DataFrame, keys: Seq[String], payload: Column, cap: Int): DataFrame = {
     require(cap >= 2, s"cap must be >= 2, got $cap")
     require(!keys.exists(Set("as_", "bs", "diag")),
       "key columns may not be named as_/bs/diag (the grouped output columns)")
@@ -99,7 +93,7 @@ object KeyedPairs {
     val rows = df.select(k :+ payload.as(P): _*)
     val emptyPs = array().cast(
       org.apache.spark.sql.types.ArrayType(rows.schema(P).dataType))
-    // routing in ONE aggregation pass (round 19): bounded_collect
+    // routing from ONE aggregate (round 19): bounded_collect
     // yields each bucket's exact count AND — for buckets within the
     // cap — its full member list, with a HARD cap+1 buffer bound per
     // key (a hot key keeps counting but stops collecting). Small
@@ -111,10 +105,10 @@ object KeyedPairs {
     // inside the action and Spark's broadcast limits are its loud
     // guard (a corpus with millions of over-cap keys fails with the
     // broadcast-size error, naming this join). Two rejected
-    // alternatives, same-JVM A/Bs in OPTIMIZATION_r19.md: a window
-    // count (sorts the whole input by key and serializes each hot
-    // bucket through one task — q63 1.1 → 1.9 s) and lazily
-    // broadcasting the old THREE-pass routing (strictly slower still).
+    // alternatives, both slower in same-JVM A/Bs: a window count
+    // (sorts the whole input by key and serializes each hot bucket
+    // through one task — q63 1.1 → 1.9 s) and lazily broadcasting the
+    // old THREE-pass routing (strictly slower still).
     val agged = rows.groupBy(k: _*)
       .agg(org.apache.spark.sql.graftfns.BoundedCollect
         .boundedCollect(col(P), cap).as(FC))
@@ -256,7 +250,7 @@ object KeyedPairs {
     * broadcast, no join.
     */
   def allPairs(df: DataFrame, payload: Column, cap: Int): DataFrame =
-    allPairsGrouped(df, payload, cap)
+    allPairsGrouped(df, payload, cap, df.count())
       .select(explode(org.apache.spark.sql.graftfns.PairFunctions
         .pairExpand(col("as_"), col("bs"), col("bi") === col("bj"))).as("pr"))
       .select(col("pr.pa").as("pa"), col("pr.pb").as("pb"))
@@ -268,14 +262,10 @@ object KeyedPairs {
     * counting) can fuse it into one expression over the arrays instead
     * of materializing cap² pair structs per task — the shuffle after
     * the fused op carries the reduced rows only.
-    */
-  def allPairsGrouped(df: DataFrame, payload: Column, cap: Int): DataFrame =
-    allPairsGrouped(df, payload, cap, df.select(payload.as("p")).count())
-
-  /** [[allPairsGrouped]] with a caller-supplied row count — for
-    * callers that already hold the count (memoized corpus statistics),
-    * so block sizing costs no eager counting job. `n` only sizes the
-    * block grid: an ESTIMATE is safe for correctness (every pair is
+    *
+    * `n` is the row count of `df` — callers that already hold it
+    * (memoized corpus statistics) pay no eager counting job. `n` only
+    * sizes the block grid: an ESTIMATE is safe for correctness (every pair is
     * still emitted exactly once for any nb >= 1) — an underestimate
     * grows per-task members beyond cap by the same factor, an
     * overestimate multiplies the row-replication shuffle, so callers

@@ -212,9 +212,9 @@ object CoreQueries {
     // which forbids Catalyst from duplicating or reordering the
     // expression past the projection boundary. The filter then runs
     // ABOVE the projection on the computed column: ONE
-    // get_json_object per scanned row (plans/r19/after/q19_json.txt —
-    // a single Project(get_json_object) below Filter(isnotnull AND
-    // >= 50)), and it still prunes before the aggregation.
+    // get_json_object per scanned row (a single Project(get_json_object)
+    // below Filter(isnotnull AND >= 50)), and it still prunes before
+    // the aggregation.
     "q19_json" -> ((s, d) =>
       events(s, d)
         .withColumn("k_val",

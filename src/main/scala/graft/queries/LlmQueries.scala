@@ -57,16 +57,10 @@ object LlmQueries {
     * as a real pipeline stages its tokenized corpus once. Same
     * immutable-dir assumption as the other caches (invalidateCaches).
     */
-  private val docToksCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] def docToks(s: SparkSession, d: String): DataFrame = {
-    docToksCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    docToksCache.computeIfAbsent((s, d), _ =>
-      staged(s, d, "docToks")(
-        spread(documents(s, d), col("doc_id"))
-          .select(col("doc_id"), tokens(col("text")).as("toks")))
-        .persist())
-  }
+  private[graft] def docToks(s: SparkSession, d: String): DataFrame =
+    memo(s, d, "docToks")(staged(s, d, "docToks")(
+      spread(documents(s, d), col("doc_id"))
+        .select(col("doc_id"), tokens(col("text")).as("toks"))))
 
   /** Per-task member cap for keyed pair expansion (see KeyedPairs):
     * buckets above this split into block pairs. High enough that test
@@ -81,12 +75,8 @@ object LlmQueries {
     * the first derivation — this is what the corpus-derived LSH knobs
     * (LshTuning) key off, NOT a fresh scan per query.
     */
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]()
-  private[graft] def corpusDocs(s: SparkSession, d: String): Long = {
-    docCountCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    docCountCache.computeIfAbsent((s, d), _ => docToks(s, d).count())
-  }
+  private[graft] def corpusDocs(s: SparkSession, d: String): Long =
+    memo(s, d, "corpusDocs")(docToks(s, d).count())
 
   /** Embedding-corpus row count, read off the memoized fingerprint
     * (format "<count>x<checksum>") — no extra pass.
@@ -124,67 +114,85 @@ object LlmQueries {
   private[graft] def lehmerSampled(id: Column, m: Long): Column =
     pmod(pmod(id, lit(2147483647L)) * 48271L, lit(2147483647L)) % m === 0
 
-  /** (doc_id, sh) with sh = distinct 3-shingles — the one expensive
-    * interpreted pass shared by q27 and q28, cached so signature
-    * derivation and the confirmation join read it instead of
-    * re-running the token+shingle HOF chain (round-1 bench: that
-    * recompute was 3× the cost of q28). The cache boundary also stops
-    * predicate pushdown from sinking derived size()-filters below the
-    * spread-repartition (the round-1 single-task trap).
+  /** Key of one registry entry: `params` carries every build input
+    * beyond (session, dir) as typed values, so two builds that differ
+    * in any input can never share an entry.
     */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private[graft] final case class Derivation(s: SparkSession, d: String,
+      name: String, params: Seq[Any])
 
-  /** The (session, dir) memo keys assume the parquet under `dir` is
-    * IMMUTABLE for the session's lifetime (true for the driver's
-    * testdata and for any sanely-versioned lake layout — new data means
-    * a new directory). If a caller rewrites a dir in place, it must
-    * call this to drop the stale persisted derivations.
+  /** A registry entry's value, built at most once and OUTSIDE the
+    * registry's lock: builds nest (jaccardPairs → shingleCollapsed →
+    * shingleSets → docToks → documentsFingerprint), and a
+    * ConcurrentHashMap must not be updated from inside its own
+    * computeIfAbsent mapping function (Java 17 throws "Recursive
+    * update" or deadlocks). A build that throws leaves the entry
+    * unbuilt, so the next request retries it.
     */
-  def invalidateCaches(): Unit = {
-    shingleCache.values.forEach(df => { df.unpersist(); () })
-    shingleCache.clear()
-    pairsCache.values.forEach(df => { df.unpersist(); () })
-    pairsCache.clear()
-    docToksCache.values.forEach(df => { df.unpersist(); () })
-    docToksCache.clear()
-    docCountCache.clear()
-    termFreqsCache.values.forEach(df => { df.unpersist(); () })
-    termFreqsCache.clear()
-    simhashCache.values.forEach(df => { df.unpersist(); () })
-    simhashCache.clear()
-    modelCache.clear()
-    corpusFpCache.clear()
-    docsFpCache.clear()
-    collapseCache.values.forEach { c =>
-      c.groups.unpersist(); c.members.unpersist(); ()
-    }
-    collapseCache.clear()
-    collapseCountCache.clear()
-    repPairsCache.values.forEach(df => { df.unpersist(); () })
-    repPairsCache.clear()
-    embCorpusCache.values.forEach(df => { df.unpersist(); () })
-    embCorpusCache.clear()
-    queryVecCache.clear()
-    pinCache.values.forEach(df => { df.unpersist(); () })
-    pinCache.clear()
-    pinCountCache.clear()
-    Seq(lshIdxCache, ivfIdxDfCache, pqIdxDfCache).foreach { c =>
-      c.values.forEach(df => { df.unpersist(); () })
-      c.clear()
-    }
-    bpeCache.clear()
+  private[graft] final class Once(build: () => Any) {
+    @volatile private var value: Option[Any] = None
+    def built: Option[Any] = value
+    def get: Any = value.getOrElse(synchronized {
+      if (value.isEmpty) value = Some(build())
+      value.get
+    })
   }
 
-  /** Force-build every shared derivation (tokenized corpus, shingle
-    * sets, simhashes, the 0.5-Jaccard pair graph, IVF/PQ models) and
-    * return per-derivation build seconds. Bench calls this before the
-    * timed loop so cache-build cost is its own line item instead of
-    * being attributed to whichever query happens to iterate first —
-    * the round-4 "regression" cluster (q48/q51/q57) was exactly that
-    * attribution drift, not a plan change. A failed build reports a
-    * negative time; the queries that need it will then surface the
-    * real error in their own err fields.
+  /** THE memo of every shared derivation — tokens, shingles, pair
+    * graphs, collapses, corpus statistics, ANN models and indexes, and
+    * the per-query pins of derivation-sized intermediates: a real
+    * pipeline converts its corpus once and serves every query from the
+    * staged artifacts. Keys assume the parquet under `dir` is
+    * IMMUTABLE for the session's lifetime (true for the driver's
+    * testdata and for any sanely-versioned lake layout — new data means
+    * a new directory); see [[invalidateCaches]] otherwise.
+    */
+  private val registry =
+    new java.util.concurrent.ConcurrentHashMap[Derivation, Once]()
+
+  /** The registry value for (s, d, name, params), built once per
+    * session; a Dataset (or both sides of a DupCollapse.Collapsed) is
+    * persisted when it is built. Entries of stopped sessions are swept
+    * here — their persisted blocks are gone with the context, so a
+    * long-lived JVM cycling sessions doesn't pin each one's object
+    * graph forever.
+    */
+  private[graft] def memo[T](s: SparkSession, d: String, name: String,
+      params: Any*)(build: => T): T = {
+    registry.keySet.removeIf(_.s.sparkContext.isStopped)
+    registry.computeIfAbsent(Derivation(s, d, name, params), _ => new Once(() => {
+      val v = build
+      datasets(v).foreach(_.persist())
+      v
+    })).get.asInstanceOf[T]
+  }
+
+  private def datasets(v: Any): Seq[org.apache.spark.sql.Dataset[_]] = v match {
+    case df: org.apache.spark.sql.Dataset[_] => Seq(df)
+    case c: graft.operators.DupCollapse.Collapsed => Seq(c.groups, c.members)
+    case _ => Nil
+  }
+
+  /** Drops every memoized derivation and unpersists every Dataset the
+    * registry pinned. A caller that rewrites a dir in place must call
+    * this to drop the stale derivations (the disk store re-validates
+    * on its own: its manifests carry a corpus fingerprint).
+    */
+  def invalidateCaches(): Unit = {
+    registry.values.forEach(_.built.foreach(datasets(_).foreach(_.unpersist())))
+    registry.clear()
+  }
+
+  /** Force-build every shared derivation (tokenized corpus, term
+    * frequencies, shingle sets, simhashes, the 0.5-Jaccard pair graph,
+    * the probe corpus, the IVF/PQ models and their served indexes, the
+    * LSH index) and return per-derivation build seconds, in that order.
+    * Bench calls this before the timed loop so cache-build cost is its
+    * own line item instead of being attributed to whichever query
+    * happens to iterate first — the round-4 "regression" cluster
+    * (q48/q51/q57) was exactly that attribution drift, not a plan
+    * change. A failed build reports a negative time; the queries that
+    * need it will then surface the real error in their own err fields.
     */
   def warmShared(s: SparkSession, d: String): Seq[(String, Double)] = {
     def timed(name: String)(f: => Unit): (String, Double) = {
@@ -200,22 +208,10 @@ object LlmQueries {
       timed("jaccardPairs") { jaccardPairs(s, d, 0.5).count(); () },
       // the probes' shared corpus relation + fixed query vector
       timed("embCorpus") { embCorpus(s, d).count(); queryVec(s, d); () },
-      timed("ivfModel") {
-        val cents = cachedIvf(s, d, "ivf_k16_i2")(
-          graft.operators.IvfIndex.train(embCorpus(s, d), "vec_id",
-            "embedding", 16, iters = 2))
-        // the served probe index (cell-partitioned staged assignment)
-        ivfAssigned(s, d, 16, cents).count()
-        ()
-      },
-      timed("pqModel") {
-        val model = cachedPq(s, d, "pq_m8_k16_i2")(
-          graft.operators.PqIndex.train(embCorpus(s, d), "vec_id",
-            "embedding", m = 8, k = 16, iters = 2))
-        // the served probe index (staged codes)
-        pqEncoded(s, d, model).count()
-        ()
-      },
+      // each model plus its served probe index (the cell-partitioned
+      // staged assignment; the staged codes)
+      timed("ivfModel") { ivfModel(s, d, 16); ivfAssigned(s, d, 16).count(); () },
+      timed("pqModel") { pqModel(s, d); pqEncoded(s, d).count(); () },
       // q31's served index (12-table hyperplane signatures)
       timed("lshIndex") { lshIndex(s, d, tables = 12, bits = 10,
         seed = 42, dim = 64).count(); () })
@@ -229,35 +225,17 @@ object LlmQueries {
     * small path, big path) each rebuild the whole derivation. The
     * InMemoryRelation stops both — simhash64 runs exactly once per doc.
     */
-  private val simhashCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def simhashes(s: SparkSession, d: String): DataFrame = {
-    simhashCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    simhashCache.computeIfAbsent((s, d), _ =>
-      staged(s, d, "simhashes")(
-        docToks(s, d)
-          .select(col("doc_id"),
-            org.apache.spark.sql.graftfns.TextFunctions.simhash64(col("toks")).as("simhash"))
-          .filter(col("simhash").isNotNull))
-        .persist())
-  }
+  private def simhashes(s: SparkSession, d: String): DataFrame =
+    memo(s, d, "simhashes")(staged(s, d, "simhashes")(
+      docToks(s, d)
+        .select(col("doc_id"),
+          org.apache.spark.sql.graftfns.TextFunctions.simhash64(col("toks")).as("simhash"))
+        .filter(col("simhash").isNotNull)))
 
-  /** Trained ANN models (IVF centroids, PQ codebooks) memoized per
-    * (session, dir, scheme) AND persisted to a model store on disk:
-    * training is deterministic, so the model is a pure function of the
-    * data — and a real pipeline trains an index ONCE and serves every
-    * query from it (the training cost amortizes to zero, which is the
-    * whole point of building an index). The disk tier extends that
-    * across SESSIONS — a fresh JVM loads the stored centroids/codebooks
-    * (milliseconds) instead of retraining (the round-5 gap). Models are
-    * kilobytes; the store layout is IvfIndex/PqIndex.save's parquet +
-    * manifest-as-commit-marker, keyed by md5(dataDir)/scheme under
-    * GRAFT_MODEL_DIR (default: <tmpdir>/graft_models). Concurrent
-    * same-key savers race benignly: deterministic training means both
-    * write identical models, and the manifest commits last either way.
+  /** Root of the disk tier: `<root>/md5(dataDir)/<scheme>`, with the
+    * root from the `graft.model.dir` system property, else
+    * GRAFT_MODEL_DIR, else <tmpdir>/graft_models.
     */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), AnyRef]()
   private[graft] def modelStoreDir(d: String, scheme: String): String = {
     val root = sys.props.get("graft.model.dir")
       .orElse(sys.env.get("GRAFT_MODEL_DIR"))
@@ -277,87 +255,125 @@ object LlmQueries {
     * (session, dir); the one pass is noise next to training, and
     * cross-session loads pay it once.
     */
-  private val corpusFpCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private[graft] def embeddingsFingerprint(s: SparkSession, d: String): String = {
-    corpusFpCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    corpusFpCache.computeIfAbsent((s, d), _ => {
+  private[graft] def embeddingsFingerprint(s: SparkSession, d: String): String =
+    memo(s, d, "embeddingsFingerprint") {
       val r = embeddings(s, d)
         .agg(count(lit(1)), bit_xor(xxhash64(col("vec_id"), col("embedding")))).head()
       s"${r.getLong(0)}x${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-    })
-  }
+    }
   /** Cheap corpus identity for the staged TEXT derivations (docToks
     * and everything derived from it): row count + order-free checksum
     * of (doc_id, text), one map-side aggregate. Same role as
     * embeddingsFingerprint for the ANN models.
     */
-  private val docsFpCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private[graft] def documentsFingerprint(s: SparkSession, d: String): String = {
-    docsFpCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    docsFpCache.computeIfAbsent((s, d), _ => {
+  private[graft] def documentsFingerprint(s: SparkSession, d: String): String =
+    memo(s, d, "documentsFingerprint") {
       val r = documents(s, d)
         .agg(count(lit(1)), bit_xor(xxhash64(col("doc_id"), col("text")))).head()
       s"${r.getLong(0)}x${if (r.isNullAt(1)) 0L else r.getLong(1)}"
-    })
+    }
+
+  private val logger = org.slf4j.LoggerFactory.getLogger(LlmQueries.getClass)
+
+  /** THE disk tier, for staged relations and trained ANN models alike:
+    * a real pipeline converts its corpus and trains its indexes ONCE,
+    * and the store extends the registry's reuse across SESSIONS — a
+    * fresh JVM loads the staged parquet or the stored centroids/
+    * codebooks instead of re-deriving them.
+    *
+    * Protocol: a committed value is its payload under
+    * `modelStoreDir(d, scheme)` plus a `_model.json` manifest carrying
+    * the corpus fingerprint `fp`, written LAST (ModelIO). The value is
+    * loaded only when the manifest's fingerprint matches; a mid-write
+    * crash leaves no manifest and reads as absent. SELF-HEALING load:
+    * plain-FS stores cannot fully serialize concurrent savers, so a
+    * committed manifest whose payload fails to load is treated as
+    * absent — rebuilt and re-committed — instead of failing every later
+    * session until someone deletes the dir by hand. A store that cannot
+    * be written (read-only root) degrades to the in-session value:
+    * staging is an optimization, never a correctness dependency. Both
+    * fallbacks log a WARN. Concurrent same-key savers race benignly:
+    * builds are deterministic, and the manifest commits last either way.
+    *
+    * @param save writes the payload and the manifest and returns the
+    *             value to serve (staged relations re-read what they
+    *             wrote, so downstream lineage is a plain columnar scan)
+    */
+  private def stored[T](s: SparkSession, d: String, scheme: String, fp: String)(
+      build: => T)(load: String => T, save: (String, T) => T): T = {
+    val store = modelStoreDir(d, scheme)
+    val committed = graft.operators.ModelIO.readManifest(s, store)
+      .exists(_.get("fp").contains(fp))
+    (if (committed)
+      try Some(load(store))
+      catch { case scala.util.control.NonFatal(e) =>
+        logger.warn(s"$scheme: committed store $store is unreadable, rebuilding: $e"); None }
+    else None)
+      .getOrElse {
+        val v = build
+        try save(store, v)
+        catch { case scala.util.control.NonFatal(e) =>
+          logger.warn(s"$scheme: cannot write store $store, serving the in-session value: $e"); v }
+      }
   }
 
   /** Cross-session persistence for the shared text derivations
     * (docToks, shingleSets, simhashes, the 0.5-Jaccard pair graph) —
-    * the ModelIO commit protocol generalized from model-sized values
-    * to staged RELATIONS. The whole value proposition of the engine is
-    * "convert once, query many times": the tokenized corpus and the
-    * pair graph are exactly such conversion artifacts, and before this
-    * every fresh session re-derived them (the amplified pair graph
-    * alone was ~2 minutes of warm time, paid per session).
-    *
-    * Protocol (same as the ANN model store, same root dir): a
-    * committed stage is `<store>/data` parquet plus a `_model.json`
-    * manifest carrying the documents-corpus fingerprint, written
-    * LAST. Load serves the stage only when the manifest's fingerprint
-    * matches the current corpus; a mid-write crash leaves no manifest
-    * and reads as absent; a committed-but-unreadable payload
-    * (concurrent-saver race) self-heals by rebuilding. A store that
-    * cannot be written (read-only root) degrades to the in-session
-    * derivation — staging is an optimization, never a correctness
-    * dependency. Builders write the staged parquet ONCE and the
-    * session then reads it back, so the persisted lineage downstream
-    * queries see is a plain columnar scan either way.
+    * exactly the conversion artifacts of "convert once, query many
+    * times": before the stage store every fresh session re-derived
+    * them (the amplified pair graph alone was ~2 minutes of warm time,
+    * paid per session). Keyed on the documents-corpus fingerprint.
     */
   private def staged(s: SparkSession, d: String, stage: String)(
       build: => DataFrame): DataFrame =
     stagedRel(s, d, stage, documentsFingerprint(s, d))(build)
 
   /** [[staged]] with an explicit corpus fingerprint — embedding-derived
-    * stages (the LSH ANN index) key staleness on the EMBEDDINGS
-    * corpus, not the documents one.
+    * stages (the ANN indexes) key staleness on the EMBEDDINGS corpus,
+    * not the documents one. The store is `stage_<stage>`: `data`
+    * parquet plus the manifest.
     */
   private def stagedRel(s: SparkSession, d: String, stage: String, fp: String,
       partitionCols: Seq[String] = Nil)(
-      build: => DataFrame): DataFrame = {
-    val store = modelStoreDir(d, s"stage_$stage")
-    val data = s"$store/data"
-    val committed = graft.operators.ModelIO.readManifest(s, store)
-      .exists(_.get("fp").contains(fp))
-    (if (committed)
-      try Some(s.read.parquet(data))
-      catch { case scala.util.control.NonFatal(_) => None }
-    else None)
-      .getOrElse {
-        try {
-          graft.operators.ModelIO.deleteManifest(s, store)
-          // partitionCols (e.g. the IVF cell): a fresh JVM's probes
-          // then PRUNE to the probed directories instead of scanning
-          // the whole staged relation — the IvfIndex.build layout
-          build.write.mode("overwrite").partitionBy(partitionCols: _*)
-            .parquet(data)
-          graft.operators.ModelIO.writeManifest(s, store,
-            Map("fp" -> fp, "stage" -> stage, "type" -> "stage"))
-          s.read.parquet(data)
-        } catch { case scala.util.control.NonFatal(_) => build }
-      }
+      build: => DataFrame): DataFrame =
+    stored(s, d, s"stage_$stage", fp)(build)(
+      store => s.read.parquet(s"$store/data"),
+      (store, df) => {
+        graft.operators.ModelIO.deleteManifest(s, store)
+        // partitionCols (e.g. the IVF cell): a fresh JVM's probes
+        // then PRUNE to the probed directories instead of scanning
+        // the whole staged relation — the IvfIndex.build layout
+        df.write.mode("overwrite").partitionBy(partitionCols: _*)
+          .parquet(s"$store/data")
+        graft.operators.ModelIO.writeManifest(s, store,
+          Map("fp" -> fp, "stage" -> stage, "type" -> "stage"))
+        s.read.parquet(s"$store/data")
+      })
+
+  /** Trained ANN models (IVF centroids, PQ codebooks): training is
+    * deterministic, so a model is a pure function of the data, trained
+    * ONCE and served to every query (the training cost amortizes to
+    * zero, which is the whole point of building an index). Models are
+    * kilobytes; the payload is IvfIndex/PqIndex.save's parquet, keyed
+    * on the embeddings fingerprint.
+    */
+  private def storedModel[T](s: SparkSession, d: String, scheme: String)(
+      train: => T)(load: (SparkSession, String) => T,
+      save: (SparkSession, String, T, Map[String, String]) => Unit): T = {
+    val fp = embeddingsFingerprint(s, d)
+    stored(s, d, scheme, fp)(train)(load(s, _),
+      (store, m) => { save(s, store, m, Map("fp" -> fp)); m })
   }
+  private def ivfModel(s: SparkSession, d: String, k: Int)
+      : Seq[graft.operators.IvfIndex.Centroid] =
+    memo(s, d, "ivfModel", k)(storedModel(s, d, s"ivf_k${k}_i2")(
+      graft.operators.IvfIndex.train(embCorpus(s, d), "vec_id", "embedding", k, iters = 2))(
+      graft.operators.IvfIndex.load, graft.operators.IvfIndex.save))
+  private def pqModel(s: SparkSession, d: String): graft.operators.PqIndex.Model =
+    memo(s, d, "pqModel")(storedModel(s, d, "pq_m8_k16_i2")(
+      graft.operators.PqIndex.train(embCorpus(s, d), "vec_id", "embedding",
+        m = 8, k = 16, iters = 2))(
+      graft.operators.PqIndex.load, graft.operators.PqIndex.save))
 
   /** The embedding corpus as ONE persisted (vec_id, embedding)
     * relation, spread once at build: every ANN probe previously paid
@@ -366,58 +382,18 @@ object LlmQueries {
     * are native codegen (DotProduct), so the only thing the per-query
     * shuffle bought was parallelism the one-time build now provides.
     */
-  private val embCorpusCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def embCorpus(s: SparkSession, d: String): DataFrame = {
-    embCorpusCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    embCorpusCache.computeIfAbsent((s, d), _ =>
-      spread(embeddings(s, d), col("vec_id"))
-        .select(col("vec_id"), col("embedding")).persist())
-  }
-
-  /** Generic memoized pin for derivation-sized intermediates that one
-    * query family rebuilds per invocation (round 19, verdict item 4):
-    * the round-18 per-invocation `.persist()` calls (q29's combined
-    * pair set, q60's cell assignment, q59's benchmark shingles, q63's
-    * rep fingerprints) registered a NEW cached relation on every
-    * invocation and nothing ever released them — storage-memory
-    * pressure in a long-lived session. Keyed (session, dir, tag) like
-    * embCorpus so each builds once per session and [[invalidateCaches]]
-    * releases them deterministically. Tags must be injective in every
-    * parameter the build depends on beyond (session, dir).
-    */
-  private val pinCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  private def pinned(s: SparkSession, d: String, tag: String)(
-      build: => DataFrame): DataFrame = {
-    pinCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pinCache.computeIfAbsent((s, d, tag), _ => build.persist())
-  }
-
-  /** Memoized row count of a [[pinned]] relation — for sizing hints
-    * (q59's bloom build) that would otherwise run an eager count job
-    * per query invocation.
-    */
-  private val pinCountCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
-  private def pinnedCount(s: SparkSession, d: String, tag: String,
-      df: DataFrame): Long = {
-    pinCountCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pinCountCache.computeIfAbsent((s, d, tag), _ => df.count())
-  }
+  private def embCorpus(s: SparkSession, d: String): DataFrame =
+    memo(s, d, "embCorpus")(
+      spread(embeddings(s, d), col("vec_id")).select(col("vec_id"), col("embedding")))
 
   /** The fixed probe vector (vec_id = 0), collected ONCE per corpus —
     * each ANN query used to run its own scan-and-head job at
     * DataFrame-BUILD time just to re-fetch the same 64 floats.
     */
-  private val queryVecCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Float]]()
-  private def queryVec(s: SparkSession, d: String): Array[Float] = {
-    queryVecCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    queryVecCache.computeIfAbsent((s, d), _ =>
+  private def queryVec(s: SparkSession, d: String): Array[Float] =
+    memo(s, d, "queryVec")(
       embeddings(s, d).filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0).toArray)
-  }
 
   /** |q| by the SAME left-to-right double fold as l2()'s DotProduct —
     * driver-side, so rerank projections embed it as a literal instead
@@ -431,118 +407,46 @@ object LlmQueries {
     math.sqrt(acc)
   }
 
-  private def cachedModel[T <: AnyRef](s: SparkSession, d: String, scheme: String)(
-      train: => T,
-      save: (SparkSession, String, T, Map[String, String]) => Unit,
-      load: (SparkSession, String) => Option[T]): T = {
-    modelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    modelCache.computeIfAbsent((s, d, scheme), _ => {
-      val store = modelStoreDir(d, scheme)
-      val fp = embeddingsFingerprint(s, d)
-      val committed = graft.operators.ModelIO.readManifest(s, store)
-        .exists(_.get("fp").contains(fp))
-      // SELF-HEALING load: plain-FS stores cannot fully serialize
-      // concurrent savers (delete-marker-first shrinks but cannot
-      // close the window where one saver's committed manifest lands
-      // over another's half-rewritten payload), so a manifest that
-      // looks committed but whose payload fails to load is treated as
-      // ABSENT — retrain and re-commit — instead of failing every
-      // later session until someone deletes the dir by hand.
-      (if (committed)
-        try load(s, store)
-        catch { case scala.util.control.NonFatal(_) => None }
-      else None)
-        .getOrElse { val m = train; save(s, store, m, Map("fp" -> fp)); m }
-    }).asInstanceOf[T]
-  }
-  private def cachedIvf(s: SparkSession, d: String, scheme: String)(
-      train: => Seq[graft.operators.IvfIndex.Centroid]): Seq[graft.operators.IvfIndex.Centroid] =
-    cachedModel(s, d, scheme)(train,
-      (sp, dir, m, ex) => graft.operators.IvfIndex.save(sp, dir, m, ex),
-      graft.operators.IvfIndex.loadIfExists)
-  private def cachedPq(s: SparkSession, d: String, scheme: String)(
-      train: => graft.operators.PqIndex.Model): graft.operators.PqIndex.Model =
-    cachedModel(s, d, scheme)(train,
-      (sp, dir, m, ex) => graft.operators.PqIndex.save(sp, dir, m, ex),
-      graft.operators.PqIndex.loadIfExists)
-  private def shingleSets(s: SparkSession, d: String): DataFrame = {
-    // entries for stopped sessions are dead weight (their persisted
-    // blocks are gone with the context) — sweep them so a long-lived
-    // JVM cycling sessions doesn't pin each one's object graph forever
-    shingleCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    // memoized per (session, dir): q27, q28 and q46 all start from the
-    // same shingle sets — one derivation + one persisted copy serves
-    // the whole dedup family, exactly as a real pipeline would run it
-    shingleCache.computeIfAbsent((s, d), _ =>
-      staged(s, d, "shingleSets")(
-        docToks(s, d)
-          .select(col("doc_id"), shingles(col("toks"), 3).as("sh")))
-        .persist())
-  }
+  /** (doc_id, sh) with sh = distinct 3-shingles — the one expensive
+    * interpreted pass q27, q28 and q46 all start from, memoized so
+    * signature derivation and the confirmation join read it instead of
+    * re-running the token+shingle HOF chain (round-1 bench: that
+    * recompute was 3× the cost of q28). The cache boundary also stops
+    * predicate pushdown from sinking derived size()-filters below the
+    * spread-repartition (the round-1 single-task trap).
+    */
+  private def shingleSets(s: SparkSession, d: String): DataFrame =
+    memo(s, d, "shingleSets")(staged(s, d, "shingleSets")(
+      docToks(s, d).select(col("doc_id"), shingles(col("toks"), 3).as("sh"))))
 
   /** Exact Jaccard over shared-shingle pairs: inverted-index grouping
     * (explode shingles, pair docs within a shingle) — never an
     * all-pairs cross product. Hot shingles (the skew/scale concern) are
     * split into bounded block-pair tasks by KeyedPairs, so no task
-    * holds or emits an unbounded bucket.
+    * holds or emits an unbounded bucket. Memoized like shingleSets: q27
+    * reports these pairs, q46 clusters them — one pair-expansion +
+    * confirm pass serves both (a real pipeline computes the pair graph
+    * once).
     */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Double), DataFrame]()
-  private def jaccardPairs(s: SparkSession, d: String, thresh: Double): DataFrame = {
-    // memoized like shingleSets: q27 reports these pairs, q46 clusters
-    // them — one pair-expansion + confirm pass serves both (a real
-    // pipeline computes the pair graph once)
-    pairsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pairsCache.computeIfAbsent((s, d, thresh), _ =>
-      staged(s, d, s"jaccardPairs_$thresh")(
-        jaccardPairsUncached(s, d, thresh))
-        .persist())
-  }
-  /** Memoized exact-duplicate collapse of a set-valued derivation
-    * (see DupCollapse): the collapsed groups/members appear several
-    * times in each consumer's plan (within-pairs, rep pipeline, two
-    * expansion joins), and column pruning specializes each occurrence
-    * enough that exchange reuse never fires — persisting both sides
-    * once per (session, dir, derivation) makes the window shuffle a
-    * one-time cost, like the other shared text derivations. The
-    * cached frames are doc-id-and-counts metadata (plus one sorted
-    * set array per DISTINCT set in groups) — far smaller than the
-    * corpus the pair stages would otherwise re-shuffle.
-    */
-  private val collapseCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), graft.operators.DupCollapse.Collapsed]()
-  private def collapsed(s: SparkSession, d: String, key: String)(
-      build: => graft.operators.DupCollapse.Collapsed)
-      : graft.operators.DupCollapse.Collapsed = {
-    collapseCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    collapseCache.computeIfAbsent((s, d, key), _ => {
-      val c = build
-      graft.operators.DupCollapse.Collapsed(c.groups.persist(), c.members.persist())
-    })
-  }
+  private def jaccardPairs(s: SparkSession, d: String, thresh: Double): DataFrame =
+    memo(s, d, "jaccardPairs", thresh)(staged(s, d, s"jaccardPairs_$thresh")(
+      jaccardPairsUncached(s, d, thresh)))
 
-  /** Memoized row count of a collapse's groups side — the corpusDocs
-    * pattern for collapsed derivations: block-grid sizing
-    * (KeyedPairs.allPairsGrouped) needs the rep count, and counting
-    * the persisted groups once per (session, dir, derivation) beats an
-    * eager counting job per query invocation.
-    */
-  private val collapseCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), java.lang.Long]()
-  private def collapsedGroupCount(s: SparkSession, d: String, key: String,
-      c: graft.operators.DupCollapse.Collapsed): Long = {
-    collapseCountCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    collapseCountCache.computeIfAbsent((s, d, key), _ => c.groups.count())
-  }
-
-  /** THE memoized shingle-set collapse — jaccardPairs, minhashPairs
-    * and q65 all consume the same groups; one definition means the
-    * string-keyed collapseCache can never serve one call site a frame
-    * built from a different source than another's.
+  /** THE memoized shingle-set collapse (see DupCollapse) — jaccardPairs,
+    * minhashPairs and q65 all consume the same groups. The collapsed
+    * groups/members appear several times in each consumer's plan
+    * (within-pairs, rep pipeline, two expansion joins), and column
+    * pruning specializes each occurrence enough that exchange reuse
+    * never fires — persisting both sides once per (session, dir,
+    * derivation) makes the window shuffle a one-time cost, like the
+    * other shared text derivations. The cached frames are
+    * doc-id-and-counts metadata (plus one sorted set array per
+    * DISTINCT set in groups) — far smaller than the corpus the pair
+    * stages would otherwise re-shuffle.
     */
   private[graft] def shingleCollapsed(s: SparkSession, d: String)
       : graft.operators.DupCollapse.Collapsed =
-    collapsed(s, d, "shingleCollapse")(
+    memo(s, d, "shingleCollapse")(
       graft.operators.DupCollapse.collapse(shingleSets(s, d), "doc_id", "sh"))
 
   /** The REPRESENTATIVE-level jaccard pair graph (one node per
@@ -553,12 +457,9 @@ object LlmQueries {
     * information). Memoized + persisted like the other shared
     * derivations.
     */
-  private val repPairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Double), DataFrame]()
   private def jaccardRepPairs(s: SparkSession, d: String,
-      thresh: Double): DataFrame = {
-    repPairsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    repPairsCache.computeIfAbsent((s, d, thresh), _ => {
+      thresh: Double): DataFrame =
+    memo(s, d, "jaccardRepPairs", thresh) {
       val c = shingleCollapsed(s, d)
       // explode_outer, NOT explode: InferFiltersFromGenerate would add
       // `size(key)>0 AND isnotnull(key)` to a plain explode, and the
@@ -577,9 +478,7 @@ object LlmQueries {
         .withColumn("jaccard",
           col("shared").cast("double") / (col("na") + col("nb") - col("shared")))
         .filter(col("jaccard") >= thresh)
-        .persist()
-    })
-  }
+    }
 
   private def jaccardPairsUncached(s: SparkSession, d: String, thresh: Double): DataFrame = {
     import graft.operators.DupCollapse
@@ -627,9 +526,8 @@ object LlmQueries {
     // is output-invisible while cutting the cell pair stage by the
     // square of the duplication factor. The amplified corpus (×4
     // vector cliques) is the shape real crawls have.
-    val cents = cachedIvf(s, d, "ivf_k16_i2")(
-      IvfIndex.train(e, "vec_id", "embedding", k = 16, iters = 2))
-    val c = collapsed(s, d, "vecCollapse")(
+    val cents = ivfModel(s, d, 16)
+    val c = memo(s, d, "vecCollapse")(
       DupCollapse.collapseExact(e, "vec_id", "embedding"))
     val reps = c.groups.select(col("gid").as("vec_id"), col("key").as("embedding"))
     // memoized pin (round 19 — was a per-invocation persist that was
@@ -639,7 +537,7 @@ object LlmQueries {
     // at sf0.1). The pinned relation is (rep × nAssign) rows —
     // reps-sized, the same scale class as the memoized collapse it
     // derives from.
-    val assigned = pinned(s, d, s"semAssign_n$nAssign")(
+    val assigned = memo(s, d, "semAssign", nAssign)(
       IvfIndex.assignMulti(reps, "embedding", cents, nAssign)
         .withColumn("nrm", l2(col("embedding")))
         // match the exact reference kernel's Java-comparison contract
@@ -803,7 +701,7 @@ object LlmQueries {
     // the SAMPLED gate paths (q29's ~1k-doc cross-validation) go
     // through simhashPairsFrom raw — at bounded sample size the
     // collapse's extra stages cost more than they save.
-    val c = collapsed(s, d, "simhashCollapse")(
+    val c = memo(s, d, "simhashCollapse")(
       DupCollapse.collapseExact(
         simhashes(s, d).select(col("doc_id"), array(col("simhash")).as("sk")),
         "doc_id", "sk"))
@@ -1067,22 +965,16 @@ object LlmQueries {
     * parquet instead of re-running the ×L signature pass over the
     * corpus, and staleness follows the same contract as IVF/PQ.
     */
-  private val lshIdxCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
   private def lshIndex(s: SparkSession, d: String, tables: Int, bits: Int,
-      seed: Long, dim: Int): DataFrame = {
-    val scheme = s"lshann_t${tables}_b${bits}_s$seed"
-    lshIdxCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    lshIdxCache.computeIfAbsent((s, d, scheme), _ =>
-      stagedRel(s, d, scheme, embeddingsFingerprint(s, d))(
+      seed: Long, dim: Int): DataFrame =
+    memo(s, d, "lshIndex", tables, bits, seed, dim)(
+      stagedRel(s, d, s"lshann_t${tables}_b${bits}_s$seed", embeddingsFingerprint(s, d))(
         spread(embeddings(s, d), col("vec_id"))
           .select(col("vec_id"),
             posexplode(org.apache.spark.sql.graftfns.VectorFunctions
               .hyperplaneSigs(col("embedding"),
                 lshPlanes(tables, bits, seed, dim), tables, bits, dim)))
-          .toDF("vec_id", "tbl", "bucket"))
-        .persist())
-  }
+          .toDF("vec_id", "tbl", "bucket")))
 
   def annLshTopK(s: SparkSession, d: String, tables: Int, bits: Int,
       radius: Int, seed: Long, k: Int): DataFrame = {
@@ -1129,18 +1021,15 @@ object LlmQueries {
     * members only. Returns (vec_id, cos) unrounded.
     */
   def annIvfTopK(s: SparkSession, d: String, nProbe: Int, k: Int): DataFrame = {
-    import graft.operators.IvfIndex
     val kCells = 16
-    val cents = cachedIvf(s, d, s"ivf_k${kCells}_i2")(
-      IvfIndex.train(embCorpus(s, d), "vec_id", "embedding", kCells, iters = 2))
     val qv = queryVec(s, d)
-    val cells = IvfIndex.probeCells(qv, cents, nProbe)
+    val cells = graft.operators.IvfIndex.probeCells(qv, ivfModel(s, d, kCells), nProbe)
     // probes hit the STAGED assigned relation (cell-partitioned
     // parquet + in-session persist) — the old shape re-ran the 16-dot
     // assignment pass over a freshly shuffled corpus on every query;
     // now a probe is filter + rerank over the cached index, and a
     // fresh JVM partition-prunes to the probed cell directories
-    ivfAssigned(s, d, kCells, cents)
+    ivfAssigned(s, d, kCells)
       .filter(col("cell").isin(cells: _*) && col("vec_id") =!= 0)
       .select(col("vec_id"),
         (dotd(col("embedding"), typedLit(qv)) /
@@ -1153,29 +1042,21 @@ object LlmQueries {
     * per session — the loaded-index DataFrame cache the probe path
     * serves from (train once, assign once, probe forever).
     */
-  private val ivfIdxDfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int), DataFrame]()
-  private def ivfAssigned(s: SparkSession, d: String, kCells: Int,
-      cents: Seq[graft.operators.IvfIndex.Centroid]): DataFrame = {
-    ivfIdxDfCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    ivfIdxDfCache.computeIfAbsent((s, d, kCells), _ =>
+  private def ivfAssigned(s: SparkSession, d: String, kCells: Int): DataFrame =
+    memo(s, d, "ivfAssigned", kCells)(
       stagedRel(s, d, s"ivfassign_k${kCells}_i2",
         embeddingsFingerprint(s, d), partitionCols = Seq("cell"))(
-        graft.operators.IvfIndex.assign(embCorpus(s, d), "embedding", cents))
-        .persist())
-  }
+        graft.operators.IvfIndex.assign(embCorpus(s, d), "embedding", ivfModel(s, d, kCells))))
 
   /** PQ-ADC ANN (factored q53 body). Returns (vec_id, cos) unrounded. */
   def annPqTopK(s: SparkSession, d: String, k: Int): DataFrame = {
-    import graft.operators.PqIndex
-    val model = cachedPq(s, d, "pq_m8_k16_i2")(
-      PqIndex.train(embCorpus(s, d), "vec_id", "embedding", m = 8, k = 16, iters = 2))
+    val model = pqModel(s, d)
     val qv = queryVec(s, d)
     // probes serve from the STAGED encoded relation — the old shape
     // re-ran the m-argmin encode pass over a freshly shuffled corpus
     // on every query; a probe is now ADC lookups + shortlist rerank
     // over the cached codes
-    PqIndex.search(pqEncoded(s, d, model).filter(col("vec_id") =!= 0),
+    graft.operators.PqIndex.search(pqEncoded(s, d).filter(col("vec_id") =!= 0),
       "vec_id", "embedding", model, qv, topK = k)
       .select(col("vec_id"), col("cos"))
   }
@@ -1184,16 +1065,10 @@ object LlmQueries {
     * corpus fingerprint, persisted per session — codes for the ADC
     * pass, float vectors fetched only by the shortlist rerank.
     */
-  private val pqIdxDfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def pqEncoded(s: SparkSession, d: String,
-      model: graft.operators.PqIndex.Model): DataFrame = {
-    pqIdxDfCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqIdxDfCache.computeIfAbsent((s, d), _ =>
+  private def pqEncoded(s: SparkSession, d: String): DataFrame =
+    memo(s, d, "pqEncoded")(
       stagedRel(s, d, "pqcodes_m8_k16_i2", embeddingsFingerprint(s, d))(
-        graft.operators.PqIndex.encode(embCorpus(s, d), "embedding", model))
-        .persist())
-  }
+        graft.operators.PqIndex.encode(embCorpus(s, d), "embedding", pqModel(s, d))))
 
   /** Q63 body with an explicit winnowing window: per-position
     * polynomial shingle hashes → window minima (native codegen'd
@@ -1213,7 +1088,7 @@ object LlmQueries {
     // bench's ×10 cliques; any real crawl) this cuts the (fp, pair)
     // intermediate by the SQUARE of the duplication factor while
     // producing row-identical output (DupCollapseSpec diffs the plans).
-    val c = collapsed(s, d, s"winnowCollapse_w$window")(
+    val c = memo(s, d, "winnowCollapse", window)(
       DupCollapse.collapse(
         docToks(s, d).select(col("doc_id"),
           org.apache.spark.sql.graftfns.TextFunctions
@@ -1226,7 +1101,7 @@ object LlmQueries {
     // Memoized pin (round 19 — was a per-invocation persist, never
     // released): the routing arms read this twice, and each read
     // re-runs the fingerprint explode over every rep otherwise.
-    val repFps = pinned(s, d, s"winnowRepFps_w$window")(
+    val repFps = memo(s, d, "winnowRepFps", window)(
       c.groups.filter(col("n") > 0)
         .select(col("gid").as("doc_id"), explode(col("key")).as("fp")))
     val repPairs = KeyedPairs.pairs(repFps, Seq("fp"), col("doc_id"), cap)
@@ -1333,7 +1208,8 @@ object LlmQueries {
       val sets0 = shingleSets(s, d)
       val sets = if (m == 1L) sets0
         else sets0.filter(lehmerSampled(col("doc_id"), m))
-      val lsh = minhashPairsFrom(sets, scheme, graft.operators.LshTuning.pairCap(n))
+      val cap = graft.operators.LshTuning.pairCap(n)
+      val lsh = minhashPairsFrom(sets, scheme, cap)
         .select(col("da"), col("db")).withColumn("hit", lit(1))
       val exact0 = jaccardPairs(s, d, 0.5)
       val exact = if (m == 1L) exact0
@@ -1341,7 +1217,7 @@ object LlmQueries {
       // joined feeds both the row stream and the recall aggregate —
       // memoized pin (round 19): one LSH pass per session, released by
       // invalidateCaches instead of leaking per invocation
-      val joined = pinned(s, d, "q28joined")(
+      val joined = memo(s, d, "q28joined", scheme, m, cap)(
         exact.join(lsh, Seq("da", "db"), "left"))
       val missProb = pow(lit(1.0) - pow(col("jaccard"), lit(scheme.rows)), lit(scheme.bands))
       val floor = math.max(0.5, scheme.recallAt(0.5) - 0.10)
@@ -1419,7 +1295,7 @@ object LlmQueries {
       // was a per-invocation persist, never released; the sample
       // filter needs no pin of its own once this builds once).
       val cap = LshTuning.pairCap(n)
-      val combined = pinned(s, d, "q29combined")(
+      val combined = memo(s, d, "q29combined", autoBl, altBl, m, cap)(
         simhashPairsMulti(simS, Seq(autoBl, altBl), cap))
       val nDocs = simhashes(s, d).agg(count(lit(1)).as("n_docs_hashed"))
       // BOTH gates from ONE pass over the pinned pair set (round 19 —
@@ -1486,14 +1362,14 @@ object LlmQueries {
       // what makes this airtight; DupCollapseSpec pins it on an
       // all-ties corpus.
       val e = embCorpus(s, d)
-      val c = collapsed(s, d, "vecCollapse")(
+      val c = memo(s, d, "vecCollapse")(
         DupCollapse.collapseExact(e, "vec_id", "embedding"))
       val reps = c.groups
         .select(col("gid").as("vec_id"), col("key").as("embedding"))
         .withColumn("nrm", l2(col("embedding")))
       val payload = struct(col("vec_id").as("id"), col("embedding"), col("nrm"))
       val repPairs = graft.operators.KeyedPairs.allPairsGrouped(reps, payload,
-          cap = 256, collapsedGroupCount(s, d, "vecCollapse", c))
+          cap = 256, memo(s, d, "vecCollapseGroups")(c.groups.count()))
         .select(explode(org.apache.spark.sql.graftfns.PairFunctions
           .topDotPairs(col("as_"), col("bs"), col("bi") === col("bj"), 20)).as("pr"))
         .select(col("pr.va").as("ga"), col("pr.vb").as("gb"), col("pr.cos").as("cos"))
@@ -1899,11 +1775,11 @@ object LlmQueries {
       // explode+distinct shuffle — with the pin the benchmark set is
       // derived once and the two later reads are in-memory scans of a
       // benchmark-suite-sized relation (tiny by definition)
-      val benchSh = pinned(s, d, "benchShingles")(
+      val benchSh = memo(s, d, "benchShingles")(
         sets.filter(isBench).select(explode(col("sh")).as("s")).distinct())
       // sizing hint: one tiny count over the pinned bench slice,
       // memoized so repeated invocations pay no eager count job
-      val nBench = math.max(pinnedCount(s, d, "benchShingles", benchSh), 1L)
+      val nBench = math.max(memo(s, d, "benchShinglesCount")(benchSh.count()), 1L)
       val bf = BloomScreen.build(benchSh, col("s"), nBench, fpp = 0.01)
       // no broadcast hint on the confirm join: at eval-suite scale AQE
       // picks broadcast on its own, and when the benchmark set outgrows
@@ -2094,7 +1970,7 @@ object LlmQueries {
       // rows — tiny at ANY corpus scale (provenance tags are few).
       // Memoized (round 19): one build per session, released by
       // invalidateCaches instead of re-pinned per invocation.
-      val counts = pinned(s, d, "q65counts")(ss
+      val counts = memo(s, d, "q65counts")(ss
         .select(explode(flatten(transform(sequence(lit(1), size(col("ss"))), i =>
           transform(sequence(i, size(col("ss"))), j =>
             struct(try_element_at(col("ss"), i).as("sa"),
@@ -2326,7 +2202,7 @@ object LlmQueries {
         else exact0.filter(lehmerSampled(col("da"), m) && lehmerSampled(col("db"), m))
       // memoized pin (round 19 — was a per-invocation persist, never
       // released): the recall gate and the row output both read it
-      val joined = pinned(s, d, "q73joined")(
+      val joined = memo(s, d, "q73joined", scheme, m)(
         exact.join(lsh, Seq("da", "db"), "left"))
       val missProb = pow(lit(1.0) - pow(col("jaccard"), lit(scheme.rows)), lit(scheme.bands))
       val floor = math.max(0.5, scheme.recallAt(0.5) - 0.10)
@@ -2357,8 +2233,7 @@ object LlmQueries {
       val m = gateSampleMod(corpusVecs(s, d), 4000L)
       val e0 = embCorpus(s, d)
       val e = if (m == 1L) e0 else e0.filter(lehmerSampled(col("vec_id"), m))
-      val cents = cachedIvf(s, d, "ivf_k16_i2")(
-        IvfIndex.train(e0, "vec_id", "embedding", k = 16, iters = 2))
+      val cents = ivfModel(s, d, 16)
       val nw = e.filter(pmod(col("vec_id"), lit(2L)) === 1L)
       val base = e.filter(pmod(col("vec_id"), lit(2L)) === 0L)
       val idx = IncrementalDedup.cosIndex(base, "vec_id", "embedding", cents, 3)
@@ -2600,21 +2475,16 @@ object LlmQueries {
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("word")).limit(BpeVocabCap)
 
-  private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), Seq[(String, String)]]()
-
   /** Learned merge table, once per (session, corpus) — the KMeans
     * model-cache shape: the collect is the capped vocabulary-bounded
     * statistic, never corpus rows.
     */
-  private[graft] def bpeMerges(s: SparkSession, d: String): Seq[(String, String)] = {
-    bpeCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    bpeCache.computeIfAbsent((s, d), _ => {
+  private[graft] def bpeMerges(s: SparkSession, d: String): Seq[(String, String)] =
+    memo(s, d, "bpeMerges") {
       val wf = bpeWordFreqs(s, d).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSeq
       graft.operators.BpeTrain.train(wf, BpeMerges).merges
-    })
-  }
+    }
 
   /** One training round's SQL (best-pair selection + doubled-space
     * merge) — ONE template shared by the q100 and q101 oracles so the
@@ -2740,16 +2610,10 @@ object LlmQueries {
     * docToks — the round-7 2× regression. Everything else in
     * tfidfStats is a cheap re-aggregation of this relation.
     */
-  private val termFreqsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private[graft] def termFreqs(s: SparkSession, d: String): DataFrame = {
-    termFreqsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    termFreqsCache.computeIfAbsent((s, d), _ =>
-      staged(s, d, "termFreqs")(
-        docToks(s, d).select(col("doc_id"), explode(col("toks")).as("token"))
-          .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf_cnt")))
-        .persist())
-  }
+  private[graft] def termFreqs(s: SparkSession, d: String): DataFrame =
+    memo(s, d, "termFreqs")(staged(s, d, "termFreqs")(
+      docToks(s, d).select(col("doc_id"), explode(col("toks")).as("token"))
+        .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf_cnt"))))
 
   /** The tf-idf corpus statistics shared by q44 and q69's lexical leg:
     * (tf, dl, dfreq, nDocs). dl and dfreq re-aggregate the cached tf

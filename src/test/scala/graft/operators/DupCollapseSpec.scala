@@ -254,7 +254,7 @@ class DupCollapseSpec extends SparkTestBase {
     amp.write.parquet(s"$dir/embeddings.parquet")
     val e = amp.withColumn("nrm", l2(col("embedding")))
     val payload = struct(col("vec_id").as("id"), col("embedding"), col("nrm"))
-    val raw = KeyedPairs.allPairsGrouped(e, payload, cap = 256)
+    val raw = KeyedPairs.allPairsGrouped(e, payload, cap = 256, e.count())
       .select(explode(org.apache.spark.sql.graftfns.PairFunctions
         .topDotPairs(col("as_"), col("bs"), col("bi") === col("bj"), 20)).as("pr"))
       .select(col("pr.va").as("va"), col("pr.vb").as("vb"), col("pr.cos").as("cos"))
@@ -287,7 +287,7 @@ class DupCollapseSpec extends SparkTestBase {
     amp.write.parquet(s"$dir/embeddings.parquet")
     val e = amp.withColumn("nrm", l2(col("embedding")))
     val payload = struct(col("vec_id").as("id"), col("embedding"), col("nrm"))
-    val raw = KeyedPairs.allPairsGrouped(e, payload, cap = 256)
+    val raw = KeyedPairs.allPairsGrouped(e, payload, cap = 256, e.count())
       .select(explode(org.apache.spark.sql.graftfns.PairFunctions
         .topDotPairs(col("as_"), col("bs"), col("bi") === col("bj"), 20)).as("pr"))
       .select(col("pr.va").as("va"), col("pr.vb").as("vb"), col("pr.cos").as("cos"))

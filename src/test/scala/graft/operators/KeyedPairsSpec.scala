@@ -150,12 +150,11 @@ class KeyedPairsSpec extends SparkTestBase {
   test("a corpus where EVERY key is over-cap routes in-plan — no hot-key ceiling") {
     // 40 keys, each with 3 members (> cap=2): the pre-round-19 route
     // collected the over-cap keys to the driver and failed loudly past
-    // maxHotKeys; the bounded-collect route keeps only (key, count)
+    // a hot-key ceiling; the bounded-collect route keeps only (key, count)
     // per hot key, so ANY number of hot keys routes correctly
-    // (maxHotKeys is now a no-op, retained for source compatibility)
     val df = (0 until 40).flatMap(key => (0 until 3).map(m => (s"k$key", key * 10L + m)))
       .toDF("k", "id")
-    val got = KeyedPairs.pairs(df, Seq("k"), struct(col("id")), cap = 2, maxHotKeys = 16)
+    val got = KeyedPairs.pairs(df, Seq("k"), struct(col("id")), cap = 2)
     assert(got.count() == 40L * 3)  // 3 members -> 3 unordered pairs per key
   }
 

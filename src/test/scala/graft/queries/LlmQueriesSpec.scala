@@ -477,23 +477,120 @@ class LlmQueriesSpec extends SparkTestBase {
   }
 
   test("invalidateCaches leaves no memo behind and unpersists what they pinned") {
+    import scala.jdk.CollectionConverters._
     val s = spark.newSession()
     Seq("q31_ann_lsh", "q42_ann_ivf", "q53_ann_pq", "q100_bpe_train_apply")
       .foreach(n => LlmQueries.all(n)(s, sf).count())
-    // every java.util.Map field of the object is a (session, dir) memo
-    val memos = LlmQueries.getClass.getDeclaredFields.toSeq
+    // the registry is the object's ONLY map: a hand-rolled memo beside
+    // it would escape invalidateCaches
+    val maps = LlmQueries.getClass.getDeclaredFields.toSeq
       .filter(f => classOf[java.util.Map[_, _]].isAssignableFrom(f.getType))
-      .map { f => f.setAccessible(true)
-        f.getName.split('$').last -> f.get(LlmQueries).asInstanceOf[java.util.Map[_, _]] }
-    def filled = memos.filter(_._2.size > 0).map(_._1).toSet
-    assert(Set("lshIdxCache", "ivfIdxDfCache", "pqIdxDfCache", "bpeCache").subsetOf(filled),
-      s"filled memos: $filled")
-    val pinned = memos.flatMap { case (_, m) =>
-      m.values.toArray.toSeq.collect { case df: org.apache.spark.sql.Dataset[_] => df } }
-      .filter(_.storageLevel.isValid)
+    assert(maps.map(_.getName.split('$').last) == Seq("registry"),
+      s"map fields: ${maps.map(_.getName)}")
+    maps.head.setAccessible(true)
+    val registry = maps.head.get(LlmQueries)
+      .asInstanceOf[java.util.Map[LlmQueries.Derivation, LlmQueries.Once]]
+    val names = registry.keySet.asScala.filter(_.s eq s).map(_.name).toSet
+    assert(Set("lshIndex", "ivfAssigned", "pqEncoded", "bpeMerges").subsetOf(names),
+      s"registry entries: $names")
+    val pinned = registry.values.asScala.toSeq.flatMap(_.built).flatMap {
+      case df: org.apache.spark.sql.Dataset[_] => Seq(df)
+      case c: graft.operators.DupCollapse.Collapsed => Seq(c.groups, c.members)
+      case _ => Nil
+    }.filter(_.storageLevel.isValid)
     assert(pinned.nonEmpty)
     LlmQueries.invalidateCaches()
-    assert(filled.isEmpty, s"memos surviving invalidateCaches: $filled")
+    assert(registry.isEmpty, s"entries surviving invalidateCaches: ${registry.keySet}")
     assert(pinned.forall(!_.storageLevel.isValid), "a memoized relation is still persisted")
+  }
+
+  test("registry: nested builds complete cold, concurrent requests share one build") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    withStore(java.nio.file.Files.createTempDirectory("graft_registry").toString) {
+      // a cold session and store walk the whole chain shingleCollapsed
+      // -> shingleSets -> docToks -> documentsFingerprint, each build
+      // requesting the next from inside its own registry entry
+      val s = spark.newSession()
+      val c = LlmQueries.shingleCollapsed(s, sf)
+      assert(c.groups.count() > 0)
+      assert(LlmQueries.shingleCollapsed(s, sf) eq c, "second request rebuilt")
+      // a deep chain: updating the map from inside its own mapping
+      // function throws once a nested key shares a bin with a pending
+      // one or the table resizes mid-chain, all but certain at this depth
+      def chain(i: Int): Int =
+        if (i == 0) 0 else LlmQueries.memo(s, sf, "chain", i)(chain(i - 1) + 1)
+      assert(chain(200) == 200)
+      // two threads asking for the same cold key: one build, one instance
+      val builds = new java.util.concurrent.atomic.AtomicInteger()
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val requests = (1 to 2).map(_ => Future {
+        start.await()
+        LlmQueries.memo(s, sf, "shared", 7) {
+          builds.incrementAndGet(); Thread.sleep(200); new Object
+        }
+      })
+      start.countDown()
+      val got = requests.map(Await.result(_, 30.seconds))
+      assert(got(0) eq got(1))
+      assert(builds.get == 1, s"${builds.get} builds for one key")
+    }
+  }
+
+  private def withStore[T](root: String)(body: => T): T = {
+    val prior = sys.props.put("graft.model.dir", root)
+    try body
+    finally prior match {
+      case Some(v) => sys.props.put("graft.model.dir", v)
+      case None    => sys.props.remove("graft.model.dir")
+    }
+  }
+
+  private def rows(q: String, s: org.apache.spark.sql.SparkSession): Seq[String] =
+    LlmQueries.all(q)(s, sf).collect().map(_.toString).toSeq.sorted
+
+  test("store: a committed manifest over a deleted payload rebuilds, re-commits, same rows") {
+    import graft.operators.ModelIO
+    import java.nio.file.{Files, Paths}
+    withStore(Files.createTempDirectory("graft_heal").toString) {
+      val s1 = spark.newSession()
+      val toks = LlmQueries.docToks(s1, sf).orderBy("doc_id").collect().map(_.toString).toSeq
+      val q42 = rows("q42_ann_ivf", s1)
+      val payloads = Seq(
+        LlmQueries.modelStoreDir(sf, "stage_docToks") -> "data",
+        LlmQueries.modelStoreDir(sf, "ivf_k16_i2") -> "centroids.parquet")
+      for ((dir, payload) <- payloads) {
+        assert(ModelIO.readManifest(s1, dir).nonEmpty, s"$dir not committed")
+        org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(dir, payload).toFile)
+      }
+      // fresh session: the manifests still read committed, the payloads
+      // are gone — each value is rebuilt and committed again
+      val s2 = spark.newSession()
+      assert(LlmQueries.docToks(s2, sf).orderBy("doc_id").collect().map(_.toString).toSeq == toks)
+      assert(rows("q42_ann_ivf", s2) == q42)
+      val fps = Seq(LlmQueries.documentsFingerprint(s2, sf), LlmQueries.embeddingsFingerprint(s2, sf))
+      for (((dir, payload), fp) <- payloads.zip(fps)) {
+        assert(ModelIO.readManifest(s2, dir).exists(_.get("fp").contains(fp)),
+          s"$dir not re-committed")
+        assert(Files.exists(Paths.get(dir, payload)), s"$dir payload not rewritten")
+      }
+    }
+  }
+
+  test("store: one that cannot be written serves q27 and q42 from the in-session derivation") {
+    import java.nio.file.Files
+    val queries = Seq("q27_ngram_jaccard", "q42_ann_ivf")
+    val writable = withStore(Files.createTempDirectory("graft_rw").toString) {
+      val s = spark.newSession()
+      queries.map(rows(_, s))
+    }
+    // the store root is a regular file: every write under it fails
+    val file = Files.createTempFile("graft_store", ".file")
+    try withStore(file.toString) {
+      val s = spark.newSession()
+      assert(queries.map(rows(_, s)) == writable)
+      assert(Files.isRegularFile(file) && Files.size(file) == 0L)
+    } finally Files.deleteIfExists(file)
   }
 }

@@ -20,7 +20,7 @@ class PairExprSpec extends SparkTestBase {
     val e = vecs.toDF("vec_id", "embedding")
       .withColumn("nrm", LlmQueries.l2(col("embedding")))
     val payload = struct(col("vec_id").as("id"), col("embedding"), col("nrm"))
-    graft.operators.KeyedPairs.allPairsGrouped(e, payload, cap)
+    graft.operators.KeyedPairs.allPairsGrouped(e, payload, cap, e.count())
       .select(explode(PairFunctions.topDotPairs(
         col("as_"), col("bs"), col("bi") === col("bj"), k)).as("pr"))
       .select(col("pr.va"), col("pr.vb"), col("pr.cos"))
@@ -104,7 +104,7 @@ class PairExprSpec extends SparkTestBase {
         .withColumn("nrm", LlmQueries.l2(col("embedding")))
       val fused = {
         val payload = struct(col("vec_id").as("id"), col("embedding"), col("nrm"))
-        graft.operators.KeyedPairs.allPairsGrouped(e, payload, cap)
+        graft.operators.KeyedPairs.allPairsGrouped(e, payload, cap, e.count())
           .select(explode(PairFunctions.thresholdDotPairs(
             col("as_"), col("bs"), col("bi") === col("bj"), thresh)).as("pr"))
           .select(col("pr.va"), col("pr.vb"), col("pr.cos"))
@@ -136,7 +136,7 @@ class PairExprSpec extends SparkTestBase {
     val e = vecs.toDF("vec_id", "embedding")
       .withColumn("nrm", LlmQueries.l2(col("embedding")))
     val payload = struct(col("vec_id").as("id"), col("embedding"), col("nrm"))
-    val got = graft.operators.KeyedPairs.allPairsGrouped(e, payload, cap = 8)
+    val got = graft.operators.KeyedPairs.allPairsGrouped(e, payload, cap = 8, e.count())
       .select(explode(PairFunctions.thresholdDotPairs(
         col("as_"), col("bs"), col("bi") === col("bj"), 0.5)).as("pr"))
       .select(col("pr.va"), col("pr.vb")).collect()
