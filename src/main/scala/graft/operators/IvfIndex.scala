@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftfns.VectorFunctions
+import org.apache.spark.sql.graftfns.{CentroidBooks, NearestCentroid, VectorFunctions}
 
 /** IVF-style coarse quantization for embedding similarity search:
   * k-means-trained centroids, a map-only cell-assignment expression,
@@ -10,9 +10,10 @@ import org.apache.spark.sql.graftfns.VectorFunctions
   * nProbe/k of the data.
   *
   * Scale shape: training state is k centroids × dim floats — a model,
-  * not data, so it lives driver-side (collect of k rows per Lloyd
-  * iteration). Assignment is a single projection per row (k native
-  * codegen'd dot products inside one least()) — no join, no window, no
+  * not data, so it lives driver-side (one typed pass per Lloyd
+  * iteration, [[KMeans]]). Assignment is a single projection per row:
+  * one fused nearest-centroid expression (graftfns.NearestCentroid,
+  * the same kernel the trainer uses) — no join, no window, no
   * shuffle; the round-1 shape (crossJoin ×k then a row_number window)
   * shuffled 16× the corpus for the same argmax.
   */
@@ -31,59 +32,39 @@ object IvfIndex {
   /** Deterministic k-means via the shared trainer (graft.operators
     * .KMeans: lowest-hash seed init, order-independent integer-micro
     * sum updates, empty cells keep their centroid) with the COSINE
-    * cell-assignment geometry below.
+    * cell geometry of [[CentroidBooks]]: key -dot/|c| (|v| is constant
+    * per row, so it cancels out of the argmax), ties toward the lower
+    * cell id, zero-norm cells last.
     */
-  def train(e: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int): Seq[Centroid] = {
-    val words = KMeans.train(e, idCol, vecCol, k, iters,
-      (v, ws) => nearestCell(v, toCentroids(ws)))
-    toCentroids(words)
-  }
+  def train(e: DataFrame, idCol: String, vecCol: String, k: Int, iters: Int): Seq[Centroid] =
+    KMeans.train(e, idCol, vecCol, k, iters, m = 1, cosine = true).head
+      .zipWithIndex.map { case (w, i) => Centroid(i, w) }.toIndexedSeq
 
-  private def toCentroids(ws: Array[Array[Float]]): Seq[Centroid] =
-    ws.zipWithIndex.map { case (w, i) => Centroid(i, w) }.toIndexedSeq
-
-  /** Map-only nearest-centroid argmax by cosine: one least() over k
-    * (negated dot/|c|, id) structs — |v| is constant per row, so it
-    * cancels out of the argmax. Ties break toward the lower cell id
-    * (struct ordering). Stays inside whole-stage codegen.
-    */
-  def nearestCell(v: Column, cents: Seq[Centroid]): Column = {
-    val scored = cents.map { c =>
-      struct((-dotd(v, typedLit(c.vec)) / lit(c.norm)).as("negsim"), lit(c.id).as("id"))
-    }
-    val best = if (scored.size == 1) scored.head else least(scored: _*)
-    best.getField("id")
+  private def books(cents: Seq[Centroid]): CentroidBooks = {
+    require(cents.map(_.id) == cents.indices, "centroid ids must be 0 until k, in order")
+    CentroidBooks(Seq(cents.map(_.vec).toArray), cosine = true)
   }
 
   /** Adds a `cell` column — the index assignment pass. */
   def assign(e: DataFrame, vecCol: String, cents: Seq[Centroid]): DataFrame =
-    e.withColumn("cell", nearestCell(col(vecCol), cents))
-
-  /** The `n` nearest cell ids as an array, best first (ties toward the
-    * lower cell id, matching nearestCell's struct ordering). Still
-    * map-only: the model rides along as literals, sorted per row.
-    */
-  def nearestCells(v: Column, cents: Seq[Centroid], n: Int): Column = {
-    val scored = cents.map { c =>
-      struct((-dotd(v, typedLit(c.vec)) / lit(c.norm)).as("negsim"), lit(c.id).as("id"))
-    }
-    transform(slice(array_sort(array(scored: _*)), 1, n), x => x.getField("id"))
-  }
+    e.withColumn("cell", NearestCentroid(col(vecCol), books(cents), 1, scalar = true))
 
   /** Multi-assignment: one row per (vector, cell) for the nAssign
-    * nearest cells — the cross-cell recall knob for within-cell
-    * algorithms (SemDeDup-style dedup misses pairs straddling a cell
-    * boundary by construction; with nAssign=2 a boundary pair is
-    * co-located in one of the shared runner-up cells). Row volume is
-    * nAssign×; downstream pair consumers must dedupe, since a pair
-    * sharing two cells is emitted from both. nAssign=1 is `assign`.
+    * nearest cells, best first — the cross-cell recall knob for
+    * within-cell algorithms (SemDeDup-style dedup misses pairs
+    * straddling a cell boundary by construction; with nAssign=2 a
+    * boundary pair is co-located in one of the shared runner-up
+    * cells). Row volume is nAssign×; downstream pair consumers must
+    * dedupe, since a pair sharing two cells is emitted from both.
+    * nAssign=1 is `assign`.
     */
   def assignMulti(e: DataFrame, vecCol: String, cents: Seq[Centroid],
                   nAssign: Int): DataFrame = {
     require(nAssign >= 1 && nAssign <= cents.size,
       s"nAssign must be in [1, ${cents.size}], got $nAssign")
     if (nAssign == 1) assign(e, vecCol, cents)
-    else e.withColumn("cell", explode(nearestCells(col(vecCol), cents, nAssign)))
+    else e.withColumn("cell",
+      explode(NearestCentroid(col(vecCol), books(cents), nAssign, scalar = false)))
   }
 
   /** nProbe cells nearest to a local query vector — pure driver math
@@ -115,8 +96,10 @@ object IvfIndex {
     // never leave a committed manifest over a missing/half-rewritten
     // payload (the overwrite below deletes the old parquet)
     ModelIO.deleteManifest(spark, dir)
+    // coalesce, not repartition: the k-row local frame writes its one
+    // file without a shuffle
     cents.map(c => (c.id, c.vec)).toDF("id", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids.parquet")
     ModelIO.writeManifest(spark, dir, extra ++ Map(
       "type" -> "ivf", "k" -> cents.size.toString,
       "dim" -> cents.head.vec.length.toString))

@@ -119,13 +119,17 @@ object KeyedPairs {
       .repartition(nPart, k: _*)
       .select(k ++ Seq(col(s"$FC.items").as("as_"), emptyPs.as("bs"),
         lit(true).as("diag")): _*)
+    val hk = keys.indices.map(i => s"__kp_h$i")
     val hot = agged.filter(col(s"$FC.n") > cap)
-      .select(k :+ col(s"$FC.n").as(F): _*)
+      .select(k.zip(hk).map { case (c, h) => c.as(h) } :+ col(s"$FC.n").as(F): _*)
+    // null-safe (<=>): a NULL key is a bucket like any other, and an
+    // equi-join would drop an over-cap NULL bucket from both arms.
     // spread = false: the broadcast join leaves each hot bucket's rows
     // on their natural input partitions — already distributed, so the
     // replication explode is map-side wide without an extra exchange
-    val big = bigArm(rows.join(broadcast(hot), keys), keys, nPart, cap,
-        spread = false)
+    val big = bigArm(rows.join(broadcast(hot),
+        keys.zip(hk).map { case (c, h) => rows(c) <=> hot(h) }.reduce(_ && _))
+        .drop(hk: _*), keys, nPart, cap, spread = false)
       .select(k ++ Seq(col(AS).as("as_"), col(BS).as("bs"),
         col(DIAG).as("diag")): _*)
     small.unionByName(big)

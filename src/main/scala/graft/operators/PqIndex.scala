@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftfns.VectorFunctions
+import org.apache.spark.sql.graftfns.{CentroidBooks, NearestCentroid, VectorFunctions}
 
 /** Product quantization for embedding similarity search: the vector
   * splits into `m` contiguous subvectors, each quantized to one of `k`
@@ -16,8 +16,9 @@ import org.apache.spark.sql.graftfns.VectorFunctions
   * scoring never touches the float vectors; only the final rerank
   * fetches them. Scale shape mirrors IvfIndex: codebooks are a MODEL
   * (m×k×subDim floats) living driver-side; encoding is one map-only
-  * projection (m least() argmins, no join/window/shuffle); ADC scoring
-  * is per-row table lookups against a broadcast literal.
+  * projection (one fused nearest-centroid expression yielding all m
+  * codes, no join/window/shuffle); ADC scoring is per-row table
+  * lookups against a broadcast literal.
   *
   * Reference has no ANN surface — this extends the engine's similarity
   * family (q25 exact, q31 LSH, q42 IVF, q50 int8) per the
@@ -29,75 +30,29 @@ object PqIndex {
 
   private def dotd(a: Column, b: Column): Column = VectorFunctions.dot(a, b)
 
-  /** Map-only nearest-codeword argmin by EUCLIDEAN distance (the PQ
-    * objective — cosine cells would bias the reconstruction):
-    * |v-c|² = |v|² − 2v·c + |c|², and |v|² is constant per row, so the
-    * argmin needs only (−2·dot(v,c) + |c|²) per codeword — k native
-    * dots inside one least(), ties to the lower code id.
-    */
-  private def nearestWord(v: Column, words: Array[Array[Float]]): Column = {
-    val scored = words.zipWithIndex.map { case (w, j) =>
-      val c2 = w.foldLeft(0.0)((a, x) => a + x.toDouble * x.toDouble)
-      struct((lit(c2) - lit(2.0) * dotd(v, typedLit(w))).as("d"), lit(j).as("id"))
-    }
-    (if (scored.length == 1) scored.head else least(scored.toIndexedSeq: _*)).getField("id")
-  }
-
   /** Per-subspace k-means via the shared deterministic trainer
-    * (graft.operators.KMeans) under the euclidean geometry above. One
-    * model-sized shuffle per (subspace × iteration). The k seed rows
-    * are collected ONCE and sliced driver-side per subspace (they are
-    * the same lowest-hash ids for every subspace — m separate
-    * TakeOrdered scans would be pure waste), and the iteration scans
-    * hit a persisted projection instead of recomputing the caller's
-    * lineage m×iters times.
+    * (graft.operators.KMeans) under the EUCLIDEAN geometry of
+    * [[CentroidBooks]] (the PQ objective — cosine cells would bias the
+    * reconstruction): |v-c|² = |v|² − 2v·c + |c|², and |v|² is constant
+    * per row, so the argmin keys on |c|² − 2·dot(v,c), ties to the
+    * lower code id. All m subspaces train in the SAME pass per Lloyd
+    * iteration, from one collection of the k lowest-hash seed rows
+    * sliced per subspace.
     */
   def train(e: DataFrame, idCol: String, vecCol: String,
             m: Int, k: Int, iters: Int): Model = {
     require(m >= 1 && k >= 1 && iters >= 0,
       s"need m >= 1, k >= 1, iters >= 0; got m=$m k=$k iters=$iters")
     // one guarded scan: every vector must have the same dimension — a
-    // ragged row would otherwise mis-encode SILENTLY (slice() clamps
-    // and the dot loops over min(lengths), yielding valid-looking but
-    // wrong codes)
+    // ragged row would otherwise mis-encode SILENTLY (a short window
+    // keys NULL and takes code 0, yielding valid-looking but wrong
+    // codes)
     val dims = e.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
     val (dmin, dim) = (dims.getInt(0), dims.getInt(1))
     require(dmin == dim, s"ragged vector column: sizes $dmin..$dim")
     require(dim % m == 0, s"dim $dim must divide into m=$m subspaces")
-    val subDim = dim / m
-    val seedVecs = e.orderBy(xxhash64(col(idCol)), col(idCol)).limit(k)
-      .select(col(vecCol)).collect().map(_.getSeq[Float](0).toArray)
-    val base = e.select(col(idCol), col(vecCol)).persist()
-    try {
-      // the m subspace trainings are independent job chains over the
-      // same cached base — run them CONCURRENTLY so the scheduler
-      // overlaps their (model-sized) aggregations instead of paying
-      // m×iters sequential job latencies (the same trick as BagEtl's
-      // per-type jobs); one job group so a failure cancels siblings
-      import scala.concurrent.{Await, ExecutionContext, Future, blocking}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val spark = e.sparkSession
-      val jobGroup = s"graft-pq-${java.util.UUID.randomUUID()}"
-      val books = try
-        Await.result(Future.sequence((0 until m).map { s => Future { blocking {
-          spark.sparkContext.setJobGroup(jobGroup, s"pq subspace $s",
-            interruptOnCancel = true)
-          try {
-            val sub = base.select(col(idCol),
-              slice(col(vecCol), s * subDim + 1, subDim).as("sv"))
-            val seeds = seedVecs.map(_.slice(s * subDim, (s + 1) * subDim))
-            Codebook(s, KMeans.train(sub, idCol, "sv", k, iters, nearestWord, Some(seeds)))
-          } finally spark.sparkContext.clearJobGroup()  // pooled EC thread:
-          // don't leak the group id + interruptOnCancel to later users
-        } } }), Duration.Inf)
-      catch { case t: Throwable =>
-        // AndFutureJobs: sibling futures between jobs would otherwise
-        // keep SUBMITTING iteration jobs after this throw, racing the
-        // base.unpersist below
-        spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup); throw t }
-      Model(m, subDim, books)
-    } finally base.unpersist()
+    val books = KMeans.train(e, idCol, vecCol, k, iters, m, cosine = false)
+    Model(m, dim / m, books.toSeq.zipWithIndex.map { case (ws, s) => Codebook(s, ws) })
   }
 
   /** Persist a trained model: codebook words as one parquet file
@@ -114,7 +69,8 @@ object PqIndex {
     ModelIO.deleteManifest(spark, dir)
     model.books.flatMap(b => b.words.zipWithIndex.map { case (w, j) => (b.sub, j, w) })
       .toDF("sub", "word", "vec")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
+      .coalesce(1) // one file, no shuffle — see IvfIndex.save
+      .write.mode("overwrite").parquet(s"$dir/codebooks.parquet")
     ModelIO.writeManifest(spark, dir, extra ++ Map(
       "type" -> "pq", "m" -> model.m.toString,
       "subDim" -> model.subDim.toString,
@@ -146,12 +102,14 @@ object PqIndex {
       throw new IllegalArgumentException(s"no committed PQ model at $dir"))
 
   /** Adds a `pqcode` array<int> column (cast to array<tinyint> on disk
-    * for k<=256 if storage matters) — one projection, m argmins.
+    * for k<=256 if storage matters) — one projection, one kernel call
+    * yielding all m codes.
     */
-  def encode(e: DataFrame, vecCol: String, model: Model): DataFrame =
-    e.withColumn("pqcode", array(model.books.map { b =>
-      nearestWord(slice(col(vecCol), b.sub * model.subDim + 1, model.subDim), b.words)
-    }: _*))
+  def encode(e: DataFrame, vecCol: String, model: Model): DataFrame = {
+    require(model.books.map(_.sub) == model.books.indices, "codebooks must be subs 0 until m, in order")
+    e.withColumn("pqcode", NearestCentroid(col(vecCol),
+      CentroidBooks(model.books.map(_.words), cosine = false), 1, scalar = false))
+  }
 
   /** Asymmetric-distance (ADC) inner-product score of a LOCAL query
     * against the `pqcode` column: T[s][j] = dot(q_s, word_sj) is

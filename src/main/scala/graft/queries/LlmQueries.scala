@@ -1403,10 +1403,11 @@ object LlmQueries {
 
     // Q42 — ANN via IVF coarse quantization, CHECKED (same gate shape
     // as q31: exact top-5 reference rows + measured-recall boolean).
-    // k-means-trained centroids (IvfIndex.train: deterministic stride
-    // init, 2 Lloyd iterations, model served from the round-5 disk
-    // store); assignment is a single map-only projection (k native dots
-    // inside one least() — no join, no window, no shuffle); the query
+    // k-means-trained centroids (IvfIndex.train: deterministic
+    // lowest-hash init, 2 Lloyd iterations, model served from the
+    // round-5 disk store); assignment is a single map-only projection
+    // (one fused nearest-centroid call per row — no join, no window, no
+    // shuffle); the query
     // probes the nProbe nearest cells driver-side and exact-reranks
     // only those. nProbe=6 of 16 cells reranks ~3/8 of the corpus and
     // recovers >= 3 of the true top-5 (gated); at 100 TB cells are the

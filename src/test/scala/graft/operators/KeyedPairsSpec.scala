@@ -76,6 +76,24 @@ class KeyedPairsSpec extends SparkTestBase {
     assert(e.getMessage.contains("__kp_"))
   }
 
+  test("NULL-key buckets above and below cap match brute force") {
+    // a NULL key is a bucket like any other: the over-cap ones must
+    // reach the block-pair arm (an equi-join routing drops them
+    // silently), the small one the in-row arm
+    val keyed: Seq[((String, String), Long)] =
+      (400L until 420L).map(id => ((null: String, "big"), id)) ++         // f = 20
+      (500L until 503L).map(id => (("x", null: String), id)) ++           // f = 3
+      (600L until 610L).map(id => ((null: String, null: String), id)) ++  // f = 10
+      rows.map { case (k, id) => ((k, "a"), id) }
+    val expected = brute(keyed.map { case (k, id) => (k.toString, id) }).sorted
+    val df = keyed.map { case ((a, b), id) => (a, b, id) }.toDF("k1", "k2", "id")
+    for (cap <- Seq(2, 7, 1000)) {
+      val got = KeyedPairs.pairs(df, Seq("k1", "k2"), col("id"), cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got.sorted == expected, s"cap=$cap")
+    }
+  }
+
   test("pairs sharing several keys appear once per key") {
     val df = Seq(("k1", 1L), ("k1", 2L), ("k2", 1L), ("k2", 2L)).toDF("k", "id")
     val got = KeyedPairs.pairs(df, Seq("k"), col("id"), cap = 2)

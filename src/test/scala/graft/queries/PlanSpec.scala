@@ -51,6 +51,18 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("Window"), s"seqno fell back to a window:\n$p")
   }
 
+  test("q19: the executed plan parses the JSON once per row") {
+    // the (rand()*0) barrier on k_val keeps Catalyst from copying
+    // get_json_object into the pushed-down filter as well
+    val df = graft.SparkEntry.queries("q19_json")(spark, sf)
+    df.collect()
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val parses = helper.collect(df.queryExecution.executedPlan)(p => p.expressions)
+      .flatten.map(_.collect { case e if e.prettyName == "get_json_object" => e }.size).sum
+    assert(parses == 1, s"get_json_object evaluated $parses times:\n" +
+      df.queryExecution.executedPlan)
+  }
+
   test("q13: top-k plans as TakeOrderedAndProject, not full sort") {
     val p = plan("q13_topk")
     assert(p.contains("TakeOrderedAndProject"), s"no top-k operator:\n$p")
