@@ -811,16 +811,9 @@ object MultimodalOps {
     * The main table keeps small blobs inline and nulls out big ones —
     * scan-heavy queries stop paying for image bytes they don't read.
     */
-  /** THE externalization cutoff — single definition so a slim table's
-    * `_externalized` flags and the side table built from another
-    * lineage (e.g. BagEtl's staged bytes) can never disagree.
-    */
-  def isBigBlob(blobCol: Column, threshold: Int): Column =
-    length(blobCol) > threshold
-
   def externalizeBlobs(df: DataFrame, blobCol: String, keyCol: String,
                        threshold: Int = 1 << 20): (DataFrame, DataFrame) = {
-    val big = isBigBlob(col(blobCol), threshold)
+    val big = length(col(blobCol)) > threshold
     val slim = df
       .withColumn(s"${blobCol}_externalized", big)
       .withColumn(blobCol, when(big, lit(null)).otherwise(col(blobCol)))

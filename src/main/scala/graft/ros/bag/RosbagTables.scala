@@ -46,7 +46,7 @@ object RosbagTables {
     spark.createDataFrame(
       spark.sparkContext.parallelize(indexRows(index, bagPath), 1), ConnectionsSchema)
 
-  private def indexRows(index: BagFormat.BagIndex, bagPath: String): Seq[Row] =
+  private[ros] def indexRows(index: BagFormat.BagIndex, bagPath: String): Seq[Row] =
     index.connections.map(c =>
       Row(bagPath, c.connId, c.topic, c.datatype, c.md5sum, c.msgDef, c.callerid, c.header))
 }

@@ -1,31 +1,37 @@
 package graft.ros.etl
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Seqno
 import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
+import graft.ros.bag.RosbagTypedRead
 
 /** The reference's whole pipeline (reference rosbag2parquet.cpp:41-63,
-  * FlattenedRosWriter.cpp:226-271) as one Spark job: read a bag via the
-  * DSv2 `rosbag` source, assign the dense global seqno in time order,
-  * and write `Messages`, `Connections` and one flattened parquet table
-  * per datatype (snappy, like TableBuffer.cpp:49-51).
+  * FlattenedRosWriter.cpp:226-271): read a bag via the DSv2 `rosbag`
+  * source, assign the dense global seqno in time order, and write
+  * `Messages`, `Connections` and one flattened parquet table per
+  * datatype (snappy, like TableBuffer.cpp:49-51).
   *
-  * Scale shape: the bag scan parallelizes per overlap group of chunks
-  * and numbers the seqno itself from the chunk index (the source's
-  * `seqno` metadata column, graft.ros.bag.RosbagSeqno) — no shuffle, no
-  * staging, no join. Each table is one scan job, all of them concurrent:
-  * Messages from the meta-only scan, each per-type table from a typed
-  * scan that decodes only that type's rows (the reference's
-  * route-by-type, FlattenedRosWriter.cpp:273-289, becomes predicate
-  * pushdown into the source); Connections is driver-side tiny and lands
-  * last. Loads the index cannot number cheaply (a chunk without
-  * chunk-info, a multi-chunk overlap group over the partition byte
-  * budget, or a group mixing bags with different message types — see
-  * RosbagSeqno.cheapGroups) stage the spine and number it with the
-  * Seqno range-shuffle operator instead, then join each table to a
-  * seqno map.
+  * Scale shape: ONE Spark job, then Connections. The bag scan
+  * parallelizes per overlap group of chunks and numbers the seqno
+  * itself from the chunk index (the source's `seqno` metadata column,
+  * graft.ros.bag.RosbagSeqno) — no shuffle, no staging, no join — and
+  * reads every chunk once. Each task hands every message to the
+  * Messages writer and decodes its payload once into its type's table
+  * writer: the reference's serial route-by-type
+  * (FlattenedRosWriter.cpp:273-289) at cluster parallelism, through
+  * [[RoutedTableWrite]], which commits all those tables together.
+  * Connections is driver-side tiny, written without a Spark job, and
+  * lands last, as the increment's commit record. Loads the index cannot
+  * number cheaply (a chunk without chunk-info, a multi-chunk overlap
+  * group over the partition byte budget, or a group mixing bags with
+  * different message types — see RosbagSeqno.cheapGroups) stage an
+  * (identity, time) spine, number it with the Seqno range-shuffle
+  * operator, and join that seqno map to the raw scan once.
   */
 object BagEtl {
   private val logger = org.slf4j.LoggerFactory.getLogger(BagEtl.getClass)
@@ -53,11 +59,16 @@ object BagEtl {
   }
 
   /** Run the conversion; returns the reference's `info` result
-    * (rosbag2parquet.h:6-10). `maxMessages` mirrors --max_mbs's
-    * test-scope-limiting role (main.cpp:26) with row granularity: every
-    * table keeps the first n messages in merge-time order (seqno < n).
-    */
-  /** @param keepRawBlob retain the raw serialized `data` column on
+    * (rosbag2parquet.h:6-10), summed from the data job's tasks.
+    * One data job writes Messages and every per-type table; every
+    * table directory lands with its `_SUCCESS`, or, if the job fails,
+    * none of them does.
+    *
+    * @param maxMessages mirrors --max_mbs's test-scope-limiting role
+    *        (main.cpp:26) with row granularity: every table keeps the
+    *        first n messages in merge-time order (seqno < n); a type
+    *        with none of them left still lands as an empty table.
+    * @param keepRawBlob retain the raw serialized `data` column on
     *        per-type tables (reference README.md:106 "you don't lose
     *        any data"). Since this engine ALSO materializes arrays
     *        (unlike the reference), blob-dominated types store their
@@ -73,21 +84,7 @@ object BagEtl {
     *        stop paying for image bytes they never read, and the side
     *        table joins back on seqno when they do. Requires
     *        keepRawBlob (no blob column to externalize otherwise).
-    * @param stagedByType single-pass mode: ONE scan of the bag writes
-    *        (seqno, spine meta, datatype, raw bytes) to a parquet
-    *        staging table partitioned by datatype; Messages reads just
-    *        its meta columns back (parquet column pruning skips the
-    *        blob pages) and each per-type table decodes only its own
-    *        partition's bytes. Every bag chunk is read — and, for
-    *        bz2/lz4 bags, decompressed — exactly ONCE for the whole
-    *        ETL: the reference's serial read-once economics
-    *        (rosbag2parquet.cpp:41-63) at cluster parallelism. Costs
-    *        one extra write and read of the payload bytes, so it wins
-    *        when the bag has many datatypes or large compressed
-    *        chunks; the default per-table scans win for bags with few
-    *        types.
-    */
-  /** @param nativeTimestamp additionally emit `time` as a parquet
+    * @param nativeTimestamp additionally emit `time` as a parquet
     *        TIMESTAMP (micros, NTZ) derived from time_sec/time_nsec
     *        (floor to micros) — reference TODO rosbag2parquet.cpp:31-32
     *        "use parquet timestamps rather than ros sec/nsec". Additive:
@@ -100,13 +97,13 @@ object BagEtl {
   def run(spark: SparkSession, bagPath: String, outDir: String,
           maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
           blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
-          stagedByType: Boolean = false, nativeTimestamp: Boolean = false): Info = {
+          nativeTimestamp: Boolean = false): Info = {
     // bagPath may be one file, a directory, or a glob — the dataset
     // shape a 100 TB robotics corpus actually arrives in.
     val bags = graft.ros.bag.RosbagIO.resolveBags(bagPath)
     runBags(spark, bags, new java.io.File(bagPath).getName,
       versionedOutputDir(outDir), maxMessages, keepRawBlob, blobSideTable,
-      blobThreshold, stagedByType, nativeTimestamp)._1
+      blobThreshold, nativeTimestamp)._1
   }
 
   /** Incremental multi-bag conversion: ETL only the bags under
@@ -128,7 +125,7 @@ object BagEtl {
   def runIncremental(spark: SparkSession, bagPath: String, outDir: String,
           keepRawBlob: Boolean = true,
           blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
-          stagedByType: Boolean = false, nativeTimestamp: Boolean = false): Info = {
+          nativeTimestamp: Boolean = false): Info = {
     val messagesPath = new org.apache.hadoop.fs.Path(s"$outDir/Messages.parquet")
     val fs = messagesPath.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
     val dirName = new java.io.File(bagPath).getName
@@ -136,11 +133,11 @@ object BagEtl {
       // bootstrap WITHOUT run()'s versioned-dir redirect: a pre-created
       // or crash-remnant outDir lacking Messages must not silently fork
       // the corpus into outDir.1, .2, ... on every call (incremental
-      // mode would never engage). Write into outDir itself; leftover
-      // tables from a crashed attempt fail loudly via ErrorIfExists.
+      // mode would never engage). Write into outDir itself; a leftover
+      // table from a crashed attempt fails the write loudly.
       return runBags(spark, graft.ros.bag.RosbagIO.resolveBags(bagPath),
         dirName, outDir, None, keepRawBlob, blobSideTable, blobThreshold,
-        stagedByType, nativeTimestamp)._1
+        nativeTimestamp)._1
     }
     val existing = spark.read.parquet(s"$outDir/Messages.parquet")
     require(existing.columns.contains("bag_path"),
@@ -173,7 +170,7 @@ object BagEtl {
     if (newBags.isEmpty) return Info(dirName, 0L, 0L, 0L)
     val offset = maxClean + 1
     runBags(spark, newBags, dirName, outDir, None, keepRawBlob, blobSideTable,
-      blobThreshold, stagedByType, nativeTimestamp,
+      blobThreshold, nativeTimestamp,
       seqnoOffset = offset, naming = readManifest(outDir), append = true)._1
   }
 
@@ -601,14 +598,13 @@ object BagEtl {
   /** The conversion core over an explicit bag list. `seqnoOffset`
     * shifts the dense seqno (incremental appends continue after the
     * existing max); `naming` pins historical (datatype, md5) → table
-    * names; `append` switches every table write to SaveMode.Append and
-    * restricts DDL emission to newly-created tables. Returns the info
-    * of THIS run's slice plus the (datatype, md5, table) groups.
+    * names; `append` adds part files to existing tables and restricts
+    * DDL emission to newly-created tables. Returns the info of THIS
+    * run's slice plus the (datatype, md5, table) groups.
     */
   private def runBags(spark: SparkSession, bags: Seq[String], bagName: String,
           out: String, maxMessages: Option[Long], keepRawBlob: Boolean,
-          blobSideTable: Boolean, blobThreshold: Int,
-          stagedByType: Boolean, nativeTimestamp: Boolean,
+          blobSideTable: Boolean, blobThreshold: Int, nativeTimestamp: Boolean,
           seqnoOffset: Long = 0L,
           naming: Map[(String, String), String] = Map.empty,
           append: Boolean = false): (Info, Seq[(String, String, String)]) = {
@@ -620,10 +616,6 @@ object BagEtl {
     // purge its debris from footer metadata alone.
     writeCommitRecord(out, seqnoOffset - 1, bags)
     val indexes = graft.ros.bag.RosbagIO.scanIndexes(bags)
-
-    // Connections dimension (reference FlattenedRosWriter.cpp:209-224),
-    // keyed (bag_path, connection_id) — connection ids are per-bag.
-    val connections = graft.ros.bag.RosbagTables.fromIndexes(spark, indexes)
 
     // md5 consistency per datatype WITHIN each bag (reference
     // FlattenedRosWriter.cpp:287 asserts per-bag).
@@ -638,13 +630,10 @@ object BagEtl {
     // mid-life message-definition change). Each (datatype, md5) variant
     // becomes its own table; drifted types namespace the table name
     // with the md5 prefix so both variants land side by side.
-    // (datatype, md5, msgDef, bags carrying it, tableName)
-    val typeGroups: Seq[(String, String, String, Seq[String], String)] = {
-      val all = indexes.flatMap { case (b, index) =>
-        index.connections.map(c => (c.datatype, c.md5sum, c.msgDef, b))
-      }
-      val byType = all.groupBy(_._1)
-      byType.toSeq.sortBy(_._1).flatMap { case (dt, rows) =>
+    // (datatype, md5, msgDef, tableName)
+    val typeGroups: Seq[(String, String, String, String)] = {
+      val all = indexes.flatMap(_._2.connections.map(c => (c.datatype, c.md5sum, c.msgDef)))
+      all.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (dt, rows) =>
         val base = dt.replace("/", "_") // reference MessageTable.cpp:315
         val byMd5 = rows.groupBy(_._2).toSeq.sortBy(_._1)
         byMd5.map { case (md5, vs) =>
@@ -655,7 +644,7 @@ object BagEtl {
             if (naming.keys.exists(_._1 == dt)) s"${base}__${md5.take(8)}"
             else if (byMd5.size == 1) base
             else s"${base}__${md5.take(8)}")
-          (dt, md5, vs.head._3, vs.map(_._4).distinct, name)
+          (dt, md5, vs.head._3, name)
         }
       }
     }
@@ -670,206 +659,121 @@ object BagEtl {
     logger.info(numbering.fold(
       why => s"seqno: staged spine + Seqno.globalSeqno, because $why",
       gs => s"seqno: numbered in the scan from the chunk index (${gs.size} overlap groups)"))
-    val indexed = numbering.isRight
     // maxMessages keeps the first n messages in merge-time order;
     // incremental appends continue the dense seqno after the existing max
-    def kept(seqno: Column): Column = maxMessages.fold(lit(true))(n => seqno < n)
     def numberedFrom(df: DataFrame, seqno: Column, cols: Seq[Column]): DataFrame =
-      df.select(seqno.as("seqno") +: cols: _*).filter(kept(col("seqno")))
+      df.select(seqno.as("seqno") +: cols: _*)
+        .filter(maxMessages.fold(lit(true))(n => col("seqno") < n))
         .withColumn("seqno", col("seqno") + lit(seqnoOffset))
-    val bagsOpt = graft.ros.bag.RosbagDataSource.bagsSpec(bags)
     // ONE scan relation over the whole bag list (the "bags" option) —
     // not an N-way union, which bloats the analyzer at fleet scale
-    def scan(typed: Option[(String, String)]): DataFrame = {
-      val r = spark.read.format("rosbag").option("bags", bagsOpt)
-      typed.fold(r)(t => r.option("datatype", t._1).option("md5", t._2)
-        .option("includeRaw", keepRawBlob.toString)).load()
-    }
-    // `cols` of a scan, led by the seqno it numbers
-    def numbered(df: DataFrame, cols: Seq[Column]): DataFrame =
-      numberedFrom(df, df.metadataColumn(graft.ros.bag.RosbagSeqno.Column), cols)
-
-    val metaCols = Seq(col("bag_path"), col("chunk_idx"), col("offset"), col("time_sec"),
-      col("time_nsec"), col("size"), col("connection_id"),
-      col("header_stamp_sec"), col("header_stamp_nsec"), col("data_crc32"))
+    val scan = spark.read.format("rosbag")
+      .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(bags)).load()
+    // Messages fact table (reference FlattenedRosWriter.cpp:49-87), plus
+    // the sensor-time header stamp (nullable; reference TODO
+    // rosbag2parquet.cpp:28-30) read in the source from the wire prefix
+    val msgCols = Seq("bag_path", "time_sec", "time_nsec", "size", "connection_id",
+      "header_stamp_sec", "header_stamp_nsec", "data_crc32").map(col)
     val identity = Seq("bag_path", "chunk_idx", "offset")
     // scratch dirs, Overwrite: a hard crash that never reached the
     // cleanup cannot fail the redo with "path exists"
     val stageDir = s"$out/_spine"
     val seqnoDir = s"$out/_seqno"
-    def stage(df: DataFrame, dir: String, byType: Boolean): Unit = {
-      val w = df.write.mode(SaveMode.Overwrite)
-      (if (byType) w.partitionBy("datatype") else w)
-        .option("compression", "snappy").parquet(dir)
-    }
+    def stage(df: DataFrame, dir: String): Unit =
+      df.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(dir)
 
-    val writeMode = if (append) SaveMode.Append else SaveMode.ErrorIfExists
-    val ddl = new StringBuilder
-    val info = org.apache.spark.sql.Observation(s"etl-info-${java.util.UUID.randomUUID()}")
-    try {
-      // stagedByType: ONE bag scan stages (meta, datatype, raw bytes)
-      // partitioned by datatype; Messages prunes to the meta columns
-      // and each per-type table decodes only its own partition
-      if (stagedByType)
-        stage(if (indexed) numbered(scan(None), metaCols :+ col("datatype") :+ col("data"))
-          else scan(None).select(metaCols :+ col("datatype") :+ col("data"): _*),
-          stageDir, byType = true)
-      // fallback: the range-partition seqno needs two passes over its
-      // input (bound sampling + shuffle write); run them against a
-      // meta-only parquet staging of the spine, not the bag, and hand the
-      // per-type tables a (bag_path, chunk_idx, offset) -> seqno map so
-      // the blobs never ride the shuffle
-      val spine: Option[DataFrame] = if (indexed) None else {
-        if (!stagedByType) stage(scan(None).select(metaCols: _*), stageDir, byType = false)
-        val s = Seqno.globalSeqno(spark.read.parquet(stageDir).select(metaCols: _*),
-          Seq(col("time_sec"), col("time_nsec"), col("bag_path"), col("chunk_idx"), col("offset")))
-        val numberedSpine = numberedFrom(s, col("seqno"), metaCols)
-        stage(numberedSpine.select((col("seqno") +: identity.map(col)): _*),
-          seqnoDir, byType = false)
-        Some(numberedSpine)
+    val sums = try {
+      // ONE frame of every kept message: (seqno, Messages columns, data)
+      val numbered = numbering match {
+        case Right(_) =>
+          numberedFrom(scan, scan.metadataColumn(graft.ros.bag.RosbagSeqno.Column),
+            msgCols :+ col("data"))
+        case Left(_) =>
+          // the range-partition seqno needs two passes over its input
+          // (bound sampling + shuffle write): run them against a staged
+          // (identity, time) spine, not the bag, and join the resulting
+          // seqno map to the raw scan once
+          val spine = (Seq("time_sec", "time_nsec") ++ identity).map(col)
+          stage(scan.select(spine: _*), stageDir)
+          val s = Seqno.globalSeqno(spark.read.parquet(stageDir), spine)
+          stage(numberedFrom(s, col("seqno"), identity.map(col)), seqnoDir)
+          scan.join(spark.read.parquet(seqnoDir), identity)
+            .select(col("seqno") +: msgCols :+ col("data"): _*)
       }
-      def seqnoMap = spark.read.parquet(seqnoDir)
+      // floor-to-micros. Built with pure NTZ arithmetic (timestampadd on
+      // an NTZ epoch literal): a timestamp_micros→NTZ cast would render
+      // the instant in the WRITER's session timezone and shift the
+      // stored value for any non-UTC session — this form is
+      // timezone-independent by construction.
+      val time = if (!nativeTimestamp) Nil else Seq(expr("timestampadd(MICROSECOND, " +
+        "cast(time_sec as bigint) * 1000000 + time_nsec div 1000, " +
+        "TIMESTAMP_NTZ '1970-01-01 00:00:00')").as("time"))
+      val frame = numbered.select((numbered.columns.init.map(col) ++ time) :+ col("data"): _*)
 
-      // Messages fact table (reference FlattenedRosWriter.cpp:49-87), plus
-      // the sensor-time header stamp (nullable; reference TODO
-      // rosbag2parquet.cpp:28-30) read in the source from the wire prefix
-      val msgCols = Seq(col("seqno"), col("bag_path"), col("time_sec"), col("time_nsec"),
-        col("size"), col("connection_id"), col("header_stamp_sec"),
-        col("header_stamp_nsec"), col("data_crc32"))
-      val messages0 = spine.getOrElse(
-        if (stagedByType) spark.read.parquet(stageDir) else numbered(scan(None), metaCols)
-      ).select(msgCols: _*)
-      val messages1 = if (nativeTimestamp)
-        // floor-to-micros. Built with pure NTZ arithmetic (timestampadd on
-        // an NTZ epoch literal): a timestamp_micros→NTZ cast would render
-        // the instant in the WRITER's session timezone and shift the
-        // stored value for any non-UTC session — this form is
-        // timezone-independent by construction.
-        messages0.withColumn("time",
-          expr("timestampadd(MICROSECOND, " +
-            "cast(time_sec as bigint) * 1000000 + time_nsec div 1000, " +
-            "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
-      else messages0
-      // Info and the commit record's new max come from the write itself
-      val messages = messages1.observe(info, count(lit(1)).as("n"),
-        coalesce(sum(col("size").cast("long")), lit(0L)).as("bytes"),
-        coalesce(expr("bit_xor(data_crc32)"), lit(0L)).as("crc"),
-        max(col("seqno")).as("last"))
+      // Messages, then per (datatype, md5) variant its optional
+      // `<table>_blobs` side table (seqno, data) and its table: seqno +
+      // the flattened payload + connection_id + bag_path [+ data], the
+      // columns a typed `rosbag` read decodes (MessageTable.cpp:326-343).
+      // Every table declares seqno non-null: it is never null on either
+      // numbering path (the fallback's inner join to the map included).
+      val seqno = StructField("seqno", LongType, nullable = false)
+      val msgSchema = StructType(frame.schema.fields.init.map(f =>
+        if (f.name == seqno.name) seqno else f))
+      val tables = scala.collection.mutable.ArrayBuffer(
+        "Messages" -> msgSchema)
+      def table(name: String, fields: StructField*): Int = {
+        tables += name -> StructType(fields); tables.size - 1
+      }
+      val routes = typeGroups.map { case (dt, md5, msgDef, name) =>
+        val payload = payloadFields(MsgDefParser.parse(dt, msgDef))
+        val side =
+          if (blobSideTable) table(s"${name}_blobs", seqno, StructField("data", BinaryType, nullable = false))
+          else -1
+        val blob =
+          if (!keepRawBlob) Nil
+          else if (!blobSideTable) Seq(StructField("data", BinaryType, nullable = false))
+          else Seq(StructField("data", BinaryType, nullable = true),
+            StructField("data_externalized", BooleanType, nullable = false))
+        val main = table(name, (seqno +: payload) ++
+          Seq(StructField("connection_id", IntegerType, nullable = false),
+            StructField("bag_path", StringType, nullable = false)) ++ blob: _*)
+        TypeRoute(dt, msgDef, payload.map(_.dataType).toArray, main, side, tables(main)._2.size)
+      }
+      // (bag_path, connection_id) → route, fixed here from the indexes
+      val routeOf: Map[String, Map[Int, Int]] = indexes.map { case (b, index) =>
+        b -> index.connections.map(c => c.connId ->
+          typeGroups.indexWhere(g => g._1 == c.datatype && g._2 == c.md5sum)).toMap
+      }.toMap
+      // DDL describes tables, not rows: appends to an existing table
+      // must not re-emit its CREATE statement
+      val ddl = tables.tail.filterNot(t => append && tableExists(s"$out/${t._1}.parquet"))
+        .map { case (name, schema) => VerticaDdl.createTable(name, schema) + "\n" }.mkString
 
-      // One table per (datatype, md5) variant. `joined`: the per-type
-      // frame. `rawForSide`: a lineage for the side-table write that
-      // does NOT pay the payload decode. In scan mode Catalyst pruning on
-      // the typed source gives that for free (the side write prunes to
-      // seqno+data, skipping the wire walk); in staged mode decodeRows
-      // goes through an RDD that is opaque to pruning, so the side table
-      // reads the staged bytes directly.
-      def typeFrames(datatype: String, md5: String, groupMsgDef: String,
-          groupBags: Seq[String]): (DataFrame, DataFrame) =
-        if (stagedByType) {
-          // decode this variant's bytes from its staging partition — the
-          // bags themselves are never re-read. bag_path narrows to the
-          // bags carrying THIS md5 variant (within a bag the md5 is
-          // unique per datatype, so bag_path fully disambiguates).
-          val staged = spark.read.parquet(stageDir)
-            .filter(col("datatype") === datatype && col("bag_path").isin(groupBags: _*))
-          val part = (if (indexed) staged else staged.join(seqnoMap, identity))
-            .select(col("seqno"), col("connection_id"), col("bag_path"), col("data"))
-          val decoded = decodeRows(spark, part, MsgDefParser.parse(datatype, groupMsgDef))
-          (if (keepRawBlob) decoded else decoded.drop("data"), part)
-        } else {
-          // a TYPED source read: decode happens inside the PartitionReader
-          // as InternalRows; the reference's route-by-type dispatch
-          // (FlattenedRosWriter.cpp:273-289) is the datatype option
-          // pushed into the source
-          val typed = scan(Some((datatype, md5)))
-          val payload = typed.columns.filterNot(Set(
-            "bag_path", "chunk_idx", "offset", "time_sec", "time_nsec",
-            "connection_id", "data")).map(col).toSeq
-          val frame = payload :+ col("connection_id") :+ col("bag_path")
-          val cols = if (keepRawBlob) frame :+ col("data") else frame
-          val j =
-            if (indexed) numbered(typed, cols)
-            else typed.join(seqnoMap, identity).select(col("seqno") +: cols: _*)
-          (j, j)
-        }
-
-      // The table writes are independent (distinct output dirs), so they
-      // run CONCURRENTLY: Spark's scheduler interleaves their stages,
-      // overlapping one job's write/commit stalls with another's scan.
-      // DDL is collected per table and appended in datatype order, for
-      // deterministic output.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      // one job group for all table jobs: on any failure the siblings
-      // are cancelled instead of racing caller teardown (job groups are
-      // thread-local, so each future sets it)
-      val jobGroup = s"graft-etl-${java.util.UUID.randomUUID()}"
-      def inGroup(desc: String)(body: => String): Future[String] =
-        Future { scala.concurrent.blocking {   // blocking{}: Spark actions
-          // park threads — without it the global EC caps concurrency at
-          // CPU count and starves other users of the pool
-          spark.sparkContext.setJobGroup(jobGroup, desc, interruptOnCancel = true)
-          // pooled EC thread: clear the thread-local group so later Spark
-          // work on this thread isn't attributed to a dead ETL group
-          try body finally spark.sparkContext.clearJobGroup()
-        } }
-      val typeDdl = typeGroups.map { case (datatype, md5, groupMsgDef, groupBags, tableName) =>
-        inGroup(s"per-type $tableName") {
-          val tableDdl = new StringBuilder
-          val (joined, rawForSide) = typeFrames(datatype, md5, groupMsgDef, groupBags)
-          val df =
-            if (blobSideTable) {
-              val (slim, sideFromJoined) = graft.multimodal.MultimodalOps
-                .externalizeBlobs(joined, "data", "seqno", blobThreshold)
-              // staged mode: decode is RDD-opaque to pruning, so build the
-              // side from the staged bytes — same isBigBlob cutoff
-              val side =
-                if (stagedByType) rawForSide
-                  .filter(graft.multimodal.MultimodalOps.isBigBlob(col("data"), blobThreshold))
-                  .select(col("seqno"), col("data"))
-                else sideFromJoined
-              val sideNew = !append || !tableExists(s"$out/${tableName}_blobs.parquet")
-              side.write.mode(writeMode)
-                .option("compression", "snappy")
-                .parquet(s"$out/${tableName}_blobs.parquet")
-              if (sideNew)
-                tableDdl ++= VerticaDdl.createTable(tableName + "_blobs", side.schema) ++= "\n"
-              slim
-            } else joined
-          // DDL describes tables, not rows: appends to an existing table
-          // must not re-emit its CREATE statement
-          val tableNew = !append || !tableExists(s"$out/$tableName.parquet")
-          df.write.mode(writeMode)
-            .option("compression", "snappy").parquet(s"$out/$tableName.parquet")
-          if (tableNew)
-            tableDdl ++= VerticaDdl.createTable(tableName, df.schema) ++= "\n"
-          tableDdl.toString
-        }
+      // ONE Spark job reads every chunk once and routes each message to
+      // Messages and to its type's table; all tables commit together
+      val threshold = if (blobSideTable) Some(blobThreshold) else None
+      val sums = inEtlJobGroup(spark, s"${tables.size} tables") {
+        RoutedTableWrite.run(spark, frame.queryExecution.toRdd,
+          tables.toSeq.map { case (n, sc) => RoutedTableWrite.Table(s"$out/$n.parquet", sc) },
+          s"$out/_temporary", append)(
+          (rows, emit) => routeRows(rows, emit, msgSchema, routes, routeOf, threshold))
       }
-      val messagesWrite = inGroup("Messages") {
-        messages.write.mode(writeMode)
-          .option("compression", "snappy").parquet(s"$out/Messages.parquet")
-        ""
-      }
-      try {
-        Await.result(Future.sequence(typeDdl :+ messagesWrite), Duration.Inf)
-          .foreach(ddl ++= _)
-      } catch { case e: Throwable =>
-        // fail fast AND stop the siblings — AndFutureJobs so siblings
-        // between jobs can't keep submitting against the dirs the finally
-        // below deletes
-        spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-        throw e
-      }
-      // Connections (written last) is the increment's COMMIT RECORD:
-      // runIncremental derives its done-set from Connections.bag_path
-      // alone, so it must land only AFTER every other write succeeded —
-      // Messages included. A crash mid-increment leaves the work
-      // unrecorded and the next increment's repair purges the dead
-      // attempt's rows before redoing those bags.
-      connections.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Connections.parquet")
+      // Connections dimension (reference FlattenedRosWriter.cpp:209-224),
+      // keyed (bag_path, connection_id) — connection ids are per-bag —
+      // and driver-side tiny, so written without a Spark job. Written
+      // last, it is the increment's COMMIT RECORD: runIncremental
+      // derives its done-set from Connections.bag_path alone, so it must
+      // land only AFTER every other table landed. A crash mid-increment
+      // leaves the work unrecorded and the next increment's repair
+      // purges the dead attempt's rows before redoing those bags.
+      val connSchema = graft.ros.bag.RosbagTables.ConnectionsSchema
+      val toRow = CatalystTypeConverters.createToCatalystConverter(connSchema)
+      RoutedTableWrite.runLocal(spark,
+        indexes.flatMap { case (b, index) => graft.ros.bag.RosbagTables.indexRows(index, b) }
+          .map(toRow(_).asInstanceOf[InternalRow]),
+        RoutedTableWrite.Table(s"$out/Connections.parquet", connSchema), s"$out/_temporary", append)
+      writeDdlFile(out, ddl, append)
+      sums
     } finally {
       // drop the scratch dirs even on failure (file:// and remote)
       Seq(seqnoDir, stageDir).foreach { d =>
@@ -877,25 +781,96 @@ object BagEtl {
         p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).delete(p, true)
       }
     }
-    writeDdlFile(out, ddl.toString, append)
 
     // manifest: naming history (incl. this run's groups) for future
     // incremental appends
     writeManifest(out, naming ++
-      typeGroups.map { case (dt, md5, _, _, name) => (dt, md5) -> name })
+      typeGroups.map { case (dt, md5, _, name) => (dt, md5) -> name })
 
-    // info from the Messages write's observed metrics — no re-read; in
-    // append mode they cover only THIS run's bags
-    val r = info.get
-    val last = Option(r("last")).map(_.asInstanceOf[Long])
+    // info from the data job's task sums — no re-read; in append mode
+    // they cover only THIS run's bags
+    val info = sums.foldLeft(Info(bagName, 0L, 0L, 0L)) { (i, s) =>
+      Info(bagName, i.count + s.count, i.sizeBytes + s.bytes, i.crcXor ^ s.crcXor)
+    }
+    val last = sums.map(_.last).foldLeft(seqnoOffset - 1)(math.max)
     // commit-record protocol, step 2: the dimension landed above, so
     // the increment is committed — finalize the record with the new
     // max. (A crash before this line resolves via inflight ⊆ done:
     // repair recovers the max from the Messages footers.)
-    writeCommitRecord(out, last.fold(seqnoOffset - 1)(math.max(seqnoOffset - 1, _)), Nil)
-    (Info(bagName, r("n").asInstanceOf[Long], r("bytes").asInstanceOf[Long],
-        r("crc").asInstanceOf[Long]),
-      typeGroups.map { case (dt, md5, _, _, name) => (dt, md5, name) })
+    writeCommitRecord(out, last, Nil)
+    (info, typeGroups.map { case (dt, md5, _, name) => (dt, md5, name) })
+  }
+
+  /** Run `body` in a fresh `graft-etl-*` job group, so the UI and
+    * traces show its jobs as the ETL's; the caller's group is restored.
+    */
+  private def inEtlJobGroup[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val keys = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+    val prior = keys.map(sc.getLocalProperty)
+    sc.setJobGroup(s"graft-etl-${java.util.UUID.randomUUID()}", desc, interruptOnCancel = true)
+    try body finally keys.zip(prior).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
+
+  /** A (datatype, md5) variant's route: its definition, payload column
+    * types, table indexes (`side` < 0: no blob side table) and table
+    * width.
+    */
+  private final case class TypeRoute(datatype: String, msgDef: String,
+      payload: Array[DataType], table: Int, side: Int, width: Int)
+
+  /** One task's share of `Info` and of the commit record's max. */
+  private final case class TaskSums(count: Long, bytes: Long, crcXor: Long, last: Long)
+
+  /** One task of the data job: every row of the ETL frame (seqno,
+    * Messages columns, data) goes to Messages; its payload is decoded
+    * once with its connection's definition — the typed source's row
+    * decode — and lands in its type's table. With a blob threshold,
+    * blobs above it move to the side table and the main row keeps a
+    * null `data` and `data_externalized = true`
+    * (MultimodalOps.externalizeBlobs' cutoff and layout).
+    */
+  private def routeRows(rows: Iterator[InternalRow], emit: (Int, InternalRow) => Unit,
+      msgSchema: StructType, routes: Seq[TypeRoute], routeOf: Map[String, Map[Int, Int]],
+      blobThreshold: Option[Int]): TaskSums = {
+    val toMessages = UnsafeProjection.create(msgSchema.fields.toSeq.zipWithIndex.map {
+      case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+    val Seq(bagOrd, sizeOrd, connOrd, crcOrd) =
+      Seq("bag_path", "size", "connection_id", "data_crc32").map(msgSchema.fieldIndex)
+    val dataOrd = msgSchema.size
+    val bundles = new Array[RosMsgBundle](routes.size)
+    var bag: UTF8String = null
+    var conns = Map.empty[Int, Int]
+    var count = 0L; var bytes = 0L; var crc = 0L; var last = Long.MinValue
+    rows.foreach { r =>
+      emit(0, toMessages(r))
+      val seqno = r.getLong(0)
+      count += 1; bytes += r.getInt(sizeOrd); crc ^= r.getLong(crcOrd)
+      last = math.max(last, seqno)
+      if (!r.getUTF8String(bagOrd).equals(bag)) {
+        bag = r.getUTF8String(bagOrd).clone()
+        conns = routeOf(bag.toString)
+      }
+      val connId = r.getInt(connOrd)
+      val g = conns(connId)
+      val route = routes(g)
+      if (bundles(g) == null) bundles(g) = MsgDefParser.parse(route.datatype, route.msgDef)
+      val data = r.getBinary(dataOrd)
+      val vals = RosSchemaMapper.decode(bundles(g), data).iterator
+      val k = route.payload.length
+      val big = blobThreshold.exists(data.length > _)
+      val row = new Array[Any](route.width)
+      row(0) = seqno
+      var i = 0
+      while (i < k) { row(i + 1) = RosbagTypedRead.toCatalyst(vals.next(), route.payload(i)); i += 1 }
+      row(k + 1) = connId
+      row(k + 2) = bag
+      if (route.width > k + 3) row(k + 3) = if (big) null else data
+      if (route.side >= 0) row(k + 4) = big
+      if (big) emit(route.side, new GenericInternalRow(Array[Any](seqno, data)))
+      emit(route.table, new GenericInternalRow(row))
+    }
+    TaskSums(count, bytes, crc, last)
   }
 
   private def tableExists(path: String): Boolean = {
@@ -1022,26 +997,24 @@ object BagEtl {
     }
   }
 
+  /** A type's flattened payload columns as the typed `rosbag` source
+    * names them: payload fields colliding with a reserved frame column
+    * (e.g. sensor_msgs/CompressedImage's `data` — the reference never
+    * hits this because it drops arrays) get a `_field` suffix.
+    */
+  private def payloadFields(bundle: RosMsgBundle): Seq[StructField] =
+    RosbagTypedRead.typedSchema(bundle, includeRaw = false).fields.toSeq
+      .drop(RosbagTypedRead.MetaFields.size)
+
   /** Flattened per-type DataFrame from (seqno, connection_id, data)
     * rows: seqno + flattened payload columns + connection_id + raw data
     * blob (column frame per reference MessageTable.cpp:326-343; blob
     * retention README.md:106).
     */
   def decodeRows(spark: SparkSession, part: DataFrame, bundle: RosMsgBundle): DataFrame = {
-    val flat = RosSchemaMapper.flatSchema(bundle)
-    // Payload fields may collide with the reserved frame columns (e.g.
-    // sensor_msgs/CompressedImage has a `data` field — the reference
-    // never hits this because it drops arrays). Reserved names win
-    // (reference compat); colliding payload columns get `_field`.
-    // Same set as the typed source (RosbagTypedRead.reserved) so the
-    // staged and per-type-scan ETL modes emit identical column names.
-    val reserved = Set("seqno", "connection_id", "data", "bag_path",
-      "chunk_idx", "offset", "time_sec", "time_nsec")
-    val payload = flat.fields.map(f =>
-      if (reserved(f.name)) f.copy(name = f.name + "_field") else f)
     val outSchema = StructType(
       StructField("seqno", LongType, nullable = false) +:
-      (payload :+
+      (payloadFields(bundle) :+
         StructField("connection_id", IntegerType, nullable = false) :+
         StructField("bag_path", StringType, nullable = false) :+
         StructField("data", BinaryType, nullable = false)))

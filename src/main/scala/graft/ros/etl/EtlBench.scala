@@ -66,9 +66,7 @@ object EtlBench {
       Seq(WriteMessage(0, 1700000000 + i / 20, (i % 20) * 50000000, imgMsg(i)),
           WriteMessage(1, 1700000000 + i / 20, (i % 20) * 50000000 + 1, imuMsg(i)))
     }
-    // GRAFT_ETL_COMPRESSION=bz2|lz4 benches compressed-chunk bags — the
-    // case the staged single-pass mode exists for (decompress once, not
-    // once per datatype)
+    // GRAFT_ETL_COMPRESSION=bz2|lz4 benches compressed-chunk bags
     val compression = sys.env.getOrElse("GRAFT_ETL_COMPRESSION", "none")
     val dir = java.nio.file.Files.createTempDirectory("etl_bench")
     val bagPath = dir.resolve("bench.bag")
@@ -77,10 +75,8 @@ object EtlBench {
     val bagMB = java.nio.file.Files.size(bagPath) / 1e6
     System.err.println(f"bag written: $bagMB%.1f MB ($compression)")
 
-    val staged = sys.env.contains("GRAFT_ETL_STAGED")
     val t0 = System.nanoTime()
-    val info = BagEtl.run(spark, bagPath.toString, dir.resolve("out").toString,
-      stagedByType = staged)
+    val info = BagEtl.run(spark, bagPath.toString, dir.resolve("out").toString)
     val sec = (System.nanoTime() - t0) / 1e9
 
     def dirSize(f: java.io.File): Long =

@@ -152,9 +152,9 @@ class BagSpec extends SparkTestBase {
     assert(graft.ros.etl.BagEtl.versionedOutputDir(out) == s"$out.1")
   }
 
-  test("stagedByType single-pass ETL produces tables identical to per-type scans") {
-    // two datatypes (slash in partition values) + compressed chunks —
-    // the case the single-pass mode exists for
+  test("single-pass ETL produces tables identical to per-type scans") {
+    // two datatypes + compressed chunks: one scan decompresses each chunk
+    // once and routes it to both tables
     import graft.ros.etl.EtlBench
     val imgBundle = MsgDefParser.parse("sensor_msgs/CompressedImage",
       EtlBench.compressedImageDef)
@@ -174,8 +174,8 @@ class BagSpec extends SparkTestBase {
     Files.write(bag, BagFormat.writeBag(conns, msgs, messagesPerChunk = 4,
       compression = "lz4"))
     val base = Files.createTempDirectory("graft_staged").toString
-    graft.ros.etl.BagEtl.run(spark, bag.toString, s"$base/scan")
-    graft.ros.etl.BagEtl.run(spark, bag.toString, s"$base/staged", stagedByType = true)
+    graft.ros.etl.BagEtlReference.run(spark, bag.toString, s"$base/scan")
+    graft.ros.etl.BagEtl.run(spark, bag.toString, s"$base/staged")
 
     for (t <- Seq("Messages", "sensor_msgs_Imu", "sensor_msgs_CompressedImage")) {
       val a = spark.read.parquet(s"$base/scan/$t.parquet")
@@ -194,8 +194,9 @@ class BagSpec extends SparkTestBase {
         }
       }
     }
-    // staging dir is cleaned up
-    assert(!Files.exists(Paths.get(s"$base/staged/_spine")))
+    // staging dirs are cleaned up
+    assert(!Files.exists(Paths.get(s"$base/staged/_spine")) &&
+      !Files.exists(Paths.get(s"$base/staged/_temporary")))
   }
 
   test("decodeRows re-materializes blobs into typed columns (SURVEY 7.7)") {

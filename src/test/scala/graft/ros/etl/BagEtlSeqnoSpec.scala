@@ -63,10 +63,8 @@ class BagEtlSeqnoSpec extends SparkTestBase {
     "spark.graft.chunkOpenCostBytes" -> "0")
 
   /** Run the ETL; returns the number of shuffle stages it ran. */
-  private def etl(dir: Path, o: String, stagedByType: Boolean = false): Int =
-    EtlCommitRecordSpec.jobStarts(spark) {
-      BagEtl.run(spark, dir.toString, o, stagedByType = stagedByType); ()
-    }.flatMap(_.stageInfos).count(org.apache.spark.GraftTestAccess.isShuffleMapStage)
+  private def etl(dir: Path, o: String): Int =
+    EtlCommitRecordSpec.jobStarts(spark) { BagEtl.run(spark, dir.toString, o); () }.flatMap(_.stageInfos).count(org.apache.spark.GraftTestAccess.isShuffleMapStage)
 
   private def rows(o: String, table: String) = {
     val df = spark.read.parquet(s"$o/$table.parquet")
@@ -75,7 +73,7 @@ class BagEtlSeqnoSpec extends SparkTestBase {
   }
   private val tables = Seq("Messages", "Connections", "test_msgs_A", "test_msgs_B")
 
-  test("index-numbered ETL == both fallback triggers, in scan and stagedByType modes") {
+  test("index-numbered ETL == both fallback triggers") {
     val dir = writeLoad(strip = false)
     assert(numbering(dir).isRight)
     val indexed = out("graft_etlseq_idx")
@@ -83,11 +81,9 @@ class BagEtlSeqnoSpec extends SparkTestBase {
     assert(rows(indexed, "Messages").map(_.getAs[Long]("seqno")) == (0L until 11L))
 
     val budget = out("graft_etlseq_budget")
-    val budgetStaged = out("graft_etlseq_budget_staged")
     withConf(tinyPartitions: _*) {
       assert(numbering(dir).left.toOption.exists(_.contains("partition budget")))
       assert(etl(dir, budget) > 0, "the budget fallback did not run the Seqno shuffle")
-      assert(etl(dir, budgetStaged, stagedByType = true) > 0)
     }
 
     // the same paths, rewritten as unclosed recordings without chunk-info
@@ -96,7 +92,7 @@ class BagEtlSeqnoSpec extends SparkTestBase {
     val stripped = out("graft_etlseq_strip")
     assert(etl(dir, stripped) > 0)
 
-    Seq(budget, budgetStaged, stripped).foreach { o =>
+    Seq(budget, stripped).foreach { o =>
       tables.foreach(t => assert(rows(o, t) == rows(indexed, t), s"$o/$t"))
     }
   }
@@ -130,14 +126,35 @@ class BagEtlSeqnoSpec extends SparkTestBase {
   }
 
   test("an indexed one-bag ETL runs no shuffle stage and at most one job per table") {
+    // incompressible ~64 KB lz4 chunks, far above the file system's
+    // read buffer: a chunk read then reads its own bytes, so the bytes
+    // read count how often the ETL reads the bag (a bag of ~400-byte
+    // chunks reads ~2.4x its size through the buffer on one pass)
+    val rng = new scala.util.Random(5)
     val p = Files.createTempFile("graft_etlseq_shape", ".bag")
     Files.write(p, BagFormat.writeBag(conns,
-      (0 until 40).map(i => msg(i % 2, 100 + i / 3, (i % 3) * 1000)),
+      (0 until 40).map(i => WriteMessage(i % 2, 100 + i / 3, (i % 3) * 1000,
+        if (i % 2 == 0) RosSchemaMapper.encode(aBundle, Seq(i))
+        else RosSchemaMapper.encode(bBundle, Seq(i * 0.5, rng.alphanumeric.take(22000).mkString)))),
       messagesPerChunk = 6, compression = "lz4"))
+    val bag = RosbagIO.resolveBags(p.toString)
+    // the index is read (and cached) once per bag version; this measures
+    // the ETL's own pass over the chunks
+    RosbagIO.scanIndexes(bag)
+    def fileBytesRead(): Long = {
+      import scala.jdk.CollectionConverters._
+      org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+        .filter(_.getScheme == "file").map(_.getBytesRead).sum
+    }
     val o = out("graft_etlseq_shape")
+    val read0 = fileBytesRead()
     val jobs = EtlCommitRecordSpec.jobStarts(spark) { BagEtl.run(spark, p.toString, o); () }
+    val read = fileBytesRead() - read0
     assert(jobs.flatMap(_.stageInfos).forall(!org.apache.spark.GraftTestAccess.isShuffleMapStage(_)))
-    assert(jobs.size <= tables.size, s"${jobs.size} jobs for ${tables.size} tables")
+    // one data job for every table; Connections is written on the driver
+    assert(jobs.size <= 1, s"${jobs.size} jobs for ${tables.size} tables")
+    assert(read <= 1.3 * Files.size(p), s"read $read bytes of a ${Files.size(p)}-byte bag")
+    tables.foreach(t => assert(spark.read.parquet(s"$o/$t.parquet").count() > 0, t))
   }
 
   test("Info equals a re-read of Messages: run, an incremental slice, a zero-message bag") {

@@ -164,6 +164,71 @@ class EtlCommitRecordSpec extends SparkTestBase {
     assert(spark.read.parquet(imu.toString).count() === 3)
   }
 
+  test("a corrupt chunk fails the data job loudly and lands nothing; the redo is exactly-once") {
+    // two lz4 bags; seeded garbage over the second bag's LAST chunk. The
+    // index section is intact, so the failure surfaces inside the job.
+    val src = Files.createTempDirectory("graft_cr_corrupt_src")
+    addBag(src, "a.bag", 1700000000, n = 9)
+    addBag(src, "b.bag", 1700000100, n = 9)
+    def lz4(name: String): Array[Byte] = {
+      val plain = BagFormat.scanIndex(() => Files.newInputStream(src.resolve(name)))
+      val msgs = plain.chunks.flatMap(c => BagFormat.chunkMessages(c,
+        graft.ros.bag.RosbagIO.readChunkData(src.resolve(name).toString, c)))
+      BagFormat.writeBag(plain.connections, msgs.map(m =>
+        WriteMessage(m.connId, m.timeSec, m.timeNsec, m.data)), messagesPerChunk = 2,
+        compression = "lz4")
+    }
+    val good = lz4("b.bag")
+    val bad = good.clone()
+    val last = BagFormat.scanIndex(() => new java.io.ByteArrayInputStream(good)).chunks.last
+    val garbage = new Array[Byte](last.dataLength)
+    new scala.util.Random(11).nextBytes(garbage)
+    System.arraycopy(garbage, 0, bad, last.dataOffset.toInt, garbage.length)
+
+    def dataFiles(out: String): Set[String] =
+      Option(new java.io.File(out).listFiles).toSeq.flatten
+        .filter(d => d.isDirectory && d.getName.endsWith(".parquet"))
+        .flatMap(d => d.listFiles.toSeq.filter(_.getName.startsWith("part-"))
+          .map(f => s"${d.getName}/${f.getName}")).toSet
+    def noScratch(out: String): Unit = Seq("_temporary", "_spine", "_seqno").foreach(d =>
+      assert(!Files.exists(Paths.get(out, d)), s"$d left behind"))
+
+    // run: a fresh output dir gets no table at all
+    val dir = Files.createTempDirectory("graft_cr_corrupt")
+    Files.write(dir.resolve("a.bag"), lz4("a.bag"))
+    Files.write(dir.resolve("b.bag"), bad)
+    val bags = graft.ros.bag.RosbagIO.resolveBags(dir.toString)
+    val fresh = Files.createTempDirectory("graft_cr_corrupt_run").toString + "/out"
+    intercept[org.apache.spark.SparkException](BagEtl.run(spark, dir.toString, fresh))
+    assert(dataFiles(fresh).isEmpty)
+    noScratch(fresh)
+    assert(BagEtl.readCommitRecord(fresh).contains((-1L, bags)))
+
+    // runIncremental: the failed append adds no part file anywhere
+    val inc = Files.createTempDirectory("graft_cr_corrupt_inc")
+    Files.write(inc.resolve("a.bag"), lz4("a.bag"))
+    val out = freshOut("graft_cr_corrupt_out")
+    assert(BagEtl.runIncremental(spark, inc.toString, out).count == 9)
+    val before = dataFiles(out)
+    Files.write(inc.resolve("b.bag"), bad)
+    val bPath = graft.ros.bag.RosbagIO.resolveBags(inc.resolve("b.bag").toString)
+    intercept[org.apache.spark.SparkException](BagEtl.runIncremental(spark, inc.toString, out))
+    assert(dataFiles(out) == before)
+    noScratch(out)
+    assert(BagEtl.readCommitRecord(out).contains((8L, bPath)))
+
+    // restored, the redo converts b exactly once
+    Files.write(inc.resolve("b.bag"), good)
+    assert(BagEtl.runIncremental(spark, inc.toString, out).count == 9)
+    val m = spark.read.parquet(s"$out/Messages.parquet")
+    assert(m.count() === 18 && m.select("seqno").distinct().count() === 18)
+    assert(m.agg(min(col("seqno")), max(col("seqno"))).head() ==
+      org.apache.spark.sql.Row(0L, 17L))
+    assert(spark.read.parquet(s"$out/sensor_msgs_Imu.parquet").count() === 18)
+    assert(spark.read.parquet(s"$out/Connections.parquet").count() === 2)
+    assert(BagEtl.readCommitRecord(out).contains((17L, Seq.empty[String])))
+  }
+
   test("commit record round-trips paths with ']', quotes, backslashes, newlines") {
     // ']' is the hostile one: a naive `[^\]]*` array regex truncates at
     // the bracket INSIDE the path, parsing a non-empty inflight set as
