@@ -1,9 +1,8 @@
 package graft.ros.db3
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.ros.etl.{BagEtl, VerticaDdl}
-import graft.operators.Seqno
+import graft.ros.etl.{BagEtl, RoutedEtl}
 
 /** Route-by-type ETL over rosbag2 sqlite storage — the third container
   * under the SAME contract surface as BagEtl (rosbag1) and McapEtl
@@ -11,7 +10,7 @@ import graft.operators.Seqno
   *
   *  - `Messages.parquet`: the spine — every message's metadata plus a
   *    payload CRC32, under a DENSE GLOBAL `seqno` in timestamp order
-  *    (distributed prefix-sum, (file_path, msg_id) tie-break);
+  *    ((file_path, msg_id) tie-break);
   *  - `Topics.parquet`: the Connections/Channels dimension;
   *  - one flattened table per (type, md5-of-definition) VARIANT from
   *    the files' message_definitions tables, decoding CDR payloads
@@ -26,21 +25,15 @@ import graft.operators.Seqno
   *    `ros2idl` definitions route typed (McapPayload dispatch);
   *  - Vertica DDL for every table created; versioned output dirs on
   *    `run`; `runIncremental` appends new files with continuing seqnos
-  *    and Topics written LAST as the increment's commit record — the
-  *    done-set is Topics.file_path alone, so a crash anywhere before
-  *    the Topics write (including between the Messages and Topics
-  *    writes) redoes the file (crash → redo, never silent holes;
-  *    duplicate Messages rows from a redo share (file_path, msg_id)
-  *    identity and drop with dropDuplicates).
+  *    and Topics written LAST as the increment's commit record
+  *    (RoutedEtl.increment).
   *
-  * Scale shape: ONE pass over the sqlite b-trees (the `db3` source's
-  * per-subtree partitions) stages meta + payload bytes to parquet
-  * partitioned by a type-route column; the seqno passes and every
-  * typed decode read the staging table, so each database file is
-  * walked exactly once regardless of type count. (Unlike the bag/mcap
-  * ETLs there is no cheaper re-scan mode to offer: sqlite interleaves
-  * topics within shared b-tree pages, so any per-type re-scan walks
-  * every page anyway — staging is strictly better here.)
+  * Scale shape: BagEtl's, through [[RoutedEtl]]: one meta-only walk of
+  * the sqlite b-trees (the `db3` source's per-subtree partitions)
+  * stages the (timestamp, identity) spine for the Seqno operator, and
+  * ONE Spark job walks them again, joined to the seqno map, handing
+  * each message to Messages and, decoded once, to its (file, topic)'s
+  * variant table or to RawMessages.
   */
 object Db3Etl {
 
@@ -53,281 +46,86 @@ object Db3Etl {
   def run(spark: SparkSession, path: String, outDir: String,
           maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
           nativeTimestamp: Boolean = false): Info =
-    runFiles(spark, Db3IO.resolveFiles(path), new java.io.File(path).getName,
+    convert(spark, RoutedEtl.Slice(Db3IO.resolveFiles(path)), new java.io.File(path).getName,
       BagEtl.versionedOutputDir(outDir), maxMessages, keepRawBlob, nativeTimestamp)
 
-  /** Incremental conversion, BagEtl/McapEtl's contract: only files not
-    * recorded in the output's Messages∪Topics are converted; seqnos
-    * continue past the existing max; naming pinned by the manifest.
+  /** Incremental conversion, BagEtl/McapEtl's contract: only files the
+    * Topics dimension does not list yet are converted (RoutedEtl.increment);
+    * seqnos continue past the committed max; naming pinned by the manifest.
     */
   def runIncremental(spark: SparkSession, path: String, outDir: String,
           keepRawBlob: Boolean = true, nativeTimestamp: Boolean = false): Info = {
-    val messagesPath = new org.apache.hadoop.fs.Path(s"$outDir/Messages.parquet")
-    val fs = messagesPath.getFileSystem(Db3IO.hadoopConf())
-    val dirName = new java.io.File(path).getName
-    if (!fs.exists(messagesPath))
-      return runFiles(spark, Db3IO.resolveFiles(path), dirName, outDir,
-        None, keepRawBlob, nativeTimestamp)
-    // Done-set = Topics.file_path ALONE. Topics is written LAST
-    // (runFiles), so its presence implies the whole increment landed —
-    // including a zero-message file, whose Topics rows ARE its complete
-    // output. Unioning in Messages.file_path would mark a file done
-    // after a crash in the window between the Messages and Topics
-    // writes, leaving a permanent silent hole in the Topics dimension;
-    // with Topics-only, that crash redoes the file after
-    // repairCrashedIncrement purges the dead attempt's rows —
-    // exactly-once output, no consumer-side dedup contract.
-    val topicsPath = new org.apache.hadoop.fs.Path(s"$outDir/Topics.parquet")
-    val done =
-      if (!fs.exists(topicsPath)) Set.empty[String]
-      else spark.read.parquet(s"$outDir/Topics.parquet")
-        .select(col("file_path")).distinct().collect().map(_.getString(0)).toSet
-    // crash repair + committed seqno max (BagEtl.repairCrashedIncrement:
-    // redo after a crash is exactly-once, dead rows purged first)
-    val maxClean = BagEtl.repairCrashedIncrement(spark, outDir, "file_path",
-      done, dimension = "Topics")
-    val newFiles = Db3IO.resolveFiles(path).filterNot(done)
-    if (newFiles.isEmpty) return Info(dirName, 0L, 0L, 0L, 0L, Map.empty)
-    val offset = maxClean + 1
-    runFiles(spark, newFiles, dirName, outDir, None, keepRawBlob, nativeTimestamp,
-      seqnoOffset = offset, naming = BagEtl.readManifest(outDir), append = true)
+    val slice = RoutedEtl.increment(spark, outDir, Db3IO.resolveFiles(path),
+      "file_path", "Topics")
+    val name = new java.io.File(path).getName
+    if (slice.files.isEmpty) Info(name, 0L, 0L, 0L, 0L, Map.empty)
+    else convert(spark, slice, name, outDir, None, keepRawBlob, nativeTimestamp)
   }
 
-  private val metaColNames = Seq("file_path", "msg_id", "topic_id", "topic",
-    "type", "serialization_format", "timestamp", "size", "data_crc32")
-
-  private def runFiles(spark: SparkSession, files: Seq[String], name: String,
-          out: String, maxMessages: Option[Long], keepRawBlob: Boolean,
-          nativeTimestamp: Boolean, seqnoOffset: Long = 0L,
-          naming: Map[(String, String), String] = Map.empty,
-          append: Boolean = false): Info = {
-    // commit-record protocol, step 1 (see BagEtl.repairCrashedIncrement):
-    // declare the increment in-flight BEFORE any data write
-    BagEtl.writeCommitRecord(out, seqnoOffset - 1, files)
-    // ONE metadata scan per file serves the dimension, the definition
-    // census and the retention census alike — parallel across files
-    val metas: Seq[(String, Db3IO.Db3Meta)] = Db3IO.scanMetas(files)
-    val topicsDim = {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("file_path", StringType, nullable = false),
-        StructField("topic_id", LongType, nullable = false),
-        StructField("topic", StringType, nullable = false),
-        StructField("type", StringType, nullable = false),
-        StructField("serialization_format", StringType, nullable = false)))
-      val rows = metas.flatMap { case (f, m) =>
-        m.topics.toSeq.sortBy(_._1).map { case (id, (n, t, fmt)) => Row(f, id, n, t, fmt) } }
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    }
-
-    // definitions per (type, md5-of-text) variant. A type is routable
-    // only when EVERY variant is ros2msg/ros2idl and FLATTENS (bundle
-    // construction alone does not resolve references — flatSchema
-    // does, so an incomplete dependency closure must fail HERE, not
-    // inside a per-type job that would sink the whole run) — a split
-    // would route one md5 typed and its drifted sibling raw.
-    val allDefs = metas.flatMap { case (f, m) =>
-      m.definitions.map { case (t, enc, text) => (t, enc, text, f) } }
-    val flattenable: Set[String] = allDefs.groupBy(_._1).collect {
-      case (t, rows) if rows.forall { case (_, enc, text, _) =>
-        (enc == "ros2msg" || enc == "ros2idl") &&
-          scala.util.Try(graft.ros.RosSchemaMapper.flatSchema(
-            graft.ros.mcap.McapPayload.bundle(enc, t,
-              text.getBytes("UTF-8")))).isSuccess } => t
-    }.toSet
-
-    // a message routes typed only if ITS OWN FILE defines the type:
-    // a pre-Humble file can carry messages of a type another file
-    // defines, and a type-only route would stage those rows typed,
-    // exclude them from every variant's (per-file) decode, and lose
-    // them — they belong in RawMessages
-    val definedPairs: Set[String] = allDefs.collect {
-      case (t, _, _, f) if flattenable(t) => s"$f\n$t" }.toSet
-
-    val variants: Seq[(String, String, (String, String), Seq[String], String)] = {
-      val usable = allDefs.filter(d => flattenable(d._1))
-        .map { case (t, enc, text, f) =>
-          (t, graft.ros.mcap.McapTypedRead.md5hex(text.getBytes("UTF-8")), (enc, text), f) }
-      usable.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (t, rows) =>
-        val base = tableName(t)
-        val byMd5 = rows.groupBy(_._2).toSeq.sortBy(_._1)
-        byMd5.map { case (md5, vs) =>
-          val table = naming.getOrElse((t, md5),
-            if (naming.keys.exists(_._1 == t)) s"${base}__${md5.take(8)}"
-            else if (byMd5.size == 1) base
-            else s"${base}__${md5.take(8)}")
-          (t, md5, vs.head._3, vs.map(_._4).distinct, table)
-        }
-      }
-    }
-
-    // ONE walk of the sqlite b-trees stages everything: meta + CRC +
-    // payload bytes, partitioned by the type route.
-    val raw0 = spark.read.format("db3")
-      .option("files", Db3DataSource.filesSpec(files)).load()
-    val raw = maxMessages.map(n => raw0.limit(n.toInt).toDF()).getOrElse(raw0)
-    val routed =
-      if (definedPairs.isEmpty) lit(false)
-      else concat_ws("\n", col("file_path"), col("type"))
-        .isin(definedPairs.toSeq: _*) &&
-        col("serialization_format") === "cdr"
-    val stageDir = s"$out/_stage"
-    // staging dirs are pure scratch: Overwrite, so a hard crash that
-    // skipped the cleanup below cannot fail the redo with
-    // "path already exists" (the commit-record contract depends on
-    // redo actually working)
-    raw.withColumn("data_crc32", crc32(col("data")))
-      .select(metaColNames.map(col) :+ col("data") :+
-        when(routed, col("type")).otherwise(lit("__raw")).as("_route"): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("_route")
-      .option("compression", "snappy").parquet(stageDir)
-
-    val metaCols = metaColNames.map(col)
-    val spine0 = Seqno.globalSeqno(
-      spark.read.parquet(stageDir).select(metaCols: _*),
-      Seq(col("timestamp"), col("file_path"), col("msg_id")))
-    val spine = if (seqnoOffset == 0L) spine0
-      else spine0.withColumn("seqno", col("seqno") + lit(seqnoOffset))
-
-    val messages0 = spine.select(col("seqno") +: metaCols: _*)
-    val messages = if (nativeTimestamp)
-      // floor nanos → micros, NTZ arithmetic (rosbag2 timestamps are
-      // u64 nanos, never negative, so `div` floors)
-      messages0.withColumn("timestamp_ts",
-        expr("timestampadd(MICROSECOND, timestamp div 1000, " +
-          "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
-    else messages0
-
-    val writeMode = if (append) SaveMode.Append else SaveMode.ErrorIfExists
-
-    val seqnoDir = s"$out/_seqno"
-    spine.select(col("file_path"), col("msg_id"), col("seqno"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy").parquet(seqnoDir)
-    val seqnoMap = spark.read.parquet(seqnoDir)
-
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val jobGroup = s"graft-db3-etl-${java.util.UUID.randomUUID()}"
-    val typeDdl = variants.map { case (t, md5, (enc, text), vFiles, table) =>
-      Future { scala.concurrent.blocking {
-        spark.sparkContext.setJobGroup(jobGroup, s"per-type $table",
-          interruptOnCancel = true)
-        try {
-          // this VARIANT's rows: the route partition holds every
-          // variant of the type; a file carries exactly one definition
-          // per type, so variant membership is per FILE
-          val part = spark.read.parquet(stageDir)
-            .filter(col("_route") === t && col("file_path").isin(vFiles: _*))
-            .join(seqnoMap, Seq("file_path", "msg_id"))
-            .select(col("seqno"), col("msg_id"), col("timestamp"),
-              col("topic_id"), col("file_path"), col("data"))
-          val df = decodeRows(spark, part,
-            graft.ros.mcap.McapPayload.bundle(enc, t, text.getBytes("UTF-8")),
-            keepRawBlob)
-          val isNew = !append || !pathExists(s"$out/$table.parquet")
-          df.write.mode(writeMode)
-            .option("compression", "snappy").parquet(s"$out/$table.parquet")
-          if (isNew) VerticaDdl.createTable(table, df.schema) + "\n" else ""
-        } finally spark.sparkContext.clearJobGroup()
-      } }
-    }
-
-    val ddl = new StringBuilder
-    try {
-      Await.result(Future.sequence(typeDdl), Duration.Inf).foreach(ddl ++= _)
-
-      val hasUnrouted = metas.exists { case (f, m) =>
-        m.topics.values.exists { case (_, t, fmt) =>
-          !(definedPairs(s"$f\n$t") && fmt == "cdr") }
-      }
-      if (hasUnrouted) {
-        val rawTab = spark.read.parquet(stageDir)
-          .filter(col("_route") === "__raw")
-          .join(seqnoMap, Seq("file_path", "msg_id"))
-          .select(col("seqno"), col("topic_id"), col("topic"), col("type"),
-            col("serialization_format"), col("file_path"), col("data"))
-        val rawNew = !append || !pathExists(s"$out/RawMessages.parquet")
-        rawTab.write.mode(writeMode)
-          .option("compression", "snappy").parquet(s"$out/RawMessages.parquet")
-        if (rawNew) ddl ++= VerticaDdl.createTable("RawMessages", rawTab.schema) ++= "\n"
-      }
-
-      // Topics is the increment's COMMIT RECORD (runIncremental's
-      // done-set is Topics.file_path alone) — written only after every
-      // other write succeeded, Messages included, so Topics presence
-      // implies the whole increment landed
-      messages.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Messages.parquet")
-      topicsDim.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Topics.parquet")
-    } catch { case e: Throwable =>
-      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-      throw e
-    } finally {
-      Seq(seqnoDir, stageDir).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(Db3IO.hadoopConf()).delete(p, true)
-      }
-    }
-
-    BagEtl.writeDdlFile(out, ddl.toString, append)
-    BagEtl.writeManifest(out, naming ++
-      variants.map { case (t, md5, _, _, table) => (t, md5) -> table })
-
-    val msgs0 = spark.read.parquet(s"$out/Messages.parquet")
-    val msgs = if (append) msgs0.filter(col("file_path").isin(files: _*)) else msgs0
-    val infoRow = msgs
-      .agg(count(lit(1)), coalesce(sum(col("size").cast("long")), lit(0L)),
-        coalesce(expr("bit_xor(data_crc32)"), lit(0L)), max(col("seqno"))).head()
-    val (cnt, size, crc) =
-      (infoRow.getLong(0), infoRow.getLong(1), infoRow.getLong(2))
-    // commit-record protocol, step 2: dimension landed — finalize
-    BagEtl.writeCommitRecord(out,
-      if (infoRow.isNullAt(3)) seqnoOffset - 1
-      else math.max(seqnoOffset - 1, infoRow.getLong(3)), Nil)
-    val tables = variants.map { case (_, _, _, _, table) =>
-      val tdf = spark.read.parquet(s"$out/$table.parquet")
-      table -> (if (append) tdf.filter(col("file_path").isin(files: _*)) else tdf).count()
-    }.toMap
-    Info(name, cnt, topicsDim.count(), size, crc, tables)
-  }
-
-  /** Flattened per-variant DataFrame from staged rows: seqno +
-    * flattened payload columns + msg_id/timestamp/topic_id/file_path
-    * (+ raw blob), the db3 twin of McapEtl.decodeRows, column-collision
-    * safe via the typed read's reserved-name rule.
+  /** The db3 half of the conversion: the catalog census, the decoders
+    * and the table layouts; [[RoutedEtl]] does the rest.
     */
-  private[db3] def decodeRows(spark: SparkSession, part: DataFrame,
-      bundle: graft.ros.RosMsgBundle, keepRawBlob: Boolean): DataFrame = {
-    import org.apache.spark.sql.types._
-    val flat = graft.ros.RosSchemaMapper.flatSchema(bundle)
-    val payload = flat.fields.map(f =>
-      if (Db3TypedRead.reserved(f.name)) f.copy(name = f.name + "_field") else f)
-    val base = StructField("seqno", LongType, nullable = false) +:
-      (payload.toSeq :+
-        StructField("msg_id", LongType, nullable = false) :+
-        StructField("timestamp", LongType, nullable = false) :+
-        StructField("topic_id", LongType, nullable = false) :+
-        StructField("file_path", StringType, nullable = false))
-    val outSchema = StructType(
-      if (keepRawBlob) base :+ StructField("data", BinaryType, nullable = false) else base)
-    val rows = part
-      .select(col("seqno"), col("msg_id"), col("timestamp"), col("topic_id"),
-        col("file_path"), col("data"))
-      .rdd.map { r =>
-        val bytes = r.getAs[Array[Byte]](5)
-        val vals = graft.ros.mcap.CdrCodec.decode(bundle, bytes)
-        val tail = Seq[Any](r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)) ++
-          (if (keepRawBlob) Seq(bytes) else Nil)
-        Row.fromSeq(r.getLong(0) +: (vals ++ tail))
-      }
-    spark.createDataFrame(rows, outSchema)
-  }
-
-  private def pathExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(Db3IO.hadoopConf()).exists(p)
+  private def convert(spark: SparkSession, slice: RoutedEtl.Slice, name: String,
+          out: String, maxMessages: Option[Long], keepRawBlob: Boolean,
+          nativeTimestamp: Boolean): Info = {
+    val r = RoutedEtl.run(spark, out, slice, maxMessages, keepRawBlob, nativeTimestamp) {
+      // ONE metadata scan per file serves the dimension and the
+      // definition census alike — parallel across files
+      val metas = Db3IO.scanMetas(slice.files)
+      val defs = metas.flatMap { case (f, m) =>
+        m.definitions.map { case (t, enc, text) => (t, enc, text.getBytes("UTF-8"), f) } }
+      // A type is routable only when EVERY variant is ros2msg/ros2idl
+      // and FLATTENS (bundle construction alone does not resolve
+      // references — flatSchema does, so an incomplete dependency
+      // closure falls back to RawMessages here) — a split would route
+      // one md5 typed and its drifted sibling raw.
+      val flattenable: Set[String] = defs.groupBy(_._1).collect {
+        case (t, ds) if ds.forall { case (_, enc, text, _) =>
+          (enc == "ros2msg" || enc == "ros2idl") &&
+            scala.util.Try(graft.ros.RosSchemaMapper.flatSchema(
+              graft.ros.mcap.McapPayload.bundle(enc, t, text))).isSuccess } => t
+      }.toSet
+      val usable = defs.filter(d => flattenable(d._1))
+        .map { case (t, enc, text, f) => ((t, graft.ros.mcap.McapTypedRead.md5hex(text)), enc, text, f) }
+      // a message routes typed only if ITS OWN FILE defines its type: a
+      // pre-Humble file can carry messages of a type another file
+      // defines, and those belong in RawMessages
+      val variantOf = usable.map { case (k, _, _, f) => (f, k._1) -> k }.toMap
+      val first = usable.groupBy(_._1).map { case (k, ds) => k -> ds.head }
+      val keys = first.keys.toSeq.sorted
+      RoutedEtl.Source(
+        spark.read.format("db3").option("files", Db3DataSource.filesSpec(slice.files)).load(),
+        messages = Seq("file_path", "msg_id", "topic_id", "topic", "type",
+          "serialization_format", "timestamp", "size").map(col) :+
+          crc32(col("data")).as("data_crc32"),
+        // rosbag2 timestamps are u64 nanos, never negative, so `div` floors
+        nativeTime = expr("timestampadd(MICROSECOND, timestamp div 1000, " +
+          "TIMESTAMP_NTZ '1970-01-01 00:00:00')").as("timestamp_ts"),
+        order = Seq("timestamp", "file_path", "msg_id"),
+        identity = Seq("file_path", "msg_id"), indexSeqno = None,
+        key = ("file_path", "topic_id"),
+        tail = Seq("msg_id", "timestamp", "topic_id", "file_path"),
+        raw = Seq("topic_id", "topic", "type", "serialization_format", "file_path"),
+        variants = keys.map { case k @ (t, md5) =>
+          val (_, enc, text, _) = first(k)
+          RoutedEtl.Variant(t, md5, tableName(t),
+            Db3TypedRead.typedSchema(graft.ros.mcap.McapPayload.bundle(enc, t, text),
+              includeRaw = false).fields.toSeq.drop(Db3TypedRead.MetaFields.size))
+        },
+        decoders = keys.indices.map { v =>
+          val (_, enc, text, _) = first(keys(v))
+          v -> new graft.ros.mcap.McapEtl.SchemaDecoder(enc, keys(v)._1, text)
+        },
+        // (file_path, topic_id) → route; only cdr serialization decodes
+        routeOf = metas.map { case (f, m) =>
+          f -> m.topics.map { case (id, (_, t, fmt)) =>
+            id -> variantOf.get((f, t)).filter(_ => fmt == "cdr").fold(-1)(keys.indexOf)
+          }.withDefaultValue(-1)
+        }.toMap,
+        dimension = RoutedEtl.Dimension("Topics", Db3Tables.TopicsSchema,
+          Db3Tables.topicRows(metas)),
+        messagesNullable = true)
+    }
+    Info(name, r.count, r.dimensionRows, r.bytes, r.crcXor, r.tables)
   }
 }

@@ -1160,18 +1160,20 @@ object Db3Tables {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  def topics(spark: SparkSession, path: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("file_path", StringType, nullable = false),
-      StructField("topic_id", LongType, nullable = false),
-      StructField("topic", StringType, nullable = false),
-      StructField("type", StringType, nullable = false),
-      StructField("serialization_format", StringType, nullable = false)))
-    val rows = Db3IO.scanMetas(Db3IO.resolveFiles(path)).flatMap { case (f, m) =>
-      m.topics.toSeq.sortBy(_._1).map { case (id, (n, t, fmt)) =>
-        Row(f, id, n, t, fmt)
-      }
+  val TopicsSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType, nullable = false),
+    StructField("topic_id", LongType, nullable = false),
+    StructField("topic", StringType, nullable = false),
+    StructField("type", StringType, nullable = false),
+    StructField("serialization_format", StringType, nullable = false)))
+
+  /** One [[TopicsSchema]] row per (file, topic), by topic id. */
+  def topicRows(metas: Seq[(String, Db3IO.Db3Meta)]): Seq[Row] =
+    metas.flatMap { case (f, m) =>
+      m.topics.toSeq.sortBy(_._1).map { case (id, (n, t, fmt)) => Row(f, id, n, t, fmt) }
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
+
+  def topics(spark: SparkSession, path: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      topicRows(Db3IO.scanMetas(Db3IO.resolveFiles(path))), 1), TopicsSchema)
 }

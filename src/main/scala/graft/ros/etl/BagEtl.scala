@@ -1,12 +1,8 @@
 package graft.ros.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-import graft.operators.Seqno
 import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
 import graft.ros.bag.RosbagTypedRead
 
@@ -16,7 +12,8 @@ import graft.ros.bag.RosbagTypedRead
   * `Messages`, `Connections` and one flattened parquet table per
   * datatype (snappy, like TableBuffer.cpp:49-51).
   *
-  * Scale shape: ONE Spark job, then Connections. The bag scan
+  * Scale shape: ONE Spark job, then Connections — [[RoutedEtl]], the
+  * route-by-type core McapEtl and Db3Etl run too. The bag scan
   * parallelizes per overlap group of chunks and numbers the seqno
   * itself from the chunk index (the source's `seqno` metadata column,
   * graft.ros.bag.RosbagSeqno) — no shuffle, no staging, no join — and
@@ -97,91 +94,132 @@ object BagEtl {
   def run(spark: SparkSession, bagPath: String, outDir: String,
           maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
           blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
-          nativeTimestamp: Boolean = false): Info = {
+          nativeTimestamp: Boolean = false): Info =
     // bagPath may be one file, a directory, or a glob — the dataset
     // shape a 100 TB robotics corpus actually arrives in.
-    val bags = graft.ros.bag.RosbagIO.resolveBags(bagPath)
-    runBags(spark, bags, new java.io.File(bagPath).getName,
-      versionedOutputDir(outDir), maxMessages, keepRawBlob, blobSideTable,
-      blobThreshold, nativeTimestamp)._1
-  }
+    convert(spark, RoutedEtl.Slice(graft.ros.bag.RosbagIO.resolveBags(bagPath)),
+      new java.io.File(bagPath).getName, versionedOutputDir(outDir), maxMessages,
+      keepRawBlob, blobSideTable, blobThreshold, nativeTimestamp)
 
   /** Incremental multi-bag conversion: ETL only the bags under
-    * `bagPath` not yet present in `outDir`'s Messages (matched by
-    * bag_path), appending Messages/Connections/per-type rows with
-    * seqnos continuing after the existing maximum — the daily
-    * fleet-upload shape: new drives arrive, the corpus tables grow,
-    * nothing already converted is re-read or re-written. Table naming
-    * stays consistent across increments via the `_tables.json`
+    * `bagPath` not yet present in `outDir`'s Connections (matched by
+    * bag_path, see RoutedEtl.increment), appending Messages/Connections/
+    * per-type rows with seqnos continuing after the committed maximum —
+    * the daily fleet-upload shape: new drives arrive, the corpus tables
+    * grow, nothing already converted is re-read or re-written. Table
+    * naming stays consistent across increments via the `_tables.json`
     * manifest: a (datatype, md5) variant keeps its historical table;
     * a NEW variant of a known datatype always gets the md5-namespaced
     * name (the historical table is never renamed). Seqnos are dense
     * overall; cross-bag time interleave holds WITHIN each increment
     * (across increments, arrival order dominates — an ingest log, not
     * a global re-sort). Returns the `info` of the appended increment
-    * (zero-count when there is nothing new). On a fresh/absent outDir
-    * this is exactly `run`.
+    * (zero-count when there is nothing new). On an outDir without
+    * Messages this is `run` into outDir itself: a pre-created or
+    * crash-remnant outDir must not fork the corpus into outDir.1, .2,
+    * ... on every call, and a table left by a crashed bootstrap fails
+    * the write loudly.
     */
   def runIncremental(spark: SparkSession, bagPath: String, outDir: String,
           keepRawBlob: Boolean = true,
           blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
           nativeTimestamp: Boolean = false): Info = {
-    val messagesPath = new org.apache.hadoop.fs.Path(s"$outDir/Messages.parquet")
-    val fs = messagesPath.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    val dirName = new java.io.File(bagPath).getName
-    if (!fs.exists(messagesPath)) {
-      // bootstrap WITHOUT run()'s versioned-dir redirect: a pre-created
-      // or crash-remnant outDir lacking Messages must not silently fork
-      // the corpus into outDir.1, .2, ... on every call (incremental
-      // mode would never engage). Write into outDir itself; a leftover
-      // table from a crashed attempt fails the write loudly.
-      return runBags(spark, graft.ros.bag.RosbagIO.resolveBags(bagPath),
-        dirName, outDir, None, keepRawBlob, blobSideTable, blobThreshold,
-        nativeTimestamp)._1
-    }
-    val existing = spark.read.parquet(s"$outDir/Messages.parquet")
-    require(existing.columns.contains("bag_path"),
-      s"$outDir predates the bag_path spine column — re-run the full ETL once")
-    // Done-set = Connections.bag_path ALONE. Connections is written
-    // AFTER Messages (runBags), so its presence implies the whole
-    // increment landed: for a normal bag, Messages landed first; for a
-    // zero-message bag, Connections IS its complete output (a
-    // Messages-only done-set would re-convert it every increment,
-    // multiplying every msg↔conn join). Unioning in Messages.bag_path
-    // — the pre-round-10 behavior — would mark a bag done after a
-    // crash in the window between the Messages and Connections writes,
-    // leaving a permanent silent hole in Connections; Connections-only
-    // redoes that bag after repairCrashedIncrement purges the dead
-    // attempt's rows — exactly-once output, no consumer-side dedup.
-    // (A bag with zero connections AND zero messages writes nothing and
-    // is re-indexed each increment — a no-op re-read, not duplication.)
-    val connPath = new org.apache.hadoop.fs.Path(s"$outDir/Connections.parquet")
-    val done =
-      if (!fs.exists(connPath)) Set.empty[String]
-      else spark.read.parquet(s"$outDir/Connections.parquet")
-        .select(col("bag_path")).distinct().collect().map(_.getString(0)).toSet
-    // crash repair + committed seqno max: a redo after a crash in the
-    // data→commit-record window is exactly-once — the dead increment's
-    // rows are purged part-file-granular before reconversion, and its
-    // seqno range is re-used (dense, collision-free)
-    val maxClean = repairCrashedIncrement(spark, outDir, "bag_path", done,
-      dimension = "Connections")
-    val newBags = graft.ros.bag.RosbagIO.resolveBags(bagPath).filterNot(done)
-    if (newBags.isEmpty) return Info(dirName, 0L, 0L, 0L)
-    val offset = maxClean + 1
-    runBags(spark, newBags, dirName, outDir, None, keepRawBlob, blobSideTable,
-      blobThreshold, nativeTimestamp,
-      seqnoOffset = offset, naming = readManifest(outDir), append = true)._1
+    val slice = RoutedEtl.increment(spark, outDir,
+      graft.ros.bag.RosbagIO.resolveBags(bagPath), "bag_path", "Connections")
+    val name = new java.io.File(bagPath).getName
+    if (slice.files.isEmpty) Info(name, 0L, 0L, 0L)
+    else convert(spark, slice, name, outDir, None, keepRawBlob, blobSideTable,
+      blobThreshold, nativeTimestamp)
   }
 
-  /** Table-name manifest `<out>/_tables.json`: (datatype, md5) → table
-    * name, maintained by every run so increments keep naming stable.
-    * Keys are ROS identifiers + hex digests — no JSON escaping needed.
+  /** The rosbag half of the conversion: the chunk-index census, the
+    * decoders and the Messages layout; [[RoutedEtl]] does the rest.
     */
-  private def manifestFsPath(out: String) =
-    new org.apache.hadoop.fs.Path(s"$out/_tables.json")
-  // private[ros]: McapEtl keeps the SAME manifest contract for its
-  // (schema_name, md5) table naming, so the two ETLs share one format
+  private def convert(spark: SparkSession, slice: RoutedEtl.Slice, bagName: String,
+          out: String, maxMessages: Option[Long], keepRawBlob: Boolean,
+          blobSideTable: Boolean, blobThreshold: Int, nativeTimestamp: Boolean): Info = {
+    require(!blobSideTable || keepRawBlob,
+      "blobSideTable requires keepRawBlob=true (there is no blob column to externalize)")
+    val r = RoutedEtl.run(spark, out, slice, maxMessages, keepRawBlob, nativeTimestamp,
+        if (blobSideTable) Some(blobThreshold) else None) {
+      val indexes = graft.ros.bag.RosbagIO.scanIndexes(slice.files)
+      // md5 consistency per datatype WITHIN each bag (reference
+      // FlattenedRosWriter.cpp:287 asserts per-bag).
+      indexes.foreach { case (b, index) =>
+        index.connections.groupBy(_.datatype).foreach { case (dt, cs) =>
+          require(cs.map(_.md5sum).distinct.size == 1,
+            s"datatype $dt has conflicting md5sums across connections in $b")
+        }
+      }
+      // ACROSS bags a datatype may drift (SURVEY §7.4.3: a fleet with a
+      // mid-life message-definition change): each (datatype, md5)
+      // variant becomes its own table (RoutedEtl.tableNames)
+      val defs = indexes.flatMap(_._2.connections.map(c => (c.datatype, c.md5sum) -> c.msgDef))
+        .groupBy(_._1).map { case (k, vs) => k -> vs.head._2 }
+      val keys = defs.keys.toSeq.sorted
+      // Global seqno in merge-time order with storage-order tie-break —
+      // rosbag::View semantics (reference rosbag2parquet.cpp:45-52; seqno
+      // FlattenedRosWriter.cpp:195,256), bag_path breaking equal-time
+      // ties across bags. Numbered inside the scan from the chunk index
+      // (RosbagSeqno) whenever the index can do it cheaply.
+      val numbering = graft.ros.bag.RosbagSeqno.cheapGroups(indexes)
+      logger.info(numbering.fold(
+        why => s"seqno: staged spine + Seqno.globalSeqno, because $why",
+        gs => s"seqno: numbered in the scan from the chunk index (${gs.size} overlap groups)"))
+      // ONE scan relation over the whole bag list (the "bags" option) —
+      // not an N-way union, which bloats the analyzer at fleet scale
+      val scan = spark.read.format("rosbag")
+        .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(slice.files)).load()
+      RoutedEtl.Source(scan,
+        // Messages fact table (reference FlattenedRosWriter.cpp:49-87),
+        // plus the sensor-time header stamp (nullable; reference TODO
+        // rosbag2parquet.cpp:28-30) read in the source from the wire prefix
+        messages = Seq("bag_path", "time_sec", "time_nsec", "size", "connection_id",
+          "header_stamp_sec", "header_stamp_nsec", "data_crc32").map(col),
+        // floor-to-micros. Built with pure NTZ arithmetic (timestampadd
+        // on an NTZ epoch literal): a timestamp_micros→NTZ cast would
+        // render the instant in the WRITER's session timezone and shift
+        // the stored value for any non-UTC session — this form is
+        // timezone-independent by construction.
+        nativeTime = expr("timestampadd(MICROSECOND, " +
+          "cast(time_sec as bigint) * 1000000 + time_nsec div 1000, " +
+          "TIMESTAMP_NTZ '1970-01-01 00:00:00')").as("time"),
+        order = Seq("time_sec", "time_nsec", "bag_path", "chunk_idx", "offset"),
+        identity = Seq("bag_path", "chunk_idx", "offset"),
+        indexSeqno = numbering.toOption.map(_ =>
+          scan.metadataColumn(graft.ros.bag.RosbagSeqno.Column)),
+        // per-type tables: seqno + the flattened payload + connection_id
+        // + bag_path [+ data], the columns a typed `rosbag` read decodes
+        // (MessageTable.cpp:326-343)
+        key = ("bag_path", "connection_id"), tail = Seq("connection_id", "bag_path"),
+        raw = Nil,
+        variants = keys.map { case (dt, md5) =>
+          // reference MessageTable.cpp:315
+          RoutedEtl.Variant(dt, md5, dt.replace("/", "_"),
+            payloadFields(MsgDefParser.parse(dt, defs((dt, md5)))))
+        },
+        decoders = keys.indices.map(v => v -> new RosDecoder(keys(v)._1, defs(keys(v)))),
+        // (bag_path, connection_id) → route, fixed here from the indexes
+        routeOf = indexes.map { case (b, index) =>
+          b -> index.connections.map(c => c.connId.toLong -> keys.indexOf((c.datatype, c.md5sum))).toMap
+        }.toMap,
+        // Connections dimension (reference FlattenedRosWriter.cpp:209-224),
+        // keyed (bag_path, connection_id) — connection ids are per-bag
+        dimension = RoutedEtl.Dimension("Connections", graft.ros.bag.RosbagTables.ConnectionsSchema,
+          indexes.flatMap { case (b, index) => graft.ros.bag.RosbagTables.indexRows(index, b) }))
+    }
+    Info(bagName, r.count, r.bytes, r.crcXor)
+  }
+
+  /** A connection's payload decode, the typed `rosbag` source's: its
+    * definition parses once per task.
+    */
+  private final class RosDecoder(datatype: String, msgDef: String)
+      extends RoutedEtl.PayloadDecoder {
+    @transient private lazy val bundle = MsgDefParser.parse(datatype, msgDef)
+    def decode(data: Array[Byte]): Seq[Any] = RosSchemaMapper.decode(bundle, data)
+  }
+
   /** Write (or in append mode, extend) the run's Vertica DDL script —
     * shared by all three container ETLs (O14).
     */
@@ -199,6 +237,13 @@ object BagEtl {
     finally os.close()
   }
 
+  /** Table-name manifest `<out>/_tables.json`: (datatype, md5) → table
+    * name, maintained by every run of the three container ETLs so
+    * increments keep naming stable.
+    * Keys are ROS identifiers + hex digests — no JSON escaping needed.
+    */
+  private def manifestFsPath(out: String) =
+    new org.apache.hadoop.fs.Path(s"$out/_tables.json")
   private[ros] def readManifest(out: String): Map[(String, String), String] = {
     val p = manifestFsPath(out)
     val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
@@ -593,289 +638,6 @@ object BagEtl {
     }
     writeCommitRecord(outDir, maxClean, Nil)
     maxClean
-  }
-
-  /** The conversion core over an explicit bag list. `seqnoOffset`
-    * shifts the dense seqno (incremental appends continue after the
-    * existing max); `naming` pins historical (datatype, md5) → table
-    * names; `append` adds part files to existing tables and restricts
-    * DDL emission to newly-created tables. Returns the info of THIS
-    * run's slice plus the (datatype, md5, table) groups.
-    */
-  private def runBags(spark: SparkSession, bags: Seq[String], bagName: String,
-          out: String, maxMessages: Option[Long], keepRawBlob: Boolean,
-          blobSideTable: Boolean, blobThreshold: Int, nativeTimestamp: Boolean,
-          seqnoOffset: Long = 0L,
-          naming: Map[(String, String), String] = Map.empty,
-          append: Boolean = false): (Info, Seq[(String, String, String)]) = {
-    require(!blobSideTable || keepRawBlob,
-      "blobSideTable requires keepRawBlob=true (there is no blob column to externalize)")
-    // commit-record protocol, step 1: declare the increment in-flight
-    // BEFORE any data write. A crash anywhere below leaves the record
-    // naming this increment's files, so repairCrashedIncrement can
-    // purge its debris from footer metadata alone.
-    writeCommitRecord(out, seqnoOffset - 1, bags)
-    val indexes = graft.ros.bag.RosbagIO.scanIndexes(bags)
-
-    // md5 consistency per datatype WITHIN each bag (reference
-    // FlattenedRosWriter.cpp:287 asserts per-bag).
-    indexes.foreach { case (b, index) =>
-      index.connections.groupBy(_.datatype).foreach { case (dt, cs) =>
-        require(cs.map(_.md5sum).distinct.size == 1,
-          s"datatype $dt has conflicting md5sums across connections in $b")
-      }
-    }
-
-    // ACROSS bags a datatype may drift (SURVEY §7.4.3: a fleet with a
-    // mid-life message-definition change). Each (datatype, md5) variant
-    // becomes its own table; drifted types namespace the table name
-    // with the md5 prefix so both variants land side by side.
-    // (datatype, md5, msgDef, tableName)
-    val typeGroups: Seq[(String, String, String, String)] = {
-      val all = indexes.flatMap(_._2.connections.map(c => (c.datatype, c.md5sum, c.msgDef)))
-      all.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (dt, rows) =>
-        val base = dt.replace("/", "_") // reference MessageTable.cpp:315
-        val byMd5 = rows.groupBy(_._2).toSeq.sortBy(_._1)
-        byMd5.map { case (md5, vs) =>
-          // historical names (manifest) win; a NEW variant of a
-          // historically-known datatype is always namespaced (the
-          // legacy plain table keeps its variant and is never renamed)
-          val name = naming.getOrElse((dt, md5),
-            if (naming.keys.exists(_._1 == dt)) s"${base}__${md5.take(8)}"
-            else if (byMd5.size == 1) base
-            else s"${base}__${md5.take(8)}")
-          (dt, md5, vs.head._3, name)
-        }
-      }
-    }
-
-    // Global seqno in merge-time order with storage-order tie-break —
-    // rosbag::View semantics (reference rosbag2parquet.cpp:45-52; seqno
-    // FlattenedRosWriter.cpp:195,256), bag_path breaking equal-time ties
-    // across bags. Numbered inside the scan from the chunk index
-    // (RosbagSeqno) whenever the index can do it cheaply; otherwise the
-    // spine is staged and numbered by the Seqno range-shuffle operator.
-    val numbering = graft.ros.bag.RosbagSeqno.cheapGroups(indexes)
-    logger.info(numbering.fold(
-      why => s"seqno: staged spine + Seqno.globalSeqno, because $why",
-      gs => s"seqno: numbered in the scan from the chunk index (${gs.size} overlap groups)"))
-    // maxMessages keeps the first n messages in merge-time order;
-    // incremental appends continue the dense seqno after the existing max
-    def numberedFrom(df: DataFrame, seqno: Column, cols: Seq[Column]): DataFrame =
-      df.select(seqno.as("seqno") +: cols: _*)
-        .filter(maxMessages.fold(lit(true))(n => col("seqno") < n))
-        .withColumn("seqno", col("seqno") + lit(seqnoOffset))
-    // ONE scan relation over the whole bag list (the "bags" option) —
-    // not an N-way union, which bloats the analyzer at fleet scale
-    val scan = spark.read.format("rosbag")
-      .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(bags)).load()
-    // Messages fact table (reference FlattenedRosWriter.cpp:49-87), plus
-    // the sensor-time header stamp (nullable; reference TODO
-    // rosbag2parquet.cpp:28-30) read in the source from the wire prefix
-    val msgCols = Seq("bag_path", "time_sec", "time_nsec", "size", "connection_id",
-      "header_stamp_sec", "header_stamp_nsec", "data_crc32").map(col)
-    val identity = Seq("bag_path", "chunk_idx", "offset")
-    // scratch dirs, Overwrite: a hard crash that never reached the
-    // cleanup cannot fail the redo with "path exists"
-    val stageDir = s"$out/_spine"
-    val seqnoDir = s"$out/_seqno"
-    def stage(df: DataFrame, dir: String): Unit =
-      df.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(dir)
-
-    val sums = try {
-      // ONE frame of every kept message: (seqno, Messages columns, data)
-      val numbered = numbering match {
-        case Right(_) =>
-          numberedFrom(scan, scan.metadataColumn(graft.ros.bag.RosbagSeqno.Column),
-            msgCols :+ col("data"))
-        case Left(_) =>
-          // the range-partition seqno needs two passes over its input
-          // (bound sampling + shuffle write): run them against a staged
-          // (identity, time) spine, not the bag, and join the resulting
-          // seqno map to the raw scan once
-          val spine = (Seq("time_sec", "time_nsec") ++ identity).map(col)
-          stage(scan.select(spine: _*), stageDir)
-          val s = Seqno.globalSeqno(spark.read.parquet(stageDir), spine)
-          stage(numberedFrom(s, col("seqno"), identity.map(col)), seqnoDir)
-          scan.join(spark.read.parquet(seqnoDir), identity)
-            .select(col("seqno") +: msgCols :+ col("data"): _*)
-      }
-      // floor-to-micros. Built with pure NTZ arithmetic (timestampadd on
-      // an NTZ epoch literal): a timestamp_micros→NTZ cast would render
-      // the instant in the WRITER's session timezone and shift the
-      // stored value for any non-UTC session — this form is
-      // timezone-independent by construction.
-      val time = if (!nativeTimestamp) Nil else Seq(expr("timestampadd(MICROSECOND, " +
-        "cast(time_sec as bigint) * 1000000 + time_nsec div 1000, " +
-        "TIMESTAMP_NTZ '1970-01-01 00:00:00')").as("time"))
-      val frame = numbered.select((numbered.columns.init.map(col) ++ time) :+ col("data"): _*)
-
-      // Messages, then per (datatype, md5) variant its optional
-      // `<table>_blobs` side table (seqno, data) and its table: seqno +
-      // the flattened payload + connection_id + bag_path [+ data], the
-      // columns a typed `rosbag` read decodes (MessageTable.cpp:326-343).
-      // Every table declares seqno non-null: it is never null on either
-      // numbering path (the fallback's inner join to the map included).
-      val seqno = StructField("seqno", LongType, nullable = false)
-      val msgSchema = StructType(frame.schema.fields.init.map(f =>
-        if (f.name == seqno.name) seqno else f))
-      val tables = scala.collection.mutable.ArrayBuffer(
-        "Messages" -> msgSchema)
-      def table(name: String, fields: StructField*): Int = {
-        tables += name -> StructType(fields); tables.size - 1
-      }
-      val routes = typeGroups.map { case (dt, md5, msgDef, name) =>
-        val payload = payloadFields(MsgDefParser.parse(dt, msgDef))
-        val side =
-          if (blobSideTable) table(s"${name}_blobs", seqno, StructField("data", BinaryType, nullable = false))
-          else -1
-        val blob =
-          if (!keepRawBlob) Nil
-          else if (!blobSideTable) Seq(StructField("data", BinaryType, nullable = false))
-          else Seq(StructField("data", BinaryType, nullable = true),
-            StructField("data_externalized", BooleanType, nullable = false))
-        val main = table(name, (seqno +: payload) ++
-          Seq(StructField("connection_id", IntegerType, nullable = false),
-            StructField("bag_path", StringType, nullable = false)) ++ blob: _*)
-        TypeRoute(dt, msgDef, payload.map(_.dataType).toArray, main, side, tables(main)._2.size)
-      }
-      // (bag_path, connection_id) → route, fixed here from the indexes
-      val routeOf: Map[String, Map[Int, Int]] = indexes.map { case (b, index) =>
-        b -> index.connections.map(c => c.connId ->
-          typeGroups.indexWhere(g => g._1 == c.datatype && g._2 == c.md5sum)).toMap
-      }.toMap
-      // DDL describes tables, not rows: appends to an existing table
-      // must not re-emit its CREATE statement
-      val ddl = tables.tail.filterNot(t => append && tableExists(s"$out/${t._1}.parquet"))
-        .map { case (name, schema) => VerticaDdl.createTable(name, schema) + "\n" }.mkString
-
-      // ONE Spark job reads every chunk once and routes each message to
-      // Messages and to its type's table; all tables commit together
-      val threshold = if (blobSideTable) Some(blobThreshold) else None
-      val sums = inEtlJobGroup(spark, s"${tables.size} tables") {
-        RoutedTableWrite.run(spark, frame.queryExecution.toRdd,
-          tables.toSeq.map { case (n, sc) => RoutedTableWrite.Table(s"$out/$n.parquet", sc) },
-          s"$out/_temporary", append)(
-          (rows, emit) => routeRows(rows, emit, msgSchema, routes, routeOf, threshold))
-      }
-      // Connections dimension (reference FlattenedRosWriter.cpp:209-224),
-      // keyed (bag_path, connection_id) — connection ids are per-bag —
-      // and driver-side tiny, so written without a Spark job. Written
-      // last, it is the increment's COMMIT RECORD: runIncremental
-      // derives its done-set from Connections.bag_path alone, so it must
-      // land only AFTER every other table landed. A crash mid-increment
-      // leaves the work unrecorded and the next increment's repair
-      // purges the dead attempt's rows before redoing those bags.
-      val connSchema = graft.ros.bag.RosbagTables.ConnectionsSchema
-      val toRow = CatalystTypeConverters.createToCatalystConverter(connSchema)
-      RoutedTableWrite.runLocal(spark,
-        indexes.flatMap { case (b, index) => graft.ros.bag.RosbagTables.indexRows(index, b) }
-          .map(toRow(_).asInstanceOf[InternalRow]),
-        RoutedTableWrite.Table(s"$out/Connections.parquet", connSchema), s"$out/_temporary", append)
-      writeDdlFile(out, ddl, append)
-      sums
-    } finally {
-      // drop the scratch dirs even on failure (file:// and remote)
-      Seq(seqnoDir, stageDir).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).delete(p, true)
-      }
-    }
-
-    // manifest: naming history (incl. this run's groups) for future
-    // incremental appends
-    writeManifest(out, naming ++
-      typeGroups.map { case (dt, md5, _, name) => (dt, md5) -> name })
-
-    // info from the data job's task sums — no re-read; in append mode
-    // they cover only THIS run's bags
-    val info = sums.foldLeft(Info(bagName, 0L, 0L, 0L)) { (i, s) =>
-      Info(bagName, i.count + s.count, i.sizeBytes + s.bytes, i.crcXor ^ s.crcXor)
-    }
-    val last = sums.map(_.last).foldLeft(seqnoOffset - 1)(math.max)
-    // commit-record protocol, step 2: the dimension landed above, so
-    // the increment is committed — finalize the record with the new
-    // max. (A crash before this line resolves via inflight ⊆ done:
-    // repair recovers the max from the Messages footers.)
-    writeCommitRecord(out, last, Nil)
-    (info, typeGroups.map { case (dt, md5, _, name) => (dt, md5, name) })
-  }
-
-  /** Run `body` in a fresh `graft-etl-*` job group, so the UI and
-    * traces show its jobs as the ETL's; the caller's group is restored.
-    */
-  private def inEtlJobGroup[T](spark: SparkSession, desc: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val keys = Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-    val prior = keys.map(sc.getLocalProperty)
-    sc.setJobGroup(s"graft-etl-${java.util.UUID.randomUUID()}", desc, interruptOnCancel = true)
-    try body finally keys.zip(prior).foreach { case (k, v) => sc.setLocalProperty(k, v) }
-  }
-
-  /** A (datatype, md5) variant's route: its definition, payload column
-    * types, table indexes (`side` < 0: no blob side table) and table
-    * width.
-    */
-  private final case class TypeRoute(datatype: String, msgDef: String,
-      payload: Array[DataType], table: Int, side: Int, width: Int)
-
-  /** One task's share of `Info` and of the commit record's max. */
-  private final case class TaskSums(count: Long, bytes: Long, crcXor: Long, last: Long)
-
-  /** One task of the data job: every row of the ETL frame (seqno,
-    * Messages columns, data) goes to Messages; its payload is decoded
-    * once with its connection's definition — the typed source's row
-    * decode — and lands in its type's table. With a blob threshold,
-    * blobs above it move to the side table and the main row keeps a
-    * null `data` and `data_externalized = true`
-    * (MultimodalOps.externalizeBlobs' cutoff and layout).
-    */
-  private def routeRows(rows: Iterator[InternalRow], emit: (Int, InternalRow) => Unit,
-      msgSchema: StructType, routes: Seq[TypeRoute], routeOf: Map[String, Map[Int, Int]],
-      blobThreshold: Option[Int]): TaskSums = {
-    val toMessages = UnsafeProjection.create(msgSchema.fields.toSeq.zipWithIndex.map {
-      case (f, i) => BoundReference(i, f.dataType, f.nullable) })
-    val Seq(bagOrd, sizeOrd, connOrd, crcOrd) =
-      Seq("bag_path", "size", "connection_id", "data_crc32").map(msgSchema.fieldIndex)
-    val dataOrd = msgSchema.size
-    val bundles = new Array[RosMsgBundle](routes.size)
-    var bag: UTF8String = null
-    var conns = Map.empty[Int, Int]
-    var count = 0L; var bytes = 0L; var crc = 0L; var last = Long.MinValue
-    rows.foreach { r =>
-      emit(0, toMessages(r))
-      val seqno = r.getLong(0)
-      count += 1; bytes += r.getInt(sizeOrd); crc ^= r.getLong(crcOrd)
-      last = math.max(last, seqno)
-      if (!r.getUTF8String(bagOrd).equals(bag)) {
-        bag = r.getUTF8String(bagOrd).clone()
-        conns = routeOf(bag.toString)
-      }
-      val connId = r.getInt(connOrd)
-      val g = conns(connId)
-      val route = routes(g)
-      if (bundles(g) == null) bundles(g) = MsgDefParser.parse(route.datatype, route.msgDef)
-      val data = r.getBinary(dataOrd)
-      val vals = RosSchemaMapper.decode(bundles(g), data).iterator
-      val k = route.payload.length
-      val big = blobThreshold.exists(data.length > _)
-      val row = new Array[Any](route.width)
-      row(0) = seqno
-      var i = 0
-      while (i < k) { row(i + 1) = RosbagTypedRead.toCatalyst(vals.next(), route.payload(i)); i += 1 }
-      row(k + 1) = connId
-      row(k + 2) = bag
-      if (route.width > k + 3) row(k + 3) = if (big) null else data
-      if (route.side >= 0) row(k + 4) = big
-      if (big) emit(route.side, new GenericInternalRow(Array[Any](seqno, data)))
-      emit(route.table, new GenericInternalRow(row))
-    }
-    TaskSums(count, bytes, crc, last)
-  }
-
-  private def tableExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).exists(p)
   }
 
   /** Per-table result of [[compact]]. `rewritten = false` means the

@@ -5,15 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** ETL throughput benchmark for the two newer containers — the
   * McapEtl/Db3Etl twin of [[EtlBench]], over the same camera+imu-like
   * shape (a blob-dominated channel + a small-reading channel, ~4 KB
-  * blobs) at a comparable size.
-  *
-  * Measures the claims the ETL scale shapes argue:
-  *  - MCAP: staged single-pass mode ("every chunk decompressed exactly
-  *    ONCE for the whole ETL") vs the default per-schema re-scan —
-  *    both timed on the same zstd-chunked file;
-  *  - db3: the staging-only conversion (sqlite interleaves topics in
-  *    shared b-tree pages, so there is no cheaper re-scan to compare —
-  *    the number IS the datapoint).
+  * blobs) at a comparable size: a zstd-chunked MCAP file, or a db3 file.
+  * Each of [[Runs]] conversions lands in a fresh output dir in the same
+  * JVM; the JSON line reports each run's seconds and Spark job count,
+  * and the median and quartiles of the seconds.
   *
   * Run: sbt "runMain graft.ros.etl.ContainerEtlBench mcap|db3 [targetMB]"
   */
@@ -22,6 +17,8 @@ object ContainerEtlBench {
   private val BlobDef = "int64 seq\nstring format\nuint8[] data"
   private val ReadingName = "graft_msgs/msg/Reading"
   private val ReadingDef = "int64 seq\nfloat64 x\nfloat64 y\nfloat64 z"
+  /** Timed conversions per JVM: enough for a median and quartiles. */
+  val Runs = 5
 
   def main(args: Array[String]): Unit = {
     val format = if (args.nonEmpty) args(0) else "mcap"
@@ -59,10 +56,31 @@ object ContainerEtlBench {
 
     def dirSize(f: java.io.File): Long =
       if (f.isDirectory) f.listFiles().map(dirSize).sum else f.length()
-    def timed[A](body: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = body
-      (a, (System.nanoTime() - t0) / 1e9)
+    // the jobs each conversion starts, counted by a listener
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    })
+    /** [[Runs]] timed conversions into out<i>; the metric line's fields. */
+    def measure(convert: String => Long): String = {
+      val timed = (0 until Runs).map { i =>
+        val out = dir.resolve(s"out$i").toString
+        jobs.set(0)
+        val t0 = System.nanoTime()
+        val messages = convert(out)
+        val sec = (System.nanoTime() - t0) / 1e9
+        Thread.sleep(500) // the listener bus is asynchronous
+        (sec, jobs.get, messages)
+      }
+      val secs = timed.map(_._1).sorted
+      def q(f: Double): Double = secs(math.min(secs.size - 1, (f * secs.size).toInt))
+      val outMB = dirSize(dir.resolve("out0").toFile) / 1e6
+      f""""median_sec":${q(0.5)}%.3f,"q1_sec":${q(0.25)}%.3f,"q3_sec":${q(0.75)}%.3f,""" +
+        s""""secs":[${timed.map(t => f"${t._1}%.3f").mkString(",")}],""" +
+        s""""jobs":[${timed.map(_._2).mkString(",")}],""" +
+        f""""out_mb":$outMB%.1f,"messages":${timed.head._3}"""
     }
 
     format match {
@@ -80,23 +98,15 @@ object ContainerEtlBench {
             McapFormat.McapMessage(2, i.toLong, t + 1, t + 1, readingPayload(i)))
         }
         // ~256 messages per chunk, EtlBench's grain, zstd like rosbag2's
-        // default MCAP profile — the compressed-chunk case the staged
-        // mode exists for
+        // default MCAP profile
         val groups = math.max(1, msgs.size / 256)
         val path = dir.resolve("bench.mcap")
         java.nio.file.Files.write(path,
           McapFormat.writeMcap(schemas, channels, msgs, "zstd", chunkGroups = groups))
         val mb = java.nio.file.Files.size(path) / 1e6
         System.err.println(f"mcap written: $mb%.1f MB (zstd, $groups chunks)")
-        val (infoR, secRescan) =
-          timed(McapEtl.run(spark, path.toString, dir.resolve("out_rescan").toString))
-        val (infoS, secStaged) =
-          timed(McapEtl.run(spark, path.toString, dir.resolve("out_staged").toString,
-            stagedBySchema = true))
-        require(infoR.messages == infoS.messages && infoR.crcXor == infoS.crcXor,
-          "staged and re-scan modes must convert identical rows")
-        val outMB = dirSize(dir.resolve("out_staged").toFile) / 1e6
-        println(f"""{"metric":"mcap_etl_mb_per_sec","staged":${mb / secStaged}%.2f,"rescan":${mb / secRescan}%.2f,"unit":"MB/s","mcap_mb":$mb%.1f,"out_mb":$outMB%.1f,"messages":${infoS.messages},"staged_sec":$secStaged%.2f,"rescan_sec":$secRescan%.2f}""")
+        val m = measure(out => McapEtl.run(spark, path.toString, out).messages)
+        println(f"""{"metric":"mcap_etl","unit":"s","mcap_mb":$mb%.1f,$m}""")
 
       case "db3" =>
         import graft.ros.db3.{Db3Etl, SqliteFormat}
@@ -122,10 +132,8 @@ object ContainerEtlBench {
         java.nio.file.Files.write(path, db)
         val mb = java.nio.file.Files.size(path) / 1e6
         System.err.println(f"db3 written: $mb%.1f MB")
-        val (info, sec) =
-          timed(Db3Etl.run(spark, path.toString, dir.resolve("out").toString))
-        val outMB = dirSize(dir.resolve("out").toFile) / 1e6
-        println(f"""{"metric":"db3_etl_mb_per_sec","value":${mb / sec}%.2f,"unit":"MB/s","db3_mb":$mb%.1f,"out_mb":$outMB%.1f,"messages":${info.messages},"sec":$sec%.2f}""")
+        val m = measure(out => Db3Etl.run(spark, path.toString, out).messages)
+        println(f"""{"metric":"db3_etl","unit":"s","db3_mb":$mb%.1f,$m}""")
     }
     spark.stop()
   }

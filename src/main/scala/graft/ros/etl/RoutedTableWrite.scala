@@ -25,9 +25,10 @@ import org.apache.spark.util.SerializableConfiguration
   * The driver commits once the job succeeded: every listed part file
   * renames into its table dir, then each table gets its `_SUCCESS` and
   * its cached reads are refreshed. A failed job leaves every table dir
-  * as it was; the staging dir is removed either way.
+  * as it was; the staging dir is removed either way. [[RoutedEtl]]
+  * writes every container's ETL tables (rosbag, MCAP, db3) through it.
   */
-private[etl] object RoutedTableWrite {
+private[ros] object RoutedTableWrite {
   /** One output table: its directory and the rows' schema. */
   final case class Table(dir: String, schema: StructType)
 

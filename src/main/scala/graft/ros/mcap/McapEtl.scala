@@ -1,9 +1,8 @@
 package graft.ros.mcap
 
-import org.apache.spark.sql.{Row, SaveMode, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.Seqno
-import graft.ros.etl.{BagEtl, VerticaDdl}
+import graft.ros.etl.{BagEtl, RoutedEtl}
 
 /** MCAP → parquet-tables ETL: the reference's route-by-type dataflow
   * (O4, reference FlattenedRosWriter.cpp:273-289 + README.md:108-121)
@@ -11,38 +10,40 @@ import graft.ros.etl.{BagEtl, VerticaDdl}
   *
   *  - a `Messages` spine (meta only) with the DENSE GLOBAL `seqno` in
   *    log-time order (reference FlattenedRosWriter.cpp:195,256 —
-  *    assigned by the distributed prefix-sum operator, never a
+  *    assigned by the distributed range-partition operator, never a
   *    single-partition window);
   *  - a `Channels` dimension (the Connections analog);
-  *  - one flattened parquet table per typed schema (`ros2msg` and
-  *    `protobuf` encodings, McapPayload.typedEncodings), with the same
-  *    drift-namespacing contract as BagEtl: a schema name carrying
-  *    more than one definition across the input writes one table per
-  *    variant (`<table>__<md5prefix>`), never a silent mis-decode, and
-  *    the `_tables.json` manifest (BagEtl's format) keeps the naming
-  *    stable across incremental appends;
+  *  - one flattened parquet table per typed schema (`ros2msg`,
+  *    `ros2idl`, `ros1msg` and `protobuf` encodings,
+  *    McapPayload.typedEncodings), with the same drift-namespacing
+  *    contract as BagEtl: a schema name carrying more than one
+  *    definition across the input writes one table per variant
+  *    (`<table>__<md5prefix>`), never a silent mis-decode, and the
+  *    `_tables.json` manifest keeps the naming stable across
+  *    incremental appends;
   *  - a `RawMessages` table holding the payload bytes of every channel
   *    NOT routed to a typed table (untyped schema encodings:
-  *    jsonschema, flatbuffer, schema-less) — the reference's "you don't
-  *    lose any data" retention (README.md:106). Routed payloads are
-  *    NOT duplicated there (their typed columns — plus the optional
-  *    raw blob on the typed table — are the retention);
+  *    jsonschema, flatbuffer, schema-less; schemas that cannot
+  *    flatten) — the reference's "you don't lose any data" retention
+  *    (README.md:106). Routed payloads are NOT duplicated there (their
+  *    typed columns — plus the optional raw blob on the typed table —
+  *    are the retention);
   *  - Vertica DDL (`vertica_load_tables.sql`, O14) for every table
   *    created by the run;
   *  - versioned output dirs on `run` and incremental appends via
-  *    `runIncremental` (O18), with Messages as the increment's commit
+  *    `runIncremental` (O18), with Channels as the increment's commit
   *    record — the same crash-ordering contract as BagEtl.
   *
-  * Scale shape: ONE scan of the container stages (spine meta + the
-  * unrouted channels' raw bytes) to parquet; the two-pass seqno and
-  * the RawMessages write read the staging table, not the mcap files.
-  * Per-schema tables are typed source reads that plan only the files
-  * carrying the variant and decode only matching channels (the
-  * route-by-type dispatch IS predicate pushdown), running as
-  * concurrent jobs. Channels whose message encoding does not match
-  * their schema encoding's decoder (cdr for ros2msg, protobuf for
-  * protobuf) fail the typed read loudly (the typed reader's contract)
-  * rather than decode garbage.
+  * Scale shape: BagEtl's, through [[RoutedEtl]]. The chunk index does
+  * not number the messages, so one meta-only pass stages the
+  * (log_time, identity) spine, the Seqno operator numbers it, and its
+  * seqno map joins the mcap scan once; then ONE Spark job reads every
+  * chunk once and hands each message to Messages and, decoded once, to
+  * its (file, channel)'s variant table or to RawMessages. A channel
+  * whose message encoding does not match its schema encoding's decoder
+  * (cdr for ros2msg, protobuf for protobuf) fails that job loudly, as a
+  * typed read does, rather than decode garbage; the failed job lands no
+  * part file.
   *
   * `BagEtl.compact` applies to this layout unchanged (tables carry
   * `seqno`, so compaction range-partitions and sorts by it).
@@ -63,358 +64,130 @@ object McapEtl {
     schemaName.replaceAll("[^A-Za-z0-9]", "_")
 
   /** Run the conversion into a fresh (versioned) output dir.
-    * `maxMessages` mirrors --max_mbs's test-scope-limiting role
-    * (reference main.cpp:26) with row granularity; `keepRawBlob`
-    * retains the raw CDR bytes on typed tables (README.md:106);
-    * `nativeTimestamp` adds a `log_time_ts` TIMESTAMP_NTZ(micros)
-    * column to Messages (reference TODO rosbag2parquet.cpp:31-32) —
-    * floor-of-nanos, built with pure NTZ arithmetic so it is
-    * timezone-independent like BagEtl's.
     *
-    * `stagedBySchema` is the single-pass mode (BagEtl's stagedByType
-    * twin): the ONE container scan stages ALL payload bytes to parquet
-    * partitioned by a schema-route column, and each per-variant table
-    * decodes its own partition's bytes — every chunk is read and
-    * decompressed exactly ONCE for the whole ETL, where the default
-    * re-scan mode decompresses a chunk once per schema it routes.
-    * Costs one extra write of the payload bytes; wins when files
-    * carry many schemas or compressed chunks (the fleet shape).
+    * @param maxMessages mirrors --max_mbs's test-scope-limiting role
+    *        (reference main.cpp:26) with row granularity: every table
+    *        keeps the first n messages in log-time order (seqno < n)
+    * @param keepRawBlob retain the raw payload bytes on typed tables
+    *        (README.md:106)
+    * @param nativeTimestamp add a `log_time_ts` TIMESTAMP_NTZ(micros)
+    *        column to Messages (reference TODO rosbag2parquet.cpp:31-32):
+    *        floor-of-nanos, built with pure NTZ arithmetic so it is
+    *        timezone-independent like BagEtl's
     */
   def run(spark: SparkSession, path: String, outDir: String,
           maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
-          nativeTimestamp: Boolean = false, stagedBySchema: Boolean = false): Info =
-    runFiles(spark, McapIO.resolveFiles(path), new java.io.File(path).getName,
-      BagEtl.versionedOutputDir(outDir), maxMessages, keepRawBlob, nativeTimestamp,
-      stagedBySchema)
+          nativeTimestamp: Boolean = false): Info =
+    convert(spark, RoutedEtl.Slice(McapIO.resolveFiles(path)), new java.io.File(path).getName,
+      BagEtl.versionedOutputDir(outDir), maxMessages, keepRawBlob, nativeTimestamp)
 
   /** Incremental multi-file conversion — BagEtl.runIncremental's
-    * contract over MCAP inputs: ETL only the files under `path` not yet
-    * recorded in `outDir` (done-set = Channels.file_path alone —
-    * Channels is written LAST, so its presence implies the whole
-    * increment landed, a zero-message file with channels is not
-    * re-converted every increment, and a crash between the Messages
-    * and Channels writes redoes the file instead of leaving a silent
-    * Channels hole), appending rows with seqnos
-    * continuing after the existing maximum and table naming pinned by
-    * the `_tables.json` manifest. On a fresh/absent outDir this is
-    * exactly `run` without the versioned-dir redirect (a pre-created
-    * outDir must not fork the corpus into outDir.1 on every call).
+    * contract over MCAP inputs: ETL only the files under `path` the
+    * Channels dimension does not list yet (RoutedEtl.increment),
+    * appending rows with seqnos continuing after the committed maximum
+    * and table naming pinned by the `_tables.json` manifest. On an
+    * outDir without Messages this is `run` into outDir itself.
     */
   def runIncremental(spark: SparkSession, path: String, outDir: String,
-          keepRawBlob: Boolean = true, nativeTimestamp: Boolean = false,
-          stagedBySchema: Boolean = false): Info = {
-    val messagesPath = new org.apache.hadoop.fs.Path(s"$outDir/Messages.parquet")
-    val fs = messagesPath.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    val dirName = new java.io.File(path).getName
-    if (!fs.exists(messagesPath))
-      return runFiles(spark, McapIO.resolveFiles(path), dirName, outDir,
-        None, keepRawBlob, nativeTimestamp, stagedBySchema)
-    // done-set = Channels.file_path ALONE (Channels written last):
-    // see BagEtl.runIncremental — duplicate-over-silent-loss
-    val chanPath = new org.apache.hadoop.fs.Path(s"$outDir/Channels.parquet")
-    val done =
-      if (!fs.exists(chanPath)) Set.empty[String]
-      else spark.read.parquet(s"$outDir/Channels.parquet")
-        .select(col("file_path")).distinct().collect().map(_.getString(0)).toSet
-    // crash repair + committed seqno max (BagEtl.repairCrashedIncrement:
-    // redo after a crash is exactly-once, dead rows purged first)
-    val maxClean = BagEtl.repairCrashedIncrement(spark, outDir, "file_path",
-      done, dimension = "Channels")
-    val newFiles = McapIO.resolveFiles(path).filterNot(done)
-    if (newFiles.isEmpty) return Info(dirName, 0L, 0L, 0L, 0L, Map.empty)
-    val offset = maxClean + 1
-    runFiles(spark, newFiles, dirName, outDir, None, keepRawBlob, nativeTimestamp,
-      stagedBySchema, seqnoOffset = offset, naming = BagEtl.readManifest(outDir),
-      append = true)
+          keepRawBlob: Boolean = true, nativeTimestamp: Boolean = false): Info = {
+    val slice = RoutedEtl.increment(spark, outDir, McapIO.resolveFiles(path),
+      "file_path", "Channels")
+    val name = new java.io.File(path).getName
+    if (slice.files.isEmpty) Info(name, 0L, 0L, 0L, 0L, Map.empty)
+    else convert(spark, slice, name, outDir, None, keepRawBlob, nativeTimestamp)
   }
 
-  /** Spine meta columns (everything but the payload blob). */
-  private val metaColNames = Seq("file_path", "chunk_idx", "offset", "log_time",
-    "publish_time", "sequence", "size", "channel_id", "topic", "schema_name",
-    "schema_encoding", "message_encoding", "data_crc32")
-
-  private def runFiles(spark: SparkSession, files: Seq[String], name: String,
+  /** The MCAP half of the conversion: the summary census, the decoders
+    * and the table layouts; [[RoutedEtl]] does the rest.
+    */
+  private def convert(spark: SparkSession, slice: RoutedEtl.Slice, name: String,
           out: String, maxMessages: Option[Long], keepRawBlob: Boolean,
-          nativeTimestamp: Boolean, stagedBySchema: Boolean = false,
-          seqnoOffset: Long = 0L,
-          naming: Map[(String, String), String] = Map.empty,
-          append: Boolean = false): Info = {
-    // commit-record protocol, step 1 (see BagEtl.repairCrashedIncrement):
-    // declare the increment in-flight BEFORE any data write
-    BagEtl.writeCommitRecord(out, seqnoOffset - 1, files)
-    val channels = McapTables.channels(spark, McapDataSource.filesSpec(files))
-
-    // (name, md5-of-schema-bytes) variants across the files, with the
-    // schema text and the files carrying each; table naming follows
-    // BagEtl's manifest rule: historical names win, a NEW variant of a
-    // historically-known name is always md5-namespaced (the legacy
-    // plain table is never renamed)
-    // A typed-encoding schema whose descriptor cannot flatten (a
-    // recursive protobuf type, repeated bytes, corrupt descriptor
-    // bytes) must not sink the whole run: its channels fall back to
-    // RawMessages retention like any untyped encoding ("you don't
-    // lose any data"). Decided per NAME — the route key is
-    // schema_name, so a name with one good and one broken variant
-    // stays raw wholesale rather than splitting one key across routes.
-    val typedSchemas = files.flatMap(f => McapIO.scanIndex(f).schemas.values
-      .filter(s => McapPayload.typedEncodings(s.encoding))
-      .map(s => (s.name, McapTypedRead.md5hex(s.data), (s.encoding, s.data), f)))
-    // flatSchema, not bundle alone: bundle construction does not
-    // resolve references for ros2msg/ros2idl, so an incomplete
-    // dependency closure must fail THIS gate (and fall back to raw
-    // retention), not a per-type job that would sink the whole run
-    val flattenable: Set[String] = typedSchemas.groupBy(_._1).collect {
-      case (nm, rows) if rows.forall { case (_, _, (enc, data), _) =>
-        scala.util.Try(graft.ros.RosSchemaMapper.flatSchema(
-          McapPayload.bundle(enc, nm, data))).isSuccess } => nm
-    }.toSet
-    val routed = (c: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =>
-      if (flattenable.isEmpty) lit(false)
-      else c.isin(McapPayload.typedEncodings.toSeq: _*) &&
-        n.isin(flattenable.toSeq: _*)
-
-    val variants: Seq[(String, String, (String, Array[Byte]), Seq[String], String)] = {
-      val all = typedSchemas.filter(t => flattenable(t._1))
-      val byName = all.groupBy(_._1)
-      byName.toSeq.sortBy(_._1).flatMap { case (nm, rows) =>
-        val base = tableName(nm)
-        val byMd5 = rows.groupBy(_._2).toSeq.sortBy(_._1)
-        byMd5.map { case (md5, vs) =>
-          val table = naming.getOrElse((nm, md5),
-            if (naming.keys.exists(_._1 == nm)) s"${base}__${md5.take(8)}"
-            else if (byMd5.size == 1) base
-            else s"${base}__${md5.take(8)}")
-          (nm, md5, vs.head._3, vs.map(_._4).distinct, table)
-        }
-      }
-    }
-
-    // ONE scan of the container. Default mode: spine meta for every
-    // message plus the raw bytes of channels NOT routed to a typed
-    // table (nulled for routed channels, so their blobs never ride
-    // this write); typed tables then re-scan their files. Staged mode:
-    // the same single pass ALSO stages every routed payload,
-    // partitioned by a schema-route column — each chunk is read and
-    // decompressed exactly ONCE for the whole ETL.
-    val raw0 = spark.read.format("mcap")
-      .option("files", McapDataSource.filesSpec(files)).load()
-    val raw = maxMessages.map(n => raw0.limit(n.toInt).toDF()).getOrElse(raw0)
-    val stageDir = s"$out/_spine"
-    val metaCols = metaColNames.map(col)
-    if (stagedBySchema)
-      // `_route` rather than schema_name itself: an empty schema name
-      // (schema-less channel) is not a usable partition value (Spark
-      // reads empty partition strings back as null)
-      raw.select(metaCols :+ col("data") :+
-          when(routed(col("schema_encoding"), col("schema_name")),
-              col("schema_name"))
-            .otherwise(lit("__raw")).as("_route"): _*)
-        .write.mode(SaveMode.Overwrite).partitionBy("_route")
-        .option("compression", "snappy").parquet(stageDir)
-    else
-      raw.select(metaCols :+
-          when(routed(col("schema_encoding"), col("schema_name")),
-              lit(null).cast("binary"))
-            .otherwise(col("data")).as("data"): _*)
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "snappy").parquet(stageDir)
-
-    // Global seqno in log-time order with stable storage tie-break —
-    // the two-pass range-partition operator runs against the staged
-    // meta (parquet column pruning skips the raw-bytes pages), never
-    // re-reading the mcap files.
-    val spine0 = Seqno.globalSeqno(
-      spark.read.parquet(stageDir).select(metaCols: _*),
-      Seq(col("log_time"), col("file_path"), col("chunk_idx"), col("offset")))
-    val spine = if (seqnoOffset == 0L) spine0
-      else spine0.withColumn("seqno", col("seqno") + lit(seqnoOffset))
-
-    val messages0 = spine.select(col("seqno") +: metaCols: _*)
-    val messages = if (nativeTimestamp)
-      // floor nanos → micros; NTZ arithmetic (no session-timezone
-      // rendering), same construction as BagEtl's native time column.
-      // log_time is u64 nanos (never negative), so `div` floors.
-      messages0.withColumn("log_time_ts",
-        expr("timestampadd(MICROSECOND, log_time div 1000, " +
-          "TIMESTAMP_NTZ '1970-01-01 00:00:00')"))
-    else messages0
-
-    val writeMode = if (append) SaveMode.Append else SaveMode.ErrorIfExists
-
-    // (file_path, chunk_idx, offset) -> seqno map: ints + the path —
-    // blobs never ride a seqno shuffle; typed tables join on the
-    // stable storage identity.
-    val seqnoDir = s"$out/_seqno"
-    spine.select(col("file_path"), col("chunk_idx"), col("offset"), col("seqno"))
-      .write.mode(SaveMode.Overwrite)
-      .option("compression", "snappy").parquet(seqnoDir)
-    val seqnoMap = spark.read.parquet(seqnoDir)
-
-    // typed-table frame columns that are NOT payload
-    val metaInTyped = Set("file_path", "chunk_idx", "offset", "log_time",
-      "publish_time", "sequence", "channel_id", "topic", "data")
-
-    // per-variant tables as CONCURRENT jobs (independent output dirs,
-    // shared read-only seqno map) under one job group: a failure
-    // cancels the siblings instead of racing caller teardown
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val jobGroup = s"graft-mcap-etl-${java.util.UUID.randomUUID()}"
-    val typeDdl = variants.map { case (nm, md5, (enc, schemaData), vFiles, table) =>
-      Future { scala.concurrent.blocking {
-        spark.sparkContext.setJobGroup(jobGroup, s"per-type $table",
-          interruptOnCancel = true)
-        try {
-          val df = if (stagedBySchema) {
-            // decode THIS variant's staged bytes — the container files
-            // are never re-read. The route partition holds every
-            // variant of the name; the variant's channels (a file can
-            // legally carry two same-name variants) are selected via a
-            // broadcast of the driver-known (file, channel) dimension.
-            val chanRows = vFiles.flatMap { f =>
-              val idx = McapIO.scanIndex(f)
-              idx.channels.values.collect {
-                case c if idx.schemas.get(c.schemaId).exists(s =>
-                    s.name == nm && McapTypedRead.md5hex(s.data) == md5) =>
-                  (f, c.id)
+          nativeTimestamp: Boolean): Info = {
+    val r = RoutedEtl.run(spark, out, slice, maxMessages, keepRawBlob, nativeTimestamp) {
+      val indexes = slice.files.map(f => f -> McapIO.scanIndex(f))
+      val typed = indexes.flatMap(_._2.schemas.values.filter(s =>
+        McapPayload.typedEncodings(s.encoding)))
+      // A typed-encoding schema whose descriptor cannot flatten (a
+      // recursive protobuf type, repeated bytes, corrupt descriptor
+      // bytes, an incomplete ros2msg dependency closure — flatSchema,
+      // not bundle alone, resolves references) must not sink the whole
+      // run: its channels fall back to RawMessages retention like any
+      // untyped encoding. Decided per NAME, so a name with one good and
+      // one broken variant stays raw wholesale.
+      val flattenable: Set[String] = typed.groupBy(_.name).collect {
+        case (nm, ss) if ss.forall(s => scala.util.Try(graft.ros.RosSchemaMapper.flatSchema(
+          McapPayload.bundle(s.encoding, nm, s.data))).isSuccess) => nm
+      }.toSet
+      def variant(s: McapFormat.McapSchema) = (s.name, McapTypedRead.md5hex(s.data))
+      // each (name, md5-of-schema-bytes) variant's first schema record
+      val first = typed.filter(s => flattenable(s.name)).groupBy(variant)
+        .map { case (k, ss) => k -> ss.head }
+      val keys = first.keys.toSeq.sorted
+      val refused = scala.collection.mutable.ArrayBuffer.empty[(Int, RoutedEtl.PayloadDecoder)]
+      // (file_path, channel_id) → route: one file can carry two
+      // same-name variants on different channels
+      val routeOf = indexes.map { case (f, idx) =>
+        f -> idx.channels.values.map { c =>
+          c.id.toLong -> idx.schemas.get(c.schemaId)
+            .filter(s => McapPayload.typedEncodings(s.encoding) && flattenable(s.name))
+            .fold(-1) { s =>
+              val v = keys.indexOf(variant(s))
+              val enc = first(variant(s)).encoding
+              val want = McapPayload.messageEncodingFor(enc)
+              if (c.messageEncoding == want) v
+              else {
+                refused += v -> new Refused(s"channel ${c.id} encodes messages as " +
+                  s"'${c.messageEncoding}'; schema encoding '$enc' decodes '$want'")
+                keys.size + refused.size - 1
               }
             }
-            import spark.implicits._
-            val chanDim = chanRows.toDF("file_path", "channel_id")
-            val part = spark.read.parquet(stageDir)
-              .filter(col("_route") === nm && col("file_path").isin(vFiles: _*))
-              .join(broadcast(chanDim), Seq("file_path", "channel_id"))
-              .join(seqnoMap, Seq("file_path", "chunk_idx", "offset"))
-              .select(col("seqno"), col("channel_id"), col("file_path"), col("data"))
-            decodeRows(spark, part, McapPayload.bundle(enc, nm, schemaData),
-              McapPayload.decoder(enc, nm, schemaData), keepRawBlob)
-          } else {
-            val typed = spark.read.format("mcap")
-              .option("files", McapDataSource.filesSpec(vFiles))
-              .option("schema_name", nm).option("schema_md5", md5)
-              .option("includeRaw", keepRawBlob.toString)
-              .load()
-            val payload = typed.columns.filterNot(metaInTyped)
-            val frame = col("seqno") +: payload.map(col).toSeq :+
-              col("channel_id") :+ col("file_path")
-            typed
-              .join(seqnoMap, Seq("file_path", "chunk_idx", "offset"))
-              .select((if (keepRawBlob) frame :+ col("data") else frame): _*)
-          }
-          val tableNew = !append || !pathExists(s"$out/$table.parquet")
-          df.write.mode(writeMode)
-            .option("compression", "snappy").parquet(s"$out/$table.parquet")
-          if (tableNew) VerticaDdl.createTable(table, df.schema) + "\n" else ""
-        } finally spark.sparkContext.clearJobGroup()
-      } }
+        }.toMap.withDefaultValue(-1)
+      }.toMap
+      RoutedEtl.Source(
+        spark.read.format("mcap").option("files", McapDataSource.filesSpec(slice.files)).load(),
+        messages = Seq("file_path", "chunk_idx", "offset", "log_time", "publish_time",
+          "sequence", "size", "channel_id", "topic", "schema_name", "schema_encoding",
+          "message_encoding", "data_crc32").map(col),
+        // log_time is u64 nanos (never negative), so `div` floors
+        nativeTime = expr("timestampadd(MICROSECOND, log_time div 1000, " +
+          "TIMESTAMP_NTZ '1970-01-01 00:00:00')").as("log_time_ts"),
+        order = Seq("log_time", "file_path", "chunk_idx", "offset"),
+        identity = Seq("file_path", "chunk_idx", "offset"), indexSeqno = None,
+        key = ("file_path", "channel_id"), tail = Seq("channel_id", "file_path"),
+        raw = Seq("channel_id", "topic", "schema_name", "schema_encoding",
+          "message_encoding", "file_path"),
+        variants = keys.map { case k @ (nm, md5) =>
+          val s = first(k)
+          RoutedEtl.Variant(nm, md5, tableName(nm),
+            McapTypedRead.typedSchema(McapPayload.bundle(s.encoding, nm, s.data),
+              includeRaw = false).fields.toSeq.drop(McapTypedRead.MetaFields.size))
+        },
+        decoders = keys.indices.map { v =>
+          val s = first(keys(v))
+          v -> (new SchemaDecoder(s.encoding, s.name, s.data): RoutedEtl.PayloadDecoder)
+        } ++ refused,
+        routeOf = routeOf,
+        dimension = RoutedEtl.Dimension("Channels", McapTables.ChannelsSchema,
+          McapTables.channelRows(slice.files)),
+        messagesNullable = true, typedSeqnoNullable = true)
     }
-
-    val ddl = new StringBuilder
-    try {
-      Await.result(Future.sequence(typeDdl), Duration.Inf).foreach(ddl ++= _)
-
-      // RawMessages: unrouted channels' payloads, from the staging
-      // table (the mcap files are not re-read). Written only when such
-      // channels exist — decided from the driver-side dimension, no
-      // wasted job otherwise.
-      val hasUnrouted = files.exists { f =>
-        val idx = McapIO.scanIndex(f)
-        idx.channels.values.exists(c =>
-          !idx.schemas.get(c.schemaId).exists(sc =>
-            McapPayload.typedEncodings(sc.encoding) && flattenable(sc.name)))
-      }
-      if (hasUnrouted) {
-        val rawTab = spark.read.parquet(stageDir)
-          // staged mode prunes to the __raw route partition directly
-          .filter(if (stagedBySchema) col("_route") === "__raw"
-                  else !routed(col("schema_encoding"), col("schema_name")))
-          .join(seqnoMap, Seq("file_path", "chunk_idx", "offset"))
-          .select(col("seqno"), col("channel_id"), col("topic"),
-            col("schema_name"), col("schema_encoding"), col("message_encoding"),
-            col("file_path"), col("data"))
-        val rawNew = !append || !pathExists(s"$out/RawMessages.parquet")
-        rawTab.write.mode(writeMode)
-          .option("compression", "snappy").parquet(s"$out/RawMessages.parquet")
-        if (rawNew) ddl ++= VerticaDdl.createTable("RawMessages", rawTab.schema) ++= "\n"
-      }
-
-      // Channels (last, below) is the increment's COMMIT RECORD
-      // (runIncremental's done-set is Channels.file_path alone) —
-      // written only after every other write succeeded, Messages
-      // included; same crash-ordering rationale as BagEtl.
-      messages.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Messages.parquet")
-      channels.write.mode(writeMode)
-        .option("compression", "snappy").parquet(s"$out/Channels.parquet")
-    } catch { case e: Throwable =>
-      spark.sparkContext.cancelJobGroupAndFutureJobs(jobGroup)
-      throw e
-    } finally {
-      Seq(seqnoDir, stageDir).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).delete(p, true)
-      }
-    }
-
-    // DDL file (append-preserving) + naming manifest, BagEtl's formats
-    BagEtl.writeDdlFile(out, ddl.toString, append)
-    BagEtl.writeManifest(out, naming ++
-      variants.map { case (nm, md5, _, _, table) => (nm, md5) -> table })
-
-    // info from the WRITTEN tables (columnar, metadata-heavy) — not an
-    // mcap re-scan; in append mode the slice covers only this run's files
-    val msgs0 = spark.read.parquet(s"$out/Messages.parquet")
-    val msgs = if (append) msgs0.filter(col("file_path").isin(files: _*)) else msgs0
-    val infoRow = msgs
-      .agg(count(lit(1)), coalesce(sum(col("size").cast("long")), lit(0L)),
-        coalesce(expr("bit_xor(data_crc32)"), lit(0L)), max(col("seqno"))).head()
-    val (cnt, size, crc) =
-      (infoRow.getLong(0), infoRow.getLong(1), infoRow.getLong(2))
-    // commit-record protocol, step 2: dimension landed — finalize
-    BagEtl.writeCommitRecord(out,
-      if (infoRow.isNullAt(3)) seqnoOffset - 1
-      else math.max(seqnoOffset - 1, infoRow.getLong(3)), Nil)
-    val tables = variants.map { case (_, _, _, _, table) =>
-      val t = spark.read.parquet(s"$out/$table.parquet")
-      table -> (if (append) t.filter(col("file_path").isin(files: _*)) else t).count()
-    }.toMap
-    val chanCount = channels.count()
-    Info(name, cnt, chanCount, size, crc, tables)
+    Info(name, r.count, r.dimensionRows, r.bytes, r.crcXor, r.tables)
   }
 
-  /** Flattened per-variant DataFrame from staged (seqno, channel_id,
-    * file_path, data) rows — the CDR twin of BagEtl.decodeRows: seqno +
-    * flattened payload columns + channel_id + file_path (+ raw blob),
-    * the SAME frame (names, order, types) the typed-source scan mode
-    * emits, via the shared reserved-name rule (McapTypedRead.reserved).
+  /** A schema record's payload decode, the typed `mcap` source's
+    * (McapPayload.decoder); also db3's, whose definitions are ros2msg /
+    * ros2idl text. Its definition parses once per task.
     */
-  private[mcap] def decodeRows(spark: SparkSession, part: org.apache.spark.sql.DataFrame,
-      bundle: graft.ros.RosMsgBundle, decode: Array[Byte] => Seq[Any],
-      keepRawBlob: Boolean): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types._
-    val flat = graft.ros.RosSchemaMapper.flatSchema(bundle)
-    val payload = flat.fields.map(f =>
-      if (McapTypedRead.reserved(f.name)) f.copy(name = f.name + "_field") else f)
-    val base = StructField("seqno", LongType, nullable = false) +:
-      (payload.toSeq :+
-        StructField("channel_id", IntegerType, nullable = false) :+
-        StructField("file_path", StringType, nullable = false))
-    val outSchema = StructType(
-      if (keepRawBlob) base :+ StructField("data", BinaryType, nullable = false) else base)
-    val rows = part.select(col("seqno"), col("channel_id"), col("file_path"), col("data"))
-      .rdd.map { r =>
-        val bytes = r.getAs[Array[Byte]](3)
-        val vals = decode(bytes)
-        val tail = Seq[Any](r.getInt(1), r.getString(2)) ++
-          (if (keepRawBlob) Seq(bytes) else Nil)
-        Row.fromSeq(r.getLong(0) +: (vals ++ tail))
-      }
-    spark.createDataFrame(rows, outSchema)
+  private[ros] final class SchemaDecoder(encoding: String, name: String, schema: Array[Byte])
+      extends RoutedEtl.PayloadDecoder {
+    @transient private lazy val decoder = McapPayload.decoder(encoding, name, schema)
+    def decode(data: Array[Byte]): Seq[Any] = decoder(data)
   }
 
-  private def pathExists(path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).exists(p)
+  /** The route of a channel whose messages its schema's decoder cannot
+    * read: its first message fails the data job.
+    */
+  private final class Refused(why: String) extends RoutedEtl.PayloadDecoder {
+    def decode(data: Array[Byte]): Seq[Any] = throw new IllegalArgumentException(why)
   }
 }

@@ -874,16 +874,18 @@ class McapTypedPartitionReader(p: McapInputPartition, schemaName: String,
 object McapTables {
   import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-  def channels(spark: SparkSession, path: String): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("file_path", StringType, nullable = false),
-      StructField("channel_id", IntegerType, nullable = false),
-      StructField("schema_id", IntegerType, nullable = false),
-      StructField("topic", StringType, nullable = false),
-      StructField("message_encoding", StringType, nullable = false),
-      StructField("schema_name", StringType, nullable = true),
-      StructField("schema_encoding", StringType, nullable = true)))
-    val rows = McapIO.resolveFiles(path).flatMap { f =>
+  val ChannelsSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType, nullable = false),
+    StructField("channel_id", IntegerType, nullable = false),
+    StructField("schema_id", IntegerType, nullable = false),
+    StructField("topic", StringType, nullable = false),
+    StructField("message_encoding", StringType, nullable = false),
+    StructField("schema_name", StringType, nullable = true),
+    StructField("schema_encoding", StringType, nullable = true)))
+
+  /** One [[ChannelsSchema]] row per (file, channel), by channel id. */
+  def channelRows(files: Seq[String]): Seq[Row] =
+    files.flatMap { f =>
       val idx = McapIO.scanIndex(f)
       idx.channels.values.toSeq.sortBy(_.id).map { c =>
         val s = idx.schemas.get(c.schemaId)
@@ -891,8 +893,10 @@ object McapTables {
           s.map(_.name).orNull, s.map(_.encoding).orNull)
       }
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
+
+  def channels(spark: SparkSession, path: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      channelRows(McapIO.resolveFiles(path)), 1), ChannelsSchema)
 
   /** Attachment records as a DataFrame (executor-side body reads —
     * see [[McapSideTables]]); equivalent to

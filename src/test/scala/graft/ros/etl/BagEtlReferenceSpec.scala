@@ -1,9 +1,6 @@
 package graft.ros.etl
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.ros.{MsgDefParser, RosMd5, RosSchemaMapper}
 import graft.ros.bag.{BagFormat, RosbagIO}
@@ -15,7 +12,7 @@ import graft.ros.bag.BagFormat.{BagConnection, WriteMessage}
   * Spark row metadata in every part file's footer — and the same rows;
   * the same `_tables.json` manifest and DDL file.
   */
-class BagEtlReferenceSpec extends SparkTestBase {
+class BagEtlReferenceSpec extends SparkTestBase with EtlTableAsserts {
   private val aDef = "int32 v"
   private val bDef = "float64 x\nstring s"
   private val aBundle = MsgDefParser.parse("test_msgs/A", aDef)
@@ -64,66 +61,6 @@ class BagEtlReferenceSpec extends SparkTestBase {
   // a partition budget below the first overlap group: the Seqno fallback
   private val tinyPartitions = Seq("spark.sql.files.maxPartitionBytes" -> "1024",
     "spark.graft.chunkOpenCostBytes" -> "0")
-
-  private def tableDirs(out: String): Seq[String] =
-    new java.io.File(out).listFiles.toSeq.map(_.getName).filter(_.endsWith(".parquet")).sorted
-
-  private def parts(dir: String): Seq[java.io.File] =
-    new java.io.File(dir).listFiles.toSeq
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-
-  /** Per part file: the parquet schema and the footer's key-value
-    * metadata (Spark's row schema with its nullability among them).
-    */
-  private def footers(dir: String): Set[(String, Map[String, String])] =
-    parts(dir).map { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toString), RosbagIO.hadoopConf()))
-      try {
-        val md = r.getFooter.getFileMetaData
-        (md.getSchema.toString, md.getKeyValueMetaData.asScala.toMap)
-      } finally r.close()
-    }.toSet
-
-  private def norm(v: Any): Any = v match {
-    case b: Array[Byte] => b.toSeq
-    case r: Row => r.toSeq.map(norm)
-    case s: scala.collection.Seq[_] => s.map(norm)
-    case x => x
-  }
-
-  private def rows(dir: String): Seq[Seq[Any]] = {
-    val df = spark.read.parquet(dir)
-    val key = if (df.columns.contains("seqno")) Seq("seqno") else Seq("bag_path", "connection_id")
-    df.orderBy(key.map(col): _*).collect().toSeq.map(r => r.toSeq.map(norm))
-  }
-
-  private def text(out: String, f: String): String =
-    new String(Files.readAllBytes(Paths.get(out, f)), java.nio.charset.StandardCharsets.UTF_8)
-
-  /** Every table of `etl` equals its `ref` twin; footers are compared
-    * with `footersOf`'s. The reference's staged fallback declared
-    * different nullability than its index path (seqno OPTIONAL in the
-    * per-type tables, every column but seqno OPTIONAL in Messages);
-    * the single-job ETL declares the index path's on both, so a
-    * fallback output's footers are compared with the index path's.
-    */
-  private def assertSameTables(etl: String, ref: String, footersOf: String = null): Unit = {
-    assert(tableDirs(etl) == tableDirs(ref))
-    assert(tableDirs(etl).contains("Messages.parquet"))
-    tableDirs(etl).foreach { t =>
-      val (a, b) = (s"$etl/$t", s"$ref/$t")
-      assert(spark.read.parquet(a).schema == spark.read.parquet(b).schema, t)
-      assert(footers(a) == footers(s"${Option(footersOf).getOrElse(ref)}/$t"), s"$t footers")
-      assert(rows(a) == rows(b), s"$t rows")
-      assert(Files.exists(Paths.get(a, "_SUCCESS")), s"$t _SUCCESS")
-    }
-    Seq("_tables.json", "vertica_load_tables.sql").foreach(f =>
-      assert(text(etl, f) == text(ref, f), f))
-    Seq("_temporary", "_spine", "_seqno").foreach(d =>
-      assert(!Files.exists(Paths.get(etl, d)), s"$d left behind"))
-  }
 
   test("index path and both fallback triggers match the per-table reference") {
     val dir = writeLoad(Files.createTempDirectory("graft_ref_load"))

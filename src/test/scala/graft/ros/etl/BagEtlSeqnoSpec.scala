@@ -152,7 +152,7 @@ class BagEtlSeqnoSpec extends SparkTestBase {
     val read = fileBytesRead() - read0
     assert(jobs.flatMap(_.stageInfos).forall(!org.apache.spark.GraftTestAccess.isShuffleMapStage(_)))
     // one data job for every table; Connections is written on the driver
-    assert(jobs.size <= 1, s"${jobs.size} jobs for ${tables.size} tables")
+    assert(jobs.size == 1, s"${jobs.size} jobs for ${tables.size} tables")
     assert(read <= 1.3 * Files.size(p), s"read $read bytes of a ${Files.size(p)}-byte bag")
     tables.foreach(t => assert(spark.read.parquet(s"$o/$t.parquet").count() > 0, t))
   }

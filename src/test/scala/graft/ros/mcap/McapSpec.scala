@@ -386,7 +386,7 @@ class McapSpec extends SparkTestBase {
       === Seq("/telemetry"))
   }
 
-  test("McapEtl routes protobuf channels to typed tables, both scan modes; no RawMessages") {
+  test("McapEtl routes protobuf channels to typed tables; no RawMessages") {
     val (fdsBytes, set, vals) = telemetryFixture()
     val schemas = Seq(
       McapSchema(1, "graft.test.Telemetry", "protobuf", fdsBytes),
@@ -403,23 +403,20 @@ class McapSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_mcap_pb").toFile
     val out = new java.io.FileOutputStream(new java.io.File(dir, "a.mcap"))
     try out.write(writeMcap(schemas, channels, msgs, "lz4")) finally out.close()
-    Seq(false, true).foreach { staged =>
-      val outDir = freshOut(s"graft_mcap_pb_out_$staged")
-      val info = McapEtl.run(spark, dir.getAbsolutePath, outDir,
-        stagedBySchema = staged)
-      assert(info.tables === Map("graft_test_Telemetry" -> 4L,
-        "std_msgs_msg_String" -> 4L), s"staged=$staged")
-      // every channel routed: the retention table must not exist
-      assert(!new java.io.File(s"$outDir/RawMessages.parquet").exists())
-      val t = spark.read.parquet(s"$outDir/graft_test_Telemetry.parquet")
-      val got = t.orderBy("seqno")
-        .select("tag", "stamp", "pose_x", "pose_y", "counts").collect()
-        .map(r => Seq[Any](r.getString(0), r.getLong(1), r.getDouble(2),
-          r.getFloat(3), r.getSeq[Int](4)))
-      assert(got.toSeq === vals, s"staged=$staged")
-      val ddl = scala.io.Source.fromFile(s"$outDir/vertica_load_tables.sql").mkString
-      assert(ddl.contains("graft_test_Telemetry"), s"staged=$staged")
-    }
+    val outDir = freshOut("graft_mcap_pb_out")
+    val info = McapEtl.run(spark, dir.getAbsolutePath, outDir)
+    assert(info.tables === Map("graft_test_Telemetry" -> 4L,
+      "std_msgs_msg_String" -> 4L))
+    // every channel routed: the retention table must not exist
+    assert(!new java.io.File(s"$outDir/RawMessages.parquet").exists())
+    val t = spark.read.parquet(s"$outDir/graft_test_Telemetry.parquet")
+    val got = t.orderBy("seqno")
+      .select("tag", "stamp", "pose_x", "pose_y", "counts").collect()
+      .map(r => Seq[Any](r.getString(0), r.getLong(1), r.getDouble(2),
+        r.getFloat(3), r.getSeq[Int](4)))
+    assert(got.toSeq === vals)
+    val ddl = scala.io.Source.fromFile(s"$outDir/vertica_load_tables.sql").mkString
+    assert(ddl.contains("graft_test_Telemetry"))
   }
 
   test("unflattenable protobuf schema falls back to RawMessages instead of sinking the run") {
@@ -443,19 +440,16 @@ class McapSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_mcap_unflat").toFile
     val out = new java.io.FileOutputStream(new java.io.File(dir, "a.mcap"))
     try out.write(writeMcap(schemas, channels, msgs, "lz4")) finally out.close()
-    Seq(false, true).foreach { staged =>
-      val outDir = freshOut(s"graft_mcap_unflat_out_$staged")
-      val info = McapEtl.run(spark, dir.getAbsolutePath, outDir,
-        stagedBySchema = staged)
-      assert(info.tables === Map("std_msgs_msg_String" -> 3L), s"staged=$staged")
-      val raw = spark.read.parquet(s"$outDir/RawMessages.parquet")
-        .orderBy("seqno").collect()
-      assert(raw.length === 3, s"staged=$staged")
-      raw.foreach(r => assert(r.getAs[String]("topic") === "/rec"))
-      val want = msgs.filter(_.channelId == 1).map(_.data.toSeq).toSet
-      assert(raw.map(_.getAs[Array[Byte]]("data").toSeq).toSet === want,
-        s"staged=$staged: byte-exact retention")
-    }
+    val outDir = freshOut("graft_mcap_unflat_out")
+    val info = McapEtl.run(spark, dir.getAbsolutePath, outDir)
+    assert(info.tables === Map("std_msgs_msg_String" -> 3L))
+    val raw = spark.read.parquet(s"$outDir/RawMessages.parquet")
+      .orderBy("seqno").collect()
+    assert(raw.length === 3)
+    raw.foreach(r => assert(r.getAs[String]("topic") === "/rec"))
+    val want = msgs.filter(_.channelId == 1).map(_.data.toSeq).toSet
+    assert(raw.map(_.getAs[Array[Byte]]("data").toSeq).toSet === want,
+      "byte-exact retention")
   }
 
   test("ros2idl schema encoding reads typed through the mcap source") {
@@ -495,35 +489,6 @@ class McapSpec extends SparkTestBase {
     // third call: nothing new
     val third = McapEtl.runIncremental(spark, dir.getAbsolutePath, outDir)
     assert(third.messages == 0 && third.tables.isEmpty)
-  }
-
-  test("McapEtl stagedBySchema single-pass mode emits tables identical to the re-scan mode") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mcap_staged").toFile
-    writeEtlFixture(dir, "a.mcap", imuText, 6)
-    writeEtlFixture(dir, "b.mcap", imuText2, 4)  // drifted Imu variant
-    // plus an unrouted (untyped-encoding) channel in a third file
-    val sch = Seq(McapSchema(1, "foxglove.Log", "jsonschema", Array[Byte](9)))
-    val chs = Seq(McapChannel(1, 1, "/log", "json"))
-    val ms = (0 until 3).map(i => McapMessage(1, i.toLong, 50L + i, 50L + i,
-      Array.tabulate(5)(j => (i * 7 + j).toByte)))
-    val out3 = new java.io.FileOutputStream(new java.io.File(dir, "c.mcap"))
-    try out3.write(writeMcap(sch, chs, ms, "zstd")) finally out3.close()
-
-    val outA = freshOut("graft_mcap_staged_a")
-    val outB = freshOut("graft_mcap_staged_b")
-    val infoA = McapEtl.run(spark, dir.getAbsolutePath, outA)
-    val infoB = McapEtl.run(spark, dir.getAbsolutePath, outB, stagedBySchema = true)
-    assert(infoA.messages == infoB.messages && infoA.messages == 13)
-    assert(infoA.crcXor == infoB.crcXor && infoA.tables == infoB.tables)
-    // every table byte-identical in rows, schema and column order
-    val tableNames = infoA.tables.keySet.toSeq :+ "Messages" :+ "Channels" :+ "RawMessages"
-    tableNames.foreach { t =>
-      val a = spark.read.parquet(s"$outA/$t.parquet")
-      val b = spark.read.parquet(s"$outB/$t.parquet")
-      assert(a.schema == b.schema, s"$t schema")
-      assert(a.count() == b.count(), s"$t count")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty, s"$t rows")
-    }
   }
 
   test("McapEtl maxMessages limits the conversion scope; nativeTimestamp adds NTZ micros") {
