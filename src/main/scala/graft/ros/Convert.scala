@@ -757,7 +757,7 @@ object Convert {
       case "mcap" =>
         autoProfile(options, "mcap", mcap.McapDataSource.filesSpec(files))
       case "db3" =>
-        db3.Db3BatchWrite.compactCompressionOptions(fs, outPath, options)
+        db3.Db3BagMetadata.compactCompressionOptions(fs, outPath, options)
       case _ => Map.empty[String, String]
     }
     val sinkOpts = options.filterNot(kv => ConvertOnly(kv._1.toLowerCase)) ++ auto
@@ -778,7 +778,7 @@ object Convert {
           // the staged metadata.yaml lists STAGE-relative names; swap
           // in a rendering for the final names (epoch ledger carried
           // over) as one more journaled promotion
-          db3.Db3BatchWrite.regenCompactMetadata(fs, outPath,
+          db3.Db3BagMetadata.regenCompactMetadata(fs, outPath,
             stagePath.toString, staged.map(n => s"compact-$tag-$n"))
           Seq(s"MV\t.compact-$tag/metadata.yaml\tmetadata.yaml")
         } else Seq.empty

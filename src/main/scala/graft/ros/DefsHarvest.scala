@@ -30,6 +30,20 @@ object DefsHarvest {
   final case class TypeDef(name: String, encoding: String,
       data: Array[Byte], md5sum: String)
 
+  /** The sinks' `defs_priority` option: "file" = the row's own source
+    * file outranks the defs channel (Convert's auto-wiring, per-file
+    * truth for divergent fleets); "channel" (default) = an explicitly
+    * pinned defs source is definitive, files only cover types the
+    * channel lacks.
+    */
+  def fileFirst(defsPriority: Option[String]): Boolean =
+    defsPriority.getOrElse("channel") match {
+      case "file" => true
+      case "channel" => false
+      case other => throw new IllegalArgumentException(
+        s"defs_priority must be file | channel, got '$other'")
+    }
+
   /** ros2-dialect schema encodings — what a db3 message_definitions
     * table (and a cdr payload's typed decode) can carry.
     */

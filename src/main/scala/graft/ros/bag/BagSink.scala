@@ -1,79 +1,9 @@
 package graft.ros.bag
 
 import java.io.ByteArrayOutputStream
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType}
 
-/** rosbag1 export sink — the write half of the `rosbag` DataSource:
-  * `df.write.format("rosbag").mode("append").save(dir)`, the classic
-  * `rosbag filter` re-emit for the v2.0 container (read an archive,
-  * transform relationally, write a bag `rosbag play` can consume).
-  * One bag per Spark partition, CHUNK-bounded task memory.
-  *
-  * The bag header record (file offset 13) carries `index_pos` /
-  * `conn_count` / `chunk_count`, knowable only at close — remote
-  * FS streams cannot seek back, so each task builds its bag on LOCAL
-  * scratch disk (the shuffle-spill trust level), back-patches the
-  * header, and uploads to the destination FS on task commit (dotted
-  * in-progress name, rename after upload — same exactly-once shape as
-  * the mcap sink). Task memory stays O(current chunk); disk O(one
-  * partition's bag).
-  *
-  * Column contract (spine names): `topic`, `datatype`, `time_sec`,
-  * `time_nsec`, `data` drive the output; other spine columns are
-  * read-derived and ignored. Connection records carry md5sum/
-  * message_definition when `conn_defs_from` points at an existing bag
-  * path to harvest them from (driver-side, bounded pool) — without it
-  * they export as `"*"`/empty (valid for spine-level consumers;
-  * `rosbag` tooling treats `*` as unknown-md5). Options: `compression`
-  * (none | bz2 | lz4; default lz4), `chunk_bytes` (raw bytes per
-  * chunk, default 768 KiB — rosbag's own default chunk size).
-  */
-object BagSinkWrite {
-  /** datatype -> (md5sum, message_definition) harvested from ANY
-    * container path: bag connection records verbatim (md5sum
-    * included), plus mcap Schemas already carrying "ros1msg" encoding
-    * (a bag→mcap convert's schemas — md5 exports as "*", rosbag
-    * tooling's own unknown marker). The scans are strict: the user
-    * NAMED this path as the definitions source — an unreadable file
-    * must fail the write loudly, not silently export every connection
-    * with md5 "*". A ros2msg/ros2idl/protobuf definition is a genuine
-    * cross-dialect type translation: `foreign` = "error" (the default
-    * for an explicitly named path) fails loudly; "skip"
-    * ([[graft.ros.Convert]]'s best-effort auto-wire) carries the ros1
-    * subset.
-    */
-  private[bag] def harvestConnDefs(path: String,
-      foreign: String = "error"): Map[String, (String, String)] = {
-    // dialect filter BEFORE dedupe (a same-named ros2 definition must
-    // not shadow the ros1 one); dedupe itself prefers a genuine
-    // md5sum over an mcap-carried "*"
-    val (ok0, bad) = graft.ros.DefsHarvest.fromPath(path)
-      .partition(_.encoding == "ros1msg")
-    val ok = graft.ros.DefsHarvest.dedupe(ok0)
-    if (bad.nonEmpty && foreign != "skip") throw new IllegalArgumentException(
-      "rosbag write: conn_defs_from harvested non-ros1 definitions (" +
-        bad.map(d => s"${d.name}: ${d.encoding}").distinct.take(5).mkString(", ") +
-        ") — a bag connection record carries ros1msg text, and translating " +
-        "ros2msg/ros2idl/protobuf definitions is a cross-dialect type " +
-        "translation; set foreign_defs=skip to carry the ros1 subset")
-    ok.map { d =>
-      val text = new String(d.data, java.nio.charset.StandardCharsets.UTF_8)
-      // a definition harvested from an mcap Schema record carries no
-      // checksum ("*") — COMPUTE the genuine genmsg md5 from the text
-      // so a bag→mcap→bag round trip yields connections real rosbag
-      // tooling validates (an unparseable definition keeps "*": the
-      // bytes still carry, the checksum stays honestly unknown)
-      val md5 =
-        if (d.md5sum != "*") d.md5sum
-        else try graft.ros.RosMd5.compute(d.name, text)
-        catch { case _: Exception => "*" }
-      d.name -> (md5, text)
-    }.toMap
-  }
-}
 
 /** Incremental single-bag writer over a local scratch file: magic +
   * placeholder bag header up front; connection records are written
@@ -272,276 +202,139 @@ final class BagStreamingWriter(local: java.io.File, compression: String,
     try out.close() catch { case _: java.io.IOException => () }
 }
 
-class BagWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuilder
-    with SupportsTruncate {
-  private var truncateFirst = false
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
-  override def build(): Write = {
-    val schema = info.schema()
-    def need(name: String, dt: org.apache.spark.sql.types.DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      require(i >= 0, s"rosbag write needs a '$name' column " +
-        "(BagExport.prepare conforms arbitrary frames)")
-      require(schema.fields(i).dataType == dt,
-        s"rosbag write column '$name' must be $dt, got ${schema.fields(i).dataType}")
-      i
-    }
-    // OPTIONAL source-file column: feeds the writer's late-binding
-    // defs resolution (SourceDefs.ros1ConnFor) — absent or empty is
-    // fine
-    def opt(name: String, dt: org.apache.spark.sql.types.DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      if (i >= 0 && schema.fields(i).dataType == dt) i else -1
-    }
-    val ords = BagWriteOrdinals(
-      topic = need("topic", StringType),
-      datatype = need("datatype", StringType),
-      timeSec = need("time_sec", IntegerType),
-      timeNsec = need("time_nsec", IntegerType),
-      data = need("data", BinaryType),
-      filePath = opt("bag_path", StringType))
-    val opts = info.options()
-    val compression = Option(opts.get("compression")).getOrElse("lz4")
-    val chunkBytes = Option(opts.get("chunk_bytes")).map(_.toInt)
-      .getOrElse(768 * 1024)
-    // inline entries (graft.ros.Transcode's ros1 renderings, genuine
-    // genmsg md5s included) win over the path harvest: they exist in
-    // no source container
-    val inlineDefs = Option(opts.get("conn_defs_inline")).toSeq
-      .flatMap(graft.ros.DefsHarvest.decodeInline)
-      .filter(_.encoding == "ros1msg")
-      .map(d => d.name -> (d.md5sum,
-        new String(d.data, java.nio.charset.StandardCharsets.UTF_8)))
-      .toMap
-    val defs = Option(opts.get("conn_defs_from"))
-      .map(BagSinkWrite.harvestConnDefs(_,
-        Option(opts.get("foreign_defs")).getOrElse("error")))
-      .getOrElse(Map.empty) ++ inlineDefs
-    // "file" = the row's own source file outranks the defs channel
-    // (Convert's auto-wiring); "channel" (default) = an explicitly
-    // pinned defs source is definitive
-    val defsFileFirst =
-      Option(opts.get("defs_priority")).getOrElse("channel") match {
-        case "file" => true
-        case "channel" => false
-        case other => throw new IllegalArgumentException(
-          s"defs_priority must be file | channel, got '$other'")
-      }
-    new BagWrite(path, ords, compression, chunkBytes, defs, truncateFirst,
-      info.queryId(), defsFileFirst)
-  }
-}
-
-private[bag] final case class BagWriteOrdinals(topic: Int, datatype: Int,
-    timeSec: Int, timeNsec: Int, data: Int, filePath: Int = -1)
-
-class BagWrite(path: String, ords: BagWriteOrdinals, compression: String,
-    chunkBytes: Int, defs: Map[String, (String, String)],
-    truncateFirst: Boolean, queryId: String,
-    defsFileFirst: Boolean = false) extends Write {
-  override def toBatch: BatchWrite =
-    new BagBatchWrite(path, ords, compression, chunkBytes, defs,
-      truncateFirst, defsFileFirst)
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    require(!truncateFirst,
-      "rosbag streaming write supports the Append output mode only " +
-        "(a container directory cannot be truncated per epoch)")
-    new BagStreamingSinkWrite(path, ords, compression, chunkBytes, defs,
-      queryId, defsFileFirst)
-  }
-}
-
-/** Streaming half of the rosbag sink — same deterministic
-  * `part-<p>-q<queryId8>-e<epoch>.bag` naming as the mcap stream sink:
-  * an epoch replay replaces its previous attempt's file (the task
-  * commit's delete+rename), so the directory holds each epoch's rows
-  * exactly once. Epoch abort deletes that epoch's committed files.
+/** rosbag1 export sink — the write half of the `rosbag` DataSource:
+  * `df.write.format("rosbag").mode("append").save(dir)`, the classic
+  * `rosbag filter` re-emit for the v2.0 container (read an archive,
+  * transform relationally, write a bag `rosbag play` can consume).
+  * One bag per Spark partition, CHUNK-bounded task memory.
+  *
+  * The bag header record (file offset 13) carries `index_pos` /
+  * `conn_count` / `chunk_count`, knowable only at close — remote
+  * FS streams cannot seek back, so each task builds its bag on LOCAL
+  * scratch disk (the shuffle-spill trust level), back-patches the
+  * header, and uploads to the destination FS on task commit (dotted
+  * in-progress name, rename after upload — same exactly-once shape as
+  * the mcap sink). Task memory stays O(current chunk); disk O(one
+  * partition's bag).
+  *
+  * Column contract (spine names): `topic`, `datatype`, `time_sec`,
+  * `time_nsec`, `data` drive the output; other spine columns are
+  * read-derived and ignored. Connection records carry md5sum/
+  * message_definition when `conn_defs_from` points at an existing bag
+  * path to harvest them from (driver-side, bounded pool) — without it
+  * they export as `"*"`/empty (valid for spine-level consumers;
+  * `rosbag` tooling treats `*` as unknown-md5). Options: `compression`
+  * (none | bz2 | lz4; default lz4), `chunk_bytes` (raw bytes per
+  * chunk, default 768 KiB — rosbag's own default chunk size). The
+  * file protocol is [[graft.ros.ContainerSink]]'s.
   */
-class BagStreamingSinkWrite(dir: String, ords: BagWriteOrdinals,
-    compression: String, chunkBytes: Int, defs: Map[String, (String, String)],
-    queryId: String, defsFileFirst: Boolean = false)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  locally {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(RosbagIO.hadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p); () }
-  }
-  private val qid = queryId.take(8)
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    BagStreamWriterFactory(dir, qid, ords, compression, chunkBytes, defs,
-      defsFileFirst)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val commits = messages.collect { case c: BagFileCommit if c.path != null => c }
-    // reconcile: a replay with fewer partitions than the crashed
-    // attempt must not leave the extra per-partition files behind
-    graft.ros.ContainerStreamReconcile.sweep(
-      new Path(dir).getFileSystem(RosbagIO.hadoopConf()), dir,
-      // \d{5,}: the %05d stems WIDEN past five digits at >=100k
-      // partitions — a fixed {5} would leave those files invisible to
-      // the sweep, silently keeping duplicates after a shrunken replay
-      ("part-\\d{5,}-q" + java.util.regex.Pattern.quote(qid) +
-        "-e" + epochId + "\\.bag").r,
-      commits.map(c => new Path(c.path).getName).toSet)
-    graft.ros.SinkEpochMetrics.record(qid, epochId,
-      commits.map(_.rows).sum, commits.length.toLong, commits.map(_.bytes).sum)
-  }
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(RosbagIO.hadoopConf())
-    messages.foreach {
-      case c: BagFileCommit if c.path != null =>
-        fs.delete(new Path(c.path), false); ()
-      case _ => ()
-    }
-  }
-}
-
-private[bag] final case class BagStreamWriterFactory(dir: String, qid: String,
-    ords: BagWriteOrdinals, compression: String, chunkBytes: Int,
-    defs: Map[String, (String, String)], defsFileFirst: Boolean = false)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new BagDataWriter(dir, f"part-$partitionId%05d-q$qid-e$epochId", ords,
-      compression, chunkBytes, defs, partitionId, attemptTag = s"-t$taskId",
-      defsFileFirst = defsFileFirst)
-}
-
-private[bag] final case class BagFileCommit(path: String, rows: Long,
-    bytes: Long = 0L)
-  extends WriterCommitMessage
-
-class BagBatchWrite(dir: String, ords: BagWriteOrdinals, compression: String,
+final class BagSink private (topic: Int, datatype: Int, timeSec: Int,
+    timeNsec: Int, data: Int, filePath: Int, compression: String,
     chunkBytes: Int, defs: Map[String, (String, String)],
-    truncateFirst: Boolean, defsFileFirst: Boolean = false) extends BatchWrite {
+    defsFileFirst: Boolean) extends graft.ros.ContainerSink.Format {
+  override def suffixes: Seq[String] = Seq(".bag")
 
-  private val jobId = java.util.UUID.randomUUID().toString.take(8)
+  override def encoder(out: graft.ros.ContainerSink.TaskFiles)
+      : graft.ros.ContainerSink.Encoder = new graft.ros.ContainerSink.Encoder {
+    // built on local scratch (header back-patch needs a seekable file)
+    private val local = java.io.File.createTempFile("graft_bag_sink_", ".bag")
+    private val writer = new BagStreamingWriter(local, compression, chunkBytes,
+      defs, defsFileFirst)
 
-  private val preExisting: Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(RosbagIO.hadoopConf())
-    if (truncateFirst && fs.exists(p))
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".bag"))
-        .map(_.getPath.toString)
-    else {
-      if (!fs.exists(p)) { fs.mkdirs(p); () }
-      Seq.empty
+    override def write(row: InternalRow): Unit =
+      writer.write(
+        topic = row.getUTF8String(topic).toString,
+        datatype = row.getUTF8String(datatype).toString,
+        timeSec = row.getInt(timeSec),
+        timeNsec = row.getInt(timeNsec),
+        sourcePath = if (filePath < 0 || row.isNullAt(filePath)) ""
+          else row.getUTF8String(filePath).toString,
+        data = row.getBinary(data))
+
+    override def finish(): AnyRef = {
+      writer.finish()
+      val dst = out.create("", ".bag")
+      val in = new java.io.FileInputStream(local)
+      try {
+        val buf = new Array[Byte](1 << 16)
+        var n = in.read(buf)
+        while (n >= 0) { dst.write(buf, 0, n); n = in.read(buf) }
+      } finally in.close()
+      local.delete()
+      null
     }
-  }
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    BagWriterFactory(dir, jobId, ords, compression, chunkBytes, defs,
-      defsFileFirst)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(RosbagIO.hadoopConf())
-    preExisting.foreach { f =>
-      require(fs.delete(new Path(f), false), s"rosbag overwrite: delete failed for $f")
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(RosbagIO.hadoopConf())
-    messages.foreach {
-      case c: BagFileCommit if c.path != null =>
-        fs.delete(new Path(c.path), false); ()
-      case _ => ()
-    }
+    override def abort(): Unit = { writer.closeQuietly(); local.delete(); () }
   }
 }
 
-private[bag] final case class BagWriterFactory(dir: String, jobId: String,
-    ords: BagWriteOrdinals, compression: String, chunkBytes: Int,
-    defs: Map[String, (String, String)],
-    defsFileFirst: Boolean = false) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new BagDataWriter(dir, f"part-$partitionId%05d-$taskId-$jobId", ords,
-      compression, chunkBytes, defs, partitionId,
-      defsFileFirst = defsFileFirst)
-}
-
-/** One task's bag: `<stem>.bag`. Batch stems carry (partition, task,
-  * job) and never collide; streaming stems carry (partition, query,
-  * epoch) deliberately — an epoch replay replaces its previous
-  * attempt's file on the task commit's delete+rename.
-  */
-class BagDataWriter(dir: String, stem: String,
-    ords: BagWriteOrdinals, compression: String, chunkBytes: Int,
-    defs: Map[String, (String, String)], partitionId: Int,
-    attemptTag: String = "", defsFileFirst: Boolean = false)
-    extends DataWriter[InternalRow] {
-
-  private val fs = new Path(dir).getFileSystem(RosbagIO.hadoopConf())
-  private val finalPath = new Path(dir, s"$stem.bag")
-  // the tmp name carries the attempt tag: two live attempts of the
-  // same (partition, epoch) — speculation, a zombie executor — must
-  // never interleave writes into one in-progress file
-  private val tmpPath = new Path(dir, s".$stem$attemptTag.bag.inprogress")
-
-  // built on local scratch (header back-patch needs a seekable file),
-  // uploaded on commit; lazy so an empty partition leaves no file
-  private var local: java.io.File = null
-  private var writer: BagStreamingWriter = null
-
-  private def nonNull(row: InternalRow, ord: Int, name: String): Unit =
-    require(!row.isNullAt(ord), s"rosbag write: null '$name' " +
-      s"(partition $partitionId); filter or default nulls before writing")
-
-  override def write(row: InternalRow): Unit = {
-    if (writer == null) {
-      local = java.io.File.createTempFile("graft_bag_sink_", ".bag")
-      writer = new BagStreamingWriter(local, compression, chunkBytes, defs,
-        defsFileFirst)
-    }
-    nonNull(row, ords.topic, "topic")
-    nonNull(row, ords.datatype, "datatype")
-    nonNull(row, ords.timeSec, "time_sec")
-    nonNull(row, ords.timeNsec, "time_nsec")
-    nonNull(row, ords.data, "data")
-    writer.write(
-      topic = row.getUTF8String(ords.topic).toString,
-      datatype = row.getUTF8String(ords.datatype).toString,
-      timeSec = row.getInt(ords.timeSec),
-      timeNsec = row.getInt(ords.timeNsec),
-      sourcePath = if (ords.filePath < 0 || row.isNullAt(ords.filePath)) ""
-        else row.getUTF8String(ords.filePath).toString,
-      data = row.getBinary(ords.data))
+object BagSink {
+  /** datatype -> (md5sum, message_definition) harvested from ANY
+    * container path: bag connection records verbatim (md5sum
+    * included), plus mcap Schemas already carrying "ros1msg" encoding
+    * (a bag→mcap convert's schemas — md5 exports as "*", rosbag
+    * tooling's own unknown marker). The scans are strict: the user
+    * NAMED this path as the definitions source — an unreadable file
+    * must fail the write loudly, not silently export every connection
+    * with md5 "*". A ros2msg/ros2idl/protobuf definition is a genuine
+    * cross-dialect type translation: `foreign` = "error" (the default
+    * for an explicitly named path) fails loudly; "skip"
+    * ([[graft.ros.Convert]]'s best-effort auto-wire) carries the ros1
+    * subset.
+    */
+  private def harvestConnDefs(path: String,
+      foreign: String = "error"): Map[String, (String, String)] = {
+    // dialect filter BEFORE dedupe (a same-named ros2 definition must
+    // not shadow the ros1 one); dedupe itself prefers a genuine
+    // md5sum over an mcap-carried "*"
+    val (ok0, bad) = graft.ros.DefsHarvest.fromPath(path)
+      .partition(_.encoding == "ros1msg")
+    val ok = graft.ros.DefsHarvest.dedupe(ok0)
+    if (bad.nonEmpty && foreign != "skip") throw new IllegalArgumentException(
+      "rosbag write: conn_defs_from harvested non-ros1 definitions (" +
+        bad.map(d => s"${d.name}: ${d.encoding}").distinct.take(5).mkString(", ") +
+        ") — a bag connection record carries ros1msg text, and translating " +
+        "ros2msg/ros2idl/protobuf definitions is a cross-dialect type " +
+        "translation; set foreign_defs=skip to carry the ros1 subset")
+    ok.map { d =>
+      val text = new String(d.data, java.nio.charset.StandardCharsets.UTF_8)
+      // a definition harvested from an mcap Schema record carries no
+      // checksum ("*") — COMPUTE the genuine genmsg md5 from the text
+      // so a bag→mcap→bag round trip yields connections real rosbag
+      // tooling validates (an unparseable definition keeps "*": the
+      // bytes still carry, the checksum stays honestly unknown)
+      val md5 =
+        if (d.md5sum != "*") d.md5sum
+        else try graft.ros.RosMd5.compute(d.name, text)
+        catch { case _: Exception => "*" }
+      d.name -> (md5, text)
+    }.toMap
   }
 
-  override def commit(): WriterCommitMessage = {
-    if (writer == null) return BagFileCommit(null, 0L, 0L)
-    writer.finish()
-    var uploaded = 0L
-    val in = new java.io.FileInputStream(local)
-    val out = fs.create(tmpPath, true)
-    try {
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); uploaded += n; n = in.read(buf) }
-    } finally {
-      // independent closes: a throwing in.close() must not leak the
-      // remote stream (an unclosed object-store stream can leave a
-      // pending multipart upload)
-      try in.close() finally out.close()
-    }
-    local.delete()
-    // streaming epoch replays re-commit the same deterministic name —
-    // replace the previous attempt's file
-    if (fs.exists(finalPath)) fs.delete(finalPath, false)
-    require(fs.rename(tmpPath, finalPath),
-      s"rosbag write: rename $tmpPath -> $finalPath failed")
-    BagFileCommit(finalPath.toString, writer.rowCount, uploaded)
-  }
-
-  override def abort(): Unit = {
-    if (writer != null) writer.closeQuietly()
-    if (local != null) { local.delete(); () }
-    fs.delete(tmpPath, false)
-    ()
-  }
-
-  override def close(): Unit = ()
+  def apply(w: graft.ros.ContainerSink.Request): BagSink =
+    new BagSink(
+      topic = w.need("topic", StringType),
+      datatype = w.need("datatype", StringType),
+      timeSec = w.need("time_sec", IntegerType),
+      timeNsec = w.need("time_nsec", IntegerType),
+      data = w.need("data", BinaryType),
+      // OPTIONAL source-file column: feeds the writer's late-binding
+      // defs resolution (SourceDefs.ros1ConnFor)
+      filePath = w.opt("bag_path", StringType),
+      compression = w.option("compression").getOrElse("lz4"),
+      chunkBytes = w.option("chunk_bytes").map(_.toInt).getOrElse(768 * 1024),
+      // inline entries (graft.ros.Transcode's ros1 renderings, genuine
+      // genmsg md5s included) win over the path harvest: they exist in
+      // no source container
+      defs = w.option("conn_defs_from")
+        .map(harvestConnDefs(_, w.option("foreign_defs").getOrElse("error")))
+        .getOrElse(Map.empty) ++
+        w.option("conn_defs_inline").toSeq
+          .flatMap(graft.ros.DefsHarvest.decodeInline)
+          .filter(_.encoding == "ros1msg")
+          .map(d => d.name -> (d.md5sum,
+            new String(d.data, java.nio.charset.StandardCharsets.UTF_8))),
+      defsFileFirst = graft.ros.DefsHarvest.fileFirst(w.option("defs_priority")))
 }
 
 /** Conform an arbitrary frame to the rosbag write spine: only `topic`,

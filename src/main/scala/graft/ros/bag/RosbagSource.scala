@@ -176,6 +176,7 @@ class RosbagTable(path: String, datatype: Option[String] = None,
                   includeRaw: Boolean = false, md5: Option[String] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
+    with graft.ros.ContainerSink.LandedMetrics
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   // typed reads resolve (datatype, md5 variant) -> one msg def + the
   // bags that carry it, ONCE per table (multi-bag loads with schema
@@ -205,7 +206,7 @@ class RosbagTable(path: String, datatype: Option[String] = None,
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(datatype.isEmpty,
       "rosbag write goes through the spine shape — drop the datatype read option")
-    new BagWriteBuilder(path, info)
+    graft.ros.ContainerSink.builder(path, info, this, "rosbag", "BagExport.prepare")(BagSink(_))
   }
 }
 

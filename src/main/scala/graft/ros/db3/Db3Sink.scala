@@ -1,8 +1,7 @@
 package graft.ros.db3
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 /** rosbag2 `.db3` export sink — the write half of the `db3`
@@ -17,10 +16,10 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
   * (default 64 MiB of payload), then one `part-<p>-<t>-<job>-<n>.db3`
   * is built and uploaded. Task memory is O(one rolled file's rows),
   * set by the options, independent of partition size — the same split
-  * behavior rosbag2's own recorder uses (`--max-bag-size`). Dotted
-  * in-progress names rename on task commit; job abort deletes
-  * committed files; overwrite replaces the previous `*.db3`
-  * generation only after every task committed.
+  * behavior rosbag2's own recorder uses (`--max-bag-size`). The file
+  * protocol is [[graft.ros.ContainerSink]]'s; on top of it every job
+  * and epoch commit merges `metadata.yaml` ([[Db3BagMetadata]]), and a
+  * streaming abort keeps an epoch that metadata already counts.
   *
   * Column contract (spine names): `topic`, `type`,
   * `serialization_format`, `timestamp`, `data` drive the output;
@@ -31,7 +30,199 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
   * readers can decode the export; [[Db3Export.prepare]] conforms
   * arbitrary frames.
   */
-object Db3SinkWrite {
+final class Db3Sink private (topic: Int, tpe: Int, fmt: Int, timestamp: Int,
+    data: Int, filePath: Int, rowsPerFile: Int, fileBytes: Long,
+    defs: Map[String, (String, String)], private val compression: String)
+    extends graft.ros.ContainerSink.Format {
+  override def suffixes: Seq[String] = Seq(".db3", ".db3.zstd")
+
+  override def commitHook(fs: FileSystem, dir: String, stats: Seq[AnyRef],
+      truncate: Boolean, epoch: Option[(String, Long)]): Unit =
+    Db3BagMetadata.mergeMetadata(fs, dir,
+      stats.collect { case t: Db3BagMetadata.TaskStats => t }, truncate, epoch,
+      compression)
+
+  // a replay of an already-MERGED epoch re-commits the same names over
+  // identical bytes; aborting such a replay must not delete them
+  override def epochCommitted(fs: FileSystem, dir: String, qid: String,
+      epoch: Long): Boolean =
+    Db3BagMetadata.ledger(fs, dir).get(qid).exists(_ >= epoch)
+
+  /** One task's rolled files: `<stem>-<n>.db3`. */
+  override def encoder(out: graft.ros.ContainerSink.TaskFiles)
+      : graft.ros.ContainerSink.Encoder = new graft.ros.ContainerSink.Encoder {
+    // current batch: (topic, type, fmt, timestamp, data); flushed to one
+    // rolled .db3 when either budget trips
+    private val batch =
+      scala.collection.mutable.ArrayBuffer[(String, String, String, Long, Array[Byte])]()
+    private var batchBytes = 0L
+    private var fileSeq = 0
+    // metadata.yaml inputs, carried on the commit message: per-topic
+    // counts (tiny dimension) + the task's time range.
+    // typeSrc keeps a SMALL SET of source files per type (not just the
+    // first): a mixed stream can route a type's first row through a file
+    // that does NOT define it (the definition lives in a sibling
+    // container of the same type) — the flush-time lookup tries each
+    // observed file until one resolves
+    private val typeSrc =
+      scala.collection.mutable.HashMap[String, scala.collection.mutable.LinkedHashSet[String]]()
+    private val TypeSrcMax = 8
+    // divergence diagnostic: type -> source files that define it with
+    // SEVERAL distinct layouts (per-row attribution impossible, so the
+    // defs table honestly omits the row) — surfaced via _divergent.json
+    // at commit so a reader of undecodable rows has a pointer
+    private val divergentSrc =
+      scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
+    private val topicStats =
+      scala.collection.mutable.LinkedHashMap[(String, String, String), Long]()
+    private var tsMin = Long.MaxValue
+    private var tsMax = Long.MinValue
+    override def write(row: InternalRow): Unit = {
+      val payload = row.getBinary(data)
+      val key = (row.getUTF8String(topic).toString,
+        if (row.isNullAt(tpe)) "" else row.getUTF8String(tpe).toString,
+        if (row.isNullAt(fmt)) "cdr" else row.getUTF8String(fmt).toString)
+      // remember up to TypeSrcMax source files per type for the
+      // late-binding defs lookup at flush (a type missing from the
+      // plan-time channel — first landed mid-stream — still exports with
+      // its definition, even when the first row's file doesn't carry it)
+      if (key._2.nonEmpty && !defs.contains(key._2) && filePath >= 0 &&
+          !row.isNullAt(filePath)) {
+        val f = row.getUTF8String(filePath).toString
+        if (f.nonEmpty) {
+          val set = typeSrc.getOrElseUpdate(key._2,
+            scala.collection.mutable.LinkedHashSet[String]())
+          if (set.size < TypeSrcMax) { set += f; () }
+        }
+      }
+      val ts = row.getLong(timestamp)
+      batch += ((key._1, key._2, key._3, ts, payload))
+      batchBytes += payload.length
+      topicStats(key) = topicStats.getOrElse(key, 0L) + 1L
+      if (ts < tsMin) tsMin = ts
+      if (ts > tsMax) tsMax = ts
+      if (batch.size >= rowsPerFile || batchBytes >= fileBytes) flushFile()
+    }
+
+    private def flushFile(): Unit = {
+      if (batch.isEmpty) return
+      // topic ids 1..n in order of appearance within this file
+      val topicIds = scala.collection.mutable.LinkedHashMap[(String, String, String), Long]()
+      batch.foreach { case (t, tp, f, _, _) =>
+        topicIds.getOrElseUpdate((t, tp, f), topicIds.size + 1L); ()
+      }
+      val topicRows = topicIds.keys.map { case (t, tp, f) =>
+        Seq[Any](null, t, tp, f, "")
+      }.toSeq
+      val msgRows = batch.map { case (t, tp, f, ts, d) =>
+        // message mode: each payload its own zstd frame (rosbag2
+        // --compression-mode message); the reader sniffs per-message
+        val payload =
+          if (compression == "zstd_message") com.github.luben.zstd.Zstd.compress(d)
+          else d
+        Seq[Any](null, topicIds((t, tp, f)), ts, payload)
+      }.toSeq
+      val defRows = topicIds.keys.map(_._2).toSeq.distinct
+        .flatMap { tp =>
+          val files = typeSrc.getOrElse(tp, Nil)
+          val resolved = defs.get(tp).orElse(files.iterator
+            .map(graft.ros.SourceDefs.ros2DefFor(_, tp))
+            .collectFirst { case Some(v) => v })
+          if (resolved.isEmpty) {
+            // unresolvable: if any observed file defines the type
+            // DIVERGENTLY, record it for the _divergent.json diagnostic
+            // (the defs row is honestly omitted either way)
+            val div = files.iterator
+              .filter(graft.ros.SourceDefs.ros2DefDivergent(_, tp)).toSeq
+            if (div.nonEmpty)
+              divergentSrc(tp) = (divergentSrc.getOrElse(tp, Seq.empty) ++ div).distinct
+          }
+          resolved.map { case (enc, text) => Seq[Any](null, tp, enc, text, "") }
+        }
+      val tables = Seq(
+        ("topics",
+          "CREATE TABLE topics(id INTEGER PRIMARY KEY, name TEXT, type TEXT, serialization_format TEXT, offered_qos_profiles TEXT)",
+          topicRows),
+        ("messages",
+          "CREATE TABLE messages(id INTEGER PRIMARY KEY, topic_id INTEGER, timestamp INTEGER, data BLOB)",
+          msgRows)) ++
+        (if (defRows.nonEmpty) Seq(("message_definitions",
+          "CREATE TABLE message_definitions(id INTEGER PRIMARY KEY, topic_type TEXT, encoding TEXT, encoded_message_definition TEXT, type_hash TEXT)",
+          defRows)) else Seq.empty)
+      val raw = SqliteFormat.writeDb(tables)
+      // file mode: the whole database as one zstd frame, rosbag2's
+      // <name>.db3.zstd convention — the read side inflates it once per
+      // plan and pages the inflation
+      val (bytes, ext) =
+        if (compression == "zstd_file")
+          (com.github.luben.zstd.Zstd.compress(raw), ".db3.zstd")
+        else (raw, ".db3")
+      val file = out.create(f"-$fileSeq%04d", ext)
+      try file.write(bytes) finally file.close()
+      fileSeq += 1
+      batch.clear()
+      batchBytes = 0L
+    }
+
+    override def finish(): AnyRef = {
+      flushFile()
+      Db3BagMetadata.TaskStats(
+        Db3BagMetadata.Stats(topicStats.toMap, tsMin, tsMax), divergentSrc.toSeq)
+    }
+  }
+}
+
+object Db3Sink {
+  def apply(w: graft.ros.ContainerSink.Request): Db3Sink = {
+    val sink = new Db3Sink(
+      topic = w.need("topic", StringType),
+      tpe = w.need("type", StringType, nullable = true),
+      fmt = w.need("serialization_format", StringType, nullable = true),
+      timestamp = w.need("timestamp", LongType),
+      data = w.need("data", BinaryType),
+      // OPTIONAL source-file column: feeds the late-binding defs
+      // lookup (SourceDefs.ros2DefFor)
+      filePath = w.opt("file_path", StringType),
+      rowsPerFile = w.option("rows_per_file").map(_.toInt).getOrElse(100000),
+      fileBytes = w.option("file_bytes").map(_.toLong).getOrElse(64L * 1024 * 1024),
+      // inline entries (graft.ros.Transcode's translations — ros2msg by
+      // construction) win over the path harvest: they exist in no
+      // source container
+      defs = w.option("schema_defs_from")
+        .map(harvestDefs(_, w.option("foreign_defs").getOrElse("error")))
+        .getOrElse(Map.empty) ++
+        w.option("schema_defs_inline").toSeq
+          .flatMap(graft.ros.DefsHarvest.decodeInline)
+          .filter(d => graft.ros.DefsHarvest.isRos2(d.encoding))
+          .map(d => d.name -> (d.encoding,
+            new String(d.data, java.nio.charset.StandardCharsets.UTF_8))),
+      compression = compressionOf(w.option("compression_format"),
+        w.option("compression_mode")))
+    // the append-mismatch guard, before any task runs
+    Db3BagMetadata.preflightCompression(
+      new Path(w.dir).getFileSystem(Db3IO.hadoopConf()), w.dir, w.truncate,
+      sink.compression)
+    sink
+  }
+
+  /** rosbag2's own compression axes (--compression-format zstd,
+    * --compression-mode file|message); the read side already inflates
+    * both modes transparently.
+    */
+  private def compressionOf(format: Option[String], mode: Option[String]): String =
+    (format.getOrElse("none"), mode) match {
+      case ("none", Some(m)) => throw new IllegalArgumentException(
+        s"db3 write: compression_mode '$m' without compression_format " +
+          "(rosbag2 rejects mode-without-format too; the write would " +
+          "silently be uncompressed)")
+      case ("none", None) => "none"
+      case ("zstd", None | Some("file")) => "zstd_file"
+      case ("zstd", Some("message")) => "zstd_message"
+      case (f0, m0) => throw new IllegalArgumentException(
+        s"db3 write: unsupported compression_format '$f0' / compression_mode " +
+          s"'${m0.getOrElse("")}' (supported: none; zstd with file|message)")
+    }
+
   /** topic_type -> (encoding, definition text) harvested from ANY
     * container path (db3 message_definitions rows verbatim; mcap
     * Schema records of ros2msg/ros2idl encoding), driver-side on the
@@ -43,7 +234,7 @@ object Db3SinkWrite {
     * [[graft.ros.Convert]]'s best-effort auto-wire passes) carries
     * the ros2 subset and drops the rest.
     */
-  private[db3] def harvestDefs(path: String,
+  private def harvestDefs(path: String,
       foreign: String = "error"): Map[String, (String, String)] = {
     // dialect filter BEFORE dedupe: a same-named foreign definition
     // must not shadow the representable ros2 one
@@ -63,192 +254,27 @@ object Db3SinkWrite {
   }
 }
 
-class Db3WriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuilder
-    with SupportsTruncate {
-  private var truncateFirst = false
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
-  override def build(): Write = {
-    val schema = info.schema()
-    def need(name: String, dt: org.apache.spark.sql.types.DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      require(i >= 0, s"db3 write needs a '$name' column " +
-        "(Db3Export.prepare conforms arbitrary frames)")
-      require(schema.fields(i).dataType == dt,
-        s"db3 write column '$name' must be $dt, got ${schema.fields(i).dataType}")
-      i
-    }
-    // OPTIONAL source-file column: feeds the late-binding defs
-    // lookup (SourceDefs.ros2DefFor) — absent or empty is fine
-    def opt(name: String, dt: org.apache.spark.sql.types.DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      if (i >= 0 && schema.fields(i).dataType == dt) i else -1
-    }
-    val ords = Db3WriteOrdinals(
-      topic = need("topic", StringType),
-      tpe = need("type", StringType),
-      fmt = need("serialization_format", StringType),
-      timestamp = need("timestamp", LongType),
-      data = need("data", BinaryType),
-      filePath = opt("file_path", StringType))
-    val opts = info.options()
-    val rowsPerFile = Option(opts.get("rows_per_file")).map(_.toInt)
-      .getOrElse(100000)
-    val fileBytes = Option(opts.get("file_bytes")).map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
-    // inline entries (graft.ros.Transcode's translations — ros2msg by
-    // construction) win over the path harvest: they exist in no
-    // source container
-    val inlineDefs = Option(opts.get("schema_defs_inline")).toSeq
-      .flatMap(graft.ros.DefsHarvest.decodeInline)
-      .filter(d => graft.ros.DefsHarvest.isRos2(d.encoding))
-      .map(d => d.name -> (d.encoding,
-        new String(d.data, java.nio.charset.StandardCharsets.UTF_8)))
-      .toMap
-    val defs = Option(opts.get("schema_defs_from"))
-      .map(Db3SinkWrite.harvestDefs(_,
-        Option(opts.get("foreign_defs")).getOrElse("error")))
-      .getOrElse(Map.empty) ++ inlineDefs
-    // rosbag2's own compression axes (--compression-format zstd,
-    // --compression-mode file|message); the read side already inflates
-    // both modes transparently
-    val cfmtOpt = Option(opts.get("compression_format"))
-    val cmodeOpt = Option(opts.get("compression_mode"))
-    val compression = (cfmtOpt.getOrElse("none"), cmodeOpt) match {
-      case ("none", Some(m)) => throw new IllegalArgumentException(
-        s"db3 write: compression_mode '$m' without compression_format " +
-          "(rosbag2 rejects mode-without-format too; the write would " +
-          "silently be uncompressed)")
-      case ("none", None) => "none"
-      case ("zstd", None | Some("file")) => "zstd_file"
-      case ("zstd", Some("message")) => "zstd_message"
-      case (f0, m0) => throw new IllegalArgumentException(
-        s"db3 write: unsupported compression_format '$f0' / compression_mode " +
-          s"'${m0.getOrElse("")}' (supported: none; zstd with file|message)")
-    }
-    new Db3WriteImpl(path, ords, rowsPerFile, fileBytes, defs, truncateFirst,
-      info.queryId(), compression)
-  }
-}
-
-private[db3] final case class Db3WriteOrdinals(topic: Int, tpe: Int, fmt: Int,
-    timestamp: Int, data: Int, filePath: Int = -1)
-
-class Db3WriteImpl(path: String, ords: Db3WriteOrdinals, rowsPerFile: Int,
-    fileBytes: Long, defs: Map[String, (String, String)],
-    truncateFirst: Boolean, queryId: String,
-    compression: String = "none") extends Write {
-  override def toBatch: BatchWrite =
-    new Db3BatchWrite(path, ords, rowsPerFile, fileBytes, defs, truncateFirst,
-      compression)
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    require(!truncateFirst,
-      "db3 streaming write supports the Append output mode only " +
-        "(a container directory cannot be truncated per epoch)")
-    new Db3StreamingSinkWrite(path, ords, rowsPerFile, fileBytes, defs, queryId,
-      compression)
-  }
-}
-
-/** Streaming half of the db3 sink: deterministic
-  * `part-<p>-q<queryId8>-e<epoch>-<n>.db3` names (an epoch replay
-  * replaces its previous attempt's files), and metadata.yaml is
-  * re-rendered on every EPOCH commit with a `# graft_epochs` ledger —
-  * an epoch whose stats were already merged (sink committed, but the
-  * checkpoint's commit-log write crashed before recording it) is
-  * skipped, so counts stay exact across replays.
-  */
-class Db3StreamingSinkWrite(dir: String, ords: Db3WriteOrdinals,
-    rowsPerFile: Int, fileBytes: Long, defs: Map[String, (String, String)],
-    queryId: String, compression: String = "none")
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  locally {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(Db3IO.hadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p); () }
-    Db3BatchWrite.preflightCompression(fs, dir, truncate = false, compression)
-  }
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    Db3StreamWriterFactory(dir, queryId.take(8), ords, rowsPerFile,
-      fileBytes, defs, compression)
-  private val qid = queryId.take(8)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(Db3IO.hadoopConf())
-    val commits = messages.collect { case c: Db3FilesCommit => c }
-    // reconcile: a replay that rolled FEWER files (or ran with fewer
-    // partitions) than the crashed attempt must not leave the extras
-    // behind as duplicates — delete this (query, epoch)'s files that
-    // this commit did not produce. Runs BEFORE the ledger skip so a
-    // replayed already-merged epoch still reconciles.
-    graft.ros.ContainerStreamReconcile.sweep(fs, dir,
-      // \d{5,} / \d{4,}: the %05d partition and %04d rolled-file stems
-      // WIDEN past their field widths (>=100k partitions, >=10k rolled
-      // files) — fixed counts would leave those files invisible to the
-      // sweep, silently keeping duplicates after a shrunken replay
-      ("part-\\d{5,}-q" + java.util.regex.Pattern.quote(qid) +
-        "-e" + epochId + "-\\d{4,}\\.db3(\\.zstd)?").r,
-      commits.flatMap(_.paths).map(p => new Path(p).getName).toSet)
-    Db3BatchWrite.mergeMetadata(fs, dir, commits, truncate = false,
-      epoch = Some((qid, epochId)), compression = compression)
-    graft.ros.SinkEpochMetrics.record(qid, epochId,
-      commits.map(_.rows).sum, commits.map(_.paths.size.toLong).sum,
-      commits.map(_.bytes).sum)
-  }
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(Db3IO.hadoopConf())
-    // a replay of an already-MERGED epoch re-commits the same names
-    // over identical bytes — aborting such a replay must not delete
-    // them (they are the committed epoch's current data)
-    val merged = {
-      val metaPath = new Path(dir, "metadata.yaml")
-      fs.exists(metaPath) && {
-        val in = fs.open(metaPath)
-        val text =
-          try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-            java.nio.charset.StandardCharsets.UTF_8)
-          finally in.close()
-        scala.util.Try(Db3BagMetadata.parseWithEpochs(text)._3)
-          .getOrElse(Map.empty[String, Long])
-          .get(queryId.take(8)).exists(_ >= epochId)
-      }
-    }
-    if (!merged) messages.foreach {
-      case c: Db3FilesCommit => c.paths.foreach(p => fs.delete(new Path(p), false))
-      case _ => ()
-    }
-  }
-}
-
-private[db3] final case class Db3StreamWriterFactory(dir: String, qid: String,
-    ords: Db3WriteOrdinals, rowsPerFile: Int, fileBytes: Long,
-    defs: Map[String, (String, String)], compression: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new Db3DataWriter(dir, f"part-$partitionId%05d-q$qid-e$epochId", ords,
-      rowsPerFile, fileBytes, defs, partitionId, attemptTag = s"-t$taskId",
-      compression = compression)
-}
-
-private[db3] final case class Db3FilesCommit(paths: Seq[String], rows: Long,
-    topicCounts: Seq[((String, String, String), Long)],
-    minTs: Long, maxTs: Long, bytes: Long = 0L,
-    divergent: Seq[(String, Seq[String])] = Seq.empty)
-  extends WriterCommitMessage
-
 /** The bag-directory `metadata.yaml` rosbag2 tooling locates storage
   * files through — without it `ros2 bag info` / `ros2 bag play
-  * <exportDir>` cannot consume the export at all. Written on JOB
-  * commit from the tasks' commit-message stats (per-topic counts, time
+  * <exportDir>` cannot consume the export at all. Written on JOB (and
+  * epoch) commit from the tasks' [[TaskStats]] (per-topic counts, time
   * range — no file re-scan); an append job merges with the previous
   * graft-written metadata.yaml so successive appends stay accurate
   * (overwrite resets). Foreign `.db3` files placed in the directory
   * outside this sink are not reflected.
   */
-private[db3] object Db3BagMetadata {
+private[ros] object Db3BagMetadata {
+  private val logger = org.slf4j.LoggerFactory.getLogger(Db3BagMetadata.getClass)
+
   final case class Stats(counts: Map[(String, String, String), Long],
       minTs: Long, maxTs: Long)
   val Empty: Stats = Stats(Map.empty, Long.MaxValue, Long.MinValue)
+
+  /** One task's contribution: its stats and the types it found defined
+    * divergently (type -> source files).
+    */
+  final case class TaskStats(stats: Stats,
+      divergent: Seq[(String, Seq[String])] = Seq.empty)
 
   def merge(a: Stats, b: Stats): Stats = Stats(
     (a.counts.keySet ++ b.counts.keySet).map { k =>
@@ -392,10 +418,6 @@ private[db3] object Db3BagMetadata {
       .getOrElse(Map.empty[String, Long])
     (paths, st, ledger)
   }
-}
-
-object Db3BatchWrite {
-  private val logger = org.slf4j.LoggerFactory.getLogger(Db3BatchWrite.getClass)
 
   /** Surface DIVERGENT definitions loudly: a db3 message_definitions
     * table holds one row per type, so a type whose source files define
@@ -415,11 +437,7 @@ object Db3BatchWrite {
     val prev: Map[String, Seq[String]] =
       if (truncate || !fs.exists(p)) Map.empty
       else try {
-        val in = fs.open(p)
-        val text = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        val node = mapper.readTree(text)
+        val node = mapper.readTree(readText(fs, p))
         val it = node.properties().iterator()
         val b = Map.newBuilder[String, Seq[String]]
         while (it.hasNext) {
@@ -462,6 +480,23 @@ object Db3BatchWrite {
     finally in.close()
   }
 
+  /** The directory's committed metadata: `metadata.yaml`, or its
+    * `.next` sidecar when a crash landed between "delete metadata.yaml"
+    * and "rename .next into place" (`.next` IS the complete committed
+    * state then).
+    */
+  private def committedText(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Option[String] =
+    Seq(new Path(dir, "metadata.yaml"), new Path(dir, ".metadata.yaml.next"))
+      .find(fs.exists).map(readText(fs, _))
+
+  /** The streaming epoch ledger: per query, the max merged epoch. */
+  private[db3] def ledger(fs: org.apache.hadoop.fs.FileSystem,
+      dir: String): Map[String, Long] =
+    committedText(fs, dir)
+      .flatMap(t => scala.util.Try(parseWithEpochs(t)._3).toOption)
+      .getOrElse(Map.empty)
+
   /** The compression options a COMPACT rewrite must inherit from the
     * archive's own metadata.yaml — a zstd archive must not silently
     * decompress just because the caller didn't repeat the setting. A
@@ -474,7 +509,7 @@ object Db3BatchWrite {
       return Map.empty
     val metaPath = new Path(dir, "metadata.yaml")
     if (!fs.exists(metaPath)) return Map.empty
-    Db3BagMetadata.compressionOf(readText(fs, metaPath)) match {
+    compressionOf(readText(fs, metaPath)) match {
       case ("zstd", "FILE") =>
         Map("compression_format" -> "zstd", "compression_mode" -> "file")
       case ("zstd", "MESSAGE") =>
@@ -497,20 +532,13 @@ object Db3BatchWrite {
     require(fs.exists(stagedPath),
       s"compact: the db3 stage write left no metadata.yaml under $stageDir")
     val stagedText = readText(fs, stagedPath)
-    val (_, stats, _) = Db3BagMetadata.parseWithEpochs(stagedText)
-    val compression = Db3BagMetadata.compressionOf(stagedText) match {
+    val (_, stats, _) = parseWithEpochs(stagedText)
+    val compression = compressionOf(stagedText) match {
       case ("zstd", "FILE") => "zstd_file"
       case ("zstd", "MESSAGE") => "zstd_message"
       case _ => "none"
     }
-    val livePath = new Path(dir, "metadata.yaml")
-    val ledger =
-      if (fs.exists(livePath))
-        scala.util.Try(
-          Db3BagMetadata.parseWithEpochs(readText(fs, livePath))._3)
-          .getOrElse(Map.empty[String, Long])
-      else Map.empty[String, Long]
-    val yaml = Db3BagMetadata.render(finalNames, stats, ledger, compression)
+    val yaml = render(finalNames, stats, ledger(fs, dir), compression)
     val out = fs.create(stagedPath, true)
     try out.write(yaml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -523,8 +551,8 @@ object Db3BatchWrite {
     */
   private[db3] def requireCompatibleCompression(prevYaml: String,
       compression: String, prevHasFiles: Boolean): Unit = {
-    val jobComp = Db3BagMetadata.yamlComp(compression)
-    val prevComp = Db3BagMetadata.compressionOf(prevYaml)
+    val jobComp = yamlComp(compression)
+    val prevComp = compressionOf(prevYaml)
     require(!prevHasFiles || prevComp == jobComp,
       s"db3 write: directory already holds a generation with " +
         s"compression_format='${prevComp._1}' mode='${prevComp._2}', this " +
@@ -537,21 +565,14 @@ object Db3BatchWrite {
     */
   private[db3] def preflightCompression(fs: org.apache.hadoop.fs.FileSystem,
       dir: String, truncate: Boolean, compression: String): Unit = {
-    if (truncate) return
-    val metaPath = new Path(dir, "metadata.yaml")
-    if (!fs.exists(metaPath)) return
-    val in = fs.open(metaPath)
-    val text =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    val hasFiles = scala.util.Try(Db3BagMetadata.parse(text)._1.nonEmpty)
-      .getOrElse(false)
-    requireCompatibleCompression(text, compression, hasFiles)
+    if (!truncate) committedText(fs, dir).foreach { text =>
+      val hasFiles = scala.util.Try(parse(text)._1.nonEmpty).getOrElse(false)
+      requireCompatibleCompression(text, compression, hasFiles)
+    }
   }
 
   /** metadata.yaml — the handle rosbag2 tooling opens the directory
-    * through; stats come from the tasks' commit-message stats (no file
+    * through; stats come from the tasks' [[TaskStats]] (no file
     * re-scan), merged with the previous graft-written metadata on
     * append (`truncate` resets); `relative_file_paths` is re-derived
     * from the ACTUAL directory listing every commit (self-healing
@@ -560,55 +581,37 @@ object Db3BatchWrite {
     * a replay of a committed epoch — its stats are already counted,
     * skip the merge. The yaml publishes via a `.next` sidecar +
     * delete/rename, so a crash mid-rewrite never leaves a truncated
-    * file (the read path recovers from `.next` when the rename itself
-    * was the casualty). Concurrency contract: one metadata-writing JOB
+    * file ([[committedText]] recovers from `.next` when the rename
+    * itself was the casualty). Concurrency contract: one metadata-writing JOB
     * per directory at a time (data files tolerate concurrent jobs via
     * unique names; the yaml read-modify-write does not).
     */
   private[db3] def mergeMetadata(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String, commits: Seq[Db3FilesCommit], truncate: Boolean,
+      dir: String, tasks: Seq[TaskStats], truncate: Boolean,
       epoch: Option[(String, Long)], compression: String = "none"): Unit = {
     val metaPath = new Path(dir, "metadata.yaml")
     val nextPath = new Path(dir, ".metadata.yaml.next")
-    def readText(p: Path): String = {
-      val in = fs.open(p)
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    }
-    val prevText: Option[String] =
-      if (truncate) None
-      else if (fs.exists(metaPath)) Some(readText(metaPath))
-      else if (fs.exists(nextPath))
-        // a crash landed between "delete metadata.yaml" and "rename
-        // .next into place": .next IS the complete committed state
-        Some(readText(nextPath))
-      else None
+    val prevText = if (truncate) None else committedText(fs, dir)
     val (prevPaths, prevStats, prevLedger) =
-      prevText.map(Db3BagMetadata.parseWithEpochs).getOrElse(
-        (Seq.empty[String], Db3BagMetadata.Empty, Map.empty[String, Long]))
+      prevText.map(parseWithEpochs).getOrElse(
+        (Seq.empty[String], Empty, Map.empty[String, Long]))
     // a rosbag2 bag dir has ONE compression (metadata v4 records a
     // single format/mode pair for every listed file) — an append with
     // a different setting would mislabel one generation or the other
     // for ros2 tooling; refuse loudly
     prevText.foreach(t =>
-      Db3BatchWrite.requireCompatibleCompression(t, compression,
-        prevPaths.nonEmpty))
+      requireCompatibleCompression(t, compression, prevPaths.nonEmpty))
     // divergence diagnostic BEFORE the epoch-ledger skip (a replayed
     // epoch's sidecar merge is idempotent, and the pointer must not be
     // lost to a crashed checkpoint commit)
-    writeDivergent(fs, dir, commits.flatMap(_.divergent), truncate)
+    writeDivergent(fs, dir, tasks.flatMap(_.divergent), truncate)
     if (epoch.exists { case (q, e) => prevLedger.get(q).exists(_ >= e) }) return
-    val jobStats = commits.foldLeft(Db3BagMetadata.Empty) { (acc, c) =>
-      Db3BagMetadata.merge(acc,
-        Db3BagMetadata.Stats(c.topicCounts.toMap, c.minTs, c.maxTs))
-    }
+    val jobStats = tasks.map(_.stats).foldLeft(Empty)(merge)
     val dirPaths = fs.listStatus(new Path(dir)).toSeq
       .filter(s => s.isFile && Db3IO.isDb3(s.getPath.getName))
       .map(_.getPath.getName)
     val ledger = epoch.fold(prevLedger) { case (q, e) => prevLedger + (q -> e) }
-    val yaml = Db3BagMetadata.render(dirPaths,
-      Db3BagMetadata.merge(prevStats, jobStats), ledger, compression)
+    val yaml = render(dirPaths, merge(prevStats, jobStats), ledger, compression)
     val out = fs.create(nextPath, true)
     try out.write(yaml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
@@ -616,234 +619,6 @@ object Db3BatchWrite {
     require(fs.rename(nextPath, metaPath),
       s"db3 write: metadata.yaml publish failed in $dir")
   }
-}
-
-class Db3BatchWrite(dir: String, ords: Db3WriteOrdinals, rowsPerFile: Int,
-    fileBytes: Long, defs: Map[String, (String, String)],
-    truncateFirst: Boolean, compression: String = "none") extends BatchWrite {
-
-  private val jobId = java.util.UUID.randomUUID().toString.take(8)
-
-  private val preExisting: Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(Db3IO.hadoopConf())
-    if (truncateFirst && fs.exists(p))
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && Db3IO.isDb3(s.getPath.getName))
-        .map(_.getPath.toString)
-    else {
-      if (!fs.exists(p)) { fs.mkdirs(p); () }
-      Seq.empty
-    }
-  }
-
-  locally {
-    Db3BatchWrite.preflightCompression(
-      new Path(dir).getFileSystem(Db3IO.hadoopConf()), dir, truncateFirst,
-      compression)
-  }
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    Db3WriterFactory(dir, jobId, ords, rowsPerFile, fileBytes, defs, compression)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(Db3IO.hadoopConf())
-    preExisting.foreach { f =>
-      require(fs.delete(new Path(f), false), s"db3 overwrite: delete failed for $f")
-    }
-    Db3BatchWrite.mergeMetadata(fs, dir,
-      messages.collect { case c: Db3FilesCommit => c }.toSeq,
-      truncate = truncateFirst, epoch = None, compression = compression)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(Db3IO.hadoopConf())
-    messages.foreach {
-      case c: Db3FilesCommit => c.paths.foreach(p => fs.delete(new Path(p), false))
-      case _ => ()
-    }
-  }
-}
-
-private[db3] final case class Db3WriterFactory(dir: String, jobId: String,
-    ords: Db3WriteOrdinals, rowsPerFile: Int, fileBytes: Long,
-    defs: Map[String, (String, String)], compression: String)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new Db3DataWriter(dir, f"part-$partitionId%05d-$taskId-$jobId", ords,
-      rowsPerFile, fileBytes, defs, partitionId, compression = compression)
-}
-
-/** One task's rolled files: `<stem>-<n>.db3`. Batch stems carry
-  * (partition, task, job) and never collide; streaming stems carry
-  * (partition, query, epoch) deliberately — an epoch replay replaces
-  * its previous attempt's files on the task commit's delete+rename.
-  */
-class Db3DataWriter(dir: String, stem: String,
-    ords: Db3WriteOrdinals, rowsPerFile: Int, fileBytes: Long,
-    defs: Map[String, (String, String)], partitionId: Int,
-    attemptTag: String = "", compression: String = "none")
-    extends DataWriter[InternalRow] {
-
-  private val fs = new Path(dir).getFileSystem(Db3IO.hadoopConf())
-
-  // current batch: (topic, type, fmt, timestamp, data); flushed to one
-  // rolled .db3 when either budget trips
-  private val batch =
-    scala.collection.mutable.ArrayBuffer[(String, String, String, Long, Array[Byte])]()
-  private var batchBytes = 0L
-  private var fileSeq = 0
-  private var total = 0L
-  private var bytesOut = 0L
-  // metadata.yaml inputs, carried on the commit message: per-topic
-  // counts (tiny dimension) + the task's time range.
-  // typeSrc keeps a SMALL SET of source files per type (not just the
-  // first): a mixed stream can route a type's first row through a file
-  // that does NOT define it (the definition lives in a sibling
-  // container of the same type) — the flush-time lookup tries each
-  // observed file until one resolves
-  private val typeSrc =
-    scala.collection.mutable.HashMap[String, scala.collection.mutable.LinkedHashSet[String]]()
-  private val TypeSrcMax = 8
-  // divergence diagnostic: type -> source files that define it with
-  // SEVERAL distinct layouts (per-row attribution impossible, so the
-  // defs table honestly omits the row) — surfaced via _divergent.json
-  // at commit so a reader of undecodable rows has a pointer
-  private val divergentSrc =
-    scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
-  private val topicStats =
-    scala.collection.mutable.LinkedHashMap[(String, String, String), Long]()
-  private var tsMin = Long.MaxValue
-  private var tsMax = Long.MinValue
-  // (in-progress path, final path) per rolled file; renamed on commit
-  private val rolled = scala.collection.mutable.ArrayBuffer[(Path, Path)]()
-
-  private def nonNull(row: InternalRow, ord: Int, name: String): Unit =
-    require(!row.isNullAt(ord), s"db3 write: null '$name' " +
-      s"(partition $partitionId); filter or default nulls before writing")
-
-  override def write(row: InternalRow): Unit = {
-    nonNull(row, ords.topic, "topic")
-    nonNull(row, ords.timestamp, "timestamp")
-    nonNull(row, ords.data, "data")
-    val data = row.getBinary(ords.data)
-    val key = (row.getUTF8String(ords.topic).toString,
-      if (row.isNullAt(ords.tpe)) "" else row.getUTF8String(ords.tpe).toString,
-      if (row.isNullAt(ords.fmt)) "cdr" else row.getUTF8String(ords.fmt).toString)
-    // remember up to TypeSrcMax source files per type for the
-    // late-binding defs lookup at flush (a type missing from the
-    // plan-time channel — first landed mid-stream — still exports with
-    // its definition, even when the first row's file doesn't carry it)
-    if (key._2.nonEmpty && !defs.contains(key._2) && ords.filePath >= 0 &&
-        !row.isNullAt(ords.filePath)) {
-      val f = row.getUTF8String(ords.filePath).toString
-      if (f.nonEmpty) {
-        val set = typeSrc.getOrElseUpdate(key._2,
-          scala.collection.mutable.LinkedHashSet[String]())
-        if (set.size < TypeSrcMax) { set += f; () }
-      }
-    }
-    val ts = row.getLong(ords.timestamp)
-    batch += ((key._1, key._2, key._3, ts, data))
-    batchBytes += data.length
-    total += 1
-    topicStats(key) = topicStats.getOrElse(key, 0L) + 1L
-    if (ts < tsMin) tsMin = ts
-    if (ts > tsMax) tsMax = ts
-    if (batch.size >= rowsPerFile || batchBytes >= fileBytes) flushFile()
-  }
-
-  private def flushFile(): Unit = {
-    if (batch.isEmpty) return
-    // topic ids 1..n in order of appearance within this file
-    val topicIds = scala.collection.mutable.LinkedHashMap[(String, String, String), Long]()
-    batch.foreach { case (t, tp, f, _, _) =>
-      topicIds.getOrElseUpdate((t, tp, f), topicIds.size + 1L); ()
-    }
-    val topicRows = topicIds.keys.map { case (t, tp, f) =>
-      Seq[Any](null, t, tp, f, "")
-    }.toSeq
-    val msgRows = batch.map { case (t, tp, f, ts, d) =>
-      // message mode: each payload its own zstd frame (rosbag2
-      // --compression-mode message); the reader sniffs per-message
-      val payload =
-        if (compression == "zstd_message") com.github.luben.zstd.Zstd.compress(d)
-        else d
-      Seq[Any](null, topicIds((t, tp, f)), ts, payload)
-    }.toSeq
-    val defRows = topicIds.keys.map(_._2).toSeq.distinct
-      .flatMap { tp =>
-        val files = typeSrc.getOrElse(tp, Nil)
-        val resolved = defs.get(tp).orElse(files.iterator
-          .map(graft.ros.SourceDefs.ros2DefFor(_, tp))
-          .collectFirst { case Some(v) => v })
-        if (resolved.isEmpty) {
-          // unresolvable: if any observed file defines the type
-          // DIVERGENTLY, record it for the _divergent.json diagnostic
-          // (the defs row is honestly omitted either way)
-          val div = files.iterator
-            .filter(graft.ros.SourceDefs.ros2DefDivergent(_, tp)).toSeq
-          if (div.nonEmpty)
-            divergentSrc(tp) = (divergentSrc.getOrElse(tp, Seq.empty) ++ div).distinct
-        }
-        resolved.map { case (enc, text) => Seq[Any](null, tp, enc, text, "") }
-      }
-    val tables = Seq(
-      ("topics",
-        "CREATE TABLE topics(id INTEGER PRIMARY KEY, name TEXT, type TEXT, serialization_format TEXT, offered_qos_profiles TEXT)",
-        topicRows),
-      ("messages",
-        "CREATE TABLE messages(id INTEGER PRIMARY KEY, topic_id INTEGER, timestamp INTEGER, data BLOB)",
-        msgRows)) ++
-      (if (defRows.nonEmpty) Seq(("message_definitions",
-        "CREATE TABLE message_definitions(id INTEGER PRIMARY KEY, topic_type TEXT, encoding TEXT, encoded_message_definition TEXT, type_hash TEXT)",
-        defRows)) else Seq.empty)
-    val raw = SqliteFormat.writeDb(tables)
-    // file mode: the whole database as one zstd frame, rosbag2's
-    // <name>.db3.zstd convention — the read side inflates it once per
-    // plan and pages the inflation
-    val (bytes, ext) =
-      if (compression == "zstd_file")
-        (com.github.luben.zstd.Zstd.compress(raw), ".db3.zstd")
-      else (raw, ".db3")
-    val fin = new Path(dir, f"$stem-$fileSeq%04d$ext%s")
-    // the tmp name carries the attempt tag: two live attempts of the
-    // same (partition, epoch) — speculation, a zombie executor — must
-    // never interleave writes into one in-progress file (final names
-    // stay deterministic; only the commit-coordinated winner renames)
-    val tmp = new Path(dir, f".$stem-$fileSeq%04d$attemptTag%s$ext%s.inprogress")
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    bytesOut += bytes.length
-    rolled += ((tmp, fin))
-    fileSeq += 1
-    batch.clear()
-    batchBytes = 0L
-  }
-
-  // fins renamed by THIS attempt — abort may clean these up, but never
-  // a fin this attempt didn't touch (under streaming's deterministic
-  // names, that fin is a PREVIOUS attempt's committed epoch file)
-  private val renamed = scala.collection.mutable.ArrayBuffer[Path]()
-
-  override def commit(): WriterCommitMessage = {
-    flushFile()
-    rolled.foreach { case (tmp, fin) =>
-      // streaming epoch replays re-commit the same deterministic names
-      if (fs.exists(fin)) fs.delete(fin, false)
-      require(fs.rename(tmp, fin), s"db3 write: rename $tmp -> $fin failed")
-      renamed += fin
-    }
-    Db3FilesCommit(rolled.map(_._2.toString).toSeq, total,
-      topicStats.toSeq, tsMin, tsMax, bytesOut, divergentSrc.toSeq)
-  }
-
-  override def abort(): Unit = {
-    rolled.foreach { case (tmp, _) => fs.delete(tmp, false); () }
-    renamed.foreach(fin => fs.delete(fin, false))
-  }
-
-  override def close(): Unit = ()
 }
 
 /** Conform an arbitrary frame to the db3 write spine: `topic`,

@@ -708,7 +708,8 @@ class Db3Table(path: String, schemaName: Option[String],
                tsPruning: Boolean = true,
                tsJitterNs: Long = 100000000L)
     extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    with org.apache.spark.sql.connector.catalog.SupportsWrite
+    with graft.ros.ContainerSink.LandedMetrics {
   private lazy val target: Option[Db3TypedRead.TypedTarget] =
     schemaName.map(sn => Db3TypedRead.resolveTarget(path, sn, md5, schemaText))
   override def name(): String = s"db3:$path${schemaName.map(":" + _).getOrElse("")}"
@@ -727,7 +728,7 @@ class Db3Table(path: String, schemaName: Option[String],
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(schemaName.isEmpty && schemaText.isEmpty,
       "db3 write goes through the spine shape — drop the schema_name/schema_text read options")
-    new Db3WriteBuilder(path, info)
+    graft.ros.ContainerSink.builder(path, info, this, "db3", "Db3Export.prepare")(Db3Sink(_))
   }
 }
 

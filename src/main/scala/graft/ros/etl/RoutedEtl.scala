@@ -143,11 +143,15 @@ private[ros] object RoutedEtl {
         .filter(maxMessages.fold(lit(true))(n => col("seqno") < n))
         .withColumn("seqno", col("seqno") + lit(seqnoOffset))
     // scratch dirs, Overwrite: a hard crash that never reached the
-    // cleanup cannot fail the redo with "path exists"
+    // cleanup cannot fail the redo with "path exists". Read back with
+    // the schema just written (nullable, as Parquet reports it): no
+    // schema-inference job
     val stageDir = s"$out/_spine"
     val seqnoDir = s"$out/_seqno"
-    def stage(df: DataFrame, dir: String): Unit =
+    def stage(df: DataFrame, dir: String): DataFrame = {
       df.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(dir)
+      spark.read.schema(StructType(df.schema.map(_.copy(nullable = true)))).parquet(dir)
+    }
     val cols = src.messages ++ (if (nativeTimestamp) Seq(src.nativeTime) else Nil) :+ col("data")
 
     val (sums, ddl) = try {
@@ -158,10 +162,10 @@ private[ros] object RoutedEtl {
           // the range-partition seqno needs two passes over its input
           // (bound sampling + shuffle write): run them against a staged
           // spine, not the files, and join its seqno map to the scan once
-          stage(src.scan.select(src.order.map(col): _*), stageDir)
-          val s = Seqno.globalSeqno(spark.read.parquet(stageDir), src.order.map(col))
-          stage(numberedFrom(s, col("seqno"), src.identity.map(col)), seqnoDir)
-          src.scan.join(spark.read.parquet(seqnoDir), src.identity).select(col("seqno") +: cols: _*)
+          val spine = stage(src.scan.select(src.order.map(col): _*), stageDir)
+          val s = Seqno.globalSeqno(spine, src.order.map(col))
+          val seqnos = stage(numberedFrom(s, col("seqno"), src.identity.map(col)), seqnoDir)
+          src.scan.join(seqnos, src.identity).select(col("seqno") +: cols: _*)
       }
       val fields = frame.schema.fields
       def field(n: String): StructField = fields(frame.schema.fieldIndex(n))

@@ -1,11 +1,10 @@
 package graft.ros.mcap
 
 import java.util
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -57,7 +56,7 @@ private[mcap] final case class McapSideRef(file: String, offset: Long,
     payloadLen: Long) extends InputPartition
 
 class McapAttachmentsTable(path: String) extends Table
-    with SupportsRead with SupportsWrite {
+    with SupportsRead with SupportsWrite with graft.ros.ContainerSink.LandedMetrics {
   override def name(): String = s"mcap:$path:attachments"
   override def schema(): StructType = McapSideTables.AttachmentsSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -76,112 +75,47 @@ class McapAttachmentsTable(path: String) extends Table
     * sharing the directory, so it is refused (no truncate capability).
     */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new McapAttachmentsWrite(path, info)
-    }
+    graft.ros.ContainerSink.builder(path, info, this, "mcap attachments",
+      "McapExport.prepareAttachments")(McapAttachmentsSink(_))
 }
 
-/** One `att-<partition>-<task>-<job>.mcap` per non-empty task, each
-  * holding only Attachment records (+ the AttachmentIndex/Statistics
-  * summary [[McapStreamingWriter.finish]] emits) — the side-table read
-  * lists them with the rest of the directory. Task commit promotes a
-  * dotted in-progress file; job abort deletes committed files.
+/** The attachments format of [[graft.ros.ContainerSink]]: one
+  * `att-<partition>-<task>-<job>.mcap` per non-empty task, each holding
+  * only Attachment records (+ the AttachmentIndex/Statistics summary
+  * [[McapStreamingWriter.finish]] emits) — the side-table read lists
+  * them with the rest of the directory.
   */
-class McapAttachmentsWrite(dir: String, info: LogicalWriteInfo)
-    extends Write with BatchWrite {
-  private val schema = info.schema()
-  private def need(name: String,
-      dt: org.apache.spark.sql.types.DataType): Int = {
-    val i = schema.fieldNames.indexOf(name)
-    require(i >= 0, s"mcap attachments write needs a '$name' column " +
-      "(McapExport.prepareAttachments conforms arbitrary frames)")
-    require(schema.fields(i).dataType == dt,
-      s"mcap attachments write column '$name' must be $dt, " +
-        s"got ${schema.fields(i).dataType}")
-    i
-  }
-  private val ords = McapAttachmentWriteOrdinals(
-    logTime = need("log_time", LongType),
-    createTime = need("create_time", LongType),
-    name = need("name", StringType),
-    mediaType = need("media_type", StringType),
-    data = need("data", BinaryType))
-  private val jobId = java.util.UUID.randomUUID().toString.take(8)
-  locally {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p); () }
-  }
-  override def toBatch: BatchWrite = this
-  override def createBatchWriterFactory(
-      pinfo: PhysicalWriteInfo): DataWriterFactory =
-    McapAttachmentsWriterFactory(dir, jobId, ords)
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    messages.foreach {
-      case c: McapFileCommit if c.path != null =>
-        fs.delete(new Path(c.path), false); ()
-      case _ => ()
-    }
+final class McapAttachmentsSink private (logTime: Int, createTime: Int,
+    name: Int, mediaType: Int, data: Int) extends graft.ros.ContainerSink.Format {
+  override def suffixes: Seq[String] = Seq(".mcap")
+  override def prefix: String = "att"
+
+  override def encoder(out: graft.ros.ContainerSink.TaskFiles)
+      : graft.ros.ContainerSink.Encoder = new graft.ros.ContainerSink.Encoder {
+    private val writer = new McapStreamingWriter(out.create("", ".mcap"), "",
+      4 * 1024 * 1024, profile = "")
+
+    override def write(row: InternalRow): Unit =
+      writer.writeAttachment(
+        logTime = if (row.isNullAt(logTime)) 0L else row.getLong(logTime),
+        createTime = if (row.isNullAt(createTime)) 0L else row.getLong(createTime),
+        name = row.getUTF8String(name).toString,
+        mediaType = if (row.isNullAt(mediaType)) ""
+          else row.getUTF8String(mediaType).toString,
+        data = row.getBinary(data))
+
+    override def finish(): AnyRef = { writer.finish(); null }
   }
 }
 
-private[mcap] final case class McapAttachmentWriteOrdinals(logTime: Int,
-    createTime: Int, name: Int, mediaType: Int, data: Int)
-
-private[mcap] final case class McapAttachmentsWriterFactory(dir: String,
-    jobId: String, ords: McapAttachmentWriteOrdinals) extends DataWriterFactory {
-  override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val fs =
-        new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-      private val stem = f"att-$partitionId%05d-$taskId-$jobId"
-      private val finalPath = new Path(dir, s"$stem.mcap")
-      private val tmpPath = new Path(dir, s".$stem.mcap.inprogress")
-      private var stream: java.io.OutputStream = null
-      private var writer: McapStreamingWriter = null
-      private var count = 0L
-      private var bytes = 0L
-      override def write(row: InternalRow): Unit = {
-        if (writer == null) {
-          stream = new java.io.BufferedOutputStream(
-            fs.create(tmpPath, true), 1 << 16)
-          writer = new McapStreamingWriter(stream, "", 4 * 1024 * 1024,
-            profile = "")
-        }
-        require(!row.isNullAt(ords.name) && !row.isNullAt(ords.data),
-          "mcap attachments write: 'name' and 'data' must be non-null")
-        val data = row.getBinary(ords.data)
-        writer.writeAttachment(
-          logTime = if (row.isNullAt(ords.logTime)) 0L
-            else row.getLong(ords.logTime),
-          createTime = if (row.isNullAt(ords.createTime)) 0L
-            else row.getLong(ords.createTime),
-          name = row.getUTF8String(ords.name).toString,
-          mediaType = if (row.isNullAt(ords.mediaType)) ""
-            else row.getUTF8String(ords.mediaType).toString,
-          data = data)
-        count += 1; bytes += data.length.toLong
-      }
-      override def commit(): WriterCommitMessage = {
-        if (writer == null) return McapFileCommit(null, 0L, 0L)
-        writer.finish()
-        stream.close()
-        if (fs.exists(finalPath)) fs.delete(finalPath, false)
-        require(fs.rename(tmpPath, finalPath),
-          s"mcap attachments write: rename $tmpPath -> $finalPath failed")
-        McapFileCommit(finalPath.toString, count, bytes)
-      }
-      override def abort(): Unit = {
-        if (stream != null) {
-          try stream.close() catch { case _: java.io.IOException => () }
-          fs.delete(tmpPath, false); ()
-        }
-      }
-      override def close(): Unit = ()
-    }
+object McapAttachmentsSink {
+  def apply(w: graft.ros.ContainerSink.Request): McapAttachmentsSink =
+    new McapAttachmentsSink(
+      logTime = w.need("log_time", LongType, nullable = true),
+      createTime = w.need("create_time", LongType, nullable = true),
+      name = w.need("name", StringType),
+      mediaType = w.need("media_type", StringType, nullable = true),
+      data = w.need("data", BinaryType))
 }
 
 class McapAttachmentsScan(path: String) extends Scan with Batch {

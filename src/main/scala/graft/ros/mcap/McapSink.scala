@@ -1,97 +1,8 @@
 package graft.ros.mcap
 
 import java.io.{ByteArrayOutputStream, OutputStream}
-import java.util
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
-
-/** MCAP export sink — the write half of the `mcap` DataSource: the
-  * `rosbag filter` / `ros2 bag convert` query class (read an archive,
-  * filter/transform relationally, re-emit a container a ROS tool can
-  * play back), which the reference leaves to external tooling (its
-  * pipeline is one-way bag→parquet, reference rosbag2parquet.cpp:41).
-  *
-  * Layout at scale: ONE MCAP file per Spark partition (`part-<p>-<t>-
-  * <job>.mcap`), written INCREMENTALLY — the task buffers only the
-  * current chunk (`chunk_bytes`, default 4 MiB raw), never the
-  * partition — so a 100 TB export is `repartition(n)` for file-count
-  * control plus embarrassingly parallel encode, no driver collect and
-  * no task-memory dependence on partition size. Tasks write to dotted
-  * in-progress names and rename on task commit (Spark's commit
-  * coordinator guarantees one winner per partition); job abort deletes
-  * whatever committed.
-  *
-  * Usage: `df.write.format("mcap").mode("append").save(dir)` where df
-  * carries the message-spine columns (a round-tripped
-  * `spark.read.format("mcap")` frame does; [[McapExport.prepare]]
-  * conforms arbitrary frames). `mode("overwrite")` replaces the
-  * directory's previous `*.mcap` files atomically-per-file (old files
-  * are deleted only after every task committed). Options:
-  * `compression` (zstd | lz4 | none; default zstd), `chunk_bytes`
-  * (raw bytes per chunk, default 4 MiB), `schema_defs_from` (an
-  * existing mcap path whose Schema records — the message DEFINITIONS —
-  * are harvested driver-side and embedded, so typed readers can decode
-  * the export; without it schemas carry empty definition bytes and
-  * only spine reads are possible).
-  *
-  * Column contract (spine names): `topic`, `schema_name`,
-  * `schema_encoding`, `message_encoding`, `log_time`, `publish_time`,
-  * `sequence`, `data` drive the output; `file_path`/`chunk_idx`/
-  * `offset`/`size`/`channel_id`/`data_crc32` are read-derived and
-  * ignored (the writer re-derives layout and ids).
-  */
-object McapSinkWrite {
-  /** Harvest (schema_name -> (encoding, definition bytes)) from ANY
-    * container path — mcap Schema records verbatim, db3
-    * message_definitions as ros2msg/ros2idl schemas, rosbag1
-    * connection records as ros1msg schemas (all registered MCAP
-    * schema encodings, so nothing here is cross-dialect). Driver-side
-    * on the bounded pool — the dimension is tiny (distinct message
-    * types), the files are many.
-    */
-  private[mcap] def harvestDefs(path: String)
-      : Map[String, Seq[(String, Array[Byte])]] =
-    variantMap(graft.ros.DefsHarvest.fromPath(path))
-
-  /** The full defs channel: `schema_defs_inline` entries FIRST (they
-    * carry definitions no source container holds — e.g.
-    * [[graft.ros.Transcode]]'s translations — and win the per-channel
-    * variant choice), then the `schema_defs_from` harvest.
-    */
-  private[mcap] def resolveDefs(inline: Option[String], from: Option[String])
-      : Map[String, Seq[(String, Array[Byte])]] =
-    variantMap(
-      inline.map(graft.ros.DefsHarvest.decodeInline).getOrElse(Seq.empty) ++
-        from.map(graft.ros.DefsHarvest.fromPath).getOrElse(Seq.empty))
-
-  private def variantMap(defs: Seq[graft.ros.DefsHarvest.TypeDef])
-      : Map[String, Seq[(String, Array[Byte])]] = {
-    // one definition per (name, ENCODING) — mcap supports multiple
-    // Schema records, so a type name defined in two dialects (a bag's
-    // ros1msg pkg/T and a db3's ros2msg pkg/T) keeps BOTH variants;
-    // the writer picks per channel by its message encoding. Deduping
-    // by bare name would make one dialect's channels unreadable.
-    val seen = scala.collection.mutable.HashSet[(String, String)]()
-    defs.filter(d => seen.add((d.name, d.encoding)))
-      .groupBy(_.name).view
-      .mapValues(_.map(d => (d.encoding, d.data))).toMap
-  }
-}
-
-/** The write-side knobs, threaded once from the builder to every
-  * task. `profile` lands in the header record: "ros2" (the default —
-  * ros2 recordings are the dominant producer) is only CONFORMANT when
-  * every channel is cdr/ros2msg-shaped, so writers of protobuf or
-  * mixed-dialect archives should pass "" (the spec's "no profile") or
-  * their own profile string via `option("profile", ...)` —
-  * [[graft.ros.Convert]] sets this automatically from the sources'
-  * message encodings.
-  */
-private[mcap] final case class McapSinkConf(compression: String,
-    chunkBytes: Int, defs: Map[String, Seq[(String, Array[Byte])]],
-    profile: String, defsFileFirst: Boolean = false)
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 /** Incremental single-file MCAP writer: magic+header up front, then
   * one Chunk record per ~`chunkBytesTarget` raw bytes (schema/channel
@@ -419,263 +330,123 @@ final class McapStreamingWriter(out: OutputStream, compression: String,
   def bytesWritten: Long = pos
 }
 
-class McapWriteBuilder(path: String, info: LogicalWriteInfo) extends WriteBuilder
-    with SupportsTruncate {
-  private var truncateFirst = false
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
-  override def build(): Write = {
-    val schema = info.schema()
-    def need(name: String, dt: org.apache.spark.sql.types.DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      require(i >= 0, s"mcap write needs a '$name' column " +
-        "(McapExport.prepare conforms arbitrary frames)")
-      require(schema.fields(i).dataType == dt,
-        s"mcap write column '$name' must be $dt, got ${schema.fields(i).dataType}")
-      i
-    }
-    // OPTIONAL source-file column: feeds the writer's late-binding
-    // defs fallback (SourceDefs) — absent or empty is fine
-    def opt(name: String, dt: org.apache.spark.sql.types.DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      if (i >= 0 && schema.fields(i).dataType == dt) i else -1
-    }
-    val ords = McapWriteOrdinals(
-      topic = need("topic", StringType),
-      schemaName = need("schema_name", StringType),
-      schemaEncoding = need("schema_encoding", StringType),
-      messageEncoding = need("message_encoding", StringType),
-      sequence = need("sequence", LongType),
-      logTime = need("log_time", LongType),
-      publishTime = need("publish_time", LongType),
-      data = need("data", BinaryType),
-      filePath = opt("file_path", StringType))
-    val opts = info.options()
-    val compression = Option(opts.get("compression")).getOrElse("zstd") match {
-      case "none" => ""
-      case c => c
-    }
-    val chunkBytes = Option(opts.get("chunk_bytes")).map(_.toInt)
-      .getOrElse(4 * 1024 * 1024)
-    val defs = McapSinkWrite.resolveDefs(
-      Option(opts.get("schema_defs_inline")),
-      Option(opts.get("schema_defs_from")))
-    val profile = Option(opts.get("profile")).getOrElse("ros2")
-    // "file" = the row's own source file outranks the defs channel
-    // (Convert's auto-wiring — per-file truth for divergent fleets);
-    // "channel" (default) = an explicitly pinned defs source is
-    // definitive, files only cover types the channel lacks
-    val defsFileFirst =
-      Option(opts.get("defs_priority")).getOrElse("channel") match {
-        case "file" => true
-        case "channel" => false
-        case other => throw new IllegalArgumentException(
-          s"defs_priority must be file | channel, got '$other'")
-      }
-    new McapWrite(path, ords,
-      McapSinkConf(compression, chunkBytes, defs, profile, defsFileFirst),
-      truncateFirst, info.queryId())
-  }
-}
-
-private[mcap] final case class McapWriteOrdinals(topic: Int, schemaName: Int,
-    schemaEncoding: Int, messageEncoding: Int, sequence: Int, logTime: Int,
-    publishTime: Int, data: Int, filePath: Int = -1)
-
-class McapWrite(path: String, ords: McapWriteOrdinals, conf: McapSinkConf,
-    truncateFirst: Boolean, queryId: String) extends Write {
-  override def toBatch: BatchWrite =
-    new McapBatchWrite(path, ords, conf, truncateFirst)
-  override def toStreaming: org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    require(!truncateFirst,
-      "mcap streaming write supports the Append output mode only " +
-        "(a container directory cannot be truncated per epoch)")
-    new McapStreamingSinkWrite(path, ords, conf, queryId)
-  }
-}
-
-/** Streaming half of the mcap sink: `df.writeStream.format("mcap")` —
-  * the continuous re-emit (fleet stream in → transform → playable
-  * container archive out). One file per (epoch, partition), named
-  * `part-<p>-q<queryId8>-e<epoch>.mcap` — DETERMINISTIC, so a replayed
-  * epoch (failure before the checkpoint's commit log recorded it)
-  * regenerates the same names and the task commit's delete+rename
-  * replaces rather than duplicates: the directory holds each epoch's
-  * rows exactly once. Empty epochs/partitions leave no file. Epoch
-  * abort deletes that epoch's committed files.
+/** MCAP export sink — the write half of the `mcap` DataSource: the
+  * `rosbag filter` / `ros2 bag convert` query class (read an archive,
+  * filter/transform relationally, re-emit a container a ROS tool can
+  * play back), which the reference leaves to external tooling (its
+  * pipeline is one-way bag→parquet, reference rosbag2parquet.cpp:41).
+  *
+  * Layout at scale: ONE MCAP file per Spark partition (`part-<p>-<t>-
+  * <job>.mcap`), written INCREMENTALLY — the task buffers only the
+  * current chunk (`chunk_bytes`, default 4 MiB raw), never the
+  * partition — so a 100 TB export is `repartition(n)` for file-count
+  * control plus embarrassingly parallel encode, no driver collect and
+  * no task-memory dependence on partition size.
+  *
+  * Usage: `df.write.format("mcap").mode("append").save(dir)` where df
+  * carries the message-spine columns (a round-tripped
+  * `spark.read.format("mcap")` frame does; [[McapExport.prepare]]
+  * conforms arbitrary frames). `mode("overwrite")` replaces the
+  * directory's previous `*.mcap` files atomically-per-file (old files
+  * are deleted only after every task committed). Options:
+  * `compression` (zstd | lz4 | none; default zstd), `chunk_bytes`
+  * (raw bytes per chunk, default 4 MiB), `schema_defs_from` (an
+  * existing mcap path whose Schema records — the message DEFINITIONS —
+  * are harvested driver-side and embedded, so typed readers can decode
+  * the export; without it schemas carry empty definition bytes and
+  * only spine reads are possible).
+  *
+  * Column contract (spine names): `topic`, `schema_name`,
+  * `schema_encoding`, `message_encoding`, `log_time`, `publish_time`,
+  * `sequence`, `data` drive the output; `file_path`/`chunk_idx`/
+  * `offset`/`size`/`channel_id`/`data_crc32` are read-derived and
+  * ignored (the writer re-derives layout and ids). `profile` lands in
+  * the header record: "ros2" (the default — ros2 recordings are the
+  * dominant producer) is only CONFORMANT when every channel is
+  * cdr/ros2msg-shaped, so writers of protobuf or mixed-dialect archives
+  * should pass "" (the spec's "no profile") or their own profile
+  * string — [[graft.ros.Convert]] sets it from the sources' message
+  * encodings. The file protocol is [[graft.ros.ContainerSink]]'s.
   */
-class McapStreamingSinkWrite(dir: String, ords: McapWriteOrdinals,
-    conf: McapSinkConf, queryId: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  locally {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p); () }
-  }
-  private val qid = queryId.take(8)
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    McapStreamWriterFactory(dir, qid, ords, conf)
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val commits = messages.collect { case c: McapFileCommit if c.path != null => c }
-    // reconcile: a replay with fewer partitions than the crashed
-    // attempt must not leave the extra per-partition files behind as
-    // duplicates — delete this (query, epoch)'s files not re-committed
-    graft.ros.ContainerStreamReconcile.sweep(
-      new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()), dir,
-      // \d{5,}: the %05d stems widen past five digits at >=100k
-      // partitions — a fixed {5} would leave those files invisible to
-      // the sweep, silently keeping duplicates after a shrunken replay
-      ("part-\\d{5,}-q" + java.util.regex.Pattern.quote(qid) +
-        "-e" + epochId + "\\.mcap").r,
-      commits.map(c => new Path(c.path).getName).toSet)
-    graft.ros.SinkEpochMetrics.record(qid, epochId,
-      commits.map(_.rows).sum, commits.length.toLong, commits.map(_.bytes).sum)
-  }
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    messages.foreach {
-      case c: McapFileCommit if c.path != null =>
-        fs.delete(new Path(c.path), false); ()
-      case _ => ()
-    }
+final class McapSink private (topic: Int, schemaName: Int, schemaEncoding: Int,
+    messageEncoding: Int, sequence: Int, logTime: Int, publishTime: Int,
+    data: Int, filePath: Int, compression: String, chunkBytes: Int,
+    defs: Map[String, Seq[(String, Array[Byte])]], profile: String,
+    defsFileFirst: Boolean) extends graft.ros.ContainerSink.Format {
+  override def suffixes: Seq[String] = Seq(".mcap")
+
+  override def encoder(out: graft.ros.ContainerSink.TaskFiles)
+      : graft.ros.ContainerSink.Encoder = new graft.ros.ContainerSink.Encoder {
+    private val writer = new McapStreamingWriter(out.create("", ".mcap"),
+      compression, chunkBytes, defs, profile, defsFileFirst)
+
+    override def write(row: InternalRow): Unit =
+      writer.write(
+        topic = row.getUTF8String(topic).toString,
+        schemaName = if (row.isNullAt(schemaName)) ""
+          else row.getUTF8String(schemaName).toString,
+        schemaEncoding = if (row.isNullAt(schemaEncoding)) ""
+          else row.getUTF8String(schemaEncoding).toString,
+        messageEncoding = if (row.isNullAt(messageEncoding)) "cdr"
+          else row.getUTF8String(messageEncoding).toString,
+        sequence = if (row.isNullAt(sequence)) 0L else row.getLong(sequence),
+        logTime = row.getLong(logTime),
+        publishTime = if (row.isNullAt(publishTime)) row.getLong(logTime)
+          else row.getLong(publishTime),
+        data = row.getBinary(data),
+        sourcePath = if (filePath < 0 || row.isNullAt(filePath)) ""
+          else row.getUTF8String(filePath).toString)
+
+    override def finish(): AnyRef = { writer.finish(); null }
   }
 }
 
-private[mcap] final case class McapStreamWriterFactory(dir: String, qid: String,
-    ords: McapWriteOrdinals, conf: McapSinkConf)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new McapDataWriter(dir, f"part-$partitionId%05d-q$qid-e$epochId", ords,
-      conf, partitionId, attemptTag = s"-t$taskId")
-}
+object McapSink {
+  def apply(w: graft.ros.ContainerSink.Request): McapSink =
+    new McapSink(
+      topic = w.need("topic", StringType),
+      schemaName = w.need("schema_name", StringType, nullable = true),
+      schemaEncoding = w.need("schema_encoding", StringType, nullable = true),
+      messageEncoding = w.need("message_encoding", StringType, nullable = true),
+      sequence = w.need("sequence", LongType, nullable = true),
+      logTime = w.need("log_time", LongType),
+      publishTime = w.need("publish_time", LongType, nullable = true),
+      data = w.need("data", BinaryType),
+      // OPTIONAL source-file column: feeds the writer's late-binding
+      // defs fallback (SourceDefs)
+      filePath = w.opt("file_path", StringType),
+      compression = w.option("compression").getOrElse("zstd") match {
+        case "none" => ""
+        case c => c
+      },
+      chunkBytes = w.option("chunk_bytes").map(_.toInt).getOrElse(4 * 1024 * 1024),
+      defs = resolveDefs(w.option("schema_defs_inline"), w.option("schema_defs_from")),
+      profile = w.option("profile").getOrElse("ros2"),
+      defsFileFirst = graft.ros.DefsHarvest.fileFirst(w.option("defs_priority")))
 
-private[mcap] final case class McapFileCommit(path: String, rows: Long,
-    bytes: Long = 0L)
-  extends WriterCommitMessage
-
-class McapBatchWrite(dir: String, ords: McapWriteOrdinals,
-    conf: McapSinkConf, truncateFirst: Boolean) extends BatchWrite {
-
-  private val jobId = java.util.UUID.randomUUID().toString.take(8)
-
-  // captured BEFORE any task writes: overwrite deletes exactly the
-  // files that pre-existed this job, after every task committed — a
-  // crash mid-job leaves the old generation fully readable
-  private val preExisting: Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (truncateFirst && fs.exists(p))
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".mcap"))
-        .map(_.getPath.toString)
-    else {
-      if (!fs.exists(p)) { fs.mkdirs(p); () }
-      Seq.empty
-    }
+  /** The full defs channel: `schema_defs_inline` entries FIRST (they
+    * carry definitions no source container holds — e.g.
+    * [[graft.ros.Transcode]]'s translations — and win the per-channel
+    * variant choice), then the `schema_defs_from` harvest: mcap Schema
+    * records verbatim, db3 message_definitions as ros2msg/ros2idl
+    * schemas, rosbag1 connection records as ros1msg schemas (all
+    * registered MCAP schema encodings, so nothing here is
+    * cross-dialect).
+    */
+  private def resolveDefs(inline: Option[String], from: Option[String])
+      : Map[String, Seq[(String, Array[Byte])]] = {
+    val defs = inline.map(graft.ros.DefsHarvest.decodeInline).getOrElse(Seq.empty) ++
+      from.map(graft.ros.DefsHarvest.fromPath).getOrElse(Seq.empty)
+    // one definition per (name, ENCODING) — mcap supports multiple
+    // Schema records, so a type name defined in two dialects (a bag's
+    // ros1msg pkg/T and a db3's ros2msg pkg/T) keeps BOTH variants;
+    // the writer picks per channel by its message encoding. Deduping
+    // by bare name would make one dialect's channels unreadable.
+    val seen = scala.collection.mutable.HashSet[(String, String)]()
+    defs.filter(d => seen.add((d.name, d.encoding)))
+      .groupBy(_.name).view
+      .mapValues(_.map(d => (d.encoding, d.data))).toMap
   }
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    McapWriterFactory(dir, jobId, ords, conf)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    preExisting.foreach { f =>
-      require(fs.delete(new Path(f), false), s"mcap overwrite: delete failed for $f")
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    messages.foreach {
-      case c: McapFileCommit if c.path != null =>
-        fs.delete(new Path(c.path), false); ()
-      case _ => ()
-    }
-  }
-}
-
-private[mcap] final case class McapWriterFactory(dir: String, jobId: String,
-    ords: McapWriteOrdinals, conf: McapSinkConf) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new McapDataWriter(dir, f"part-$partitionId%05d-$taskId-$jobId", ords,
-      conf, partitionId)
-}
-
-/** One task's file: `<stem>.mcap`, written to a dotted in-progress
-  * name, promoted by delete+rename on task commit. Batch stems carry
-  * (partition, task, job) and never collide; streaming stems carry
-  * (partition, query, epoch) DELIBERATELY — an epoch replay replaces
-  * its previous attempt's file instead of duplicating it.
-  */
-class McapDataWriter(dir: String, stem: String,
-    ords: McapWriteOrdinals, conf: McapSinkConf, partitionId: Int,
-    attemptTag: String = "")
-    extends DataWriter[InternalRow] {
-
-  private val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-  private val finalPath = new Path(dir, s"$stem.mcap")
-  // the tmp name carries the attempt tag: two live attempts of the
-  // same (partition, epoch) — speculation, a zombie executor — must
-  // never interleave writes into one in-progress file
-  private val tmpPath = new Path(dir, s".$stem$attemptTag.mcap.inprogress")
-
-  // lazy: an empty partition leaves no file (fleet exports repartition
-  // by key — empty shards are routine, zero-row containers are debris)
-  private var stream: java.io.OutputStream = null
-  private var writer: McapStreamingWriter = null
-
-  private def nonNull(row: InternalRow, ord: Int, name: String): Unit =
-    require(!row.isNullAt(ord), s"mcap write: null '$name' " +
-      s"(partition $partitionId); filter or default nulls before writing")
-
-  override def write(row: InternalRow): Unit = {
-    if (writer == null) {
-      stream = new java.io.BufferedOutputStream(fs.create(tmpPath, true), 1 << 16)
-      writer = new McapStreamingWriter(stream, conf.compression,
-        conf.chunkBytes, conf.defs, conf.profile, conf.defsFileFirst)
-    }
-    nonNull(row, ords.topic, "topic")
-    nonNull(row, ords.logTime, "log_time")
-    nonNull(row, ords.data, "data")
-    writer.write(
-      topic = row.getUTF8String(ords.topic).toString,
-      schemaName = if (row.isNullAt(ords.schemaName)) ""
-        else row.getUTF8String(ords.schemaName).toString,
-      schemaEncoding = if (row.isNullAt(ords.schemaEncoding)) ""
-        else row.getUTF8String(ords.schemaEncoding).toString,
-      messageEncoding = if (row.isNullAt(ords.messageEncoding)) "cdr"
-        else row.getUTF8String(ords.messageEncoding).toString,
-      sequence = if (row.isNullAt(ords.sequence)) 0L else row.getLong(ords.sequence),
-      logTime = row.getLong(ords.logTime),
-      publishTime = if (row.isNullAt(ords.publishTime)) row.getLong(ords.logTime)
-        else row.getLong(ords.publishTime),
-      data = row.getBinary(ords.data),
-      sourcePath = if (ords.filePath < 0 || row.isNullAt(ords.filePath)) ""
-        else row.getUTF8String(ords.filePath).toString)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (writer == null) return McapFileCommit(null, 0L, 0L)
-    writer.finish()
-    stream.close()
-    // a streaming epoch replay re-commits the same deterministic name;
-    // replace the previous attempt's file (commit coordination
-    // guarantees one live committer per (partition, epoch))
-    if (fs.exists(finalPath)) fs.delete(finalPath, false)
-    require(fs.rename(tmpPath, finalPath),
-      s"mcap write: rename $tmpPath -> $finalPath failed")
-    McapFileCommit(finalPath.toString, writer.rowCount, writer.bytesWritten)
-  }
-
-  override def abort(): Unit = {
-    if (stream != null) {
-      try stream.close() catch { case _: java.io.IOException => () }
-      fs.delete(tmpPath, false); ()
-    }
-  }
-
-  override def close(): Unit = ()
 }
 
 /** Conform an arbitrary frame to the mcap write spine. Only `topic`,

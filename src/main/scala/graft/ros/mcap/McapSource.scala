@@ -117,7 +117,8 @@ object McapDataSource {
 class McapTable(path: String, schemaName: Option[String] = None,
                 includeRaw: Boolean = false, md5: Option[String] = None)
     extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    with org.apache.spark.sql.connector.catalog.SupportsWrite
+    with graft.ros.ContainerSink.LandedMetrics {
   private lazy val target: Option[McapTypedRead.TypedTarget] =
     schemaName.map(sn => McapTypedRead.resolveTarget(path, sn, md5))
   override def name(): String = s"mcap:$path${schemaName.map(":" + _).getOrElse("")}"
@@ -137,7 +138,7 @@ class McapTable(path: String, schemaName: Option[String] = None,
       : org.apache.spark.sql.connector.write.WriteBuilder = {
     require(schemaName.isEmpty,
       "mcap write goes through the spine shape — drop the schema_name read option")
-    new McapWriteBuilder(path, info)
+    graft.ros.ContainerSink.builder(path, info, this, "mcap", "McapExport.prepare")(McapSink(_))
   }
 }
 

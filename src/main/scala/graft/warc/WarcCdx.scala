@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * how Common Crawl and every wayback deployment serve URL lookups:
   * resolve through the index, fetch ONE gzip member by byte range,
   * never touch the rest of the shard. The warc sink writes a `.cdx`
-  * sidecar per shard as it writes the shard ([[WarcDataWriter]]);
+  * sidecar per shard as it writes the shard ([[WarcSink]]);
   * [[index]] builds the same entries for FOREIGN archives by a
   * one-pass member-boundary scan (a `Convert.compact`-style pass);
   * the `warc` source's `option("cdx", "true")` read path plans byte
@@ -192,19 +192,28 @@ object WarcCdx {
       .repartition(math.min(files.size, 64).max(1))
       .map { shard =>
         val entries = indexFile(shard).sortBy(e => (e.surt, e.timestamp))
-        writeSidecar(shard, entries)
+        writeSidecar(shard, entries,
+          s"-t${org.apache.spark.TaskContext.get().taskAttemptId()}")
         entries.size.toLong
       }.reduce(_ + _)
   }
 
-  /** Publish a shard's sidecar via temp + rename (idempotent). */
-  def writeSidecar(shard: String, entries: Seq[CdxEntry]): Unit = {
+  /** A sidecar's bytes: one rendered line per entry. */
+  def sidecarBytes(entries: Seq[CdxEntry]): Array[Byte] =
+    entries.map(render).mkString("", "\n", "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
+  /** Publish a shard's sidecar via temp + rename (idempotent); the
+    * in-progress name carries the writing attempt's tag.
+    */
+  private def writeSidecar(shard: String, entries: Seq[CdxEntry],
+      attempt: String): Unit = {
     val side = new Path(sidecarPath(shard))
     val fs = side.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    val tmp = new Path(side.getParent, "." + side.getName + ".inprogress")
+    val base = side.getName.stripSuffix(".cdx")
+    val tmp = new Path(side.getParent, s".$base$attempt.cdx.inprogress")
     val out = fs.create(tmp, true)
-    try out.write(entries.map(render).mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(sidecarBytes(entries))
     finally out.close()
     if (fs.exists(side)) fs.delete(side, false)
     require(fs.rename(tmp, side), s"cdx sidecar rename failed: $side")

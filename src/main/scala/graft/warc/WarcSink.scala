@@ -1,10 +1,7 @@
 package graft.warc
 
-import java.util
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{BinaryType, StringType}
 
 /** DataSource V2 `warc` WRITE sink — the EXPORT direction of the
   * crawl pipeline, completing the fourth container's source/sink
@@ -25,18 +22,14 @@ import org.apache.spark.sql.types._
   * carry the full record block (helpers in [[WarcExport]] build HTTP
   * response blocks and conversion records).
   *
-  * Layout and commit protocol mirror the container sinks: one shard
-  * file per non-empty task (`part-<p>-<task>-<job>.warc.gz`,
-  * member-per-record gzip by default — the spec's recommendation and
-  * what the strict reader verifies member-by-member), written to a
-  * dotted in-progress name and promoted by rename on task commit;
-  * batch `overwrite` captures the pre-existing shard list BEFORE any
-  * task writes and deletes it only after every task committed, so a
-  * crash mid-job leaves the old generation fully readable. Streaming
-  * writes name files `part-<p>-q<query8>-e<epoch>.warc.gz`
-  * DELIBERATELY deterministically: an epoch replay replaces its
-  * previous attempt's file instead of duplicating it — the
-  * exactly-once contract shared with the mcap/rosbag/db3 sinks.
+  * Layout and commit protocol are the container sinks' own
+  * ([[graft.ros.ContainerSink]]): one shard file per non-empty task
+  * (`part-<p>-<task>-<job>.warc.gz`, member-per-record gzip by default —
+  * the spec's recommendation and what the strict reader verifies
+  * member-by-member) followed by its `.cdx` sidecar; streaming shards
+  * are `part-<p>-q<query8>-e<epoch>.warc.gz`, so an epoch replay
+  * replaces its previous attempt's shard and sidecar, and the epoch
+  * commit sweeps the extras of a wider crashed attempt.
   *
   * Record ids: an explicit `record_id` column wins; empty ids get a
   * DETERMINISTIC name-UUID of (uri, date, payload) so an epoch replay
@@ -50,275 +43,99 @@ import org.apache.spark.sql.types._
   * fills them). `refers_to` and `payload_digest` round-trip to their
   * WARC headers — what the reader surfaces, the writer re-emits.
   */
-class WarcWriteBuilder(path: String, info: LogicalWriteInfo)
-    extends WriteBuilder with SupportsTruncate {
-  private var truncateFirst = false
-  override def truncate(): WriteBuilder = { truncateFirst = true; this }
+final class WarcSink private (warcType: Int, payload: Int, warcDate: Int,
+    targetUri: Int, contentType: Int, recordId: Int, refersTo: Int,
+    payloadDigest: Int, gzip: Boolean, cdx: Boolean)
+    extends graft.ros.ContainerSink.Format {
+  // both shard kinds and the sidecar: overwrite replaces all three
+  override def suffixes: Seq[String] = Seq(".warc.gz", ".warc", ".cdx")
 
-  override def build(): Write = {
-    val schema = info.schema()
-    def need(name: String, dt: DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      require(i >= 0, s"warc write needs a '$name' column " +
-        "(WarcExport.prepare conforms arbitrary frames)")
-      require(schema.fields(i).dataType == dt,
-        s"warc write column '$name' must be $dt, got ${schema.fields(i).dataType}")
-      i
-    }
-    def opt(name: String, dt: DataType): Int = {
-      val i = schema.fieldNames.indexOf(name)
-      if (i >= 0 && schema.fields(i).dataType == dt) i else -1
-    }
-    val ords = WarcWriteOrdinals(
-      warcType = need("warc_type", StringType),
-      targetUri = need("target_uri", StringType),
-      contentType = need("content_type", StringType),
-      recordId = need("record_id", StringType),
-      warcDate = need("warc_date", StringType),
-      payload = need("payload", BinaryType),
-      refersTo = opt("refers_to", StringType),
-      payloadDigest = opt("payload_digest", StringType))
-    val gzip = Option(info.options().get("gzip")).forall(_.toBoolean)
-    // cdx sidecars ON by default: an archive without its index is
-    // sequential-scan-only; `option("cdx", "false")` opts out
-    val cdx = Option(info.options().get("cdx")).forall(_.toBoolean)
-    new WarcWrite(path, ords, gzip, truncateFirst, info.queryId(), cdx)
-  }
-}
-
-private[warc] final case class WarcWriteOrdinals(warcType: Int, targetUri: Int,
-    contentType: Int, recordId: Int, warcDate: Int, payload: Int,
-    refersTo: Int = -1, payloadDigest: Int = -1)
-
-class WarcWrite(path: String, ords: WarcWriteOrdinals, gzip: Boolean,
-    truncateFirst: Boolean, queryId: String, cdx: Boolean = true)
-    extends Write {
-  override def toBatch: BatchWrite =
-    new WarcBatchWrite(path, ords, gzip, truncateFirst, cdx)
-  override def toStreaming
-      : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
-    require(!truncateFirst,
-      "warc streaming write supports the Append output mode only " +
-        "(a shard directory cannot be truncated per epoch)")
-    new WarcStreamingSinkWrite(path, ords, gzip, queryId, cdx)
-  }
-}
-
-class WarcBatchWrite(dir: String, ords: WarcWriteOrdinals, gzip: Boolean,
-    truncateFirst: Boolean, cdx: Boolean = true) extends BatchWrite {
-
-  private val jobId = java.util.UUID.randomUUID().toString.take(8)
-
-  // captured BEFORE any task writes — see the McapBatchWrite contract
-  private val preExisting: Seq[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (truncateFirst && fs.exists(p))
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && (WarcDataSource.isWarc(s.getPath.getName) ||
-          s.getPath.getName.endsWith(".cdx")))
-        .map(_.getPath.toString)
-    else {
-      if (!fs.exists(p)) { fs.mkdirs(p); () }
-      Seq.empty
-    }
-  }
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    WarcWriterFactory(dir, jobId, ords, gzip, cdx)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    preExisting.foreach { f =>
-      require(fs.delete(new Path(f), false),
-        s"warc overwrite: delete failed for $f")
-    }
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    messages.foreach {
-      case c: WarcFileCommit if c.path != null =>
-        fs.delete(new Path(c.path), false)
-        // a committed task published its sidecar too
-        fs.delete(new Path(WarcCdx.sidecarPath(c.path)), false)
-        ()
-      case _ => ()
-    }
-  }
-}
-
-private[warc] final case class WarcWriterFactory(dir: String, jobId: String,
-    ords: WarcWriteOrdinals, gzip: Boolean, cdx: Boolean)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new WarcDataWriter(dir, f"part-$partitionId%05d-$taskId-$jobId", ords, gzip,
-      partitionId, cdx = cdx)
-}
-
-private[warc] final case class WarcFileCommit(path: String, rows: Long)
-    extends WriterCommitMessage
-
-class WarcStreamingSinkWrite(dir: String, ords: WarcWriteOrdinals,
-    gzip: Boolean, queryId: String, cdx: Boolean = true)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-
-  { // eager: the first epoch's tasks race mkdirs otherwise
-    val p = new Path(dir)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (!fs.exists(p)) { fs.mkdirs(p); () }
-  }
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory =
-    WarcStreamWriterFactory(dir, queryId.take(8), ords, gzip, cdx)
-
-  override def commit(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = ()
-
-  override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    messages.foreach {
-      case c: WarcFileCommit if c.path != null =>
-        fs.delete(new Path(c.path), false)
-        fs.delete(new Path(WarcCdx.sidecarPath(c.path)), false)
-        ()
-      case _ => ()
-    }
-  }
-}
-
-private[warc] final case class WarcStreamWriterFactory(dir: String, qid: String,
-    ords: WarcWriteOrdinals, gzip: Boolean, cdx: Boolean)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
-    new WarcDataWriter(dir, f"part-$partitionId%05d-q$qid-e$epochId", ords,
-      gzip, partitionId, attemptTag = s"-t$taskId", cdx = cdx)
-}
-
-/** One task's shard: record-at-a-time rendering (no whole-file
-  * buffering — a shard is written in one pass at any size), each
-  * record its own gzip member when `gzip`. With `cdx` (the default)
-  * the writer tracks each record's exact byte range as it writes and
-  * publishes a sorted CDXJ sidecar at task commit — the index costs
-  * one pass of line buffering (entry-count-bounded, ~100 B/record),
-  * never a re-read of the shard.
-  */
-class WarcDataWriter(dir: String, stem: String, ords: WarcWriteOrdinals,
-    gzip: Boolean, partitionId: Int, attemptTag: String = "",
-    cdx: Boolean = true)
-    extends DataWriter[InternalRow] {
-
-  private val ext = if (gzip) ".warc.gz" else ".warc"
-  private val fs = new Path(dir).getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-  private val finalPath = new Path(dir, s"$stem$ext")
-  // the tmp name carries the attempt tag — two live attempts of one
-  // (partition, epoch) must never interleave into one file
-  private val tmpPath = new Path(dir, s".$stem$attemptTag$ext.inprogress")
-
-  // lazy: an empty partition leaves no file (empty shards are debris)
-  private var stream: java.io.OutputStream = null
-  private var rows = 0L
-  private var written = 0L
-  private val cdxEntries =
-    if (cdx) Seq.newBuilder[WarcCdx.CdxEntry] else null
-
-  /** Counts bytes at the FILE layer (below the per-record gzip, above
-    * the fs stream) — the offsets the sidecar publishes are positions
-    * in the final shard file.
+  /** One task's shard: record-at-a-time rendering (no whole-file
+    * buffering — a shard is written in one pass at any size), each
+    * record its own gzip member when `gzip`. With `cdx` (the default)
+    * the encoder tracks each record's exact byte range as it writes and
+    * publishes a sorted CDXJ sidecar as the task's second file — the
+    * index costs one pass of line buffering (entry-count-bounded,
+    * ~100 B/record), never a re-read of the shard.
     */
-  private final class Counting(out: java.io.OutputStream)
-      extends java.io.FilterOutputStream(out) {
-    override def write(b: Int): Unit = { out.write(b); written += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      out.write(b, off, len); written += len
+  override def encoder(out: graft.ros.ContainerSink.TaskFiles)
+      : graft.ros.ContainerSink.Encoder = new graft.ros.ContainerSink.Encoder {
+    // `written` counts at the FILE layer (below the per-record gzip):
+    // the offsets the sidecar publishes are positions in the shard
+    private val shard = out.create("", if (gzip) ".warc.gz" else ".warc")
+    private var rows = 0
+    private val cdxEntries = if (cdx) Seq.newBuilder[WarcCdx.CdxEntry] else null
+
+    override def write(row: InternalRow): Unit = {
+      val uri = if (row.isNullAt(targetUri)) "" else row.getUTF8String(targetUri).toString
+      val date = row.getUTF8String(warcDate).toString
+      val block = row.getBinary(payload)
+      val explicitId = if (row.isNullAt(recordId)) ""
+        else row.getUTF8String(recordId).toString
+      val rid =
+        if (explicitId.nonEmpty) explicitId
+        else WarcExport.deterministicId(uri, date, block)
+      def hdr(ord: Int, name: String): Seq[(String, String)] =
+        if (ord < 0 || row.isNullAt(ord)) Seq.empty
+        else {
+          val v = row.getUTF8String(ord).toString
+          if (v.isEmpty) Seq.empty else Seq(name -> v)
+        }
+      val extra: Seq[(String, String)] =
+        hdr(refersTo, "WARC-Refers-To") ++ hdr(payloadDigest, "WARC-Payload-Digest")
+      val rec = WarcFormat.WriteRecord(
+        warcType = row.getUTF8String(warcType).toString,
+        targetUri = uri,
+        block = block,
+        contentType = if (row.isNullAt(contentType)) ""
+          else row.getUTF8String(contentType).toString,
+        recordId = rid,
+        date = date,
+        extraHeaders = extra)
+      val bytes = WarcFormat.renderRecord(rec, 0)
+      val start = shard.written
+      if (gzip) {
+        // member per record; the shield keeps the gzip close() (which
+        // releases the member's native deflater) off the shard stream
+        val gz = new java.util.zip.GZIPOutputStream(
+          org.apache.commons.io.output.CloseShieldOutputStream.wrap(shard))
+        gz.write(bytes); gz.close()
+      } else shard.write(bytes)
+      if (cdx)
+        cdxEntries += WarcCdx.CdxEntry(WarcCdx.surtKey(uri),
+          WarcCdx.timestamp14(date), uri, rows, start, shard.written - start,
+          shard.name,
+          digest = extra.collectFirst {
+            case ("WARC-Payload-Digest", v) => v }.getOrElse(""))
+      rows += 1
     }
-  }
 
-  private def nonNull(row: InternalRow, ord: Int, name: String): Unit =
-    require(!row.isNullAt(ord), s"warc write: null '$name' " +
-      s"(partition $partitionId); filter or default nulls before writing")
-
-  override def write(row: InternalRow): Unit = {
-    if (stream == null)
-      stream = new Counting(
-        new java.io.BufferedOutputStream(fs.create(tmpPath, true), 1 << 16))
-    nonNull(row, ords.warcType, "warc_type")
-    nonNull(row, ords.payload, "payload")
-    nonNull(row, ords.warcDate, "warc_date")
-    val uri = if (row.isNullAt(ords.targetUri)) ""
-      else row.getUTF8String(ords.targetUri).toString
-    val date = row.getUTF8String(ords.warcDate).toString
-    val payload = row.getBinary(ords.payload)
-    val explicitId = if (row.isNullAt(ords.recordId)) ""
-      else row.getUTF8String(ords.recordId).toString
-    val rid =
-      if (explicitId.nonEmpty) explicitId
-      else WarcExport.deterministicId(uri, date, payload)
-    def hdr(ord: Int, name: String): Seq[(String, String)] =
-      if (ord < 0 || row.isNullAt(ord)) Seq.empty
-      else {
-        val v = row.getUTF8String(ord).toString
-        if (v.isEmpty) Seq.empty else Seq(name -> v)
+    override def finish(): AnyRef = {
+      if (cdx) {
+        val side = out.create("", ".cdx")
+        side.write(WarcCdx.sidecarBytes(
+          cdxEntries.result().sortBy(e => (e.surt, e.timestamp))))
       }
-    val extra: Seq[(String, String)] =
-      hdr(ords.refersTo, "WARC-Refers-To") ++
-        hdr(ords.payloadDigest, "WARC-Payload-Digest")
-    val rec = WarcFormat.WriteRecord(
-      warcType = row.getUTF8String(ords.warcType).toString,
-      targetUri = uri,
-      block = payload,
-      contentType = if (row.isNullAt(ords.contentType)) ""
-        else row.getUTF8String(ords.contentType).toString,
-      recordId = rid,
-      date = date,
-      extraHeaders = extra)
-    val bytes = WarcFormat.renderRecord(rec, 0)
-    val start = written
-    if (gzip) {
-      // member per record; the shield keeps the gzip close() (which
-      // releases the member's native deflater) off the shard stream
-      val gz = new java.util.zip.GZIPOutputStream(
-        org.apache.commons.io.output.CloseShieldOutputStream.wrap(stream))
-      gz.write(bytes); gz.close()
-    } else stream.write(bytes)
-    if (cdx)
-      cdxEntries += WarcCdx.CdxEntry(WarcCdx.surtKey(uri),
-        WarcCdx.timestamp14(date), uri, rows.toInt, start, written - start,
-        finalPath.getName,
-        digest = extra.collectFirst {
-          case ("WARC-Payload-Digest", v) => v }.getOrElse(""))
-    rows += 1
-  }
-
-  override def commit(): WriterCommitMessage = {
-    if (stream == null) return WarcFileCommit(null, 0L)
-    stream.close()
-    // streaming epoch replays re-commit the same deterministic name:
-    // replace, never duplicate
-    if (fs.exists(finalPath)) fs.delete(finalPath, false)
-    require(fs.rename(tmpPath, finalPath),
-      s"warc write: rename $tmpPath -> $finalPath failed")
-    // sidecar AFTER the shard: a reader that sees the index can
-    // always fetch the bytes it addresses (the reverse would address
-    // a half-renamed shard); epoch replays replace it with the shard
-    if (cdx)
-      WarcCdx.writeSidecar(finalPath.toString,
-        cdxEntries.result().sortBy(e => (e.surt, e.timestamp)))
-    WarcFileCommit(finalPath.toString, rows)
-  }
-
-  override def abort(): Unit = {
-    if (stream != null) {
-      try stream.close() catch { case _: java.io.IOException => () }
-      fs.delete(tmpPath, false); ()
+      null
     }
   }
+}
 
-  override def close(): Unit = ()
+object WarcSink {
+  def apply(w: graft.ros.ContainerSink.Request): WarcSink =
+    new WarcSink(
+      warcType = w.need("warc_type", StringType),
+      payload = w.need("payload", BinaryType),
+      warcDate = w.need("warc_date", StringType),
+      targetUri = w.need("target_uri", StringType, nullable = true),
+      contentType = w.need("content_type", StringType, nullable = true),
+      recordId = w.need("record_id", StringType, nullable = true),
+      refersTo = w.opt("refers_to", StringType),
+      payloadDigest = w.opt("payload_digest", StringType),
+      gzip = w.option("gzip").forall(_.toBoolean),
+      // cdx sidecars ON by default: an archive without its index is
+      // sequential-scan-only; `option("cdx", "false")` opts out
+      cdx = w.option("cdx").forall(_.toBoolean))
 }
 
 /** Conform arbitrary frames to the warc write spine. */

@@ -124,7 +124,8 @@ object WarcDataSource {
 class WarcTable(path: String, orderedShards: Boolean = false,
     cdxLookup: Boolean = false)
     extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
+    with org.apache.spark.sql.connector.catalog.SupportsWrite
+    with graft.ros.ContainerSink.LandedMetrics {
   override def name(): String = s"warc:$path"
   override def schema(): StructType = WarcDataSource.Schema
   override def capabilities(): util.Set[TableCapability] =
@@ -136,7 +137,7 @@ class WarcTable(path: String, orderedShards: Boolean = false,
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new WarcWriteBuilder(path, info)
+    graft.ros.ContainerSink.builder(path, info, this, "warc", "WarcExport.prepare")(WarcSink(_))
 }
 
 class WarcScanBuilder(path: String, orderedShards: Boolean = false,

@@ -190,5 +190,9 @@ class ContainerEtlSpec extends SparkTestBase {
       (in, out) => { Db3Etl.run(spark, in, out); () })
     assert(m(0) == m(1), s"mcap jobs for 1 and 3 variants: $m")
     assert(d(0) == d(1), s"db3 jobs for 1 and 3 variants: $d")
+    // the two staged scratch dirs are read back with the schema they
+    // were written with: no schema-inference job for either (9 -> 7)
+    assert(m === Seq(7, 7), s"mcap jobs: $m")
+    assert(d === Seq(7, 7), s"db3 jobs: $d")
   }
 }
