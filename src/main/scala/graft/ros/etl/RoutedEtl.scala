@@ -143,14 +143,18 @@ private[ros] object RoutedEtl {
         .filter(maxMessages.fold(lit(true))(n => col("seqno") < n))
         .withColumn("seqno", col("seqno") + lit(seqnoOffset))
     // scratch dirs, Overwrite: a hard crash that never reached the
-    // cleanup cannot fail the redo with "path exists". Read back with
-    // the schema just written (nullable, as Parquet reports it): no
-    // schema-inference job
+    // cleanup cannot fail the redo with "path exists". Each is written
+    // through graft.io.LocalFs into its `data` subdir (Spark hides a
+    // read's root path named `_...` and warns that it ignored it), and
+    // read back with the schema just written (nullable, as Parquet
+    // reports it): no schema-inference job
     val stageDir = s"$out/_spine"
     val seqnoDir = s"$out/_seqno"
+    val localFs = graft.io.LocalFs.overrides(graft.ros.bag.RosbagIO.hadoopConf())
     def stage(df: DataFrame, dir: String): DataFrame = {
-      df.write.mode(SaveMode.Overwrite).option("compression", "snappy").parquet(dir)
-      spark.read.schema(StructType(df.schema.map(_.copy(nullable = true)))).parquet(dir)
+      df.write.mode(SaveMode.Overwrite).option("compression", "snappy").options(localFs)
+        .parquet(s"$dir/data")
+      spark.read.schema(StructType(df.schema.map(_.copy(nullable = true)))).parquet(s"$dir/data")
     }
     val cols = src.messages ++ (if (nativeTimestamp) Seq(src.nativeTime) else Nil) :+ col("data")
 

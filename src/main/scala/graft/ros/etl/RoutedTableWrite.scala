@@ -19,9 +19,7 @@ import org.apache.spark.util.SerializableConfiguration
   * per-table writers (Spark's own Parquet `OutputWriterFactory`, one
   * Hadoop conf per table schema, so footers carry the same schema and
   * row metadata as a DataFrame write), staged flat in `<staging>/<job>/`
-  * as `<attempt>_<table>_<part file>` (every new directory costs a
-  * `chmod` process on a local file system without Hadoop's native
-  * library).
+  * as `<attempt>_<table>_<part file>`.
   * The driver commits once the job succeeded: every listed part file
   * renames into its table dir, then each table gets its `_SUCCESS` and
   * its cached reads are refreshed. A failed job leaves every table dir
@@ -32,7 +30,7 @@ private[ros] object RoutedTableWrite {
   /** One output table: its directory and the rows' schema. */
   final case class Table(dir: String, schema: StructType)
 
-  private type Writer = (OutputWriterFactory, SerializableConfiguration)
+  private[etl] type Writer = (OutputWriterFactory, SerializableConfiguration)
 
   /** Run `route` over every partition of `rows` (it hands each output
     * row to its table with `emit(table, row)`, which writes it before
@@ -110,12 +108,13 @@ private[ros] object RoutedTableWrite {
 
   /** The tables' writer factories and confs, and a fresh job dir under
     * `staging` (a hard crash skips the cleanup; its debris must not
-    * survive into this commit).
+    * survive into this commit). Every conf, the driver's included, puts
+    * `file:` paths on [[graft.io.LocalFs]].
     */
-  private def prepare(spark: SparkSession, tables: Seq[Table], staging: String,
+  private[etl] def prepare(spark: SparkSession, tables: Seq[Table], staging: String,
       append: Boolean): (FileSystem, Seq[Writer], Path) = {
     val options = Map("compression" -> "snappy")
-    val baseConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val baseConf = graft.io.LocalFs.install(spark.sessionState.newHadoopConfWithOptions(options))
     val fs = new Path(staging).getFileSystem(baseConf)
     if (!append) tables.foreach { t =>
       require(!fs.exists(new Path(t.dir)), s"${t.dir} already exists")
@@ -135,9 +134,9 @@ private[ros] object RoutedTableWrite {
     */
   private def commit(spark: SparkSession, fs: FileSystem, tables: Seq[Table],
       files: Seq[(Int, String)]): Unit = {
+    files.map(_._1).distinct.foreach(t => fs.mkdirs(new Path(tables(t).dir)))
     files.foreach { case (t, f) =>
       val dir = new Path(tables(t).dir)
-      fs.mkdirs(dir)
       val src = new Path(f)
       require(fs.rename(src, new Path(dir, src.getName.split("_", 3)(2))),
         s"table commit: rename $src into $dir failed")

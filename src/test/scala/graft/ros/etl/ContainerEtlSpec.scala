@@ -184,15 +184,49 @@ class ContainerEtlSpec extends SparkTestBase {
         val out = freshOut("graft_cetl_jobs_out")
         EtlCommitRecordSpec.countJobs(spark)(run(dir.toString, out))
       }
-    val m = jobs((d, k) => mcap(d, "a.mcap", 12, 100L, types = k),
-      (in, out) => { McapEtl.run(spark, in, out); () })
-    val d = jobs((dir, k) => db3(dir, "a.db3", 12, 100L, types = k),
-      (in, out) => { Db3Etl.run(spark, in, out); () })
+    // Hadoop keeps file system statistics per (scheme, class)
+    def defaultFsWritten(): Long = org.apache.hadoop.fs.FileSystem
+      .getStatistics("file", classOf[org.apache.hadoop.fs.RawLocalFileSystem]).getBytesWritten
+    val written0 = defaultFsWritten()
+    val ((m, d), warns) = ContainerEtlSpec.warnings {
+      (jobs((d, k) => mcap(d, "a.mcap", 12, 100L, types = k),
+        (in, out) => { McapEtl.run(spark, in, out); () }),
+        jobs((dir, k) => db3(dir, "a.db3", 12, 100L, types = k),
+          (in, out) => { Db3Etl.run(spark, in, out); () }))
+    }
+    // the staged scratch dirs read back under a root path Spark does
+    // not hide
+    assert(!warns.exists(_.contains("All paths were ignored")), warns)
     assert(m(0) == m(1), s"mcap jobs for 1 and 3 variants: $m")
     assert(d(0) == d(1), s"db3 jobs for 1 and 3 variants: $d")
     // the two staged scratch dirs are read back with the schema they
     // were written with: no schema-inference job for either (9 -> 7)
     assert(m === Seq(7, 7), s"mcap jobs: $m")
     assert(d === Seq(7, 7), s"db3 jobs: $d")
+    // every file, the staged scratch dirs' included, was written
+    // through graft.io.LocalFs, none through Hadoop's default
+    assert(defaultFsWritten() == written0)
+  }
+}
+
+object ContainerEtlSpec {
+  /** `body`'s result and the WARN (or worse) messages logged while it ran. */
+  def warnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN)) { seen.add(e.getMessage.getFormattedMessage); () }
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try {
+      val r = body
+      (r, seen.toArray(Array.empty[String]).toSeq)
+    } finally { root.removeAppender(capture); capture.stop() }
   }
 }
