@@ -3,7 +3,6 @@ package graft.io
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's checksummed local file system (`.crc` sidecars included),
   * minus one process per created file: without Hadoop's native library
@@ -15,32 +14,35 @@ class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
 object LocalFs {
   private val Impl = "fs.file.impl"
+  private val NoCache = s"$Impl.disable.cache"
 
   /** The raw half: every `setPermission` (file creation and
     * `mkdirs(path, perm)` run through it) sets the mode bits, sticky bit
-    * included, with `Files.setAttribute(_, "unix:mode", _)`. With the
-    * native library present it is Hadoop's own.
+    * included, with `Files.setAttribute(_, "unix:mode", _)`.
     */
   final class Raw extends RawLocalFileSystem {
     override def setPermission(p: Path, perm: FsPermission): Unit =
-      if (NativeIO.isAvailable) super.setPermission(p, perm)
-      else java.nio.file.Files.setAttribute(pathToFile(p).toPath, "unix:mode",
+      java.nio.file.Files.setAttribute(pathToFile(p).toPath, "unix:mode",
         Integer.valueOf(perm.toShort.toInt))
   }
 
-  /** The settings that put [[LocalFs]] on `file:` paths for a conf that
-    * names no `file:` implementation of its own (a user's choice stays).
-    * Uncached: Hadoop caches file systems by scheme, authority and user,
-    * not by conf, so through the cache a conf gets whichever `file:`
-    * instance was asked for first.
+  /** `conf`, with `file:` paths on [[LocalFs]] unless it already names a
+    * `file:` implementation (a user's choice stays). Uncached: Hadoop
+    * caches file systems by scheme, authority and user, not by conf, so
+    * through the cache a conf gets whichever `file:` instance was asked
+    * for first.
     */
-  def overrides(conf: Configuration): Map[String, String] =
-    if (conf.get(Impl) != null) Map.empty
-    else Map(Impl -> classOf[LocalFs].getName, s"$Impl.disable.cache" -> "true")
-
-  /** `conf`, with [[overrides]] set on it. */
   def install(conf: Configuration): Configuration = {
-    overrides(conf).foreach { case (k, v) => conf.set(k, v) }
+    if (conf.get(Impl) == null) {
+      conf.set(Impl, classOf[LocalFs].getName)
+      conf.set(NoCache, "true")
+    }
     conf
   }
+
+  /** `conf`'s `file:` settings, as options that carry them into a conf
+    * Spark builds itself (a DataFrameWriter's).
+    */
+  def options(conf: Configuration): Map[String, String] =
+    Seq(Impl, NoCache).flatMap(k => Option(conf.get(k)).map(k -> _)).toMap
 }

@@ -92,7 +92,7 @@ object ContainerSink {
   /** The files of one task attempt, staged under in-progress names. */
   final class TaskFiles private[ContainerSink] (dir: String, stem: String,
       attempt: String) {
-    private val fs = fileSystem(dir)
+    private val fs = new Path(dir).getFileSystem(bag.RosbagIO.hadoopConf())
     private val staged = scala.collection.mutable.ArrayBuffer[(Path, Path, FileOut)]()
     private val promoted = scala.collection.mutable.ArrayBuffer[Path]()
 
@@ -186,9 +186,8 @@ object ContainerSink {
   private final case class Checks(ords: Array[Int], names: Array[String],
       sink: String)
 
-  /** The file system of every staging, promote and delete. */
-  private[ros] def fileSystem(dir: String): FileSystem =
-    new Path(dir).getFileSystem(bag.RosbagIO.writeConf())
+  private def fileSystem(dir: String): FileSystem =
+    new Path(dir).getFileSystem(bag.RosbagIO.hadoopConf())
 
   private def mkdirs(fs: FileSystem, dir: String): Unit = {
     val p = new Path(dir)

@@ -1,9 +1,7 @@
 package graft.ros.bag
 
 import java.util
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -666,30 +664,23 @@ object RosbagIO {
     * version made McapIO.readChunk 6 ms/chunk (10 MB/s single-thread,
     * measured) with the clone 97% of it. Callers must treat the
     * returned conf as READ-ONLY.
+    *
+    * Built with `file:` paths on [[graft.io.LocalFs]] (unless the
+    * session names its own `fs.file.impl`), so graft's local writes
+    * through it create files without a process fork per file.
     */
-  private type Confs = java.util.Map[SparkSession, Configuration]
-  private def confCache(): Confs =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, Configuration]())
-  private val readConfs = confCache()
-  private val writeConfs = confCache()
-  private lazy val fallbackConf = new Configuration()
-  private lazy val fallbackWriteConf = graft.io.LocalFs.install(new Configuration())
-  private def sessionConf(confs: Confs, fallback: => Configuration)(
-      make: Configuration => Configuration): Configuration =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(s) => confs.computeIfAbsent(s, s => make(s.sessionState.newHadoopConf()))
-      case None => fallback
+  private val confCache = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
+      org.apache.hadoop.conf.Configuration]())
+  private lazy val fallbackConf =
+    graft.io.LocalFs.install(new org.apache.hadoop.conf.Configuration())
+  private[graft] def hadoopConf(): org.apache.hadoop.conf.Configuration =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession) match {
+      case Some(s) =>
+        confCache.computeIfAbsent(s, s => graft.io.LocalFs.install(s.sessionState.newHadoopConf()))
+      case None => fallbackConf
     }
-  private[graft] def hadoopConf(): Configuration = sessionConf(readConfs, fallbackConf)(identity)
-
-  /** The conf of graft's own file writes (ETL driver files, container
-    * sinks): [[hadoopConf]]'s settings with `file:` paths on
-    * [[graft.io.LocalFs]], which creates files without a process fork
-    * per file. A conf of its own, cached the same way, so the shared
-    * read conf is never mutated; equally READ-ONLY.
-    */
-  private[graft] def writeConf(): Configuration =
-    sessionConf(writeConfs, fallbackWriteConf)(graft.io.LocalFs.install)
 
   private def fs(path: String) = {
     val p = new Path(path)

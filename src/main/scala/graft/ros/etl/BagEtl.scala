@@ -225,7 +225,7 @@ object BagEtl {
     */
   private[ros] def writeDdlFile(out: String, ddl: String, append: Boolean): Unit = {
     val ddlPath = new org.apache.hadoop.fs.Path(s"$out/vertica_load_tables.sql")
-    val ddlFs = ddlPath.getFileSystem(graft.ros.bag.RosbagIO.writeConf())
+    val ddlFs = ddlPath.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
     val priorDdl =
       if (append && ddlFs.exists(ddlPath)) {
         val in = ddlFs.open(ddlPath)
@@ -257,7 +257,7 @@ object BagEtl {
   }
   private[ros] def writeManifest(out: String, m: Map[(String, String), String]): Unit = {
     val p = manifestFsPath(out)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.writeConf())
+    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
     val body = m.toSeq.sortBy(t => (t._1._1, t._1._2))
       .map { case ((dt, md5), n) => s""""$dt|$md5":"$n"""" }
       .mkString("{", ",", "}")
@@ -305,7 +305,7 @@ object BagEtl {
   private[ros] def writeCommitRecord(out: String, committed: Long,
       inflight: Seq[String]): Unit = {
     val p = commitRecordFsPath(out)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.writeConf())
+    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
     val body = s"""{"committed":$committed,"inflight":[""" +
       inflight.map(f => "\"" + escapeJson(f) + "\"").mkString(",") + "]}"
     val os = fs.create(p, true)

@@ -150,7 +150,7 @@ private[ros] object RoutedEtl {
     // reports it): no schema-inference job
     val stageDir = s"$out/_spine"
     val seqnoDir = s"$out/_seqno"
-    val localFs = graft.io.LocalFs.overrides(graft.ros.bag.RosbagIO.hadoopConf())
+    val localFs = graft.io.LocalFs.options(graft.ros.bag.RosbagIO.hadoopConf())
     def stage(df: DataFrame, dir: String): DataFrame = {
       df.write.mode(SaveMode.Overwrite).option("compression", "snappy").options(localFs)
         .parquet(s"$dir/data")

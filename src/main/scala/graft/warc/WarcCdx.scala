@@ -209,7 +209,7 @@ object WarcCdx {
   private def writeSidecar(shard: String, entries: Seq[CdxEntry],
       attempt: String): Unit = {
     val side = new Path(sidecarPath(shard))
-    val fs = side.getFileSystem(graft.ros.bag.RosbagIO.writeConf())
+    val fs = side.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
     val base = side.getName.stripSuffix(".cdx")
     val tmp = new Path(side.getParent, s".$base$attempt.cdx.inprogress")
     val out = fs.create(tmp, true)

@@ -7,14 +7,14 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.SparkTestBase
 import graft.io.LocalFs
-import graft.ros.{ContainerSink, MsgDefParser, RosSchemaMapper}
+import graft.ros.{MsgDefParser, RosSchemaMapper}
 import graft.ros.bag.{BagFormat, RosbagIO}
 import graft.ros.bag.BagFormat.{BagConnection, WriteMessage}
 
 /** graft's own local writes resolve `file:` paths to [[LocalFs]]: the
-  * routed table writer's confs, the ETL driver files' conf and the
-  * container sinks' file system. The shared read conf keeps Hadoop's
-  * default, and a user's `fs.file.impl` always wins.
+  * routed table writer's confs and the shared `RosbagIO.hadoopConf()`
+  * behind the ETL driver files and the container sinks. A user's
+  * `fs.file.impl` always wins.
   */
 class LocalWriteConfSpec extends SparkTestBase {
 
@@ -40,33 +40,30 @@ class LocalWriteConfSpec extends SparkTestBase {
       .readObject().asInstanceOf[org.apache.spark.util.SerializableConfiguration].value
   }
 
-  test("graft's write confs put file: paths on LocalFs; the shared read conf does not") {
+  test("graft's confs put file: paths on LocalFs") {
     val (fs, confs) = tableWrite(spark)
     assert(fs.getClass == classOf[LocalFs])
     confs.foreach(c => assert(resolves(shipped(c)) == classOf[LocalFs]))
-    assert(resolves(RosbagIO.writeConf()) == classOf[LocalFs])
-    assert(ContainerSink.fileSystem(file.toString).getClass == classOf[LocalFs])
-    assert(resolves(RosbagIO.hadoopConf()) != classOf[LocalFs])
-    assert(RosbagIO.hadoopConf().get("fs.file.impl") == null)
+    assert(resolves(RosbagIO.hadoopConf()) == classOf[LocalFs])
+    assert(resolves(new Configuration()) != classOf[LocalFs])
   }
 
   test("a user's fs.file.impl is left alone") {
     val user = classOf[LocalFileSystem].getName
     val conf = new Configuration(false)
     conf.set("fs.file.impl", user)
-    assert(LocalFs.overrides(conf).isEmpty)
-    assert(LocalFs.install(conf).get("fs.file.impl.disable.cache") == null)
+    assert(LocalFs.options(LocalFs.install(conf)) == Map("fs.file.impl" -> user))
     val s = spark.newSession()
     s.conf.set("fs.file.impl", user)
     SparkSession.setActiveSession(s)
     try {
       val (fs, confs) = tableWrite(s)
       assert(fs.getClass != classOf[LocalFs])
-      (confs :+ RosbagIO.writeConf()).foreach { c =>
+      (confs :+ RosbagIO.hadoopConf()).foreach { c =>
         assert(c.get("fs.file.impl") == user)
         assert(c.get("fs.file.impl.disable.cache") == null)
       }
-      assert(ContainerSink.fileSystem(file.toString).getClass != classOf[LocalFs])
+      assert(resolves(RosbagIO.hadoopConf()) != classOf[LocalFs])
     } finally SparkSession.setActiveSession(spark)
   }
 
