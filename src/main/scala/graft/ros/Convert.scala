@@ -717,7 +717,7 @@ object Convert {
     val prepared = format match {
       case "mcap" =>
         val df = spark.read.format("mcap")
-          .option("files", mcap.McapDataSource.filesSpec(files)).load()
+          .option("files", ContainerSource.filesSpec(files)).load()
         mcap.McapExport.prepare(df,
           topic = col("topic"), logTimeNs = col("log_time"),
           data = col("data"), schemaName = col("schema_name"),
@@ -727,7 +727,7 @@ object Convert {
           sourcePath = col("file_path"))
       case "rosbag" =>
         val df = spark.read.format("rosbag")
-          .option("bags", bag.RosbagDataSource.bagsSpec(files)).load()
+          .option("bags", ContainerSource.filesSpec(files)).load()
         bag.BagExport.prepare(df, topic = col("topic"),
           timeNs = col("time_sec").cast("long") * lit(1000000000L) +
             col("time_nsec").cast("long"),
@@ -735,7 +735,7 @@ object Convert {
           sourcePath = col("bag_path"))
       case "db3" =>
         val df = spark.read.format("db3")
-          .option("files", db3.Db3DataSource.filesSpec(files)).load()
+          .option("files", ContainerSource.filesSpec(files)).load()
         db3.Db3Export.prepare(df, topic = col("topic"),
           timestampNs = col("timestamp"), data = col("data"),
           tpe = col("type"),
@@ -755,7 +755,7 @@ object Convert {
     val stagePath = new org.apache.hadoop.fs.Path(outPath, s".compact-$tag")
     val auto = format match {
       case "mcap" =>
-        autoProfile(options, "mcap", mcap.McapDataSource.filesSpec(files))
+        autoProfile(options, "mcap", ContainerSource.filesSpec(files))
       case "db3" =>
         db3.Db3BagMetadata.compactCompressionOptions(fs, outPath, options)
       case _ => Map.empty[String, String]

@@ -55,33 +55,11 @@ object MixedRead {
     * EXPLICITLY named file of unknown extension fails loudly.
     */
   def resolve(path: String): Map[String, Seq[String]] = {
-    val conf = graft.ros.bag.RosbagIO.hadoopConf()
-    val out = path.split('\n').filter(_.nonEmpty).toSeq.flatMap { spec =>
-      val p = new org.apache.hadoop.fs.Path(spec)
-      val fs = p.getFileSystem(conf)
-      if (fs.isDirectory(p)) {
-        // a pending compact journal (crash window) leaves BOTH
-        // generations on disk — serve one consistent view
-        val masked = CompactJournal.maskedNames(fs, p)
-        fs.listStatus(p).toSeq.filter(_.isFile)
-          .filterNot(s => masked.contains(s.getPath.getName))
-          .flatMap(s => classify(s.getPath.getName).map(_ -> s.getPath.toString))
-      }
-      else {
-        val stats = CompactJournal.maskGlobbed(fs,
-          Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-            .filter(_.isFile))
-        require(stats.nonEmpty || fs.exists(p), s"path not found: $spec")
-        stats.map { s =>
-          val kind = classify(s.getPath.getName).getOrElse(throw
-            new IllegalArgumentException(
-              s"${s.getPath}: not a recognized container " +
-                "(.bag / .mcap / .db3 / .db3.zstd)"))
-          kind -> s.getPath.toString
-        }
-      }
+    val grouped = ContainerSource.list(path, classify(_).isDefined).groupBy { f =>
+      classify(f.substring(f.lastIndexOf('/') + 1)).getOrElse(throw
+        new IllegalArgumentException(s"$f: not a recognized container " +
+          "(.bag / .mcap / .db3 / .db3.zstd)"))
     }
-    val grouped = out.groupBy(_._1).view.mapValues(_.map(_._2).distinct.sorted).toMap
     require(grouped.nonEmpty, s"no container files under $path")
     grouped
   }
@@ -140,7 +118,7 @@ object MixedRead {
         // the *Spec helpers fail loudly on newline-bearing paths the
         // newline-separated option encoding cannot carry
         spark.read.format("rosbag")
-          .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(files)).load()
+          .option("bags", graft.ros.ContainerSource.filesSpec(files)).load()
           .select(col("bag_path").as("file_path"),
             lit("rosbag").as("container"), col("topic"),
             col("datatype").as("type"),
@@ -153,7 +131,7 @@ object MixedRead {
             col("size"), col("data"))
       case ("mcap", files) =>
         spark.read.format("mcap")
-          .option("files", graft.ros.mcap.McapDataSource.filesSpec(files)).load()
+          .option("files", graft.ros.ContainerSource.filesSpec(files)).load()
           .select(col("file_path"), lit("mcap").as("container"), col("topic"),
             col("schema_name").as("type"),
             col("message_encoding").as("encoding"),
@@ -162,7 +140,7 @@ object MixedRead {
             col("size"), col("data"))
       case ("db3", files) =>
         spark.read.format("db3")
-          .option("files", graft.ros.db3.Db3DataSource.filesSpec(files)).load()
+          .option("files", graft.ros.ContainerSource.filesSpec(files)).load()
           .select(col("file_path"), lit("db3").as("container"), col("topic"),
             col("type"), col("serialization_format").as("encoding"),
             col("timestamp"),

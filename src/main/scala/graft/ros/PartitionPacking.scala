@@ -2,7 +2,6 @@ package graft.ros
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
-import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Chunk-to-partition BIN-PACKING for the container sources.
   *
@@ -33,8 +32,9 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * A pack of ONE stays the bare per-chunk partition (the common case
   * for well-chunked archives and all streaming micro-batches — those
   * plan their own per-slice partitions and never pack); a larger pack
-  * rides [[PackedPartition]] and a concatenating reader, so the six
-  * per-chunk reader implementations stay untouched. Java
+  * rides [[PackedPartition]] and a concatenating reader
+  * ([[ContainerSource.Readers]]), so the per-chunk readers stay
+  * untouched. Java
   * serialization writes the per-file schema/channel maps ONCE per
   * packed partition (shared references within one object graph), so
   * packing also removes the per-chunk duplication of file metadata.
@@ -144,16 +144,4 @@ final class ConcatPartitionReader[T](parts: Array[InputPartition],
   override def get(): T = cur.get()
 
   override def close(): Unit = if (cur != null) { cur.close(); cur = null }
-}
-
-object ConcatPartitionReader {
-  def rows(p: PackedPartition,
-      mk: InputPartition => PartitionReader[org.apache.spark.sql.catalyst.InternalRow])
-      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    new ConcatPartitionReader(p.parts, mk)
-
-  def batches(p: PackedPartition,
-      mk: InputPartition => PartitionReader[ColumnarBatch])
-      : PartitionReader[ColumnarBatch] =
-    new ConcatPartitionReader(p.parts, mk)
 }

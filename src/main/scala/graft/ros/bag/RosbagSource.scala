@@ -3,13 +3,15 @@ package graft.ros.bag
 import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import graft.ros.MsgDefParser
+import graft.ros.{ContainerSource, MetadataAgg, MetadataAggScan, MsgDefParser, PartitionPacking}
 
 /** DataSource V2 `rosbag` batch source — the Spark re-expression of the
   * reference's scan loop (reference rosbag2parquet.cpp:41-63): one
@@ -65,32 +67,72 @@ class RosbagDataSource extends TableProvider with DataSourceRegister {
 }
 
 object RosbagDataSource {
+  import ContainerSource._
+
   /** The path spec a table reads: `option("bags", "<p1>\n<p2>...")`
-    * (an EXPLICIT newline-separated list — lets a caller plan one scan
-    * relation over an arbitrary bag subset, e.g. the incremental ETL's
-    * new-bags slice, instead of an N-way union) or the ordinary
-    * load-path. Each listed entry may itself be a file/dir/glob;
-    * RosbagIO.resolveBags splits and resolves.
+    * (an explicit newline-separated list, [[ContainerSource.filesSpec]]
+    * — one scan relation over an arbitrary bag subset, e.g. the
+    * incremental ETL's new-bags slice, instead of an N-way union) or
+    * the ordinary load path. Each listed entry may itself be a
+    * file/dir/glob.
     */
-  def pathSpec(opts: CaseInsensitiveStringMap): String = {
-    val bags = opts.get("bags")
-    if (bags != null && bags.nonEmpty) bags else opts.get("path")
+  def pathSpec(opts: CaseInsensitiveStringMap): String = ContainerSource.pathSpec(opts, "bags")
+
+  def isBag(name: String): Boolean = name.endsWith(".bag")
+
+  /** The bag files `spec` denotes (a directory lists its *.bag children). */
+  def files(spec: String): Seq[String] = resolve(spec, isBag, ".bag")
+
+  val Roles: ContainerSource.Roles = {
+    val cols = Set("connection_id", "topic", "datatype", "time_sec", "bag_path")
+    ContainerSource.Roles("bag_path", Some("time_sec"), cols, cols,
+      Seq("bag_path", "topic", "datatype", "connection_id"))
   }
 
-  /** Build the newline-separated "bags" option value from resolved
-    * paths. '\n' is the list separator, so a POSIX path containing a
-    * newline (legal, and a case RosbagDirOffset's escaping supports)
-    * cannot ride this spec — it would silently split into two
-    * nonexistent entries. Fail loudly at construction instead.
-    */
-  def bagsSpec(bags: Seq[String]): String = {
-    bags.find(_.contains('\n')).foreach { b =>
-      throw new IllegalArgumentException(
-        "bag path contains a newline and cannot be passed via the " +
-        s"newline-separated 'bags' option: ${b.replace("\n", "\\n")}")
-    }
-    bags.mkString("\n")
+  /** The connection catalog's filter columns. */
+  val catalog: PartialFunction[String, Col[BagFormat.BagConnection]] = {
+    case "topic" => StrCol[BagFormat.BagConnection](_.topic)
+    case "datatype" => StrCol[BagFormat.BagConnection](_.datatype)
+    case "connection_id" => LongCol[BagFormat.BagConnection](_.connId)
   }
+
+  /** A bag's connections by id. A typed read pins ONE (datatype, md5)
+    * variant: a bag carrying both variants of the datatype (two
+    * connections) must not decode the other variant's messages with
+    * this definition, so mismatched same-datatype connections drop and
+    * the reader's type filter skips them.
+    */
+  def conns(index: BagFormat.BagIndex, variant: Option[(String, String)])
+      : Map[Int, BagFormat.BagConnection] =
+    index.connections.map(c => c.connId -> c).toMap.filter { case (_, c) =>
+      variant.forall { case (dt, md5) => c.datatype != dt || c.md5sum == md5 } }
+
+  /** A chunk's chunk-info `time_sec` range; chunks without one (foreign
+    * writers) are never pruned.
+    */
+  def range(c: BagFormat.BagChunk): Option[(Long, Long)] = (c.startTime, c.endTime) match {
+    case (Some((lo, _)), Some((hi, _))) => Some((lo.toLong, hi.toLong))
+    case _ => None
+  }
+
+  /** The spine or typed readers of a scan; every spine column vectorizes
+    * (ints / interned strings / nullable stamps / binary), a typed scan
+    * when every required column has a columnar shape.
+    */
+  def readers(required: StructType, filters: Array[Filter], limit: Int,
+      typed: Option[(String, String)], includeRaw: Boolean): PartitionReaderFactory =
+    typed match {
+      case Some((dt, msgDef)) => new Readers(
+        p => new RosbagTypedPartitionReader(p, dt, msgDef, required, includeRaw, filters),
+        if (RosbagColumnarRead.enabled && RosbagColumnarRead.supportsColumnar(required))
+          Some(p => new RosbagTypedColumnarReader(p, dt, msgDef, required, includeRaw, filters))
+        else None)
+      case None => new Readers(
+        p => new RosbagPartitionReader(p, required, filters, limit),
+        if (RosbagColumnarRead.enabled)
+          Some(p => new RosbagMetaColumnarReader(p, required, filters, limit))
+        else None)
+    }
 
   /** The message-spine schema (reference Messages table,
     * FlattenedRosWriter.cpp:49-87, plus the connection attributes the
@@ -174,362 +216,68 @@ object RosbagDataSource {
 
 class RosbagTable(path: String, datatype: Option[String] = None,
                   includeRaw: Boolean = false, md5: Option[String] = None)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with graft.ros.ContainerSink.LandedMetrics
+    extends ContainerSource.ContainerTable("rosbag", path, datatype,
+      datatype.map(_ => "datatype read option"), "BagExport.prepare")
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
   // typed reads resolve (datatype, md5 variant) -> one msg def + the
   // bags that carry it, ONCE per table (multi-bag loads with schema
   // drift pick a variant via option("md5", prefix))
   private lazy val target: Option[RosbagTypedRead.TypedTarget] =
     datatype.map(dt => RosbagTypedRead.resolveTarget(path, dt, md5))
-  override def name(): String = s"rosbag:$path${datatype.map(":" + _).getOrElse("")}"
   override def schema(): StructType = target match {
     case Some(t) =>
       RosbagTypedRead.typedSchema(MsgDefParser.parse(t.datatype, t.msgDef), includeRaw)
     case None => RosbagDataSource.SpineSchema
   }
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE)
   // the global seqno (RosbagSeqno), read with
   // Dataset.metadataColumn("seqno"): never part of `SELECT *`, so every
   // scan that does not ask for it plans and reads as before
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
     Array(RosbagDataSource.SeqnoColumn)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RosbagScanBuilder(path, schema(), target, includeRaw)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(datatype.isEmpty,
-      "rosbag write goes through the spine shape — drop the datatype read option")
-    graft.ros.ContainerSink.builder(path, info, this, "rosbag", "BagExport.prepare")(BagSink(_))
-  }
+  override protected def read: ContainerSource.Read = new RosbagRead(path, target, includeRaw)
+  override protected def sink(req: graft.ros.ContainerSink.Request): graft.ros.ContainerSink.Format =
+    BagSink(req)
 }
 
-class RosbagScanBuilder(path: String, fullSchema: StructType,
-    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit
-    with SupportsPushDownAggregates {
-  private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  private var seqnoFilters: Array[Filter] = Array.empty
-  private var limit: Int = -1
-  private var agg: Option[(StructType, Seq[Seq[Any]])] = None
+/** The rosbag read: one unit per bag chunk, its chunk-info time range
+  * pruning `time_sec`, the connection catalog pruning topic / datatype /
+  * connection_id. A typed read plans only the bags carrying the resolved
+  * (datatype, md5) variant. Format hooks: the `seqno` column's overlap
+  * groups and the metadata-only aggregates.
+  */
+final class RosbagRead(val spec: String, target: Option[RosbagTypedRead.TypedTarget],
+    includeRaw: Boolean) extends ContainerSource.Read {
+  import ContainerSource._
+  override def kind: String = "rosbag"
+  override def roles: Roles = RosbagDataSource.Roles
+  override def typed: Option[String] = target.map(_.datatype)
+  // typed reads push only the columns their reader sees before decode
+  override def typedCols: Set[String] = Set("connection_id", "time_sec", "bag_path")
+  override lazy val files: Seq[String] = target.map(_.bags).getOrElse(RosbagDataSource.files(spec))
 
-  /** Metadata-only aggregate pushdown (graft.ros.MetadataAgg):
-    * `count(*)` and `groupBy(topic/datatype/connection_id/bag_path)
-    * .count()` sum the chunk-info records' per-connection counts;
-    * ungrouped `min/max(time_sec)` reads the chunk-info start/end
-    * times (start_time = the chunk's earliest (sec,nsec) receive
-    * stamp, so its SEC is the minimum time_sec — sec is the
-    * high-order component of the lexicographic order; likewise the
-    * max). No chunk body is ever read. Refused (normal scan) when any
-    * chunk lacks chunk-info counts/times or counts a connection
-    * absent from the catalog. min/max(time_nsec) is NOT answerable
-    * from metadata (the nsec of the extreme message is not the
-    * extreme nsec) and falls back.
-    */
-  override def pushAggregation(
-      a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    import graft.ros.MetadataAgg
-    if (typed.isDefined || pushed.nonEmpty || seqnoFilters.nonEmpty || limit >= 0)
-      return false
-    MetadataAgg.parse(a,
-        Set("bag_path", "topic", "datatype", "connection_id"),
-        Set("time_sec")) match {
-      case None => false
-      case Some((cols, specs)) =>
-        val idx = RosbagIO.scanIndexes(RosbagIO.resolveBags(path))
-        val needTimes = specs.exists(_ != MetadataAgg.CountStarSpec)
-        val sound = idx.forall { case (_, index) =>
-          val connIds = index.connections.map(_.connId).toSet
-          index.chunks.forall(ch =>
-            ch.connCounts.exists(
-              _.forall { case (id, _) => connIds.contains(id) }) &&
-              (!needTimes || (ch.startTime.isDefined && ch.endTime.isDefined)))
-        }
-        if (!sound) false
-        else if (needTimes) {
-          val perFile = idx.map { case (_, index) =>
-            // message-bearing chunks only: an empty chunk's info times
-            // (a foreign writer may stamp them 0) must not pollute min
-            val full = index.chunks.filter(
-              _.connCounts.get.map(_._2.toLong).sum > 0L)
-            val n = full.flatMap(_.connCounts.get).map(_._2.toLong).sum
-            if (full.isEmpty)
-              (0L, Map.empty[String, Any], Map.empty[String, Any])
-            else
-              (n,
-                Map[String, Any](
-                  "time_sec" -> full.map(_.startTime.get._1).min),
-                Map[String, Any](
-                  "time_sec" -> full.map(_.endTime.get._1).max))
-          }
-          agg = Some((MetadataAgg.schemaFor(specs, RosbagDataSource.SpineSchema),
-            MetadataAgg.fileRows(specs, perFile)))
-          true
-        } else {
-          val units = idx.flatMap { case (bag, index) =>
-            val conns = index.connections.map(c => c.connId -> c).toMap
-            index.chunks.flatMap(_.connCounts.get).map { case (id, n) =>
-              val c = conns(id)
-              (Map[String, Any]("bag_path" -> bag, "topic" -> c.topic,
-                "datatype" -> c.datatype, "connection_id" -> id), n.toLong)
-            }
-          }
-          val nCounts = a.aggregateExpressions.length
-          agg = Some((MetadataAgg.schema(cols,
-            RosbagDataSource.SpineSchema, nCounts),
-            MetadataAgg.rows(cols, nCounts, units)))
-          true
-        }
-    }
-  }
+  private def numbered(required: StructType) = required.fieldNames.contains(RosbagSeqno.Column)
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // typed reads only push meta-column filters (payload filters stay
-    // upstream); the spine read pushes topic/datatype too
-    val pushable: Filter => Boolean =
-      if (typed.isDefined) f => RosbagFilters.supported(f) &&
-        f.references.forall(Set("connection_id", "time_sec", "bag_path"))
-      else RosbagFilters.supported
-    val (supported, residual) = filters.partition(pushable)
-    pushed = supported
-    // seqno bounds prune whole overlap groups at planning (never
-    // evaluated per row: Spark re-applies them above the scan)
-    seqnoFilters = filters.filter(RosbagSeqno.isSeqnoFilter)
-    residual ++ supported // conservatively keep all as residual upstream
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan = agg match {
-    case Some((sch, rows)) =>
-      new graft.ros.MetadataAggScan(sch, rows, s"rosbag $path")
-    case None => new RosbagScan(path, required, pushed, limit, typed, includeRaw,
-      seqnoFilters)
-  }
-}
-
-object RosbagFilters {
-  private val cols = Set("connection_id", "topic", "datatype", "time_sec", "bag_path")
-
-  /** Bag-level pruning: a bag_path equality/In filter drops WHOLE bags
-    * from the plan — the multi-bag analog of partition pruning (a fleet
-    * query over one vehicle's bags never opens the others' indexes).
-    *
-    * Matching is EXACT against the stored value (the fully-qualified
-    * URI, e.g. "file:/data/a.bag") — deliberately not fuzzy: Spark
-    * re-applies every filter as a residual above the scan with plain
-    * string equality, so a source that matched "/data/a.bag" loosely
-    * would emit rows the Catalyst Filter then drops anyway. Take
-    * filter values from read bag_path values (or qualify with Hadoop
-    * Path first).
-    */
-  def bagMayMatch(f: Filter, path: String): Boolean = f match {
-    case EqualTo("bag_path", v) => path == v
-    case In("bag_path", vs) => vs.contains(path)
-    case _ => true
-  }
-
-  /** Connection-catalog pruning: once a bag's index is read, a
-    * topic/datatype/connection_id equality/IN filter no connection can
-    * satisfy drops the WHOLE bag's chunks from the plan (the db3
-    * topics-catalog / mcap channel-catalog analog).
-    */
-  def bagMayMatchConns(f: Filter,
-      conns: Iterable[BagFormat.BagConnection]): Boolean = f match {
-    case EqualTo("topic", v) => conns.exists(_.topic == v)
-    case In("topic", vs) => conns.exists(c => vs.contains(c.topic))
-    case EqualTo("datatype", v) => conns.exists(_.datatype == v)
-    case In("datatype", vs) => conns.exists(c => vs.contains(c.datatype))
-    case EqualTo("connection_id", v: Number) =>
-      conns.exists(_.connId == v.intValue())
-    case In("connection_id", vs) =>
-      vs.exists { case v: Number => conns.exists(_.connId == v.intValue())
-                  case _ => true }
-    case _ => true
-  }
-
-  /** Chunk-level pruning: can this chunk possibly contain a row
-    * passing `f`, given its chunk-info time range? Conservative —
-    * chunks without ranges (foreign writers) are never pruned.
-    * The analog of parquet row-group stats pruning, over the bag's
-    * own chunk index (reference README.md:8).
-    */
-  def chunkMayMatch(f: Filter, chunk: BagFormat.BagChunk): Boolean = {
-    (chunk.startTime, chunk.endTime) match {
-      case (Some((sMin, _)), Some((sMax, _))) =>
-        def num(v: Any): Option[Long] = v match {
-          case n: Number => Some(n.longValue()); case _ => None
-        }
-        f match {
-          case GreaterThan("time_sec", v) => num(v).forall(x => sMax > x)
-          case GreaterThanOrEqual("time_sec", v) => num(v).forall(x => sMax >= x)
-          case LessThan("time_sec", v) => num(v).forall(x => sMin < x)
-          case LessThanOrEqual("time_sec", v) => num(v).forall(x => sMin <= x)
-          case EqualTo("time_sec", v) => num(v).forall(x => sMin <= x && x <= sMax)
-          case _ => true
-        }
-      case _ => true
-    }
-  }
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(c, _) => cols(c)
-    case In(c, _) => cols(c)
-    case GreaterThan(c, _) => cols(c)
-    case GreaterThanOrEqual(c, _) => cols(c)
-    case LessThan(c, _) => cols(c)
-    case LessThanOrEqual(c, _) => cols(c)
-    case _ => false
-  }
-
-  // `path` is REQUIRED (no default): a call site that forgot it would
-  // silently evaluate pushed bag_path filters against "" and drop every
-  // row — the compiler must catch the omission instead.
-  def eval(f: Filter, m: BagFormat.BagMessage, conn: BagFormat.BagConnection,
-           path: String): Boolean = {
-    def v(c: String): Any = c match {
-      case "connection_id" => m.connId
-      case "topic" => conn.topic
-      case "datatype" => conn.datatype
-      case "time_sec" => m.timeSec
-      case "bag_path" => path
-    }
-    def cmp(a: Any, b: Any): Int = (a, b) match {
-      case (x: Int, y: Number) => java.lang.Integer.compare(x, y.intValue())
-      case (x: String, y: String) => x.compareTo(y)
-      case _ => 0
-    }
-    f match {
-      case EqualTo(c, value) => cmp(v(c), value) == 0
-      case In(c, values) => values.exists(value => cmp(v(c), value) == 0)
-      case GreaterThan(c, value) => cmp(v(c), value) > 0
-      case GreaterThanOrEqual(c, value) => cmp(v(c), value) >= 0
-      case LessThan(c, value) => cmp(v(c), value) < 0
-      case LessThanOrEqual(c, value) => cmp(v(c), value) <= 0
-      case _ => true
-    }
-  }
-}
-
-final case class RosbagInputPartition(path: String, chunkIdx: Int,
-    chunk: BagFormat.BagChunk, conns: Map[Int, BagFormat.BagConnection])
-  extends InputPartition
-
-class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limit: Int,
-    typed: Option[RosbagTypedRead.TypedTarget] = None, includeRaw: Boolean = false,
-    seqnoFilters: Array[Filter] = Array.empty)
-    extends Scan with Batch
-    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  private val numbered = required.fieldNames.contains(RosbagSeqno.Column)
-
-  // Runtime (DPP-style) filters from joins against selective
-  // dimensions (RosbagTables.connections, a fleet manifest):
-  // BatchScanExec re-plans partitions after filter(), so whole bags
-  // prune via bag_path and the connection catalog at execution time.
-  // Typed reads accept only the columns their eval context carries
-  // (the pushFilters contract).
-  private var runtime: Array[Filter] = Array.empty
-  private def filters: Array[Filter] = pushed ++ runtime
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // only columns the (pruned) output carries: Spark resolves these
-    // against the scan's output and FAILS on a projected-away column
-    (if (typed.isDefined) Array("bag_path", "connection_id")
-     else Array("bag_path", "topic", "datatype", "connection_id"))
-      .filter(required.fieldNames.contains(_))
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-  override def filter(fs: Array[Filter]): Unit =
-    runtime = fs.filter { f =>
-      RosbagFilters.supported(f) && (typed.isEmpty ||
-        f.references.forall(Set("connection_id", "time_sec", "bag_path")))
-    }
-
-  // bz2/lz4 chunk bodies make this an UNDER-estimate of row bytes —
-  // fine for join-side sizing; row count unknowable without indexes
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      private lazy val bytes: Long = graft.ros.DriverPool.totalBytes(
-        typed.map(_.bags).getOrElse(RosbagIO.resolveBags(path)),
-        RosbagIO.hadoopConf())
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty()
-    }
-
-  override def toBatch: Batch = this
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    if (numbered) throw new UnsupportedOperationException(
-      "the seqno metadata column numbers a whole batch load; streams cannot select it")
-    // a single existing FILE is tailed as one growing bag; a directory
-    // or glob streams as a fleet-ingest archive — new bags AND new
-    // chunks of known bags are picked up per trigger
-    val p = new Path(path)
-    val isSingleFile = !path.contains('\n') &&
-      !path.exists(c => "*?[]{}".indexOf(c.toInt) >= 0) && {
-      try p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-        .getFileStatus(p).isFile
-      catch { case _: java.io.FileNotFoundException => false }
-    }
-    if (isSingleFile)
-      new RosbagMicroBatchStream(path, required, filters,
-        typed.map(t => (t.datatype, t.msgDef, t.md5)), includeRaw)
-    else
-      new RosbagDirMicroBatchStream(path, required, filters, typed, includeRaw)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // multi-bag: one partition per (bag, chunk). Typed reads plan only
-    // the bags carrying the resolved (datatype, md5) variant; bag_path
-    // filters prune whole bags before any index is opened; chunk-info
-    // time ranges prune chunks within each surviving bag.
-    val bagPaths = typed.map(_.bags).getOrElse(RosbagIO.resolveBags(path))
-    val surviving = bagPaths.filter(b => filters.forall(f => RosbagFilters.bagMayMatch(f, b)))
-    val perChunk = RosbagIO.scanIndexes(surviving)
+  override def units(files: Seq[String], s: Planning): Seq[Planned] =
+    RosbagIO.scanIndexes(files)
       .filter { case (_, index) =>
-        filters.forall(f => RosbagFilters.bagMayMatchConns(f, index.connections)) }
+        catalogMayMatch(s.filters, index.connections, RosbagDataSource.catalog) }
       .flatMap { case (bag, index) =>
-        val conns0 = index.connections.map(c => c.connId -> c).toMap
-        // typed reads pin ONE (datatype, md5) variant: a bag carrying
-        // both variants of the datatype (two connections) must not
-        // decode the other variant's messages with this definition —
-        // drop mismatched same-datatype connections from the map so
-        // the reader's typeConns filter skips them
-        val conns = typed match {
-          case Some(t) => conns0.filter { case (_, c) =>
-            c.datatype != t.datatype || c.md5sum == t.md5 }
-          case None => conns0
+        val conns = RosbagDataSource.conns(index, target.map(t => (t.datatype, t.md5)))
+        index.chunks.zipWithIndex.map { case (c, i) =>
+          Planned(RosbagInputPartition(bag, i, c, conns), c.uncompressedSize.toLong,
+            RosbagDataSource.range(c))
         }
-        index.chunks.zipWithIndex
-          .filter { case (c, _) => filters.forall(f => RosbagFilters.chunkMayMatch(f, c)) }
-          .map { case (c, i) =>
-            (RosbagInputPartition(bag, i, c, conns), c.uncompressedSize.toLong)
-          }
       }
-    // rosbag1's DEFAULT chunk threshold is 768 KB — one task per
-    // chunk plans millions of partitions on a real fleet; pack
-    // consecutive chunks to Spark's file-split budget (see
-    // graft.ros.PartitionPacking); pruning above ran per chunk
-    graft.ros.PartitionPacking.packPartitions(
-      if (numbered) seqnoGroups(perChunk.map(_._1))
-      else perChunk.map { case (p, n) => (p: InputPartition, n) })
-  }
+
+  // rosbag1's DEFAULT chunk threshold is 768 KB — one task per chunk
+  // plans millions of partitions on a real fleet; the core packs
+  // consecutive chunks to Spark's file-split budget, a numbered scan
+  // packs whole overlap groups instead
+  override def arrange(units: Seq[Planned], s: Planning): Array[InputPartition] =
+    if (!numbered(s.required)) super.arrange(units, s)
+    else PartitionPacking.packPartitions(
+      seqnoGroups(units.map(_.part.asInstanceOf[RosbagInputPartition]), s.offered))
 
   /** A numbered scan reads whole overlap groups of the WHOLE load —
     * whatever datatype, md5 or filters narrow its output — so each
@@ -538,13 +286,15 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
     * seqno bounds, drop. A load its index cannot number (a chunk
     * without chunk-info) fails here, at planning.
     */
-  private def seqnoGroups(emitted: Seq[RosbagInputPartition]): Seq[(InputPartition, Long)] = {
+  private def seqnoGroups(emitted: Seq[RosbagInputPartition],
+      offered: Array[Filter]): Seq[(InputPartition, Long)] = {
     val byChunk = emitted.map(p => (p.path, p.chunkIdx) -> p).toMap
-    RosbagSeqno.groups(RosbagIO.scanIndexes(RosbagIO.resolveBags(path)))
+    val bounds = offered.filter(RosbagSeqno.isSeqnoFilter)
+    RosbagSeqno.groups(RosbagIO.scanIndexes(RosbagDataSource.files(spec)))
       .fold(why => throw new UnsupportedOperationException(
         s"the seqno column numbers a load from its bag index, which cannot number this one: $why"),
         identity)
-      .filter(g => seqnoFilters.forall(RosbagSeqno.groupMayMatch(_, g)) &&
+      .filter(g => bounds.forall(RosbagSeqno.groupMayMatch(_, g)) &&
         g.chunks.exists(c => byChunk.contains((c._1, c._2))))
       .map { g =>
         val parts = RosbagSeqno.tieBreakOrder(g.chunks).map { case (b, i, c) =>
@@ -554,49 +304,140 @@ class RosbagScan(path: String, required: StructType, pushed: Array[Filter], limi
       }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = typed match {
-    case Some(t) => new RosbagTypedReaderFactory(t.datatype, t.msgDef, required, includeRaw, filters)
-    case None => new RosbagReaderFactory(required, filters, limit)
+  override def readers(required: StructType, filters: Array[Filter],
+      limit: Int): PartitionReaderFactory =
+    RosbagDataSource.readers(required, filters, limit,
+      target.map(t => (t.datatype, t.msgDef)), includeRaw)
+
+  /** A single existing FILE is tailed as one growing bag
+    * (`{"chunkCount":n}`); a directory or glob streams as a fleet-ingest
+    * archive — new bags AND new chunks of known bags are picked up per
+    * trigger. Bags are append-only (chunk indexes are stable once
+    * written), so offsets replay exactly. Typed streams pin the (datatype,
+    * md5) variant resolved at stream start: same-datatype connections
+    * with another definition drop from the chunk's connection map, so a
+    * drifted bag arriving mid-stream is skipped for this stream rather
+    * than decoded with the wrong definition.
+    */
+  override def stream(required: StructType, filters: Array[Filter],
+      limit: Int): MicroBatchStream = {
+    if (numbered(required)) throw new UnsupportedOperationException(
+      "the seqno column numbers a whole batch load; streams cannot select it")
+    val p = new Path(spec)
+    val single = !spec.contains('\n') &&
+      !spec.exists(c => "*?[]{}".indexOf(c.toInt) >= 0) && {
+      try p.getFileSystem(RosbagIO.hadoopConf()).getFileStatus(p).isFile
+      catch { case _: java.io.FileNotFoundException => false }
+    }
+    val variant = target.map(t => (t.datatype, t.md5))
+    val plan = (bag: String, from: Option[Seq[Long]], until: Seq[Long]) => {
+      val index = RosbagIO.scanIndex(bag)
+      val conns = RosbagDataSource.conns(index, variant)
+      index.chunks.zipWithIndex.slice(from.fold(0L)(_.head).toInt, until.head.toInt)
+        .filter { case (c, _) => RosbagDataSource.range(c).forall { case (lo, hi) =>
+          rangeMayMatch(filters, "time_sec", lo, hi) } }
+        .map { case (c, i) => RosbagInputPartition(bag, i, c, conns): InputPartition }
+    }
+    val rd = readers(required, filters, -1)
+    if (single)
+      new CountsStream(OneFile(spec), () => Seq(spec),
+        _ => Map(spec -> Seq(RosbagIO.scanIndex(spec).chunks.size.toLong)),
+        maxMerge, _ => true, plan, rd)
+    else
+      // tolerant: a bag deleted between the listing and the index open
+      // is simply not offered this trigger (it keeps any committed count)
+      new CountsStream(PerFile("bags"),
+        () => resolveTolerant(spec, RosbagDataSource.isBag),
+        bags => RosbagIO.scanIndexesTolerant(bags)
+          .map { case (b, index) => b -> Seq(index.chunks.size.toLong) }.toMap,
+        maxMerge, pathMayMatch(filters, "bag_path", _), plan, rd)
   }
 
-  override def description(): String =
-    s"rosbag $path${typed.map(t => s" typed=${t.datatype}").getOrElse("")}, " +
-      s"pushedFilters=[${filters.mkString(", ")}], limit=$limit" +
-      (if (numbered) ", seqno" else "")
+  /** Metadata-only aggregate pushdown (graft.ros.MetadataAgg):
+    * `count(*)` and `groupBy(topic/datatype/connection_id/bag_path)
+    * .count()` sum the chunk-info records' per-connection counts;
+    * ungrouped `min/max(time_sec)` reads the chunk-info start/end
+    * times (start_time = the chunk's earliest (sec,nsec) receive
+    * stamp, so its SEC is the minimum time_sec — sec is the
+    * high-order component of the lexicographic order; likewise the
+    * max). No chunk body is ever read. Refused (normal scan) when any
+    * chunk lacks chunk-info counts/times, counts a connection absent
+    * from the catalog, or a seqno bound is in force.
+    * min/max(time_nsec) is NOT answerable from metadata (the nsec of
+    * the extreme message is not the extreme nsec) and falls back.
+    */
+  override def aggregate(a: Aggregation, offered: Array[Filter]): Option[Scan] = {
+    if (offered.exists(RosbagSeqno.isSeqnoFilter)) return None
+    MetadataAgg.parse(a, Set("bag_path", "topic", "datatype", "connection_id"),
+        Set("time_sec")).flatMap { case (cols, specs) =>
+      val idx = RosbagIO.scanIndexes(RosbagDataSource.files(spec))
+      val needTimes = specs.exists(_ != MetadataAgg.CountStarSpec)
+      val sound = idx.forall { case (_, index) =>
+        val connIds = index.connections.map(_.connId).toSet
+        index.chunks.forall(ch =>
+          ch.connCounts.exists(_.forall { case (id, _) => connIds.contains(id) }) &&
+            (!needTimes || (ch.startTime.isDefined && ch.endTime.isDefined)))
+      }
+      if (!sound) None
+      else if (needTimes) {
+        val perFile = idx.map { case (_, index) =>
+          // message-bearing chunks only: an empty chunk's info times
+          // (a foreign writer may stamp them 0) must not pollute min
+          val full = index.chunks.filter(_.connCounts.get.map(_._2.toLong).sum > 0L)
+          val n = full.flatMap(_.connCounts.get).map(_._2.toLong).sum
+          if (full.isEmpty) (0L, Map.empty[String, Any], Map.empty[String, Any])
+          else (n, Map[String, Any]("time_sec" -> full.map(_.startTime.get._1).min),
+            Map[String, Any]("time_sec" -> full.map(_.endTime.get._1).max))
+        }
+        Some(new MetadataAggScan(MetadataAgg.schemaFor(specs, RosbagDataSource.SpineSchema),
+          MetadataAgg.fileRows(specs, perFile), s"rosbag $spec"))
+      } else {
+        val units = idx.flatMap { case (bag, index) =>
+          val conns = index.connections.map(c => c.connId -> c).toMap
+          index.chunks.flatMap(_.connCounts.get).map { case (id, n) =>
+            val c = conns(id)
+            (Map[String, Any]("bag_path" -> bag, "topic" -> c.topic,
+              "datatype" -> c.datatype, "connection_id" -> id), n.toLong)
+          }
+        }
+        val nCounts = a.aggregateExpressions.length
+        Some(new MetadataAggScan(MetadataAgg.schema(cols, RosbagDataSource.SpineSchema, nCounts),
+          MetadataAgg.rows(cols, nCounts, units), s"rosbag $spec"))
+      }
+    }
+  }
+
+  override def describe(s: Planning): String = if (numbered(s.required)) ", seqno" else ""
 }
 
-class RosbagReaderFactory(required: StructType, filters: Array[Filter], limit: Int)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.rows(p, createReader)
-      case p => new RosbagPartitionReader(p, required, filters, limit)
-    }
-
-  // every spine column vectorizes (ints / interned strings / nullable
-  // stamps / binary), so the untyped scan is always columnar
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    RosbagColumnarRead.enabled
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.batches(p, createColumnarReader)
-      case p => new RosbagMetaColumnarReader(p, required, filters, limit)
-    }
-}
+final case class RosbagInputPartition(path: String, chunkIdx: Int,
+    chunk: BagFormat.BagChunk, conns: Map[Int, BagFormat.BagConnection])
+  extends InputPartition
 
 object RosbagPartitionReader {
+  import ContainerSource.{Col, LongCol, StrCol}
+
+  /** The filter columns of one chunk's messages. */
+  def cols(c: RosbagInputPartition): PartialFunction[String, Col[BagFormat.BagMessage]] = {
+    case "connection_id" => LongCol[BagFormat.BagMessage](_.connId)
+    case "time_sec" => LongCol[BagFormat.BagMessage](_.timeSec)
+    case "topic" => StrCol[BagFormat.BagMessage](m => c.conns(m.connId).topic)
+    case "datatype" => StrCol[BagFormat.BagMessage](m => c.conns(m.connId).datatype)
+    case "bag_path" => StrCol[BagFormat.BagMessage](_ => c.path)
+  }
+
   /** The spine scan's row filter for one chunk: every message must
     * reference a catalogued connection; pushed filters drop rows before
     * any column is built.
     */
   def keepFor(filters: Array[Filter])(c: RosbagInputPartition)
-      : BagFormat.BagMessage => Boolean = { m =>
-    val conn = c.conns.getOrElse(m.connId,
-      throw new IllegalStateException(s"message references unknown connection ${m.connId}"))
-    filters.forall(f => RosbagFilters.eval(f, m, conn, c.path))
+      : BagFormat.BagMessage => Boolean = {
+    val keep = ContainerSource.compile(filters, cols(c))
+    m => {
+      if (!c.conns.contains(m.connId))
+        throw new IllegalStateException(s"message references unknown connection ${m.connId}")
+      keep(m)
+    }
   }
 }
 
@@ -685,47 +526,6 @@ object RosbagIO {
   private def fs(path: String) = {
     val p = new Path(path)
     (p.getFileSystem(hadoopConf()), p)
-  }
-
-  /** Expand `path` into the ordered bag files it denotes: a glob
-    * pattern (Hadoop globStatus), a directory (its *.bag children,
-    * name-sorted — how a 100 TB robotics corpus arrives: a prefix full
-    * of per-drive bags), or a single file (returned verbatim). Sorted
-    * so multi-bag ordering — seqno tie-breaks, table listing — is
-    * deterministic across filesystems. Every returned path is the
-    * FileStatus's fully-qualified URI (file:/..., hdfs://...), so
-    * bag_path values compare equal no matter how the load path was
-    * spelled (bare /tmp/x.bag vs a dir listing's file:/tmp/x.bag).
-    */
-  def resolveBags(path: String): Seq[String] = {
-    // a newline-separated spec (the source's "bags" option) is an
-    // explicit list: resolve each entry, preserve overall sort
-    if (path.contains('\n'))
-      return path.split('\n').toSeq.filter(_.nonEmpty).flatMap(resolveBags).distinct.sorted
-    val (filesystem, p) = fs(path)
-    if (path.exists(c => "*?[]{}".indexOf(c.toInt) >= 0)) {
-      val matches = Option(filesystem.globStatus(p)).getOrElse(Array.empty)
-      // a glob sees both generations during a pending compact journal
-      // exactly like a listing - serve the same consistent view
-      val bags = graft.ros.CompactJournal
-        .maskGlobbed(filesystem, matches.filter(_.isFile).toSeq)
-        .map(_.getPath.toString).sorted
-      require(bags.nonEmpty, s"glob matches no files: $path")
-      bags
-    } else {
-      val st = filesystem.getFileStatus(p)
-      if (st.isDirectory) {
-        // a pending compact journal (crash window) leaves BOTH
-        // generations on disk — serve one consistent view
-        val masked = graft.ros.CompactJournal.maskedNames(filesystem, p)
-        val bags = filesystem.listStatus(p)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".bag") &&
-            !masked.contains(s.getPath.getName))
-          .map(_.getPath.toString).sorted.toSeq
-        require(bags.nonEmpty, s"directory contains no .bag files: $path")
-        bags
-      } else Seq(st.getPath.toString)
-    }
   }
 
   /** Scan many bag indexes concurrently (cache-aware): the per-bag

@@ -30,7 +30,7 @@ object RosbagTables {
     * glob) — still driver-side tiny: dozens of connections per bag.
     */
   def connections(spark: SparkSession, path: String): DataFrame =
-    fromIndexes(spark, RosbagIO.scanIndexes(RosbagIO.resolveBags(path)))
+    fromIndexes(spark, RosbagIO.scanIndexes(RosbagDataSource.files(path)))
 
   /** One Connections frame from many already-scanned indexes — a
     * single driver-side row seq, not an N-way union of tiny frames.

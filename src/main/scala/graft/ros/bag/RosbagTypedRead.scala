@@ -2,7 +2,7 @@ package graft.ros.bag
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.ros.{MsgDefParser, RosMsgBundle, RosSchemaMapper}
@@ -48,7 +48,7 @@ object RosbagTypedRead {
     */
   def resolveTarget(path: String, datatype: String, md5: Option[String]): TypedTarget = {
     val variants: Seq[(String, String, String)] = // (md5, msgDef, bag)
-      RosbagIO.scanIndexes(RosbagIO.resolveBags(path)).flatMap { case (bag, index) =>
+      RosbagIO.scanIndexes(RosbagDataSource.files(path)).flatMap { case (bag, index) =>
         index.connections
           .filter(_.datatype == datatype)
           .map(c => (c.md5sum, c.msgDef, bag))
@@ -75,8 +75,8 @@ object RosbagTypedRead {
   def keepFor(datatype: String, filters: Array[org.apache.spark.sql.sources.Filter])(
       c: RosbagInputPartition): BagFormat.BagMessage => Boolean = {
     val typeConns = c.conns.filter(_._2.datatype == datatype).keySet
-    m => typeConns.contains(m.connId) &&
-      filters.forall(f => RosbagFilters.eval(f, m, c.conns(m.connId), c.path))
+    val keep = graft.ros.ContainerSource.compile(filters, RosbagPartitionReader.cols(c))
+    m => typeConns.contains(m.connId) && keep(m)
   }
 
   def bundleFor(path: String, datatype: String): RosMsgBundle = {
@@ -102,35 +102,6 @@ object RosbagTypedRead {
       InternalRow.fromSeq(r.toSeq.zip(st.fields).map { case (x, f) => toCatalyst(x, f.dataType) })
     case (x, _) => x
   }
-}
-
-class RosbagTypedReaderFactory(datatype: String, msgDef: String,
-    required: StructType, includeRaw: Boolean,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.rows(p, createReader)
-      case p => new RosbagTypedPartitionReader(p, datatype, msgDef, required,
-        includeRaw, filters)
-    }
-
-  // vectorized path: decode straight into column vectors whenever every
-  // required column has a columnar-supported shape (scalars, strings,
-  // blobs, arrays of primitives); array-of-struct projections fall back
-  // to the row reader above (Scan.columnarSupportMode PARTITION_DEFINED
-  // routes on this per-partition answer)
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    RosbagColumnarRead.enabled && RosbagColumnarRead.supportsColumnar(required)
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.batches(p, createColumnarReader)
-      case p => new RosbagTypedColumnarReader(p, datatype, msgDef, required,
-        includeRaw, filters)
-    }
 }
 
 class RosbagTypedPartitionReader(p: InputPartition, datatype: String,

@@ -59,14 +59,8 @@ class Db3SpineColumnarReader(p: Db3InputPartition, required: StructType,
       }
     }
 
-  private def passes(rowid: Long, v: Seq[Any]): Boolean = {
-    if (filters.isEmpty) return true
-    val tid = v(1).asInstanceOf[Long]
-    val (tn, tt, tf) = p.topics.getOrElse(tid, throw new IllegalStateException(
-      s"message row $rowid references unknown topic_id $tid in ${p.path}"))
-    val ts = v(2).asInstanceOf[Long]
-    filters.forall(f => Db3Filters.eval(f, p.path, rowid, tid, tn, tt, tf, ts))
-  }
+  private val passes = graft.ros.ContainerSource.compile(filters,
+    Db3DataSource.cols(p.path, p.topics))
 
   override def next(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false
@@ -77,8 +71,9 @@ class Db3SpineColumnarReader(p: Db3InputPartition, required: StructType,
     var bytes = 0L
     while (n < batchSize && bytes < batchBytes && rows.hasNext &&
         (limit < 0 || emitted < limit)) {
-      val (rowid, v) = rows.next()
-      if (passes(rowid, v)) {
+      val r = rows.next()
+      val (rowid, v) = r
+      if (passes(r)) {
         emitted += 1
         curRowid = rowid
         curTid = v(1).asInstanceOf[Long]
@@ -151,6 +146,8 @@ class Db3TypedColumnarReader(p: Db3InputPartition, schemaName: String,
   private var emitted = 0
 
   private val pathBytes = p.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  private val passes = graft.ros.ContainerSource.compile(filters,
+    Db3DataSource.cols(p.path, typeTopics))
   private val topicBytes: Map[Long, Array[Byte]] = typeTopics.map {
     case (id, (n, _, _)) => id -> n.getBytes(java.nio.charset.StandardCharsets.UTF_8) }
 
@@ -173,15 +170,14 @@ class Db3TypedColumnarReader(p: Db3InputPartition, schemaName: String,
     val payloadMaterialized = needsWalk || rawV != null
     while (n < batchSize && bytes < batchBytes && rows.hasNext &&
         (limit < 0 || emitted < limit)) {
-      val (rowid, v) = rows.next()
+      val r = rows.next()
+      val (rowid, v) = r
       val tid = v(1).asInstanceOf[Long]
       val (tname, _, fmt) = typeTopics(tid)
       require(fmt == "cdr",
         s"topic $tname serializes as '$fmt'; typed db3 reads decode cdr")
       val ts = v(2).asInstanceOf[Long]
-      val ok = filters.isEmpty || filters.forall(f => Db3Filters.eval(
-        f, p.path, rowid, tid, tname, schemaName, fmt, ts))
-      if (ok) {
+      if (passes(r)) {
         emitted += 1
         // cdr-only by the reader's contract, so the magic sniff is
         // safe; meta-only projections skip the decompression entirely

@@ -46,7 +46,7 @@ object Db3Etl {
   def run(spark: SparkSession, path: String, outDir: String,
           maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
           nativeTimestamp: Boolean = false): Info =
-    convert(spark, RoutedEtl.Slice(Db3IO.resolveFiles(path)), new java.io.File(path).getName,
+    convert(spark, RoutedEtl.Slice(Db3DataSource.files(path)), new java.io.File(path).getName,
       BagEtl.versionedOutputDir(outDir), maxMessages, keepRawBlob, nativeTimestamp)
 
   /** Incremental conversion, BagEtl/McapEtl's contract: only files the
@@ -55,7 +55,7 @@ object Db3Etl {
     */
   def runIncremental(spark: SparkSession, path: String, outDir: String,
           keepRawBlob: Boolean = true, nativeTimestamp: Boolean = false): Info = {
-    val slice = RoutedEtl.increment(spark, outDir, Db3IO.resolveFiles(path),
+    val slice = RoutedEtl.increment(spark, outDir, Db3DataSource.files(path),
       "file_path", "Topics")
     val name = new java.io.File(path).getName
     if (slice.files.isEmpty) Info(name, 0L, 0L, 0L, 0L, Map.empty)
@@ -94,7 +94,7 @@ object Db3Etl {
       val first = usable.groupBy(_._1).map { case (k, ds) => k -> ds.head }
       val keys = first.keys.toSeq.sorted
       RoutedEtl.Source(
-        spark.read.format("db3").option("files", Db3DataSource.filesSpec(slice.files)).load(),
+        spark.read.format("db3").option("files", graft.ros.ContainerSource.filesSpec(slice.files)).load(),
         messages = Seq("file_path", "msg_id", "topic_id", "topic", "type",
           "serialization_format", "timestamp", "size").map(col) :+
           crc32(col("data")).as("data_crc32"),

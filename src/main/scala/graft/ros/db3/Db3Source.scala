@@ -3,10 +3,12 @@ package graft.ros.db3
 import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -56,7 +58,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * be tailed from outside the writing process — stream live robots via
   * the mcap source's growing-file support; db3 is the at-rest format.
   * `readStream` over a db3 path IS supported at FILE granularity
-  * ([[Db3MicroBatchStream]]): each trigger discovers newly LANDED
+  * ([[Db3Read.stream]]): each trigger discovers newly LANDED
   * complete files (fleet uploads into a prefix) and reads each exactly
   * once; files still being written (live sidecar, truncated header
   * range) are deferred to a later trigger, never refused.
@@ -84,21 +86,98 @@ class Db3DataSource extends TableProvider with DataSourceRegister {
 }
 
 object Db3DataSource {
-  /** Newline-separated explicit file list (the rosbag/mcap "files"
-    * contract — see McapDataSource.filesSpec).
+  import graft.ros.ContainerSource._
+
+  /** The "files" option (an explicit newline-separated list,
+    * [[graft.ros.ContainerSource.filesSpec]]) when present, else the
+    * load path.
     */
-  def filesSpec(files: Seq[String]): String = {
-    files.find(_.contains('\n')).foreach { f =>
-      throw new IllegalArgumentException(
-        "db3 path contains a newline and cannot be passed via the " +
-          s"newline-separated 'files' option: ${f.replace("\n", "\\n")}")
-    }
-    files.mkString("\n")
+  def pathSpec(opts: CaseInsensitiveStringMap): String = graft.ros.ContainerSource.pathSpec(opts)
+
+  /** The db3 files `spec` denotes (a directory lists its *.db3 and
+    * *.db3.zstd children). A file a writer's sidecar marks inconsistent
+    * fails loudly: sidecar presence comes from ONE listing per parent
+    * directory, not two fs.exists per file — each miss constructs a
+    * stack-traced FileNotFoundException inside the local filesystem
+    * (~0.5 s per 1200-file plan, FleetBench).
+    */
+  def files(spec: String): Seq[String] = {
+    val out = resolve(spec, Db3IO.isDb3, ".db3")
+    val siblings = Db3IO.siblingNames(out)
+    out.foreach(f => Db3IO.sidecarProblem(f, siblings).foreach(m =>
+      throw new IllegalArgumentException(m)))
+    out
   }
 
-  def pathSpec(opts: CaseInsensitiveStringMap): String = {
-    val fs = opts.get("files")
-    if (fs != null && fs.nonEmpty) fs else opts.get("path")
+  val Roles: graft.ros.ContainerSource.Roles = {
+    val cols = Set("file_path", "msg_id", "topic_id", "topic", "type",
+      "serialization_format", "timestamp")
+    graft.ros.ContainerSource.Roles("file_path", Some("timestamp"), cols, cols,
+      Seq("file_path", "topic", "topic_id"))
+  }
+
+  /** A messages b-tree row: (rowid, (id, topic_id, timestamp, data)). */
+  type Row = (Long, Seq[Any])
+  type Topic = (Long, (String, String, String))
+
+  /** The topics catalog's filter columns: a file whose topics table
+    * cannot satisfy `topic == x` is never planned (the most common
+    * recording query skips whole files before any page is fetched).
+    */
+  val catalog: PartialFunction[String, Col[Topic]] = {
+    case "topic_id" => LongCol[Topic](_._1)
+    case "topic" => StrCol[Topic](_._2._1)
+    case "type" => StrCol[Topic](_._2._2)
+    case "serialization_format" => StrCol[Topic](_._2._3)
+  }
+
+  /** The filter columns of one file's rows, on the pre-decode values: a
+    * filtered row is never inflated or decoded.
+    */
+  def cols(path: String, topics: Map[Long, (String, String, String)])
+      : PartialFunction[String, Col[Row]] = {
+    def topic(r: Row): (String, String, String) = {
+      val tid = r._2(1).asInstanceOf[Long]
+      topics.getOrElse(tid, throw new IllegalStateException(
+        s"message row ${r._1} references unknown topic_id $tid in $path"))
+    }
+    val cols: PartialFunction[String, Col[Row]] = {
+      case "file_path" => StrCol[Row](_ => path)
+      case "msg_id" => LongCol[Row](_._1)
+      case "topic_id" => LongCol[Row](_._2(1).asInstanceOf[Long])
+      case "timestamp" => LongCol[Row](_._2(2).asInstanceOf[Long])
+      case "topic" => StrCol[Row](topic(_)._1)
+      case "type" => StrCol[Row](topic(_)._2)
+      case "serialization_format" => StrCol[Row](topic(_)._3)
+    }
+    cols
+  }
+
+  /** The spine or typed readers of a scan. Every spine column vectorizes
+    * (longs / interned strings / binary); db3 typed payloads are CDR by
+    * contract, so the typed scan is columnar whenever every required
+    * column has a columnar shape (array-of-struct projections take the
+    * row reader).
+    */
+  def readers(required: StructType, filters: Array[Filter], limit: Int,
+      typed: Option[Db3TypedRead.TypedTarget], includeRaw: Boolean): PartitionReaderFactory = {
+    import graft.ros.bag.RosbagColumnarRead.{enabled, supportsColumnar}
+    typed match {
+      case Some(t) =>
+        val (name, enc, text) = (t.schemaName, t.encoding, t.schemaText)
+        new Readers(
+          p => new Db3TypedReader(p.asInstanceOf[Db3InputPartition], name, enc, text,
+            required, includeRaw, filters, limit),
+          if (enabled && supportsColumnar(required))
+            Some(p => new Db3TypedColumnarReader(p.asInstanceOf[Db3InputPartition], name, enc,
+              text, required, includeRaw, filters, limit))
+          else None)
+      case None => new Readers(
+        p => new Db3SpineReader(p.asInstanceOf[Db3InputPartition], required, filters, limit),
+        if (enabled) Some(p => new Db3SpineColumnarReader(p.asInstanceOf[Db3InputPartition],
+          required, filters, limit))
+        else None)
+    }
   }
 
   /** Message spine: rosbag2's own columns plus the file identity.
@@ -125,36 +204,6 @@ object Db3IO {
 
   private[db3] def isDb3(name: String): Boolean =
     name.endsWith(".db3") || name.endsWith(".db3.zstd")
-
-  def resolveFiles(path: String): Seq[String] = {
-    val specs = path.split('\n').filter(_.nonEmpty).toSeq
-    val out = specs.flatMap { spec =>
-      val p = new Path(spec)
-      val fs = p.getFileSystem(hadoopConf())
-      val stats =
-        if (fs.isDirectory(p)) {
-          // a pending compact journal (crash window) leaves BOTH
-          // generations on disk — serve one consistent view
-          val masked = graft.ros.CompactJournal.maskedNames(fs, p)
-          fs.listStatus(p).toSeq.filter(s => s.isFile &&
-            isDb3(s.getPath.getName) && !masked.contains(s.getPath.getName))
-        }
-        else graft.ros.CompactJournal.maskGlobbed(fs,
-          Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Seq.empty)
-            .filter(_.isFile))
-      require(stats.nonEmpty || fs.exists(p), s"db3 path not found: $spec")
-      stats.map(_.getPath.toString)
-    }.sorted
-    require(out.nonEmpty, s"no .db3 files under $path")
-    // sidecar presence from ONE listing per parent directory, not two
-    // fs.exists per file: each miss constructs a stack-traced
-    // FileNotFoundException inside the local filesystem — ~0.5 s per
-    // 1200-file plan before this (FleetBench)
-    val siblings = siblingNames(out)
-    out.foreach(f => sidecarProblem(f, siblings).foreach(m =>
-      throw new IllegalArgumentException(m)))
-    out
-  }
 
   /** Every file path under the parent directories of `files` — ONE
     * listStatus per distinct parent, the shared existence oracle for
@@ -202,6 +251,29 @@ object Db3IO {
     }
     None
   }
+
+  /** The file's subtree count if it has LANDED, else None = defer it
+    * to a later trigger (the db3 stream's offer check, [[Db3Read.stream]]).
+    * `siblings` = the directory listing's name set (one listing answers
+    * every sidecar check).
+    */
+  private[db3] def offer(f: String, siblings: Set[String]): Option[Long] =
+    try {
+      if (sidecarProblem(f, siblings).isDefined) None
+      else {
+        if (f.endsWith(".db3")) {
+          // complete modern-sqlite files satisfy pageCount·pageSize == length
+          val p = new Path(f)
+          val len = p.getFileSystem(hadoopConf()).getFileStatus(p).getLen
+          val pager = new Pager(f)
+          val complete =
+            try pager.header.pageCount.toLong * pager.header.pageSize <= len
+            finally pager.close()
+          if (!complete) return None
+        }
+        Some(scanMeta(f).subtrees.size.toLong)
+      }
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   // rosbag2 --compression-mode file wraps the WHOLE database in one
   // zstd frame (<name>.db3.zstd). SQLite paging needs random access,
@@ -400,16 +472,6 @@ object Db3IO {
     } finally pager.close()
   }
 
-  /** [[subtreeTsRanges]] across many files on the bounded pool —
-    * plan-time probes must not serialize over a fleet directory any
-    * more than the metadata scans do.
-    */
-  def subtreeTsRangesAll(files: Seq[(String, Seq[Int])])
-      : Map[String, Option[Seq[(Int, Long, Long)]]] =
-    graft.ros.DriverPool.parMap(files) { case (f, st) =>
-      f -> subtreeTsRanges(f, st)
-    }.toMap
-
   /** Keep/drop per subtree under a timestamp-range predicate, with two
     * defenses on top of the raw edge probes (the boundary-monotonicity
     * check alone cannot see interior disorder):
@@ -516,121 +578,6 @@ object Db3IO {
   }
 }
 
-/** Pushed-filter support for the db3 source — same contract as
-  * McapFilters/RosbagFilters: `supported` gates what the scan accepts,
-  * file/subtree `mayMatch` prune at plan time (conservative — a kept
-  * file/subtree is always re-filtered row-level), `eval` runs per row
-  * BEFORE payload inflation/decoding.
-  */
-object Db3Filters {
-  private val cols = Set("file_path", "msg_id", "topic_id", "topic",
-    "type", "serialization_format", "timestamp")
-
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(c, _) => cols(c)
-    case In(c, _) => cols(c)
-    case GreaterThan(c, _) => cols(c)
-    case GreaterThanOrEqual(c, _) => cols(c)
-    case LessThan(c, _) => cols(c)
-    case LessThanOrEqual(c, _) => cols(c)
-    case _ => false
-  }
-
-  /** File-level pruning: exact `file_path` against the fully-qualified
-    * URI (RosbagFilters.bagMayMatch's contract), and topic-catalog
-    * membership for equality/IN over topic/type/format/topic_id — a
-    * file whose topics table cannot satisfy the filter is never
-    * planned (the single most common recording query, `topic == x`,
-    * skips whole files before any page is fetched).
-    */
-  def fileMayMatch(f: Filter, path: String,
-                   topics: Map[Long, (String, String, String)]): Boolean = {
-    def anyTopic(pred: ((String, String, String)) => Boolean): Boolean =
-      topics.values.exists(pred)
-    f match {
-      case EqualTo("file_path", v) => path == v
-      case In("file_path", vs) => vs.contains(path)
-      case EqualTo("topic_id", v: Number) => topics.contains(v.longValue())
-      case In("topic_id", vs) =>
-        vs.exists { case v: Number => topics.contains(v.longValue()); case _ => true }
-      case EqualTo("topic", v) => anyTopic(_._1 == v)
-      case In("topic", vs) => anyTopic(t => vs.contains(t._1))
-      case EqualTo("type", v) => anyTopic(_._2 == v)
-      case In("type", vs) => anyTopic(t => vs.contains(t._2))
-      case EqualTo("serialization_format", v) => anyTopic(_._3 == v)
-      case In("serialization_format", vs) => anyTopic(t => vs.contains(t._3))
-      case _ => true
-    }
-  }
-
-  /** Does any pushed filter prune on the timestamp? (Gates the
-    * plan-time probe work — no probe when nothing can use it.)
-    */
-  def prunesOnTimestamp(f: Filter): Boolean = f match {
-    case EqualTo("timestamp", _) | GreaterThan("timestamp", _) |
-         GreaterThanOrEqual("timestamp", _) | LessThan("timestamp", _) |
-         LessThanOrEqual("timestamp", _) => true
-    case In("timestamp", _) => true
-    case _ => false
-  }
-
-  /** Subtree-level pruning against the probed [lo, hi] timestamp
-    * range — conservative, like mcap chunk-info pruning.
-    */
-  def subtreeMayMatch(f: Filter, lo: Long, hi: Long): Boolean = {
-    def num(v: Any): Option[Long] = v match {
-      case n: Number => Some(n.longValue()); case _ => None
-    }
-    f match {
-      case GreaterThan("timestamp", v) => num(v).forall(x => hi > x)
-      case GreaterThanOrEqual("timestamp", v) => num(v).forall(x => hi >= x)
-      case LessThan("timestamp", v) => num(v).forall(x => lo < x)
-      case LessThanOrEqual("timestamp", v) => num(v).forall(x => lo <= x)
-      case EqualTo("timestamp", v) => num(v).forall(x => lo <= x && x <= hi)
-      case In("timestamp", vs) =>
-        vs.exists(v => num(v).forall(x => lo <= x && x <= hi))
-      case _ => true
-    }
-  }
-
-  /** Row-level evaluation on the pre-decode spine values — runs before
-    * any payload inflation, so a filtered row never decompresses.
-    * `path` is required (omission-must-not-compile, RosbagFilters.eval).
-    */
-  def eval(f: Filter, path: String, rowid: Long, tid: Long,
-           topic: String, tpe: String, fmt: String, ts: Long): Boolean = {
-    def v(c: String): Any = c match {
-      case "file_path" => path
-      case "msg_id" => rowid
-      case "topic_id" => tid
-      case "topic" => topic
-      case "type" => tpe
-      case "serialization_format" => fmt
-      case "timestamp" => ts
-    }
-    // None = unrecognized (value, literal) type pair → KEEP the row
-    // (conservative true, the num(v).forall contract subtreeMayMatch
-    // uses). A drop here is unrecoverable: Spark's retained residual
-    // only re-filters rows that survive the source, so comparing an
-    // unknown pair "equal" (the old `case _ => 0`) turned a pushed
-    // GreaterThan into a silent false negative.
-    def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
-      case (x: Long, y: Number) => Some(java.lang.Long.compare(x, y.longValue()))
-      case (x: String, y: String) => Some(x.compareTo(y))
-      case _ => None
-    }
-    f match {
-      case EqualTo(c, value) => cmp(v(c), value).forall(_ == 0)
-      case In(c, values) => values.exists(value => cmp(v(c), value).forall(_ == 0))
-      case GreaterThan(c, value) => cmp(v(c), value).forall(_ > 0)
-      case GreaterThanOrEqual(c, value) => cmp(v(c), value).forall(_ >= 0)
-      case LessThan(c, value) => cmp(v(c), value).forall(_ < 0)
-      case LessThanOrEqual(c, value) => cmp(v(c), value).forall(_ <= 0)
-      case _ => true
-    }
-  }
-}
-
 /** Typed-read resolution + the shared flat frame. */
 object Db3TypedRead {
   val MetaFields: Seq[StructField] = Seq(
@@ -658,7 +605,7 @@ object Db3TypedRead {
   def resolveTarget(path: String, schemaName: String,
                     md5: Option[String] = None,
                     schemaText: Option[String] = None): TypedTarget = {
-    val files = Db3IO.resolveFiles(path)
+    val files = Db3DataSource.files(path)
     schemaText match {
       case Some(text) =>
         return TypedTarget(schemaName, "ros2msg", text, files,
@@ -707,42 +654,115 @@ class Db3Table(path: String, schemaName: Option[String],
                schemaText: Option[String],
                tsPruning: Boolean = true,
                tsJitterNs: Long = 100000000L)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with graft.ros.ContainerSink.LandedMetrics {
+    extends graft.ros.ContainerSource.ContainerTable("db3", path, schemaName,
+      if (schemaName.isEmpty && schemaText.isEmpty) None
+      else Some("schema_name/schema_text read options"), "Db3Export.prepare") {
   private lazy val target: Option[Db3TypedRead.TypedTarget] =
     schemaName.map(sn => Db3TypedRead.resolveTarget(path, sn, md5, schemaText))
-  override def name(): String = s"db3:$path${schemaName.map(":" + _).getOrElse("")}"
   override def schema(): StructType = target match {
     case Some(t) => Db3TypedRead.typedSchema(t.bundle, includeRaw)
     case None => Db3DataSource.SpineSchema
   }
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new Db3ScanBuilder(path, schema(), target, includeRaw, tsPruning, tsJitterNs)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(schemaName.isEmpty && schemaText.isEmpty,
-      "db3 write goes through the spine shape — drop the schema_name/schema_text read options")
-    graft.ros.ContainerSink.builder(path, info, this, "db3", "Db3Export.prepare")(Db3Sink(_))
-  }
+  override protected def read: graft.ros.ContainerSource.Read =
+    new Db3Read(path, target, includeRaw, tsPruning, tsJitterNs)
+  override protected def sink(req: graft.ros.ContainerSink.Request): graft.ros.ContainerSink.Format =
+    Db3Sink(req)
 }
 
-class Db3ScanBuilder(path: String, full: StructType,
-                     typed: Option[Db3TypedRead.TypedTarget], includeRaw: Boolean,
-                     tsPruning: Boolean = true,
-                     tsJitterNs: Long = 100000000L)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit
-    with SupportsPushDownAggregates {
-  private var required: StructType = full
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-  private var aggSpecs: Option[(Seq[String], Seq[graft.ros.MetadataAgg.AggSpec])] = None
+/** The db3 read: one unit per (file, messages-b-tree subtree); the
+  * topics catalog prunes topic / type / format / topic_id. Format hooks:
+  * timestamp ranges prune whole subtrees through per-subtree edge probes
+  * ([[Db3IO.subtreeTsRanges]] / [[Db3IO.pruneSubtrees]]), assuming
+  * rosbag2's single-writer receive-time order (boundary-checked per
+  * file; `option("timestamp_pruning", "false")` disables it for
+  * foreign/merged files), and `count(*)`/min/max push down to a b-tree
+  * walk ([[Db3MetaAggScan]]).
+  */
+final class Db3Read(val spec: String, target: Option[Db3TypedRead.TypedTarget],
+    includeRaw: Boolean, tsPruning: Boolean, tsJitterNs: Long)
+    extends graft.ros.ContainerSource.Read {
+  import graft.ros.ContainerSource._
+  override def kind: String = "db3"
+  override def roles: Roles = Db3DataSource.Roles
+  override def typed: Option[String] = target.map(_.schemaName)
+  // typed reads push only meta-column filters (payload columns never
+  // reach the reader's filter)
+  override def typedCols: Set[String] = Set("file_path", "msg_id", "timestamp", "topic_id", "topic")
+  override lazy val files: Seq[String] = target.map(_.files).getOrElse(Db3DataSource.files(spec))
+  // a subtree is one task: the b-tree already splits a file into
+  // independent rowid ranges
+  override def packs: Boolean = false
+
+  // probes, like the metadata scans, fan out over files on the bounded
+  // pool; the keep/drop decision needs plan-time page IO (the
+  // cut-boundary exact re-check in pruneSubtrees)
+  override def units(files: Seq[String], s: Planning): Seq[Planned] = {
+    val probe = tsPruning && s.filters.exists(_.references.head == "timestamp")
+    val metas = Db3IO.scanMetas(files).filter { case (_, meta) =>
+      catalogMayMatch(s.filters, meta.topics, Db3DataSource.catalog) }
+    graft.ros.DriverPool.parMap(metas) { case (f, meta) =>
+      val keep =
+        if (!probe) meta.subtrees
+        else Db3IO.subtreeTsRanges(f, meta.subtrees) match {
+          case Some(rs) => Db3IO.pruneSubtrees(f, rs,
+            (lo, hi) => rangeMayMatch(s.filters, "timestamp", lo, hi), tsJitterNs)
+          case None => meta.subtrees
+        }
+      keep.map(st => Planned(Db3InputPartition(f, st, meta.topics), 0L))
+    }.flatten
+  }
+
+  override def readers(required: StructType, filters: Array[Filter],
+      limit: Int): PartitionReaderFactory =
+    Db3DataSource.readers(required, filters, limit, target, includeRaw)
+
+  /** Streaming over a db3 path at FILE granularity — the at-rest member
+    * of the mixed fleet-upload stream (a live sqlite writer's pages are
+    * only consistent through its WAL and shared-memory index, so db3 is
+    * never tailed): each trigger plans every newly LANDED recording's
+    * subtrees exactly once, `{"files":{path:subtrees}}`, and the start's
+    * entry wins (the offered count is the replay contract).
+    *
+    * "Landed" is verified, not assumed, before a file is offered
+    * ([[Db3IO.offer]]): a live `-wal` / hot `-journal` sidecar, a plain
+    * `.db3` whose header page count reaches past its length (a truncated
+    * in-flight upload), or a metadata scan that throws all DEFER the
+    * file to a later trigger. The residual — an uploader writing a valid
+    * prefix IN PLACE whose header already claims the final length — is
+    * unverifiable from outside; write-to-temp + rename (every standard
+    * uploader's landing contract) rules it out. `file_path` filters and
+    * the topics catalog skip whole files; a typed stream skips a DRIFTED
+    * file landing mid-stream rather than mis-decoding it, and a
+    * pre-Humble file without a definitions table streams under an
+    * explicit `option("schema_text", ...)` exactly as it batch-reads.
+    */
+  override def stream(required: StructType, filters: Array[Filter],
+      limit: Int): MicroBatchStream = {
+    val t = target
+    new CountsStream(PerFile("files"), () => resolveTolerant(spec, Db3IO.isDb3),
+      cands => {
+        val siblings = Db3IO.siblingNames(cands)
+        graft.ros.DriverPool.parMap(cands)(f => f -> Db3IO.offer(f, siblings))
+          .collect { case (f, Some(n)) => f -> Seq(n) }.toMap
+      },
+      startWins, pathMayMatch(filters, "file_path", _),
+      (f, from, until) =>
+        if (from.isDefined) Nil // at-rest: one offer per file
+        else {
+          val meta = Db3IO.scanMeta(f)
+          val carries = t.forall(tt => meta.definitions.isEmpty ||
+            meta.definitions.exists { case (name, _, text) =>
+              name == tt.schemaName && graft.ros.mcap.McapTypedRead.md5hex(
+                text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) == tt.md5
+            })
+          if (!carries || !catalogMayMatch(filters, meta.topics, Db3DataSource.catalog)) Nil
+          // take(n): a file mutated after landing (outside the
+          // contract) must not make a replayed batch non-deterministic
+          else meta.subtrees.take(until.head.toInt).map(st =>
+            Db3InputPartition(f, st, meta.topics): InputPartition)
+        },
+      readers(required, filters, -1))
+  }
 
   /** `count(*)` and `min/max(timestamp)` pushdown from the b-tree
     * itself — grouped or not: sqlite has no writer-stamped counts or
@@ -760,40 +780,11 @@ class Db3ScanBuilder(path: String, full: StructType,
     * from pure metadata; grouping columns are the catalog-derivable
     * five (file_path + topic_id → topic/type/format).
     */
-  override def pushAggregation(
-      a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    if (typed.isDefined || pushed.nonEmpty || limit >= 0) return false
+  override def aggregate(a: Aggregation, offered: Array[Filter]): Option[Scan] =
     graft.ros.MetadataAgg.parse(a,
         Set("file_path", "topic_id", "topic", "type", "serialization_format"),
-        Set("timestamp"), groupedMinMax = true) match {
-      case Some((cols, specs)) =>
-        aggSpecs = Some((cols, specs))
-        true
-      case None => false
-    }
-  }
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // typed reads push only meta-column filters (payload columns never
-    // reach the reader's eval) — the rosbag/mcap typed contract
-    val pushable: Filter => Boolean =
-      if (typed.isDefined) f => Db3Filters.supported(f) &&
-        f.references.forall(Set("file_path", "msg_id", "timestamp",
-          "topic_id", "topic"))
-      else Db3Filters.supported
-    val (supported, residual) = filters.partition(pushable)
-    pushed = supported
-    residual ++ supported // conservatively keep all as residual upstream
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pushLimit(l: Int): Boolean = { limit = l; false } // partial push
-  override def build(): Scan = aggSpecs match {
-    case Some((cols, specs)) => new Db3MetaAggScan(path, cols, specs)
-    case None =>
-      new Db3Scan(path, required, pushed, typed, includeRaw, limit,
-        tsPruning, tsJitterNs)
-  }
+        Set("timestamp"), groupedMinMax = true)
+      .map { case (cols, specs) => new Db3MetaAggScan(spec, cols, specs) }
 }
 
 /** The pushed-aggregate scan: the normal per-subtree partitions, but
@@ -816,7 +807,7 @@ class Db3MetaAggScan(path: String, cols: Seq[String],
     else MetadataAgg.schemaGrouped(cols, Db3DataSource.SpineSchema, specs)
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    Db3IO.scanMetas(Db3IO.resolveFiles(path)).flatMap { case (f, meta) =>
+    Db3IO.scanMetas(Db3DataSource.files(path)).flatMap { case (f, meta) =>
       meta.subtrees.map(st =>
         Db3InputPartition(f, st, meta.topics): InputPartition)
     }.toArray
@@ -886,101 +877,6 @@ class Db3MetaAggScan(path: String, cols: Seq[String],
 final case class Db3InputPartition(path: String, subtree: Int,
     topics: Map[Long, (String, String, String)]) extends InputPartition
 
-class Db3Scan(path: String, required: StructType, pushed: Array[Filter],
-              typed: Option[Db3TypedRead.TypedTarget], includeRaw: Boolean,
-              limit: Int, tsPruning: Boolean = true,
-              tsJitterNs: Long = 100000000L) extends Scan with Batch
-    with SupportsRuntimeFiltering with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-
-  // Runtime (DPP-style) filters: a join against a selective dimension
-  // (Db3Tables.topics, a file manifest) materializes IN-filters on
-  // these columns at execution time; BatchScanExec then re-plans the
-  // partitions — whole files prune via the topics catalog exactly
-  // like compile-time pushed filters. The typed read's eval context
-  // carries the same meta columns, so the attribute set is shared.
-  private var runtime: Array[Filter] = Array.empty
-  private def filters: Array[Filter] = pushed ++ runtime
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // only columns the (pruned) output carries: Spark resolves these
-    // against the scan's output and FAILS on a projected-away column
-    Array("file_path", "topic", "topic_id")
-      .filter(required.fieldNames.contains(_))
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-  override def filter(fs: Array[Filter]): Unit =
-    runtime = fs.filter(Db3Filters.supported)
-
-  // size from the files themselves (decompressed payloads can exceed
-  // it for zstd recordings — an estimate, like any scan statistic);
-  // row count unknowable without walking the b-trees
-  override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: Long = graft.ros.DriverPool.totalBytes(
-      typed.map(_.files).getOrElse(Db3IO.resolveFiles(path)), Db3IO.hadoopConf())
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(bytes)
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.empty()
-  }
-
-  override def toBatch: Batch = this
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    // at-rest FILE discovery (landed uploads), not live tailing — see
-    // the class scaladoc and Db3MicroBatchStream
-    new Db3MicroBatchStream(path, required, filters, typed, includeRaw)
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = typed.map(_.files).getOrElse(Db3IO.resolveFiles(path))
-    val probeTs = tsPruning && filters.exists(Db3Filters.prunesOnTimestamp)
-    val metas = Db3IO.scanMetas(files).filter { case (f, meta) =>
-      filters.forall(fl => Db3Filters.fileMayMatch(fl, f, meta.topics)) }
-    // timestamp-range pruning of whole b-tree subtrees via edge
-    // probes (parallel across files, like the metadata scans);
-    // disabled per file when the probes refute the monotone-write
-    // assumption (Db3IO.subtreeTsRanges), or entirely via
-    // option("timestamp_pruning", "false")
-    val ranges: Map[String, Option[Seq[(Int, Long, Long)]]] =
-      if (!probeTs) Map.empty
-      else Db3IO.subtreeTsRangesAll(metas.map { case (f, m) => f -> m.subtrees })
-    // keep/drop decisions need plan-time page IO (the cut-boundary
-    // exact re-check in pruneSubtrees) → bounded pool, like the probes
-    graft.ros.DriverPool.parMap(metas) { case (f, meta) =>
-      val keep: Seq[Int] =
-        if (!probeTs) meta.subtrees
-        else ranges(f) match {
-          case Some(rs) => Db3IO.pruneSubtrees(f, rs,
-            (lo, hi) => filters.forall(Db3Filters.subtreeMayMatch(_, lo, hi)),
-            tsJitterNs)
-          case None => meta.subtrees
-        }
-      keep.map(st => Db3InputPartition(f, st, meta.topics): InputPartition)
-    }.flatten.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory = typed match {
-    case Some(t) => new Db3TypedReaderFactory(t.schemaName, t.encoding,
-      t.schemaText, required, includeRaw, filters, limit)
-    case None => new Db3ReaderFactory(required, filters, limit)
-  }
-  override def description(): String =
-    s"db3 $path${typed.map(t => s" typed=${t.schemaName}").getOrElse("")}, " +
-      s"pushedFilters=[${filters.mkString(", ")}], limit=$limit"
-}
-
-class Db3ReaderFactory(required: StructType, filters: Array[Filter], limit: Int)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new Db3SpineReader(p.asInstanceOf[Db3InputPartition], required, filters, limit)
-
-  // every spine column vectorizes (longs / interned strings / binary),
-  // so the untyped scan is always columnar — like the bag/mcap spines
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    graft.ros.bag.RosbagColumnarRead.enabled
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new Db3SpineColumnarReader(p.asInstanceOf[Db3InputPartition], required,
-      filters, limit)
-}
-
 /** Spine rows straight off the messages b-tree subtree. Pushed filters
   * evaluate on the pre-decode values in `next()` — a filtered row is
   * never inflated, and the pushed limit counts only SURVIVING rows.
@@ -1006,20 +902,14 @@ class Db3SpineReader(p: Db3InputPartition, required: StructType,
   private var current: (Long, Seq[Any]) = _
   private var emitted = 0
 
-  private def passes(rowid: Long, v: Seq[Any]): Boolean = {
-    if (filters.isEmpty) return true
-    val tid = v(1).asInstanceOf[Long]
-    val (tn, tt, tf) = p.topics.getOrElse(tid, throw new IllegalStateException(
-      s"message row $rowid references unknown topic_id $tid in ${p.path}"))
-    val ts = v(2).asInstanceOf[Long]
-    filters.forall(f => Db3Filters.eval(f, p.path, rowid, tid, tn, tt, tf, ts))
-  }
+  private val passes = graft.ros.ContainerSource.compile(filters,
+    Db3DataSource.cols(p.path, p.topics))
 
   override def next(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false
     while (rows.hasNext) {
       val c = rows.next()
-      if (passes(c._1, c._2)) { current = c; emitted += 1; return true }
+      if (passes(c)) { current = c; emitted += 1; return true }
     }
     false
   }
@@ -1041,29 +931,6 @@ class Db3SpineReader(p: Db3InputPartition, required: StructType,
     InternalRow.fromSeq(projection.toSeq.map(full))
   }
   override def close(): Unit = pager.close()
-}
-
-class Db3TypedReaderFactory(schemaName: String, encoding: String,
-    schemaText: String,
-    required: StructType, includeRaw: Boolean, filters: Array[Filter],
-    limit: Int)
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new Db3TypedReader(p.asInstanceOf[Db3InputPartition], schemaName, encoding,
-      schemaText, required, includeRaw, filters, limit)
-
-  // vectorized path: db3 typed payloads are CDR by contract, so the
-  // shared aligned op program applies whenever every required column
-  // has a columnar-supported shape (same rules as the bag/mcap typed
-  // columnar readers); array-of-struct projections fall back to the
-  // row reader above
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    graft.ros.bag.RosbagColumnarRead.enabled &&
-      graft.ros.bag.RosbagColumnarRead.supportsColumnar(required)
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new Db3TypedColumnarReader(p.asInstanceOf[Db3InputPartition], schemaName,
-      encoding, schemaText, required, includeRaw, filters, limit)
 }
 
 /** Typed rows: CDR payloads of the schema's topics flattened through
@@ -1090,6 +957,8 @@ class Db3TypedReader(p: Db3InputPartition, schemaName: String, encoding: String,
   private val rows = SqliteFormat
     .tableRows(pager.page, pager.header.usable, p.subtree)
     .filter { case (_, v) => typeTopics.contains(v(1).asInstanceOf[Long]) }
+  private val passes = graft.ros.ContainerSource.compile(filters,
+    Db3DataSource.cols(p.path, typeTopics))
   private val pathUtf8 = UTF8String.fromString(p.path)
   private val topicUtf8 = typeTopics.map { case (id, (n, _, _)) =>
     id -> UTF8String.fromString(n) }
@@ -1104,10 +973,7 @@ class Db3TypedReader(p: Db3InputPartition, schemaName: String, encoding: String,
       val (tname, _, fmt) = typeTopics(tid)
       require(fmt == "cdr",
         s"topic $tname serializes as '$fmt'; typed db3 reads decode cdr")
-      val ok = filters.isEmpty || filters.forall(f => Db3Filters.eval(
-        f, p.path, c._1, tid, tname, schemaName, fmt,
-        c._2(2).asInstanceOf[Long]))
-      if (ok) { current = c; emitted += 1; return true }
+      if (passes(c)) { current = c; emitted += 1; return true }
     }
     false
   }
@@ -1155,7 +1021,7 @@ object Db3Tables {
       StructField("topic_type", StringType, nullable = false),
       StructField("encoding", StringType, nullable = false),
       StructField("definition", StringType, nullable = false)))
-    val rows = Db3IO.scanMetas(Db3IO.resolveFiles(path)).flatMap { case (f, m) =>
+    val rows = Db3IO.scanMetas(Db3DataSource.files(path)).flatMap { case (f, m) =>
       m.definitions.map { case (t, enc, text) => Row(f, t, enc, text) }
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
@@ -1176,5 +1042,5 @@ object Db3Tables {
 
   def topics(spark: SparkSession, path: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(
-      topicRows(Db3IO.scanMetas(Db3IO.resolveFiles(path))), 1), TopicsSchema)
+      topicRows(Db3IO.scanMetas(Db3DataSource.files(path))), 1), TopicsSchema)
 }

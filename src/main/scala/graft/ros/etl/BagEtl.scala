@@ -97,7 +97,7 @@ object BagEtl {
           nativeTimestamp: Boolean = false): Info =
     // bagPath may be one file, a directory, or a glob — the dataset
     // shape a 100 TB robotics corpus actually arrives in.
-    convert(spark, RoutedEtl.Slice(graft.ros.bag.RosbagIO.resolveBags(bagPath)),
+    convert(spark, RoutedEtl.Slice(graft.ros.bag.RosbagDataSource.files(bagPath)),
       new java.io.File(bagPath).getName, versionedOutputDir(outDir), maxMessages,
       keepRawBlob, blobSideTable, blobThreshold, nativeTimestamp)
 
@@ -125,7 +125,7 @@ object BagEtl {
           blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
           nativeTimestamp: Boolean = false): Info = {
     val slice = RoutedEtl.increment(spark, outDir,
-      graft.ros.bag.RosbagIO.resolveBags(bagPath), "bag_path", "Connections")
+      graft.ros.bag.RosbagDataSource.files(bagPath), "bag_path", "Connections")
     val name = new java.io.File(bagPath).getName
     if (slice.files.isEmpty) Info(name, 0L, 0L, 0L)
     else convert(spark, slice, name, outDir, None, keepRawBlob, blobSideTable,
@@ -169,7 +169,7 @@ object BagEtl {
       // ONE scan relation over the whole bag list (the "bags" option) —
       // not an N-way union, which bloats the analyzer at fleet scale
       val scan = spark.read.format("rosbag")
-        .option("bags", graft.ros.bag.RosbagDataSource.bagsSpec(slice.files)).load()
+        .option("bags", graft.ros.ContainerSource.filesSpec(slice.files)).load()
       RoutedEtl.Source(scan,
         // Messages fact table (reference FlattenedRosWriter.cpp:49-87),
         // plus the sensor-time header stamp (nullable; reference TODO
@@ -340,9 +340,9 @@ object BagEtl {
   // streaming offset logs) -- the minimal quote/backslash pair would
   // emit invalid JSON for a path containing a raw newline
   private def escapeJson(s: String): String =
-    graft.ros.bag.RosbagDirOffset.esc(s)
+    graft.ros.ContainerSource.esc(s)
   private def unescapeJson(s: String): String =
-    graft.ros.bag.RosbagDirOffset.unesc(s)
+    graft.ros.ContainerSource.unesc(s)
 
   /** Per-part-file (path, min seqno, max seqno) of a table directory,
     * read DRIVER-SIDE from the parquet footers on the bounded

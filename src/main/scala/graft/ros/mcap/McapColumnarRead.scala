@@ -600,13 +600,8 @@ class McapMetaColumnarReader(p: McapInputPartition, required: StructType,
       case Some(ref) => McapFormat.chunkMessages(McapIO.readChunk(p.path, ref)).iterator
       case None => McapIO.readInlineMessages(p.path, p.inline).iterator
     }
-    val filtered = raw.zipWithIndex.filter { case (m, _) =>
-      val ch = p.channels.getOrElse(m.channelId,
-        throw new IllegalStateException(
-          s"message references unknown channel ${m.channelId} in ${p.path}"))
-      val schemaName = p.schemas.get(ch.schemaId).map(_._1).getOrElse("")
-      filters.forall(f => McapFilters.eval(f, m, ch, schemaName, p.path))
-    }
+    val keep = McapDataSource.keep(filters, p)
+    val filtered = raw.zipWithIndex.filter { case (m, _) => keep(m) }
     if (limit >= 0) filtered.take(limit) else filtered
   }
 
@@ -685,12 +680,8 @@ class McapTypedColumnarReader(p: McapInputPartition, schemaName: String,
       case Some(ref) => McapFormat.chunkMessages(McapIO.readChunk(p.path, ref)).iterator
       case None => McapIO.readInlineMessages(p.path, p.inline).iterator
     }
-    raw.zipWithIndex
-      .filter { case (m, _) => typeChannels.contains(m.channelId) }
-      .filter { case (m, _) =>
-        filters.forall(f => McapFilters.eval(f, m, typeChannels(m.channelId),
-          schemaName, p.path))
-      }
+    val keep = graft.ros.ContainerSource.compile(filters, McapDataSource.cols(p))
+    raw.zipWithIndex.filter { case (m, _) => typeChannels.contains(m.channelId) && keep(m) }
   }
 
   private val pathBytes = p.path.getBytes(java.nio.charset.StandardCharsets.UTF_8)

@@ -78,7 +78,7 @@ object McapEtl {
   def run(spark: SparkSession, path: String, outDir: String,
           maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
           nativeTimestamp: Boolean = false): Info =
-    convert(spark, RoutedEtl.Slice(McapIO.resolveFiles(path)), new java.io.File(path).getName,
+    convert(spark, RoutedEtl.Slice(McapDataSource.files(path)), new java.io.File(path).getName,
       BagEtl.versionedOutputDir(outDir), maxMessages, keepRawBlob, nativeTimestamp)
 
   /** Incremental multi-file conversion — BagEtl.runIncremental's
@@ -90,7 +90,7 @@ object McapEtl {
     */
   def runIncremental(spark: SparkSession, path: String, outDir: String,
           keepRawBlob: Boolean = true, nativeTimestamp: Boolean = false): Info = {
-    val slice = RoutedEtl.increment(spark, outDir, McapIO.resolveFiles(path),
+    val slice = RoutedEtl.increment(spark, outDir, McapDataSource.files(path),
       "file_path", "Channels")
     val name = new java.io.File(path).getName
     if (slice.files.isEmpty) Info(name, 0L, 0L, 0L, 0L, Map.empty)
@@ -144,7 +144,7 @@ object McapEtl {
         }.toMap.withDefaultValue(-1)
       }.toMap
       RoutedEtl.Source(
-        spark.read.format("mcap").option("files", McapDataSource.filesSpec(slice.files)).load(),
+        spark.read.format("mcap").option("files", graft.ros.ContainerSource.filesSpec(slice.files)).load(),
         messages = Seq("file_path", "chunk_idx", "offset", "log_time", "publish_time",
           "sequence", "size", "channel_id", "topic", "schema_name", "schema_encoding",
           "message_encoding", "data_crc32").map(col),

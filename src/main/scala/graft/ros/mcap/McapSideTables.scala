@@ -127,7 +127,7 @@ class McapAttachmentsScan(path: String) extends Scan with Batch {
   override def planInputPartitions(): Array[InputPartition] =
     // bounded-pool index scans, like the message-spine planner: a
     // fleet directory must not pay sequential summary walks
-    graft.ros.DriverPool.parMap(McapIO.resolveFiles(path)) { f =>
+    graft.ros.DriverPool.parMap(McapDataSource.files(path)) { f =>
       McapIO.scanIndex(f).attachmentRefs.map {
         case (off, len) => McapSideRef(f, off, len): InputPartition
       }
@@ -173,7 +173,7 @@ class McapMetadataScan(path: String) extends Scan with Batch {
   // metadata records are small string maps: one partition per FILE
   // (files without metadata records plan nothing)
   override def planInputPartitions(): Array[InputPartition] =
-    graft.ros.DriverPool.parMap(McapIO.resolveFiles(path)) { f =>
+    graft.ros.DriverPool.parMap(McapDataSource.files(path)) { f =>
       val refs = McapIO.scanIndex(f).metadataRefs
       if (refs.isEmpty) None
       else Some(McapMetadataFilePartition(f, refs): InputPartition)

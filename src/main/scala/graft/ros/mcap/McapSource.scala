@@ -3,11 +3,12 @@ package graft.ros.mcap
 import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.write.LogicalWriteInfo
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, DataSourceRegister}
+import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -68,28 +69,89 @@ class McapDataSource extends TableProvider with DataSourceRegister {
 }
 
 object McapDataSource {
-  /** Explicit-file-list spec: `option("files", filesSpec(paths))` reads
-    * exactly those already-resolved URIs — ONE scan relation over a
-    * file subset (incremental ETL's shape), not an N-way union. Same
-    * contract and separator as the rosbag source's "bags" option
-    * (RosbagSource.scala:80): newline-separated, so a path containing a
-    * newline fails loudly at construction instead of silently splitting.
+  import graft.ros.ContainerSource._
+
+  /** The effective path spec of a read: the "files" option (an explicit
+    * newline-separated list, [[graft.ros.ContainerSource.filesSpec]])
+    * when present, else the load path.
     */
-  def filesSpec(files: Seq[String]): String = {
-    files.find(_.contains('\n')).foreach { f =>
-      throw new IllegalArgumentException(
-        "mcap path contains a newline and cannot be passed via the " +
-        s"newline-separated 'files' option: ${f.replace("\n", "\\n")}")
-    }
-    files.mkString("\n")
+  def pathSpec(opts: CaseInsensitiveStringMap): String = graft.ros.ContainerSource.pathSpec(opts)
+
+  def isMcap(name: String): Boolean = name.endsWith(".mcap")
+
+  /** The MCAP files `spec` denotes (a directory lists its *.mcap children). */
+  def files(spec: String): Seq[String] = resolve(spec, isMcap, ".mcap")
+
+  val Roles: graft.ros.ContainerSource.Roles = {
+    val cols = Set("channel_id", "topic", "schema_name", "log_time", "file_path")
+    graft.ros.ContainerSource.Roles("file_path", Some("log_time"), cols, cols,
+      Seq("file_path", "topic", "channel_id"))
   }
 
-  /** The effective path spec of a read: the "files" option when present,
-    * else the load path.
+  /** schemaId -> (name, encoding, md5) of a file's schemas. */
+  def schemaInfo(idx: McapFormat.McapIndex): Map[Int, (String, String, String)] =
+    idx.schemas.map { case (id, s) => id -> (s.name, s.encoding, McapTypedRead.md5hex(s.data)) }
+
+  /** The channel catalog's filter columns. */
+  def catalog(schemas: Map[Int, (String, String, String)])
+      : PartialFunction[String, Col[McapFormat.McapChannel]] = {
+    case "channel_id" => LongCol[McapFormat.McapChannel](_.id)
+    case "topic" => StrCol[McapFormat.McapChannel](_.topic)
+    case "schema_name" =>
+      StrCol[McapFormat.McapChannel](c => schemas.get(c.schemaId).map(_._1).getOrElse(""))
+  }
+
+  /** The filter columns of one partition's messages. */
+  def cols(p: McapInputPartition): PartialFunction[String, Col[McapFormat.McapMessage]] = {
+    val schemaName = p.channels.map { case (id, c) =>
+      id -> p.schemas.get(c.schemaId).map(_._1).getOrElse("") }
+    val cols: PartialFunction[String, Col[McapFormat.McapMessage]] = {
+      case "channel_id" => LongCol[McapFormat.McapMessage](_.channelId)
+      case "log_time" => LongCol[McapFormat.McapMessage](_.logTime)
+      case "topic" => StrCol[McapFormat.McapMessage](m => p.channels(m.channelId).topic)
+      case "schema_name" => StrCol[McapFormat.McapMessage](m => schemaName(m.channelId))
+      case "file_path" => StrCol[McapFormat.McapMessage](_ => p.path)
+    }
+    cols
+  }
+
+  /** The spine readers' row filter: every message must reference a
+    * catalogued channel; pushed filters drop rows before any column is
+    * built.
     */
-  def pathSpec(opts: CaseInsensitiveStringMap): String = {
-    val fs = opts.get("files")
-    if (fs != null && fs.nonEmpty) fs else opts.get("path")
+  def keep(filters: Array[Filter], p: McapInputPartition): McapFormat.McapMessage => Boolean = {
+    val pred = compile(filters, cols(p))
+    m => {
+      if (!p.channels.contains(m.channelId)) throw new IllegalStateException(
+        s"message references unknown channel ${m.channelId} in ${p.path}")
+      pred(m)
+    }
+  }
+
+  /** The spine or typed readers of a scan. Every spine column vectorizes
+    * (ints/longs / interned strings / binary); a typed scan decodes
+    * straight into column vectors whenever the walk is linear (cdr /
+    * packed ros1 — never protobuf: field numbers live in the descriptor)
+    * and every required column has a columnar shape. Array-of-struct
+    * projections take the row reader.
+    */
+  def readers(required: StructType, filters: Array[Filter], limit: Int,
+      typed: Option[McapTypedRead.TypedTarget], includeRaw: Boolean): PartitionReaderFactory = {
+    import graft.ros.bag.RosbagColumnarRead.{enabled, supportsColumnar}
+    typed match {
+      case Some(t) => new Readers(
+        p => new McapTypedPartitionReader(p.asInstanceOf[McapInputPartition], t.schemaName,
+          t.encoding, t.schemaData, t.md5s, required, includeRaw, filters),
+        if (enabled && t.encoding != "protobuf" && supportsColumnar(required))
+          Some(p => new McapTypedColumnarReader(p.asInstanceOf[McapInputPartition],
+            t.schemaName, t.encoding, t.schemaData, t.md5s, required, includeRaw, filters))
+        else None)
+      case None => new Readers(
+        p => new McapPartitionReader(p.asInstanceOf[McapInputPartition], required, filters, limit),
+        if (enabled) Some(p => new McapMetaColumnarReader(p.asInstanceOf[McapInputPartition],
+          required, filters, limit))
+        else None)
+    }
   }
 
   /** The message-spine schema. MCAP times are nanoseconds since epoch
@@ -116,41 +178,102 @@ object McapDataSource {
 
 class McapTable(path: String, schemaName: Option[String] = None,
                 includeRaw: Boolean = false, md5: Option[String] = None)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with graft.ros.ContainerSink.LandedMetrics {
+    extends graft.ros.ContainerSource.ContainerTable("mcap", path, schemaName,
+      schemaName.map(_ => "schema_name read option"), "McapExport.prepare") {
   private lazy val target: Option[McapTypedRead.TypedTarget] =
     schemaName.map(sn => McapTypedRead.resolveTarget(path, sn, md5))
-  override def name(): String = s"mcap:$path${schemaName.map(":" + _).getOrElse("")}"
   override def schema(): StructType = target match {
     case Some(t) =>
       McapTypedRead.typedSchema(
         McapPayload.bundle(t.encoding, t.schemaName, t.schemaData), includeRaw)
     case None => McapDataSource.SpineSchema
   }
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new McapScanBuilder(path, schema(), target, includeRaw)
-  override def newWriteBuilder(info: LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder = {
-    require(schemaName.isEmpty,
-      "mcap write goes through the spine shape — drop the schema_name read option")
-    graft.ros.ContainerSink.builder(path, info, this, "mcap", "McapExport.prepare")(McapSink(_))
-  }
+  override protected def read: graft.ros.ContainerSource.Read =
+    new McapRead(path, target, includeRaw)
+  override protected def sink(req: graft.ros.ContainerSink.Request): graft.ros.ContainerSink.Format =
+    McapSink(req)
 }
 
-class McapScanBuilder(path: String, fullSchema: StructType,
-    typed: Option[McapTypedRead.TypedTarget] = None, includeRaw: Boolean = false)
-    extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit with SupportsPushDownAggregates {
-  private var required: StructType = fullSchema
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
-  private var agg: Option[(StructType, Seq[Seq[Any]])] = None
+/** The MCAP read: one unit per Chunk record (planned from the Summary
+  * section without touching chunk bodies, its message time range
+  * pruning `log_time`) plus one per file for any standalone unchunked
+  * messages; the channel catalog prunes topic / channel / schema. Typed
+  * reads plan only the files carrying the resolved schema. Format hook:
+  * the metadata-only aggregates from the Statistics record.
+  */
+final class McapRead(val spec: String, target: Option[McapTypedRead.TypedTarget],
+    includeRaw: Boolean) extends graft.ros.ContainerSource.Read {
+  import graft.ros.ContainerSource._
+  override def kind: String = "mcap"
+  override def roles: Roles = McapDataSource.Roles
+  override def typed: Option[String] = target.map(_.schemaName)
+  // typed reads push only meta-column filters (payload columns never
+  // reach the reader's filter)
+  override def typedCols: Set[String] = Set("channel_id", "topic", "log_time", "file_path")
+  override lazy val files: Seq[String] = target.map(_.files).getOrElse(McapDataSource.files(spec))
+
+  // index scans fan out on the bounded driver pool (a fleet directory
+  // must not pay sequential summary walks)
+  override def units(files: Seq[String], s: Planning): Seq[Planned] =
+    graft.ros.DriverPool.parMap(files)(f => f -> McapIO.scanIndex(f)).flatMap { case (f, idx) =>
+      val schemas = McapDataSource.schemaInfo(idx)
+      if (!catalogMayMatch(s.filters, idx.channels.values, McapDataSource.catalog(schemas))) Nil
+      else {
+        idx.chunks.zipWithIndex.map { case (c, i) =>
+          Planned(McapInputPartition(f, i, Some(c), Seq.empty, schemas, idx.channels),
+            c.uncompressedSize, Some((c.messageStartTime, c.messageEndTime)))
+        } ++ (if (idx.inlineMessages.isEmpty) Nil
+          else Seq(Planned(McapInputPartition(f, -1, None, idx.inlineMessages, schemas,
+            idx.channels), idx.inlineMessages.map(_._2).sum)))
+      }
+    }
+
+  override def readers(required: StructType, filters: Array[Filter],
+      limit: Int): PartitionReaderFactory =
+    McapDataSource.readers(required, filters, limit, target, includeRaw)
+
+  /** One stream covers a single STILL-GROWING file (the tolerant-tail
+    * walk needs no footer), a directory of uploads and a glob alike: the
+    * offset is a per-file (complete chunks, standalone messages) count,
+    * both stable under append. Each trigger extends each file's
+    * resumable walk (paying only for NEW bytes) and plans one partition
+    * per new chunk plus one for any new standalone messages. A typed
+    * stream pins the (schema_name, md5) variant resolved at its start:
+    * the typed reader matches channels on (name, md5), and a file
+    * carrying no matching variant is skipped whole (its offsets still
+    * advance) rather than decoded with the wrong definition.
+    */
+  override def stream(required: StructType, filters: Array[Filter],
+      limit: Int): MicroBatchStream = {
+    val t = target
+    new CountsStream(PerFile("files"), () => resolveTolerant(spec, McapDataSource.isMcap),
+      _.flatMap { f =>
+        try {
+          val idx = McapIO.scanTolerant(f)
+          Some(f -> Seq(idx.chunks.size.toLong, idx.inlineMessages.size.toLong))
+        } catch { case _: java.io.FileNotFoundException => None }
+      }.toMap,
+      maxMerge, pathMayMatch(filters, "file_path", _),
+      (f, from, until) => {
+        val idx = McapIO.scanTolerant(f)
+        val schemas = McapDataSource.schemaInfo(idx)
+        if (!t.forall(tt => schemas.values.exists(sc => sc._1 == tt.schemaName && tt.md5s(sc._3))))
+          Nil
+        else {
+          val Seq(fromChunks, fromInline) = from.getOrElse(Seq(0L, 0L)).map(_.toInt)
+          val chunks = idx.chunks.zipWithIndex.slice(fromChunks, until(0).toInt)
+            .filter { case (c, _) =>
+              rangeMayMatch(filters, "log_time", c.messageStartTime, c.messageEndTime) }
+            .map { case (c, i) =>
+              McapInputPartition(f, i, Some(c), Seq.empty, schemas, idx.channels): InputPartition }
+          val inline = idx.inlineMessages.slice(fromInline, until(1).toInt)
+          chunks ++ (if (inline.isEmpty) Nil
+            else Seq(McapInputPartition(f, -1, None, inline, schemas, idx.channels,
+              ordinalBase = fromInline)))
+        }
+      },
+      readers(required, filters, -1))
+  }
 
   /** Metadata-only aggregate pushdown (graft.ros.MetadataAgg):
     * `count(*)` and `groupBy(topic/schema_name/channel_id/file_path)
@@ -164,173 +287,50 @@ class McapScanBuilder(path: String, fullSchema: StructType,
     * non-empty file stamps a degenerate 0/0 time range.
     * `publish_time` has no metadata range and falls back.
     */
-  override def pushAggregation(
-      a: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+  override def aggregate(a: Aggregation, offered: Array[Filter]): Option[Scan] = {
     import graft.ros.MetadataAgg
-    if (typed.isDefined || pushed.nonEmpty || limit >= 0) return false
-    MetadataAgg.parse(a,
-        Set("file_path", "topic", "schema_name", "channel_id"),
-        Set("log_time")) match {
-      case None => false
-      case Some((cols, specs)) =>
-        val idx = graft.ros.DriverPool.parMap(McapIO.resolveFiles(path))(
-          f => f -> McapIO.scanIndex(f))
-        val needTimes = specs.exists(_ != MetadataAgg.CountStarSpec)
-        val sound = idx.forall { case (_, i) =>
-          i.stats.exists { st =>
-            st.channelMessageCounts.values.sum == st.messageCount &&
-              st.channelMessageCounts.keys.forall(i.channels.contains) &&
-              // a writer that stamps counts but not times is not a
-              // range source: BOTH bounds must be present and ordered
-              // (a half-stamped record — start=0 under a non-empty
-              // count — would push a silently wrong min). Conservative
-              // cost: an epoch-0 sim-time file falls back to the scan.
-              (!needTimes || st.messageCount == 0L ||
-                (st.messageStartTime != 0L && st.messageEndTime != 0L &&
-                  st.messageStartTime <= st.messageEndTime))
+    MetadataAgg.parse(a, Set("file_path", "topic", "schema_name", "channel_id"),
+        Set("log_time")).flatMap { case (cols, specs) =>
+      val idx = graft.ros.DriverPool.parMap(McapDataSource.files(spec))(
+        f => f -> McapIO.scanIndex(f))
+      val needTimes = specs.exists(_ != MetadataAgg.CountStarSpec)
+      val sound = idx.forall { case (_, i) =>
+        i.stats.exists { st =>
+          st.channelMessageCounts.values.sum == st.messageCount &&
+            st.channelMessageCounts.keys.forall(i.channels.contains) &&
+            // a writer that stamps counts but not times is not a
+            // range source: BOTH bounds must be present and ordered
+            // (a half-stamped record — start=0 under a non-empty
+            // count — would push a silently wrong min). Conservative
+            // cost: an epoch-0 sim-time file falls back to the scan.
+            (!needTimes || st.messageCount == 0L ||
+              (st.messageStartTime != 0L && st.messageEndTime != 0L &&
+                st.messageStartTime <= st.messageEndTime))
+        }
+      }
+      if (!sound) None
+      else if (needTimes) {
+        val perFile = idx.map { case (_, i) =>
+          val st = i.stats.get
+          if (st.messageCount == 0L) (0L, Map.empty[String, Any], Map.empty[String, Any])
+          else (st.messageCount, Map[String, Any]("log_time" -> st.messageStartTime),
+            Map[String, Any]("log_time" -> st.messageEndTime))
+        }
+        Some(new graft.ros.MetadataAggScan(MetadataAgg.schemaFor(specs,
+          McapDataSource.SpineSchema), MetadataAgg.fileRows(specs, perFile), s"mcap $spec"))
+      } else {
+        val units = idx.flatMap { case (f, i) =>
+          i.stats.get.channelMessageCounts.toSeq.map { case (id, n) =>
+            val ch = i.channels(id)
+            val schemaName = i.schemas.get(ch.schemaId).map(_.name).getOrElse("")
+            (Map[String, Any]("file_path" -> f, "topic" -> ch.topic,
+              "schema_name" -> schemaName, "channel_id" -> id), n)
           }
         }
-        if (!sound) false
-        else if (needTimes) {
-          val perFile = idx.map { case (_, i) =>
-            val st = i.stats.get
-            if (st.messageCount == 0L)
-              (0L, Map.empty[String, Any], Map.empty[String, Any])
-            else
-              (st.messageCount,
-                Map[String, Any]("log_time" -> st.messageStartTime),
-                Map[String, Any]("log_time" -> st.messageEndTime))
-          }
-          agg = Some((MetadataAgg.schemaFor(specs, McapDataSource.SpineSchema),
-            MetadataAgg.fileRows(specs, perFile)))
-          true
-        } else {
-          val units = idx.flatMap { case (f, i) =>
-            i.stats.get.channelMessageCounts.toSeq.map { case (id, n) =>
-              val ch = i.channels(id)
-              val schemaName = i.schemas.get(ch.schemaId).map(_.name).getOrElse("")
-              (Map[String, Any]("file_path" -> f, "topic" -> ch.topic,
-                "schema_name" -> schemaName, "channel_id" -> id), n)
-            }
-          }
-          val nCounts = a.aggregateExpressions.length
-          agg = Some((MetadataAgg.schema(cols,
-            McapDataSource.SpineSchema, nCounts),
-            MetadataAgg.rows(cols, nCounts, units)))
-          true
-        }
-    }
-  }
-  override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    // typed reads push only meta-column filters (payload columns never
-    // reach the reader's eval), like the rosbag typed path
-    val pushable: Filter => Boolean =
-      if (typed.isDefined) f => McapFilters.supported(f) &&
-        f.references.forall(Set("channel_id", "topic", "log_time", "file_path"))
-      else McapFilters.supported
-    val (supported, residual) = filters.partition(pushable)
-    pushed = supported
-    residual ++ supported // conservatively keep all as residual upstream
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-  override def build(): Scan = agg match {
-    case Some((sch, rows)) =>
-      new graft.ros.MetadataAggScan(sch, rows, s"mcap $path")
-    case None => new McapScan(path, required, pushed, limit, typed, includeRaw)
-  }
-}
-
-object McapFilters {
-  private val cols = Set("channel_id", "topic", "schema_name", "log_time", "file_path")
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(c, _) => cols(c)
-    case In(c, _) => cols(c)
-    case GreaterThan(c, _) => cols(c)
-    case GreaterThanOrEqual(c, _) => cols(c)
-    case LessThan(c, _) => cols(c)
-    case LessThanOrEqual(c, _) => cols(c)
-    case _ => false
-  }
-
-  /** File-level pruning — exact against the fully-qualified URI, same
-    * contract (and same rationale) as RosbagFilters.bagMayMatch.
-    */
-  def fileMayMatch(f: Filter, path: String): Boolean = f match {
-    case EqualTo("file_path", v) => path == v
-    case In("file_path", vs) => vs.contains(path)
-    case _ => true
-  }
-
-  /** Channel-catalog pruning: once a file's index is read, a
-    * topic/channel/schema equality/IN filter that no channel can
-    * satisfy drops the WHOLE file's partitions (the db3 topics-catalog
-    * pruning, over the mcap channel dimension).
-    */
-  def fileMayMatchChannels(f: Filter,
-      channels: Map[Int, McapFormat.McapChannel],
-      schemaNames: Map[Int, String]): Boolean = {
-    def anyChannel(pred: McapFormat.McapChannel => Boolean): Boolean =
-      channels.values.exists(pred)
-    f match {
-      case EqualTo("channel_id", v: Number) => channels.contains(v.intValue())
-      case In("channel_id", vs) =>
-        vs.exists { case v: Number => channels.contains(v.intValue()); case _ => true }
-      case EqualTo("topic", v) => anyChannel(_.topic == v)
-      case In("topic", vs) => anyChannel(c => vs.contains(c.topic))
-      case EqualTo("schema_name", v) =>
-        anyChannel(c => schemaNames.get(c.schemaId).contains(v))
-      case In("schema_name", vs) =>
-        anyChannel(c => schemaNames.get(c.schemaId).exists(vs.contains))
-      case _ => true
-    }
-  }
-
-  /** Chunk-level pruning on the chunk's [messageStartTime,
-    * messageEndTime] nanosecond range — conservative, like rosbag
-    * chunk-info pruning.
-    */
-  def chunkMayMatch(f: Filter, c: McapFormat.McapChunkRef): Boolean = {
-    def num(v: Any): Option[Long] = v match {
-      case n: Number => Some(n.longValue()); case _ => None
-    }
-    f match {
-      case GreaterThan("log_time", v) => num(v).forall(x => c.messageEndTime > x)
-      case GreaterThanOrEqual("log_time", v) => num(v).forall(x => c.messageEndTime >= x)
-      case LessThan("log_time", v) => num(v).forall(x => c.messageStartTime < x)
-      case LessThanOrEqual("log_time", v) => num(v).forall(x => c.messageStartTime <= x)
-      case EqualTo("log_time", v) =>
-        num(v).forall(x => c.messageStartTime <= x && x <= c.messageEndTime)
-      case _ => true
-    }
-  }
-
-  // path is REQUIRED — same omission-must-not-compile contract as
-  // RosbagFilters.eval
-  def eval(f: Filter, m: McapFormat.McapMessage, ch: McapFormat.McapChannel,
-           schemaName: String, path: String): Boolean = {
-    def v(c: String): Any = c match {
-      case "channel_id" => m.channelId
-      case "topic" => ch.topic
-      case "schema_name" => schemaName
-      case "log_time" => m.logTime
-      case "file_path" => path
-    }
-    def cmp(a: Any, b: Any): Int = (a, b) match {
-      case (x: Int, y: Number) => java.lang.Integer.compare(x, y.intValue())
-      case (x: Long, y: Number) => java.lang.Long.compare(x, y.longValue())
-      case (x: String, y: String) => x.compareTo(y)
-      case _ => 0
-    }
-    f match {
-      case EqualTo(c, value) => cmp(v(c), value) == 0
-      case In(c, values) => values.exists(value => cmp(v(c), value) == 0)
-      case GreaterThan(c, value) => cmp(v(c), value) > 0
-      case GreaterThanOrEqual(c, value) => cmp(v(c), value) >= 0
-      case LessThan(c, value) => cmp(v(c), value) < 0
-      case LessThanOrEqual(c, value) => cmp(v(c), value) <= 0
-      case _ => true
+        val nCounts = a.aggregateExpressions.length
+        Some(new graft.ros.MetadataAggScan(MetadataAgg.schema(cols,
+          McapDataSource.SpineSchema, nCounts), MetadataAgg.rows(cols, nCounts, units), s"mcap $spec"))
+      }
     }
   }
 }
@@ -350,123 +350,6 @@ final case class McapInputPartition(path: String, chunkIdx: Int,
     channels: Map[Int, McapFormat.McapChannel],
     ordinalBase: Int = 0) extends InputPartition
 
-class McapScan(path: String, required: StructType, pushed: Array[Filter], limit: Int,
-    typed: Option[McapTypedRead.TypedTarget] = None, includeRaw: Boolean = false)
-    extends Scan with Batch
-    with SupportsRuntimeFiltering with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-
-  // Runtime (DPP-style) filters from joins against selective
-  // dimensions (McapTables.channels, a file manifest): BatchScanExec
-  // re-plans partitions after filter(), so whole files/chunks prune
-  // at execution time exactly like compile-time pushed filters. The
-  // typed reader's eval context carries these columns too.
-  private var runtime: Array[Filter] = Array.empty
-  private def filters: Array[Filter] = pushed ++ runtime
-  override def filterAttributes()
-      : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    // only columns the (pruned) output carries: Spark resolves these
-    // against the scan's output and FAILS on a projected-away column
-    Array("file_path", "topic", "channel_id")
-      .filter(required.fieldNames.contains(_))
-      .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-  override def filter(fs: Array[Filter]): Unit =
-    runtime = fs.filter(McapFilters.supported)
-
-  // compressed chunk bodies make this an UNDER-estimate of row bytes —
-  // fine for join-side sizing; row count unknowable without a walk
-  override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val bytes: Long = graft.ros.DriverPool.totalBytes(
-      typed.map(_.files).getOrElse(McapIO.resolveFiles(path)),
-      graft.ros.bag.RosbagIO.hadoopConf())
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(bytes)
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.empty()
-  }
-
-  override def toBatch: Batch = this
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    // one stream class covers a single growing file, a directory and a
-    // glob alike: the offset is a per-file (chunks, standalone) map
-    new McapMicroBatchStream(path, required, filters, typed, includeRaw)
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // typed reads plan only the files carrying the resolved schema;
-    // index scans fan out on the bounded driver pool (a fleet
-    // directory must not pay sequential summary walks), and a file
-    // whose CHANNEL catalog cannot satisfy a topic/channel/schema
-    // filter contributes no partitions at all
-    val files = typed.map(_.files).getOrElse(McapIO.resolveFiles(path))
-      .filter(f => filters.forall(fl => McapFilters.fileMayMatch(fl, f)))
-    val perChunk = graft.ros.DriverPool.parMap(files)(f => f -> McapIO.scanIndex(f))
-      .flatMap { case (f, idx) =>
-        val schemaInfo = idx.schemas.map { case (id, s) =>
-          id -> (s.name, s.encoding, McapTypedRead.md5hex(s.data)) }
-        val schemaNames = schemaInfo.map { case (id, (n, _, _)) => id -> n }
-        if (!filters.forall(fl =>
-            McapFilters.fileMayMatchChannels(fl, idx.channels, schemaNames)))
-          Seq.empty
-        else {
-          val chunkParts = idx.chunks.zipWithIndex
-            .filter { case (c, _) => filters.forall(fl => McapFilters.chunkMayMatch(fl, c)) }
-            .map { case (c, i) =>
-              (McapInputPartition(f, i, Some(c), Seq.empty, schemaInfo,
-                idx.channels): InputPartition, c.uncompressedSize)
-            }
-          val inlinePart =
-            if (idx.inlineMessages.nonEmpty)
-              Seq((McapInputPartition(f, -1, None, idx.inlineMessages,
-                schemaInfo, idx.channels): InputPartition,
-                idx.inlineMessages.map(_._2).sum))
-            else Seq.empty
-          chunkParts ++ inlinePart
-        }
-      }
-    // small-chunk archives must not plan one TASK per chunk — pack
-    // consecutive chunks to Spark's file-split budget (see
-    // graft.ros.PartitionPacking); pruning above ran per chunk
-    graft.ros.PartitionPacking.packPartitions(perChunk)
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = typed match {
-    case Some(t) => new McapTypedReaderFactory(t.schemaName, t.encoding,
-      t.schemaData, t.md5s, required, includeRaw, filters)
-    case None => new McapReaderFactory(required, filters, limit)
-  }
-
-  override def description(): String =
-    s"mcap $path${typed.map(t => s" typed=${t.schemaName}").getOrElse("")}, " +
-      s"pushedFilters=[${filters.mkString(", ")}], limit=$limit"
-}
-
-class McapReaderFactory(required: StructType, filters: Array[Filter], limit: Int)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.rows(p, createReader)
-      case p => new McapPartitionReader(p.asInstanceOf[McapInputPartition],
-        required, filters, limit)
-    }
-
-  // every spine column vectorizes (ints/longs / interned strings /
-  // binary), so the untyped scan is always columnar — the mcap twin of
-  // RosbagReaderFactory
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    graft.ros.bag.RosbagColumnarRead.enabled
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.batches(p, createColumnarReader)
-      case p => new McapMetaColumnarReader(p.asInstanceOf[McapInputPartition],
-        required, filters, limit)
-    }
-}
-
 class McapPartitionReader(p: McapInputPartition, required: StructType,
     filters: Array[Filter], limit: Int) extends PartitionReader[InternalRow] {
 
@@ -475,14 +358,8 @@ class McapPartitionReader(p: McapInputPartition, required: StructType,
       case Some(ref) => McapFormat.chunkMessages(McapIO.readChunk(p.path, ref)).iterator
       case None => McapIO.readInlineMessages(p.path, p.inline).iterator
     }
-    val indexed = raw.zipWithIndex
-    val filtered = indexed.filter { case (m, _) =>
-      val ch = p.channels.getOrElse(m.channelId,
-        throw new IllegalStateException(
-          s"message references unknown channel ${m.channelId} in ${p.path}"))
-      val schemaName = p.schemas.get(ch.schemaId).map(_._1).getOrElse("")
-      filters.forall(f => McapFilters.eval(f, m, ch, schemaName, p.path))
-    }
+    val keep = McapDataSource.keep(filters, p)
+    val filtered = raw.zipWithIndex.filter { case (m, _) => keep(m) }
     if (limit >= 0) filtered.take(limit) else filtered
   }
   private var current: McapFormat.McapMessage = _
@@ -559,44 +436,6 @@ object McapIO {
       in.readFully(b)
       b
     } finally in.close()
-  }
-
-  /** file / directory (*.mcap children) / glob / newline-separated
-    * pre-resolved list (McapDataSource.filesSpec) → sorted qualified
-    * URIs, same determinism contract as RosbagIO.resolveBags.
-    */
-  def resolveFiles(path: String): Seq[String] = {
-    if (path.contains('\n')) {
-      // a filesSpec: entries are already-qualified URIs from a prior
-      // resolveFiles call; re-sort for the same determinism contract
-      val out = path.split('\n').toSeq.filter(_.nonEmpty).sorted
-      require(out.nonEmpty, "empty mcap files spec")
-      return out
-    }
-    val (filesystem, p) = fs(path)
-    if (path.exists(c => "*?[]{}".indexOf(c.toInt) >= 0)) {
-      val matches = Option(filesystem.globStatus(p)).getOrElse(Array.empty)
-      // a glob sees both generations during a pending compact journal
-      // exactly like a listing — serve the same consistent view
-      val out = graft.ros.CompactJournal
-        .maskGlobbed(filesystem, matches.filter(_.isFile).toSeq)
-        .map(_.getPath.toString).sorted
-      require(out.nonEmpty, s"glob matches no files: $path")
-      out
-    } else {
-      val st = filesystem.getFileStatus(p)
-      if (st.isDirectory) {
-        // a pending compact journal (crash window) leaves BOTH
-        // generations on disk — serve one consistent view
-        val masked = graft.ros.CompactJournal.maskedNames(filesystem, p)
-        val out = filesystem.listStatus(p)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".mcap") &&
-            !masked.contains(s.getPath.getName))
-          .map(_.getPath.toString).sorted.toSeq
-        require(out.nonEmpty, s"directory contains no .mcap files: $path")
-        out
-      } else Seq(st.getPath.toString)
-    }
   }
 
   // one index per path, latest (mtime, length) version — same shape and
@@ -703,7 +542,7 @@ object McapTypedRead {
     */
   def resolveTarget(path: String, schemaName: String,
                     md5: Option[String] = None): TypedTarget = {
-    val variants = McapIO.resolveFiles(path).flatMap { f =>
+    val variants = McapDataSource.files(path).flatMap { f =>
       McapIO.scanIndex(f).schemas.values
         .filter(_.name == schemaName)
         .map { s =>
@@ -763,38 +602,6 @@ object McapTypedRead {
   }
 }
 
-class McapTypedReaderFactory(schemaName: String, encoding: String,
-    schemaData: Array[Byte], md5s: Set[String],
-    required: StructType, includeRaw: Boolean, filters: Array[Filter])
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.rows(p, createReader)
-      case p => new McapTypedPartitionReader(p.asInstanceOf[McapInputPartition],
-        schemaName, encoding, schemaData, md5s, required, includeRaw, filters)
-    }
-
-  // vectorized path: decode straight into column vectors whenever the
-  // walk is linear (cdr / packed ros1 — never protobuf: field numbers
-  // live in the descriptor) and every required column has a
-  // columnar-supported shape; array-of-struct projections fall back to
-  // the row reader above (Scan.columnarSupportMode PARTITION_DEFINED
-  // routes on this per-partition answer). Shape rules are shared with
-  // the rosbag columnar path — both flatten through flatSchema.
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    graft.ros.bag.RosbagColumnarRead.enabled && encoding != "protobuf" &&
-      graft.ros.bag.RosbagColumnarRead.supportsColumnar(required)
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    partition match {
-      case p: graft.ros.PackedPartition =>
-        graft.ros.ConcatPartitionReader.batches(p, createColumnarReader)
-      case p => new McapTypedColumnarReader(p.asInstanceOf[McapInputPartition],
-        schemaName, encoding, schemaData, md5s, required, includeRaw, filters)
-    }
-}
-
 class McapTypedPartitionReader(p: McapInputPartition, schemaName: String,
     encoding: String, schemaData: Array[Byte], md5s: Set[String],
     required: StructType, includeRaw: Boolean,
@@ -820,12 +627,8 @@ class McapTypedPartitionReader(p: McapInputPartition, schemaName: String,
       case Some(ref) => McapFormat.chunkMessages(McapIO.readChunk(p.path, ref)).iterator
       case None => McapIO.readInlineMessages(p.path, p.inline).iterator
     }
-    raw.zipWithIndex
-      .filter { case (m, _) => typeChannels.contains(m.channelId) }
-      .filter { case (m, _) =>
-        filters.forall(f => McapFilters.eval(f, m, typeChannels(m.channelId),
-          schemaName, p.path))
-      }
+    val keep = graft.ros.ContainerSource.compile(filters, McapDataSource.cols(p))
+    raw.zipWithIndex.filter { case (m, _) => typeChannels.contains(m.channelId) && keep(m) }
   }
   private var current: McapFormat.McapMessage = _
   private var currentOffset: Int = -1
@@ -897,7 +700,7 @@ object McapTables {
 
   def channels(spark: SparkSession, path: String): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(
-      channelRows(McapIO.resolveFiles(path)), 1), ChannelsSchema)
+      channelRows(McapDataSource.files(path)), 1), ChannelsSchema)
 
   /** Attachment records as a DataFrame (executor-side body reads —
     * see [[McapSideTables]]); equivalent to

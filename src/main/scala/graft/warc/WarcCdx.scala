@@ -185,7 +185,7 @@ object WarcCdx {
     * itself.
     */
   def buildSidecars(spark: SparkSession, pathSpec: String): Long = {
-    val files = WarcDataSource.resolveFiles(pathSpec)
+    val files = WarcDataSource.files(pathSpec)
       .filter(_.endsWith(".warc.gz"))
     import spark.implicits._
     spark.createDataset(files)
@@ -226,7 +226,7 @@ object WarcCdx {
     */
   def driverEntries(pathSpec: String): Seq[(String, CdxEntry)] = {
     val conf = graft.ros.bag.RosbagIO.hadoopConf()
-    WarcDataSource.resolveFiles(pathSpec).flatMap { shard =>
+    WarcDataSource.files(pathSpec).flatMap { shard =>
       val side = new Path(sidecarPath(shard))
       val fs = side.getFileSystem(conf)
       if (!fs.exists(side)) Seq.empty

@@ -3,13 +3,15 @@ package graft.warc
 import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.connector.read.streaming.MicroBatchStream
 import org.apache.spark.unsafe.types.UTF8String
+import graft.ros.ContainerSource
 
 /** DataSource V2 `warc` batch source — web-archive crawl shards
   * (Common Crawl's wire format) as a DataFrame, the INGESTION end of
@@ -57,10 +59,7 @@ class WarcDataSource extends TableProvider with DataSourceRegister {
 }
 
 object WarcDataSource {
-  def pathSpec(opts: CaseInsensitiveStringMap): String = {
-    val files = opts.get("files")
-    if (files != null && files.nonEmpty) files else opts.get("path")
-  }
+  def pathSpec(opts: CaseInsensitiveStringMap): String = ContainerSource.pathSpec(opts)
 
   val Schema: StructType = StructType(Seq(
     StructField("file_path", StringType, nullable = false),
@@ -94,102 +93,79 @@ object WarcDataSource {
   def isWarc(name: String): Boolean =
     name.endsWith(".warc") || name.endsWith(".warc.gz")
 
-  /** file | directory (its *.warc / *.warc.gz children) | glob |
-    * newline-separated list; fully-qualified URIs out, sorted.
-    */
-  def resolveFiles(path: String): Seq[String] = {
-    if (path.contains('\n'))
-      return path.split('\n').toSeq.filter(_.nonEmpty)
-        .flatMap(resolveFiles).distinct.sorted
-    val p = new Path(path)
-    val fs = p.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-    if (path.exists(c => "*?[]{}".indexOf(c.toInt) >= 0)) {
-      val out = Option(fs.globStatus(p)).getOrElse(Array.empty)
-        .filter(_.isFile).map(_.getPath.toString).sorted.toSeq
-      require(out.nonEmpty, s"glob matches no files: $path")
-      out
-    } else {
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory) {
-        val out = fs.listStatus(p)
-          .filter(s => s.isFile && isWarc(s.getPath.getName))
-          .map(_.getPath.toString).sorted.toSeq
-        require(out.nonEmpty, s"directory contains no .warc files: $path")
-        out
-      } else Seq(st.getPath.toString)
-    }
-  }
+  /** The shards `spec` denotes (a directory lists its *.warc / *.warc.gz children). */
+  def files(spec: String): Seq[String] = ContainerSource.resolve(spec, isWarc, ".warc")
+
+  val Roles: ContainerSource.Roles = ContainerSource.Roles("file_path", None,
+    Set("file_path", "warc_type", "target_uri", "http_status"), Set("http_status"), Nil)
 }
 
 class WarcTable(path: String, orderedShards: Boolean = false,
     cdxLookup: Boolean = false)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with graft.ros.ContainerSink.LandedMetrics {
-  override def name(): String = s"warc:$path"
+    extends ContainerSource.ContainerTable("warc", path, None, None, "WarcExport.prepare") {
   override def schema(): StructType = WarcDataSource.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.STREAMING_WRITE)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new WarcScanBuilder(path, orderedShards, cdxLookup)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    graft.ros.ContainerSink.builder(path, info, this, "warc", "WarcExport.prepare")(WarcSink(_))
+  override protected def read: ContainerSource.Read =
+    new WarcRead(path, orderedShards, cdxLookup)
+  override protected def sink(req: graft.ros.ContainerSink.Request): graft.ros.ContainerSink.Format =
+    WarcSink(req)
 }
 
-class WarcScanBuilder(path: String, orderedShards: Boolean = false,
-    cdxLookup: Boolean = false) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = WarcDataSource.Schema
-  private var pushed: Array[Filter] = Array.empty
-  private var limit: Int = -1
+/** The WARC read: one unit per shard file — `.warc.gz` compresses
+  * record-at-time into concatenated gzip members, which stream but do
+  * not byte-split, so the corpus's own layout IS the partition grain.
+  * Format hook: under `option("cdx")` pushed target_uri filters resolve
+  * through the per-shard sidecars at PLAN time — only shards with
+  * surviving entries get a partition, and each fetches only its
+  * addressed byte ranges. A shard without a sidecar is LOUD: its
+  * records would silently vanish from the "index-resolved" result.
+  */
+final class WarcRead(val spec: String, orderedShards: Boolean, cdxLookup: Boolean)
+    extends ContainerSource.Read {
+  import ContainerSource._
+  override def kind: String = "warc"
+  override def roles: Roles = WarcDataSource.Roles
+  override lazy val files: Seq[String] = WarcDataSource.files(spec)
+  override def packs: Boolean = false
 
-  override def pruneColumns(requiredSchema: StructType): Unit = {
-    // preserve source column order (readers compile extractors by name)
-    val names = requiredSchema.fieldNames.toSet
-    required = StructType(WarcDataSource.Schema.fields.filter(f => names(f.name)))
-  }
+  override def units(files: Seq[String], s: Planning): Seq[Planned] =
+    if (!cdxLookup) files.map(f => Planned(WarcInputPartition(f), 0L))
+    else files.flatMap { shard =>
+      val sideP = new Path(WarcCdx.sidecarPath(shard))
+      require(sideP.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf()).exists(sideP),
+        s"cdx read: shard $shard has no .cdx sidecar — build one with " +
+          "WarcCdx.buildSidecars or drop option(\"cdx\")")
+      val ranges = WarcCdx.driverEntries(shard).map(_._2)
+        .filter(e => s.filters.forall(WarcFilters.uriMayMatch(_, e.url)))
+        .sortBy(_.offset)
+        .map(e => (e.ordinal, e.offset, e.length))
+      if (ranges.isEmpty) None else Some(Planned(WarcRangesPartition(shard, ranges), 0L))
+    }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(WarcFilters.supported)
-    filters // all residual: Spark re-applies above the scan
-  }
-  override def pushedFilters(): Array[Filter] = pushed
+  override def readers(required: StructType, filters: Array[Filter],
+      limit: Int): PartitionReaderFactory =
+    new Readers({
+      case WarcRangesPartition(f, ranges) => new WarcRangeReader(f, ranges, required, filters, limit)
+      case p: WarcInputPartition => new WarcPartitionReader(p.path, required, filters, limit)
+    })
 
-  override def pushLimit(n: Int): Boolean = { limit = n; false }
+  override def stream(required: StructType, filters: Array[Filter],
+      limit: Int): MicroBatchStream =
+    new WarcMicroBatchStream(spec, readers(required, filters, limit), filters, orderedShards)
 
-  override def build(): Scan =
-    new WarcScan(path, required, pushed, limit, orderedShards, cdxLookup)
+  override def describe(s: Planning): String = s", cdx=$cdxLookup"
 }
 
-private[warc] object WarcFilters {
-  def supported(f: Filter): Boolean = f match {
-    case EqualTo(a, _) => cols(a)
-    case In(a, _) => cols(a)
-    case GreaterThan("http_status", _) | GreaterThanOrEqual("http_status", _) |
-         LessThan("http_status", _) | LessThanOrEqual("http_status", _) => true
-    case _ => false
-  }
-  private def cols(a: String): Boolean =
-    a == "file_path" || a == "warc_type" || a == "target_uri" ||
-      a == "http_status"
-
-  /** Evaluate on header fields alone; None = needs http_status. */
-  def evalHeader(f: Filter, filePath: String,
-      r: WarcFormat.WarcRecord): Option[Boolean] = f match {
-    case EqualTo("file_path", v) => Some(filePath == v)
-    case In("file_path", vs) => Some(vs.contains(filePath))
-    case EqualTo("warc_type", v) => Some(r.warcType == v)
-    case In("warc_type", vs) => Some(vs.contains(r.warcType))
-    case EqualTo("target_uri", v) => Some(r.targetUri == v)
-    case In("target_uri", vs) => Some(vs.contains(r.targetUri))
-    case _ => None
+private[graft] object WarcFilters {
+  /** The record-header filter columns: evaluated before any block work. */
+  def header(filePath: String): PartialFunction[String, ContainerSource.Col[WarcFormat.WarcRecord]] = {
+    case "file_path" => ContainerSource.StrCol[WarcFormat.WarcRecord](_ => filePath)
+    case "warc_type" => ContainerSource.StrCol[WarcFormat.WarcRecord](_.warcType)
+    case "target_uri" => ContainerSource.StrCol[WarcFormat.WarcRecord](_.targetUri)
   }
 
+  /** A status filter on the split HTTP head; a record without one
+    * (null status) passes none of them.
+    */
   def evalStatus(f: Filter, status: Option[Int]): Boolean = f match {
     case EqualTo("http_status", v) => status.contains(v)
     case In("http_status", vs) => status.exists(s => vs.contains(s))
@@ -197,12 +173,6 @@ private[warc] object WarcFilters {
     case GreaterThanOrEqual("http_status", v: Integer) => status.exists(_ >= v)
     case LessThan("http_status", v: Integer) => status.exists(_ < v)
     case LessThanOrEqual("http_status", v: Integer) => status.exists(_ <= v)
-    case _ => true
-  }
-
-  def fileMayMatch(f: Filter, path: String): Boolean = f match {
-    case EqualTo("file_path", v) => path == v
-    case In("file_path", vs) => vs.contains(path)
     case _ => true
   }
 
@@ -224,78 +194,6 @@ final case class WarcInputPartition(path: String) extends InputPartition
   */
 final case class WarcRangesPartition(path: String,
     ranges: Seq[(Int, Long, Long)]) extends InputPartition
-
-class WarcScan(path: String, required: StructType, filters: Array[Filter],
-    limit: Int, orderedShards: Boolean = false, cdxLookup: Boolean = false)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    // compressed on-disk bytes = an UNDER-estimate of row bytes (like
-    // the container sources) — fine for join-side sizing
-    private lazy val bytes: Long = {
-      val conf = graft.ros.bag.RosbagIO.hadoopConf()
-      WarcDataSource.resolveFiles(path).map { f =>
-        val p = new Path(f)
-        try p.getFileSystem(conf).getFileStatus(p).getLen
-        catch { case _: Exception => 0L }
-      }.sum
-    }
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(bytes)
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.empty()
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = WarcDataSource.resolveFiles(path)
-      .filter(f => filters.forall(fl => WarcFilters.fileMayMatch(fl, f)))
-    if (!cdxLookup)
-      return files.map(f => WarcInputPartition(f): InputPartition).toArray
-    // CDX lookup: resolve pushed target_uri filters through the
-    // per-shard sidecars at PLAN time — only shards with surviving
-    // entries get a partition, and each partition fetches only its
-    // addressed byte ranges. A shard without a sidecar is LOUD: its
-    // records would silently vanish from the "index-resolved" result.
-    files.flatMap { shard =>
-      val side = WarcCdx.sidecarPath(shard)
-      val sideP = new org.apache.hadoop.fs.Path(side)
-      require(sideP.getFileSystem(graft.ros.bag.RosbagIO.hadoopConf())
-          .exists(sideP),
-        s"cdx read: shard $shard has no .cdx sidecar — build one with " +
-          "WarcCdx.buildSidecars or drop option(\"cdx\")")
-      val ranges = WarcCdx.driverEntries(shard)
-        .map(_._2)
-        .filter(e => filters.forall(fl => WarcFilters.uriMayMatch(fl, e.url)))
-        .sortBy(_.offset)
-        .map(e => (e.ordinal, e.offset, e.length))
-      if (ranges.isEmpty) None
-      else Some(WarcRangesPartition(shard, ranges): InputPartition)
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (req, fls, lim) = (required, filters, limit)
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        p match {
-          case WarcRangesPartition(f, ranges) =>
-            new WarcRangeReader(f, ranges, req, fls, lim)
-          case wp: WarcInputPartition =>
-            new WarcPartitionReader(wp.path, req, fls, lim)
-        }
-    }
-  }
-
-  override def description(): String =
-    s"warc $path, pushedFilters=[${filters.mkString(", ")}], " +
-      s"limit=$limit, cdx=$cdxLookup"
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new WarcMicroBatchStream(path, required, filters, limit, orderedShards)
-}
 
 /** Standing crawl ingest: each trigger processes the shard files that
   * LANDED since the last one, whole files at a time — crawl shards
@@ -330,24 +228,17 @@ class WarcScan(path: String, required: StructType, filters: Array[Filter],
   * option the full processed set is retained (exact, unbounded — the
   * db3 directory stream's shape).
   */
-class WarcMicroBatchStream(path: String, required: StructType,
-    filters: Array[Filter], limit: Int, orderedShards: Boolean = false)
+class WarcMicroBatchStream(path: String, readers: PartitionReaderFactory,
+    filters: Array[Filter], orderedShards: Boolean = false)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
+  // an empty / not-yet-created prefix is a legal stream start; any
+  // OTHER failure (permissions, transient FS error) fails the trigger
   private def listNow(): Seq[String] =
-    try WarcDataSource.resolveFiles(path)
-      .filter(f => filters.forall(fl => WarcFilters.fileMayMatch(fl, f)))
-    catch {
-      // an empty / not-yet-created prefix is a legal stream start; any
-      // OTHER failure (permissions, transient FS error) must fail the
-      // trigger, not serve an empty offset
-      case _: java.io.FileNotFoundException => Seq.empty
-      case e: IllegalArgumentException
-          if e.getMessage != null && (e.getMessage.contains("glob matches no files") ||
-            e.getMessage.contains("directory contains no .warc files")) => Seq.empty
-    }
+    ContainerSource.resolveTolerant(path, WarcDataSource.isWarc)
+      .filter(ContainerSource.pathMayMatch(filters, "file_path", _))
 
   // Trigger.AvailableNow: pin the end ONCE at query start so the run
   // drains exactly what had landed then and terminates even while
@@ -384,14 +275,7 @@ class WarcMicroBatchStream(path: String, required: StructType,
       .map(f => WarcInputPartition(f): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val (req, fls, lim) = (required, filters, limit)
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new WarcPartitionReader(
-          p.asInstanceOf[WarcInputPartition].path, req, fls, lim)
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory = readers
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -453,16 +337,11 @@ private[warc] final class WarcRowAssembler(filePath: String,
   // inflate); header-only projections and status filters split the
   // block but never touch the entity bytes
   private val needsPayload = names("payload")
-  private val needsHttp = {
-    names("http_status") || names("http_content_type") ||
-      names("http_content_encoding") || names("payload") ||
-      filters.exists {
-        case EqualTo("http_status", _) | In("http_status", _) |
-             GreaterThan("http_status", _) | GreaterThanOrEqual("http_status", _) |
-             LessThan("http_status", _) | LessThanOrEqual("http_status", _) => true
-        case _ => false
-      }
-  }
+  private val (statusFilters, headerFilters) =
+    filters.partition(_.references.head == "http_status")
+  private val header = ContainerSource.compile(headerFilters, WarcFilters.header(filePath))
+  private val needsHttp = names("http_status") || names("http_content_type") ||
+    names("http_content_encoding") || names("payload") || statusFilters.nonEmpty
 
   private val pathUtf8 = UTF8String.fromString(filePath)
   private var current: WarcFormat.WarcRecord = _
@@ -473,14 +352,12 @@ private[warc] final class WarcRowAssembler(filePath: String,
     * false = filtered out.
     */
   def stage(r: WarcFormat.WarcRecord): Boolean = {
-    val headerVerdicts = filters.map(WarcFilters.evalHeader(_, filePath, r))
-    if (headerVerdicts.exists(_.contains(false))) return false
+    if (!header(r)) return false
     val h =
       if (needsHttp && r.contentType.toLowerCase.startsWith("application/http"))
         WarcFormat.httpSplit(r.block, decodeBody = needsPayload)
       else None
-    if (!filters.zip(headerVerdicts).forall { case (f, v) =>
-      v.getOrElse(WarcFilters.evalStatus(f, h.map(_.status))) }) return false
+    if (!statusFilters.forall(WarcFilters.evalStatus(_, h.map(_.status)))) return false
     current = r; http = h
     true
   }

@@ -840,10 +840,10 @@ class ConvertSpec extends SparkTestBase {
     }
     bagOf("old1.bag", 1L); bagOf("old2.bag", 2L)
     def names(): Set[String] =
-      graft.ros.bag.RosbagIO.resolveBags(dir.getAbsolutePath)
+      graft.ros.bag.RosbagDataSource.files(dir.getAbsolutePath)
         .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     def globNames(): Set[String] =
-      graft.ros.bag.RosbagIO.resolveBags(dir.getAbsolutePath + "/*.bag")
+      graft.ros.bag.RosbagDataSource.files(dir.getAbsolutePath + "/*.bag")
         .map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
     assert(names() === Set("old1.bag", "old2.bag"))
     val stage = new java.io.File(dir, ".compact-x")

@@ -768,7 +768,8 @@ class BagSpec extends SparkTestBase {
     writeTopic("a.bag", "/alpha"); writeTopic("b.bag", "/beta")
     import org.apache.spark.sql.sources.{EqualTo, In}
     def scan(fs: org.apache.spark.sql.sources.Filter*) =
-      new RosbagScan(dir.getAbsolutePath, RosbagDataSource.SpineSchema, fs.toArray, -1)
+      new graft.ros.ContainerSource.ContainerScan(new RosbagRead(dir.getAbsolutePath, None, false),
+        RosbagDataSource.SpineSchema, fs.toArray, -1)()
     val all = scan().planInputPartitions()
     val static = scan(EqualTo("topic", "/alpha")).planInputPartitions()
     assert(static.nonEmpty && static.length < all.length)
@@ -790,9 +791,9 @@ class BagSpec extends SparkTestBase {
 
   test("bagsSpec rejects a bag path containing a newline instead of splitting it") {
     val e = intercept[IllegalArgumentException] {
-      RosbagDataSource.bagsSpec(Seq("/ok/a.bag", "/bad/with\nnewline.bag"))
+      graft.ros.ContainerSource.filesSpec(Seq("/ok/a.bag", "/bad/with\nnewline.bag"))
     }
     assert(e.getMessage.contains("newline"))
-    assert(RosbagDataSource.bagsSpec(Seq("/a.bag", "/b.bag")) == "/a.bag\n/b.bag")
+    assert(graft.ros.ContainerSource.filesSpec(Seq("/a.bag", "/b.bag")) == "/a.bag\n/b.bag")
   }
 }

@@ -115,13 +115,13 @@ class RosbagStreamSpec extends SparkTestBase {
     val bags = root.resolve("bags"); Files.createDirectory(bags)
     Files.write(bags.resolve("keep.bag"), bagBytes(4))   // 2 chunks
     Files.write(bags.resolve("gone.bag"), bagBytes(2))   // 1 chunk
-    val stream = new RosbagDirMicroBatchStream(
-      bags.toString, RosbagDataSource.SpineSchema, Array.empty)
-    val latest = stream.latestOffset().asInstanceOf[RosbagDirOffset]
-    assert(latest.bags.size == 2)
+    val stream = new RosbagRead(bags.toString, None, false).stream(
+      RosbagDataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    val latest = stream.latestOffset().asInstanceOf[graft.ros.ContainerSource.CountsOffset]
+    assert(latest.files.size == 2)
     Files.delete(bags.resolve("gone.bag"))
     // replaying the committed-in-checkpoint range must not throw
-    val parts = stream.planInputPartitions(RosbagDirOffset(Map.empty), latest)
+    val parts = stream.planInputPartitions(stream.initialOffset(), latest)
     assert(parts.length == 2, "expected only keep.bag's chunks")
     assert(parts.map(_.asInstanceOf[RosbagInputPartition].path).distinct
       .forall(_.endsWith("keep.bag")))
@@ -136,31 +136,32 @@ class RosbagStreamSpec extends SparkTestBase {
     val root = Files.createTempDirectory("bag_dir_keep")
     val bags = root.resolve("bags"); Files.createDirectory(bags)
     Files.write(bags.resolve("a.bag"), bagBytes(4))     // 2 chunks
-    val stream = new RosbagDirMicroBatchStream(
-      bags.toString, RosbagDataSource.SpineSchema, Array.empty)
-    val first = stream.latestOffset(RosbagDirOffset(Map.empty),
-      ReadLimit.allAvailable()).asInstanceOf[RosbagDirOffset]
-    assert(first.bags.size == 1 && first.bags.values.head == 2L)
+    val stream = new RosbagRead(bags.toString, None, false).stream(
+      RosbagDataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    val first = stream.latestOffset(stream.initialOffset(),
+      ReadLimit.allAvailable()).asInstanceOf[graft.ros.ContainerSource.CountsOffset]
+    assert(first.files.size == 1 && first.files.values.head == Seq(2L))
     Files.delete(bags.resolve("a.bag"))
     val second = stream.latestOffset(first, ReadLimit.allAvailable())
-      .asInstanceOf[RosbagDirOffset]
+      .asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(second == first, "committed entry must survive the dropout")
     // reappearance at the same size: nothing below the committed count re-plans
     Files.write(bags.resolve("a.bag"), bagBytes(4))
     val third = stream.latestOffset(second, ReadLimit.allAvailable())
-      .asInstanceOf[RosbagDirOffset]
+      .asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(stream.planInputPartitions(second, third).isEmpty)
   }
 
   test("dir offset JSON round-trips, including escaped path characters") {
-    val off = RosbagDirOffset(Map(
-      "file:/data/a.bag" -> 3L, "file:/we\"ird\\path.bag" -> 7L,
+    val shape = graft.ros.ContainerSource.PerFile("bags")
+    val off = graft.ros.ContainerSource.CountsOffset(Map(
+      "file:/data/a.bag" -> Seq(3L), "file:/we\"ird\\path.bag" -> Seq(7L),
       // control chars MUST escape: the offset log is line-delimited,
       // so a raw newline would split the checkpoint entry
-      "file:/new\nline\tandctl.bag" -> 2L))
+      "file:/new\nline\tandctl.bag" -> Seq(2L)))(shape)
     val json = off.json()
     assert(!json.contains('\n'))
-    assert(RosbagDirOffset.parse(json) == off)
-    assert(RosbagDirOffset.parse(RosbagDirOffset(Map.empty).json()).bags.isEmpty)
+    assert(graft.ros.ContainerSource.CountsOffset(shape.parse(json))(shape) == off)
+    assert(shape.parse(graft.ros.ContainerSource.CountsOffset(Map.empty)(shape).json()).isEmpty)
   }
 }

@@ -19,7 +19,7 @@ object Db3EtlReference {
   /** `Db3Etl.run` on a fresh `out` (no versioned-dir redirect). */
   def run(spark: SparkSession, path: String, out: String, keepRawBlob: Boolean = true,
       nativeTimestamp: Boolean = false): Db3Etl.Info =
-    runFiles(spark, Db3IO.resolveFiles(path), new java.io.File(path).getName, out,
+    runFiles(spark, Db3DataSource.files(path), new java.io.File(path).getName, out,
       keepRawBlob, nativeTimestamp)
 
   private val metaColNames = Seq("file_path", "msg_id", "topic_id", "topic",
@@ -33,7 +33,7 @@ object Db3EtlReference {
       seqnoOffset: Long = 0L, naming: Map[(String, String), String] = Map.empty,
       append: Boolean = false): Db3Etl.Info = {
     val metas = Db3IO.scanMetas(files)
-    val topicsDim = Db3Tables.topics(spark, Db3DataSource.filesSpec(files))
+    val topicsDim = Db3Tables.topics(spark, graft.ros.ContainerSource.filesSpec(files))
     val allDefs = metas.flatMap { case (f, m) =>
       m.definitions.map { case (t, enc, text) => (t, enc, text, f) } }
     val flattenable: Set[String] = allDefs.groupBy(_._1).collect {
@@ -59,7 +59,7 @@ object Db3EtlReference {
         }
       }
     }
-    val raw = spark.read.format("db3").option("files", Db3DataSource.filesSpec(files)).load()
+    val raw = spark.read.format("db3").option("files", graft.ros.ContainerSource.filesSpec(files)).load()
     val routed =
       if (definedPairs.isEmpty) lit(false)
       else concat_ws("\n", col("file_path"), col("type")).isin(definedPairs.toSeq: _*) &&

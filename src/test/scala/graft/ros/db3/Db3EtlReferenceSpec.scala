@@ -100,7 +100,7 @@ class Db3EtlReferenceSpec extends SparkTestBase with EtlTableAsserts {
     assert(Db3Etl.runIncremental(spark, dir.toString, etl).messages == 18)
     Db3EtlReference.run(spark, dir.toString, ref)
     Files.copy(src.resolve("b.db3"), dir.resolve("b.db3"))
-    val b = Db3IO.resolveFiles(dir.resolve("b.db3").toString)
+    val b = Db3DataSource.files(dir.resolve("b.db3").toString)
     val info = Db3Etl.runIncremental(spark, dir.toString, etl)
     assert(info == Db3EtlReference.runFiles(spark, b, dir.getFileName.toString, ref,
       seqnoOffset = 18L, naming = BagEtl.readManifest(ref), append = true))

@@ -160,8 +160,8 @@ class Db3Spec extends SparkTestBase {
   test("timestamp range pruning drops whole b-tree subtrees from the plan") {
     // genuine fixture: 2000 rows, ts = 1.7e18 + i*1e6, monotone in
     // rowid — exactly the rosbag2 write order the probe relies on
-    val full = new Db3Scan(genuine, Db3DataSource.SpineSchema,
-      Array.empty, None, includeRaw = false, -1)
+    val full = new graft.ros.ContainerSource.ContainerScan(new Db3Read(genuine, None, false, true, 100000000L),
+      Db3DataSource.SpineSchema, Array.empty, -1)()
     val nAll = full.planInputPartitions().length
     assert(nAll > 1, "fixture must split into multiple subtrees")
     val meta = Db3IO.scanMeta(genuine)
@@ -169,8 +169,8 @@ class Db3Spec extends SparkTestBase {
     assert(ranges.isDefined && ranges.get.size == nAll)
     val cut = 1700000000000000000L + 1500L * 1000000L // last 500 rows
     import org.apache.spark.sql.sources.GreaterThanOrEqual
-    val pruned = new Db3Scan(genuine, Db3DataSource.SpineSchema,
-      Array(GreaterThanOrEqual("timestamp", cut)), None, includeRaw = false, -1)
+    val pruned = new graft.ros.ContainerSource.ContainerScan(new Db3Read(genuine, None, false, true, 100000000L),
+      Db3DataSource.SpineSchema, Array(GreaterThanOrEqual("timestamp", cut)), -1)()
     val nKept = pruned.planInputPartitions().length
     assert(nKept < nAll, s"expected subtree pruning, kept $nKept of $nAll")
     // and the query path returns exactly the right rows
@@ -180,9 +180,8 @@ class Db3Spec extends SparkTestBase {
     assert(got.agg(min(col("msg_id"))).head().getLong(0) === 1501L)
     // the escape hatch for foreign/merged writers: pruning off keeps
     // every subtree in the plan; rows still exact via the row filter
-    val unpruned = new Db3Scan(genuine, Db3DataSource.SpineSchema,
-      Array(GreaterThanOrEqual("timestamp", cut)), None, includeRaw = false,
-      -1, tsPruning = false)
+    val unpruned = new graft.ros.ContainerSource.ContainerScan(new Db3Read(genuine, None, false, false, 100000000L),
+      Db3DataSource.SpineSchema, Array(GreaterThanOrEqual("timestamp", cut)), -1)()
     assert(unpruned.planInputPartitions().length === nAll)
     assert(spark.read.format("db3").option("timestamp_pruning", "false")
       .load(genuine).filter(col("timestamp") >= cut).count() === 500)
@@ -230,14 +229,14 @@ class Db3Spec extends SparkTestBase {
     val paths = df.select("file_path").distinct().collect().map(_.getString(0)).sorted
     import org.apache.spark.sql.sources.{EqualTo, In}
     // topic equality prunes the file that cannot carry it
-    val byTopic = new Db3Scan(dir.getAbsolutePath, Db3DataSource.SpineSchema,
-      Array(EqualTo("topic", "/alpha")), None, includeRaw = false, -1)
+    val byTopic = new graft.ros.ContainerSource.ContainerScan(new Db3Read(dir.getAbsolutePath, None, false, true, 100000000L),
+      Db3DataSource.SpineSchema, Array(EqualTo("topic", "/alpha")), -1)()
     val kept = byTopic.planInputPartitions()
       .map(_.asInstanceOf[Db3InputPartition].path).distinct
     assert(kept.length === 1 && kept.head.endsWith("a.db3"))
     // file_path equality plans exactly one file
-    val byPath = new Db3Scan(dir.getAbsolutePath, Db3DataSource.SpineSchema,
-      Array(In("file_path", Array[Any](paths.head))), None, includeRaw = false, -1)
+    val byPath = new graft.ros.ContainerSource.ContainerScan(new Db3Read(dir.getAbsolutePath, None, false, true, 100000000L),
+      Db3DataSource.SpineSchema, Array(In("file_path", Array[Any](paths.head))), -1)()
     assert(byPath.planInputPartitions()
       .forall(_.asInstanceOf[Db3InputPartition].path == paths.head))
     // query-path equality
@@ -248,8 +247,8 @@ class Db3Spec extends SparkTestBase {
       .executedPlan.toString
     assert(plan.contains("pushedFilters=[EqualTo(topic,/alpha)]"), plan)
     // runtime (DPP-path) filters re-plan the partitions the same way
-    val rt = new Db3Scan(dir.getAbsolutePath, Db3DataSource.SpineSchema,
-      Array.empty, None, includeRaw = false, -1)
+    val rt = new graft.ros.ContainerSource.ContainerScan(new Db3Read(dir.getAbsolutePath, None, false, true, 100000000L),
+      Db3DataSource.SpineSchema, Array.empty, -1)()
     assert(rt.filterAttributes().map(_.describe()).toSet ===
       Set("file_path", "topic", "topic_id"))
     val all = rt.planInputPartitions().length
@@ -286,8 +285,8 @@ class Db3Spec extends SparkTestBase {
     assert(Db3IO.subtreeTsRanges(f.toString, meta.subtrees).isEmpty,
       "zigzag timestamps must refute the monotone assumption")
     import org.apache.spark.sql.sources.LessThan
-    val scan = new Db3Scan(f.toString, Db3DataSource.SpineSchema,
-      Array(LessThan("timestamp", 1100L)), None, includeRaw = false, -1)
+    val scan = new graft.ros.ContainerSource.ContainerScan(new Db3Read(f.toString, None, false, true, 100000000L),
+      Db3DataSource.SpineSchema, Array(LessThan("timestamp", 1100L)), -1)()
     assert(scan.planInputPartitions().length === meta.subtrees.length,
       "no subtree may be pruned when probes are non-monotone")
     val got = spark.read.format("db3").load(f.toString)
@@ -413,15 +412,14 @@ class Db3Spec extends SparkTestBase {
     import org.apache.spark.sql.sources.{GreaterThan, In, LessThan}
     // an uncomparable (value, literal) pair must KEEP the row for the
     // retained residual filter — a source-side drop is unrecoverable
-    assert(Db3Filters.eval(GreaterThan("timestamp", "oops"),
-      "p", 1L, 1L, "/t", "T", "cdr", 5L))
-    assert(Db3Filters.eval(LessThan("msg_id", new Object),
-      "p", 1L, 1L, "/t", "T", "cdr", 5L))
-    assert(Db3Filters.eval(In("timestamp", Array[Any]("x")),
-      "p", 1L, 1L, "/t", "T", "cdr", 5L))
+    val row: Db3DataSource.Row = (1L, Seq[Any](null, 1L, 5L, null))
+    def eval(f: org.apache.spark.sql.sources.Filter): Boolean = graft.ros.ContainerSource
+      .compile(Array(f), Db3DataSource.cols("p", Map(1L -> (("/t", "T", "cdr")))))(row)
+    assert(eval(GreaterThan("timestamp", "oops")))
+    assert(eval(LessThan("msg_id", new Object)))
+    assert(eval(In("timestamp", Array[Any]("x"))))
     // recognized pairs still filter exactly
-    assert(!Db3Filters.eval(GreaterThan("timestamp", java.lang.Long.valueOf(9L)),
-      "p", 1L, 1L, "/t", "T", "cdr", 5L))
+    assert(!eval(GreaterThan("timestamp", java.lang.Long.valueOf(9L))))
   }
 
   test("typed read pushes meta filters: rows skip before CDR decode") {

@@ -51,11 +51,11 @@ class Db3StreamSpec extends SparkTestBase {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(topics === Map("/a" -> 3L, "/b" -> 4L))
     // offset JSON round-trips exactly (line-delimited offset log)
-    val st = new Db3MicroBatchStream(dir.toString,
-      Db3DataSource.SpineSchema, Array.empty)
-    val latest = st.latestOffset().asInstanceOf[Db3StreamOffset]
+    val st = new Db3Read(dir.toString, None, false, true, 100000000L).stream(
+      Db3DataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    val latest = st.latestOffset().asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(latest.files.size === 2)
-    assert(Db3StreamOffset.parse(latest.json()) === latest)
+    assert(st.deserializeOffset(latest.json()) === latest)
   }
 
   test("in-flight uploads defer: live -wal sidecar and truncated bytes; landed file reads") {
@@ -68,23 +68,23 @@ class Db3StreamSpec extends SparkTestBase {
     land(dir, "w.db3", "/w", 6000L, 2)
     Files.write(dir.resolve("w.db3-wal"), Array[Byte](1, 2, 3))
 
-    val st = new Db3MicroBatchStream(dir.toString,
-      Db3DataSource.SpineSchema, Array.empty)
-    assert(st.latestOffset().asInstanceOf[Db3StreamOffset].files.isEmpty,
+    val st = new Db3Read(dir.toString, None, false, true, 100000000L).stream(
+      Db3DataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    assert(st.latestOffset().asInstanceOf[graft.ros.ContainerSource.CountsOffset].files.isEmpty,
       "neither in-flight file may be offered")
 
     // uploads complete: full bytes land, the wal is gone
     Files.write(dir.resolve("u.db3"), full)
     Files.delete(dir.resolve("w.db3-wal"))
-    val latest = st.latestOffset().asInstanceOf[Db3StreamOffset]
+    val latest = st.latestOffset().asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(latest.files.keySet.map(p => p.substring(p.lastIndexOf('/') + 1)) ===
       Set("u.db3", "w.db3"))
-    val parts = st.planInputPartitions(Db3StreamOffset(Map.empty), latest)
+    val parts = st.planInputPartitions(st.initialOffset(), latest)
     assert(parts.nonEmpty)
     // an empty/missing prefix is an empty stream, not an error
-    val ghost = new Db3MicroBatchStream(dir.resolve("nope").toString,
-      Db3DataSource.SpineSchema, Array.empty)
-    assert(ghost.latestOffset().asInstanceOf[Db3StreamOffset].files.isEmpty)
+    val ghost = new Db3Read(dir.resolve("nope").toString, None, false, true, 100000000L).stream(
+      Db3DataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    assert(ghost.latestOffset().asInstanceOf[graft.ros.ContainerSource.CountsOffset].files.isEmpty)
   }
 
   test("a committed file transiently unofferable keeps its offset entry (no re-read)") {
@@ -95,18 +95,18 @@ class Db3StreamSpec extends SparkTestBase {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val dir = Files.createTempDirectory("db3_stream_keep")
     land(dir, "a.db3", "/a", 1000L, 3)
-    val st = new Db3MicroBatchStream(dir.toString,
-      Db3DataSource.SpineSchema, Array.empty)
-    val first = st.latestOffset(Db3StreamOffset(Map.empty),
-      ReadLimit.allAvailable()).asInstanceOf[Db3StreamOffset]
+    val st = new Db3Read(dir.toString, None, false, true, 100000000L).stream(
+      Db3DataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    val first = st.latestOffset(st.initialOffset(),
+      ReadLimit.allAvailable()).asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(first.files.size === 1)
     Files.write(dir.resolve("a.db3-wal"), Array[Byte](1, 2, 3))
     val second = st.latestOffset(first, ReadLimit.allAvailable())
-      .asInstanceOf[Db3StreamOffset]
+      .asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(second === first, "committed entry must survive the unofferable window")
     Files.delete(dir.resolve("a.db3-wal"))
     val third = st.latestOffset(second, ReadLimit.allAvailable())
-      .asInstanceOf[Db3StreamOffset]
+      .asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(st.planInputPartitions(second, third).isEmpty,
       "an at-rest file is never re-planned after its one offer")
   }
@@ -115,12 +115,12 @@ class Db3StreamSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("db3_stream_del")
     land(dir, "a.db3", "/a", 1000L, 3)
     land(dir, "b.db3", "/b", 2000L, 3)
-    val st = new Db3MicroBatchStream(dir.toString,
-      Db3DataSource.SpineSchema, Array.empty)
-    val latest = st.latestOffset().asInstanceOf[Db3StreamOffset]
+    val st = new Db3Read(dir.toString, None, false, true, 100000000L).stream(
+      Db3DataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    val latest = st.latestOffset().asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(latest.files.size === 2)
     Files.delete(dir.resolve("b.db3"))
-    val parts = st.planInputPartitions(Db3StreamOffset(Map.empty), latest)
+    val parts = st.planInputPartitions(st.initialOffset(), latest)
     assert(parts.nonEmpty)
     assert(parts.forall(_.asInstanceOf[Db3InputPartition].path.endsWith("a.db3")))
   }

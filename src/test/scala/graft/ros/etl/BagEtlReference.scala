@@ -20,7 +20,7 @@ object BagEtlReference {
       maxMessages: Option[Long] = None, keepRawBlob: Boolean = true,
       blobSideTable: Boolean = false, blobThreshold: Int = 1 << 20,
       nativeTimestamp: Boolean = false): BagEtl.Info =
-    runBags(spark, graft.ros.bag.RosbagIO.resolveBags(bagPath),
+    runBags(spark, graft.ros.bag.RosbagDataSource.files(bagPath),
       new java.io.File(bagPath).getName, out, maxMessages, keepRawBlob,
       blobSideTable, blobThreshold, nativeTimestamp)
 
@@ -55,7 +55,7 @@ object BagEtlReference {
     def numberedFrom(df: DataFrame, seqno: Column, cols: Seq[Column]): DataFrame =
       df.select(seqno.as("seqno") +: cols: _*).filter(kept(col("seqno")))
         .withColumn("seqno", col("seqno") + lit(seqnoOffset))
-    val bagsOpt = graft.ros.bag.RosbagDataSource.bagsSpec(bags)
+    val bagsOpt = graft.ros.ContainerSource.filesSpec(bags)
     def scan(typed: Option[(String, String)]): DataFrame = {
       val r = spark.read.format("rosbag").option("bags", bagsOpt)
       typed.fold(r)(t => r.option("datatype", t._1).option("md5", t._2)

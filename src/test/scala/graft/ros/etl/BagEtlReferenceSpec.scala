@@ -3,7 +3,7 @@ package graft.ros.etl
 import java.nio.file.{Files, Path, Paths}
 import graft.SparkTestBase
 import graft.ros.{MsgDefParser, RosMd5, RosSchemaMapper}
-import graft.ros.bag.{BagFormat, RosbagIO}
+import graft.ros.bag.{BagFormat, RosbagDataSource, RosbagIO}
 import graft.ros.bag.BagFormat.{BagConnection, WriteMessage}
 
 /** The single-job ETL writes what the per-table form it replaced
@@ -71,7 +71,7 @@ class BagEtlReferenceSpec extends SparkTestBase with EtlTableAsserts {
     val (etlB, refB) = outs("graft_ref_budget")
     withConf(tinyPartitions: _*) {
       assert(graft.ros.bag.RosbagSeqno.cheapGroups(
-        RosbagIO.scanIndexes(RosbagIO.resolveBags(dir.toString))).isLeft)
+        RosbagIO.scanIndexes(RosbagDataSource.files(dir.toString))).isLeft)
       assert(BagEtl.run(spark, dir.toString, etlB) ==
         BagEtlReference.run(spark, dir.toString, refB))
     }
@@ -126,7 +126,7 @@ class BagEtlReferenceSpec extends SparkTestBase with EtlTableAsserts {
     BagEtlReference.run(spark, dir.toString, ref)
 
     Files.copy(load.resolve("b.bag"), dir.resolve("b.bag"))
-    val b = RosbagIO.resolveBags(dir.resolve("b.bag").toString)
+    val b = RosbagDataSource.files(dir.resolve("b.bag").toString)
     assert(BagEtl.runIncremental(spark, dir.toString, etl) ==
       BagEtlReference.runBags(spark, b, dir.getFileName.toString, ref,
         seqnoOffset = 7L, naming = BagEtl.readManifest(ref), append = true))

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.ros.{MsgDefParser, RosMd5, RosSchemaMapper}
-import graft.ros.bag.{BagFormat, RosbagIO, RosbagSeqno}
+import graft.ros.bag.{BagFormat, RosbagDataSource, RosbagIO, RosbagSeqno}
 import graft.ros.bag.BagFormat.{BagConnection, WriteMessage}
 
 /** BagEtl numbers messages inside the scan from the chunk index, and
@@ -46,7 +46,7 @@ class BagEtlSeqnoSpec extends SparkTestBase {
   private def out(tag: String) = Files.createTempDirectory(tag).toString + "/out"
 
   private def numbering(dir: Path) =
-    RosbagSeqno.cheapGroups(RosbagIO.scanIndexes(RosbagIO.resolveBags(dir.toString)))
+    RosbagSeqno.cheapGroups(RosbagIO.scanIndexes(RosbagDataSource.files(dir.toString)))
 
   private def withConf[T](kv: (String, String)*)(body: => T): T = {
     val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
@@ -137,7 +137,7 @@ class BagEtlSeqnoSpec extends SparkTestBase {
         if (i % 2 == 0) RosSchemaMapper.encode(aBundle, Seq(i))
         else RosSchemaMapper.encode(bBundle, Seq(i * 0.5, rng.alphanumeric.take(22000).mkString)))),
       messagesPerChunk = 6, compression = "lz4"))
-    val bag = RosbagIO.resolveBags(p.toString)
+    val bag = RosbagDataSource.files(p.toString)
     // the index is read (and cached) once per bag version; this measures
     // the ETL's own pass over the chunks
     RosbagIO.scanIndexes(bag)
@@ -178,7 +178,7 @@ class BagEtlSeqnoSpec extends SparkTestBase {
     assert(triple(first) == reread(o2) && first.count == 7)
     Files.copy(dir.resolve("b.bag"), inc.resolve("b.bag"))
     val slice = BagEtl.runIncremental(spark, inc.toString, o2)
-    val bBag = RosbagIO.resolveBags(inc.resolve("b.bag").toString)
+    val bBag = RosbagDataSource.files(inc.resolve("b.bag").toString)
     assert(slice.count == 4 && triple(slice) == reread(o2, Some(bBag)))
     assert(BagEtl.readCommitRecord(o2).contains((10L, Seq.empty[String])))
 

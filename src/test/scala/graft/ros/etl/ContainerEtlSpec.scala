@@ -3,8 +3,8 @@ package graft.ros.etl
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.ros.db3.{Db3Etl, Db3IO, SqliteFormat}
-import graft.ros.mcap.{CdrCodec, McapEtl, McapIO, Ros2Msg}
+import graft.ros.db3.{Db3DataSource, Db3Etl, SqliteFormat}
+import graft.ros.mcap.{CdrCodec, McapDataSource, McapEtl, Ros2Msg}
 import graft.ros.mcap.McapFormat._
 
 /** McapEtl and Db3Etl through the route-by-type core: `maxMessages`
@@ -150,7 +150,7 @@ class ContainerEtlSpec extends SparkTestBase {
     assertFailedRunsLandNothing(
       dir => mcap(dir, "a.mcap", 8, 100L),
       dir => { mcap(dir, "b.mcap", 6, 200L, enc1 = "json"); dir.resolve("b.mcap") },
-      dir => mcap(dir, "b.mcap", 6, 200L), McapIO.resolveFiles,
+      dir => mcap(dir, "b.mcap", 6, 200L), McapDataSource.files,
       (in, out) => { McapEtl.run(spark, in, out); () },
       (in, out) => McapEtl.runIncremental(spark, in, out).messages)
   }
@@ -171,7 +171,7 @@ class ContainerEtlSpec extends SparkTestBase {
     }
     assertFailedRunsLandNothing(
       dir => db3(dir, "a.db3", 10, 100L), corrupt,
-      dir => db3(dir, "b.db3", 24, 200L), Db3IO.resolveFiles,
+      dir => db3(dir, "b.db3", 24, 200L), Db3DataSource.files,
       (in, out) => { Db3Etl.run(spark, in, out); () },
       (in, out) => Db3Etl.runIncremental(spark, in, out).messages)
   }

@@ -197,7 +197,7 @@ class EtlCommitRecordSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("graft_cr_corrupt")
     Files.write(dir.resolve("a.bag"), lz4("a.bag"))
     Files.write(dir.resolve("b.bag"), bad)
-    val bags = graft.ros.bag.RosbagIO.resolveBags(dir.toString)
+    val bags = graft.ros.bag.RosbagDataSource.files(dir.toString)
     val fresh = Files.createTempDirectory("graft_cr_corrupt_run").toString + "/out"
     intercept[org.apache.spark.SparkException](BagEtl.run(spark, dir.toString, fresh))
     assert(dataFiles(fresh).isEmpty)
@@ -211,7 +211,7 @@ class EtlCommitRecordSpec extends SparkTestBase {
     assert(BagEtl.runIncremental(spark, inc.toString, out).count == 9)
     val before = dataFiles(out)
     Files.write(inc.resolve("b.bag"), bad)
-    val bPath = graft.ros.bag.RosbagIO.resolveBags(inc.resolve("b.bag").toString)
+    val bPath = graft.ros.bag.RosbagDataSource.files(inc.resolve("b.bag").toString)
     intercept[org.apache.spark.SparkException](BagEtl.runIncremental(spark, inc.toString, out))
     assert(dataFiles(out) == before)
     noScratch(out)

@@ -18,7 +18,7 @@ object McapEtlReference {
   /** `McapEtl.run` on a fresh `out` (no versioned-dir redirect). */
   def run(spark: SparkSession, path: String, out: String, keepRawBlob: Boolean = true,
       nativeTimestamp: Boolean = false): McapEtl.Info =
-    runFiles(spark, McapIO.resolveFiles(path), new java.io.File(path).getName, out,
+    runFiles(spark, McapDataSource.files(path), new java.io.File(path).getName, out,
       keepRawBlob, nativeTimestamp)
 
   private val metaColNames = Seq("file_path", "chunk_idx", "offset", "log_time",
@@ -32,7 +32,7 @@ object McapEtlReference {
       keepRawBlob: Boolean = true, nativeTimestamp: Boolean = false,
       seqnoOffset: Long = 0L, naming: Map[(String, String), String] = Map.empty,
       append: Boolean = false): McapEtl.Info = {
-    val channels = McapTables.channels(spark, McapDataSource.filesSpec(files))
+    val channels = McapTables.channels(spark, graft.ros.ContainerSource.filesSpec(files))
     val typedSchemas = files.flatMap(f => McapIO.scanIndex(f).schemas.values
       .filter(s => McapPayload.typedEncodings(s.encoding))
       .map(s => (s.name, McapTypedRead.md5hex(s.data), (s.encoding, s.data), f)))
@@ -58,7 +58,7 @@ object McapEtlReference {
         }
       }
     }
-    val raw = spark.read.format("mcap").option("files", McapDataSource.filesSpec(files)).load()
+    val raw = spark.read.format("mcap").option("files", graft.ros.ContainerSource.filesSpec(files)).load()
     val stageDir = s"$out/_spine_ref"
     val seqnoDir = s"$out/_seqno_ref"
     val metaCols = metaColNames.map(col)
@@ -88,7 +88,7 @@ object McapEtlReference {
     try {
       variants.foreach { case (nm, md5, vFiles, table) =>
         val typed = spark.read.format("mcap")
-          .option("files", McapDataSource.filesSpec(vFiles))
+          .option("files", graft.ros.ContainerSource.filesSpec(vFiles))
           .option("schema_name", nm).option("schema_md5", md5)
           .option("includeRaw", keepRawBlob.toString).load()
         val payload = typed.columns.filterNot(metaInTyped)

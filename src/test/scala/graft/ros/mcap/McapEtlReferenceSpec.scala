@@ -122,7 +122,7 @@ class McapEtlReferenceSpec extends SparkTestBase with EtlTableAsserts {
     McapEtlReference.run(spark, dir.toString, ref)
     // the drifted Imu variant arrives later: a namespaced table
     Files.copy(src.resolve("b.mcap"), dir.resolve("b.mcap"))
-    val b = McapIO.resolveFiles(dir.resolve("b.mcap").toString)
+    val b = McapDataSource.files(dir.resolve("b.mcap").toString)
     val info = McapEtl.runIncremental(spark, dir.toString, etl)
     assert(info == McapEtlReference.runFiles(spark, b, dir.getFileName.toString, ref,
       seqnoOffset = 24L, naming = BagEtl.readManifest(ref), append = true))

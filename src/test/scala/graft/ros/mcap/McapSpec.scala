@@ -86,8 +86,8 @@ class McapSpec extends SparkTestBase {
     // plan directly: the second chunk's range is [cut, ...], the first
     // chunk ends before it
     import org.apache.spark.sql.sources.GreaterThanOrEqual
-    val scan = new McapScan(path, McapDataSource.SpineSchema,
-      Array(GreaterThanOrEqual("log_time", cut)), -1)
+    val scan = new graft.ros.ContainerSource.ContainerScan(new McapRead(path, None, false),
+      McapDataSource.SpineSchema, Array(GreaterThanOrEqual("log_time", cut)), -1)()
     assert(scan.planInputPartitions().length == 1, "first chunk must be pruned")
     // and through the full query path the rows are right
     val got = spark.read.format("mcap").load(path)
@@ -526,7 +526,8 @@ class McapSpec extends SparkTestBase {
     writeTopic("a.mcap", "/alpha"); writeTopic("b.mcap", "/beta")
     import org.apache.spark.sql.sources.{EqualTo, In}
     def scan(fs: org.apache.spark.sql.sources.Filter*) =
-      new McapScan(dir.getAbsolutePath, McapDataSource.SpineSchema, fs.toArray, -1)
+      new graft.ros.ContainerSource.ContainerScan(new McapRead(dir.getAbsolutePath, None, false),
+        McapDataSource.SpineSchema, fs.toArray, -1)()
     val all = scan().planInputPartitions()
     // static topic filter: only /alpha's file plans
     val static = scan(EqualTo("topic", "/alpha")).planInputPartitions()
@@ -691,8 +692,8 @@ class McapSpec extends SparkTestBase {
     assert(paths.length == 2 && paths.forall(_.startsWith("file:")))
     // file-level pruning: an exact file_path equality plans ONE file
     import org.apache.spark.sql.sources.EqualTo
-    val scan = new McapScan(dir.getAbsolutePath, McapDataSource.SpineSchema,
-      Array(EqualTo("file_path", paths.head)), -1)
+    val scan = new graft.ros.ContainerSource.ContainerScan(new McapRead(dir.getAbsolutePath, None, false),
+      McapDataSource.SpineSchema, Array(EqualTo("file_path", paths.head)), -1)()
     assert(scan.planInputPartitions().forall(
       _.asInstanceOf[McapInputPartition].path == paths.head))
     assert(df.filter(col("file_path") === paths.head).count() == 3)

@@ -222,32 +222,33 @@ class McapStreamSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("mcap_dir_keep")
     val p = dir.resolve("a.mcap")
     Files.write(p, writeMcap(schemas, channels, msgs(0, 6)))
-    val st = new McapMicroBatchStream(dir.toString,
-      McapDataSource.SpineSchema, Array.empty)
-    val first = st.latestOffset(McapStreamOffset(Map.empty),
-      ReadLimit.allAvailable()).asInstanceOf[McapStreamOffset]
+    val st = new McapRead(dir.toString, None, false).stream(
+      McapDataSource.SpineSchema, Array.empty, -1).asInstanceOf[graft.ros.ContainerSource.CountsStream]
+    val first = st.latestOffset(st.initialOffset(),
+      ReadLimit.allAvailable()).asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(first.files.size == 1)
     Files.delete(p)
     val second = st.latestOffset(first, ReadLimit.allAvailable())
-      .asInstanceOf[McapStreamOffset]
+      .asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(second == first, "committed entry must survive the dropout")
     // reappearance with identical content: nothing below the committed
     // counts re-plans
     Files.write(p, writeMcap(schemas, channels, msgs(0, 6)))
     val third = st.latestOffset(second, ReadLimit.allAvailable())
-      .asInstanceOf[McapStreamOffset]
+      .asInstanceOf[graft.ros.ContainerSource.CountsOffset]
     assert(st.planInputPartitions(second, third).isEmpty)
   }
 
   test("stream offset JSON round-trips, including escaped path characters") {
-    val off = McapStreamOffset(Map(
-      "file:/data/a.mcap" -> (3L, 0L),
-      "file:/we\"ird\\path.mcap" -> (7L, 2L),
-      "file:/new\nline\tandctl.mcap" -> (0L, 5L)))
+    val shape = graft.ros.ContainerSource.PerFile("files")
+    val off = graft.ros.ContainerSource.CountsOffset(Map(
+      "file:/data/a.mcap" -> Seq(3L, 0L),
+      "file:/we\"ird\\path.mcap" -> Seq(7L, 2L),
+      "file:/new\nline\tandctl.mcap" -> Seq(0L, 5L)))(shape)
     val json = off.json()
     assert(!json.contains('\n'))
-    assert(McapStreamOffset.parse(json) == off)
-    assert(McapStreamOffset.parse(McapStreamOffset(Map.empty).json()).files.isEmpty)
+    assert(graft.ros.ContainerSource.CountsOffset(shape.parse(json))(shape) == off)
+    assert(shape.parse(graft.ros.ContainerSource.CountsOffset(Map.empty)(shape).json()).isEmpty)
   }
 
   test("garbage file first observed under 8 bytes still fails the magic check on growth") {

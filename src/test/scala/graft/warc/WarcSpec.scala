@@ -495,7 +495,8 @@ class WarcSpec extends SparkTestBase {
     val f0 = "file:" + writeFixture(dir, "s0.warc.gz", 1, gz = true).getAbsolutePath
     val f1 = "file:" + writeFixture(dir, "s1.warc.gz", 1, gz = true).getAbsolutePath
     val stream = new WarcMicroBatchStream(dir.getAbsolutePath,
-      WarcDataSource.Schema, Array.empty, -1)
+      new WarcRead(dir.getAbsolutePath, false, false).readers(WarcDataSource.Schema, Array.empty, -1),
+      Array.empty)
     val zero = stream.initialOffset().asInstanceOf[WarcStreamOffset]
     val end1 = stream.latestOffset(zero, ReadLimit.allAvailable())
       .asInstanceOf[WarcStreamOffset]
@@ -521,7 +522,8 @@ class WarcSpec extends SparkTestBase {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
     val dir = java.nio.file.Files.createTempDirectory("graft_warc_wm").toFile
     val stream = new WarcMicroBatchStream(dir.getAbsolutePath,
-      WarcDataSource.Schema, Array.empty, -1, orderedShards = true)
+      new WarcRead(dir.getAbsolutePath, true, false).readers(WarcDataSource.Schema, Array.empty, -1),
+      Array.empty, orderedShards = true)
     var start = stream.initialOffset().asInstanceOf[WarcStreamOffset]
     var plannedTotal = 0
     val epochs = 12
@@ -586,8 +588,8 @@ class WarcSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft_warc_glob").toFile
     writeFixture(dir, "g0.warc", 1, gz = false)
     writeFixture(dir, "g1.warc", 1, gz = false)
-    assert(WarcDataSource.resolveFiles(dir.getAbsolutePath + "/*.warc").size === 2)
-    val listed = WarcDataSource.resolveFiles(dir.getAbsolutePath)
-    assert(WarcDataSource.resolveFiles(listed.mkString("\n")) === listed)
+    assert(WarcDataSource.files(dir.getAbsolutePath + "/*.warc").size === 2)
+    val listed = WarcDataSource.files(dir.getAbsolutePath)
+    assert(WarcDataSource.files(listed.mkString("\n")) === listed)
   }
 }
