@@ -37,13 +37,16 @@ import graft.ros.{ContainerSource, MetadataAgg, MetadataAggScan, MsgDefParser, P
   * chunk that lacks its chunk-info record (an unclosed recording)
   * cannot select it.
   *
-  * Usage: spark.read.format("rosbag").load(path). Connections are
-  * exposed separately via `RosbagTables.connections(spark, path)`.
+  * Usage: spark.read.format("rosbag").load(path), or
+  * `option("bags", ContainerSource.filesSpec(paths))` for one scan
+  * relation over an explicit bag subset (the incremental ETL's new-bags
+  * slice) instead of an N-way union. Connections are exposed separately
+  * via `RosbagTables.connections(spark, path)`.
   */
 class RosbagDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "rosbag"
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
-    val path = RosbagDataSource.pathSpec(options)
+    val path = ContainerSource.pathSpec(options, "bags")
     Option(options.get("datatype")) match {
       case Some(dt) =>
         val target = RosbagTypedRead.resolveTarget(path, dt, Option(options.get("md5")))
@@ -58,7 +61,7 @@ class RosbagDataSource extends TableProvider with DataSourceRegister {
     // insensitively — mismatched handling would silently build a spine
     // table under a typed schema
     val opts = new CaseInsensitiveStringMap(properties)
-    new RosbagTable(RosbagDataSource.pathSpec(opts),
+    new RosbagTable(ContainerSource.pathSpec(opts, "bags"),
       Option(opts.get("datatype")),
       opts.getBoolean("includeRaw", false),
       Option(opts.get("md5")))
@@ -68,15 +71,6 @@ class RosbagDataSource extends TableProvider with DataSourceRegister {
 
 object RosbagDataSource {
   import ContainerSource._
-
-  /** The path spec a table reads: `option("bags", "<p1>\n<p2>...")`
-    * (an explicit newline-separated list, [[ContainerSource.filesSpec]]
-    * — one scan relation over an arbitrary bag subset, e.g. the
-    * incremental ETL's new-bags slice, instead of an N-way union) or
-    * the ordinary load path. Each listed entry may itself be a
-    * file/dir/glob.
-    */
-  def pathSpec(opts: CaseInsensitiveStringMap): String = ContainerSource.pathSpec(opts, "bags")
 
   def isBag(name: String): Boolean = name.endsWith(".bag")
 
@@ -323,12 +317,15 @@ final class RosbagRead(val spec: String, target: Option[RosbagTypedRead.TypedTar
       limit: Int): MicroBatchStream = {
     if (numbered(required)) throw new UnsupportedOperationException(
       "the seqno column numbers a whole batch load; streams cannot select it")
-    val p = new Path(spec)
-    val single = !spec.contains('\n') &&
-      !spec.exists(c => "*?[]{}".indexOf(c.toInt) >= 0) && {
-      try p.getFileSystem(RosbagIO.hadoopConf()).getFileStatus(p).isFile
-      catch { case _: java.io.FileNotFoundException => false }
-    }
+    // the tailed file's qualified URI: its bag_path values equal a batch read's
+    val single: Option[String] =
+      if (spec.contains('\n') || spec.exists(c => "*?[]{}".indexOf(c.toInt) >= 0)) None
+      else {
+        val p = new Path(spec)
+        try Some(p.getFileSystem(RosbagIO.hadoopConf()).getFileStatus(p))
+          .filter(_.isFile).map(_.getPath.toString)
+        catch { case _: java.io.FileNotFoundException => None }
+      }
     val variant = target.map(t => (t.datatype, t.md5))
     val plan = (bag: String, from: Option[Seq[Long]], until: Seq[Long]) => {
       val index = RosbagIO.scanIndex(bag)
@@ -339,18 +336,21 @@ final class RosbagRead(val spec: String, target: Option[RosbagTypedRead.TypedTar
         .map { case (c, i) => RosbagInputPartition(bag, i, c, conns): InputPartition }
     }
     val rd = readers(required, filters, -1)
-    if (single)
-      new CountsStream(OneFile(spec), () => Seq(spec),
-        _ => Map(spec -> Seq(RosbagIO.scanIndex(spec).chunks.size.toLong)),
-        maxMerge, _ => true, plan, rd)
-    else
-      // tolerant: a bag deleted between the listing and the index open
-      // is simply not offered this trigger (it keeps any committed count)
-      new CountsStream(PerFile("bags"),
-        () => resolveTolerant(spec, RosbagDataSource.isBag),
-        bags => RosbagIO.scanIndexesTolerant(bags)
-          .map { case (b, index) => b -> Seq(index.chunks.size.toLong) }.toMap,
-        maxMerge, pathMayMatch(filters, "bag_path", _), plan, rd)
+    single match {
+      case Some(bag) =>
+        new CountsStream(OneFile(bag), () => Seq(bag),
+          _ => Map(bag -> Seq(RosbagIO.scanIndex(bag).chunks.size.toLong)),
+          maxMerge, pathMayMatch(filters, "bag_path", _), plan, rd)
+      case None =>
+        // tolerant: a bag deleted between the listing and the index
+        // open is simply not offered this trigger (it keeps any
+        // committed count)
+        new CountsStream(PerFile("bags"),
+          () => resolveTolerant(spec, RosbagDataSource.isBag),
+          bags => RosbagIO.scanIndexesTolerant(bags)
+            .map { case (b, index) => b -> Seq(index.chunks.size.toLong) }.toMap,
+          maxMerge, pathMayMatch(filters, "bag_path", _), plan, rd)
+    }
   }
 
   /** Metadata-only aggregate pushdown (graft.ros.MetadataAgg):
@@ -528,14 +528,13 @@ object RosbagIO {
     (p.getFileSystem(hadoopConf()), p)
   }
 
-  /** Scan many bag indexes concurrently (cache-aware): the per-bag
-    * index read is driver-side metadata I/O, and a 10k-bag corpus
-    * would otherwise pay it serially on every plan. blocking{} marks
-    * the I/O so the shared pool grows past core count instead of
-    * convoying behind it.
+  /** Scan many bag indexes concurrently (cache-aware) on the bounded
+    * driver pool: the per-bag index read is driver-side metadata I/O,
+    * and a 10k-bag corpus would otherwise pay it serially on every plan.
+    * The original failure ("corrupt bag ...") surfaces.
     */
   def scanIndexes(paths: Seq[String]): Seq[(String, BagFormat.BagIndex)] =
-    scanIndexesImpl(paths, tolerant = false)
+    graft.ros.DriverPool.parMap(paths)(p => p -> scanIndex(p))
 
   /** scanIndexes that DROPS bags vanishing between listing and open
     * (fleet uploaders delete/rename mid-trigger) — for discovery paths
@@ -543,35 +542,9 @@ object RosbagIO {
     * isn't offered; committed replays stay strict.
     */
   def scanIndexesTolerant(paths: Seq[String]): Seq[(String, BagFormat.BagIndex)] =
-    scanIndexesImpl(paths, tolerant = true)
-
-  private def scanIndexesImpl(paths: Seq[String], tolerant: Boolean)
-      : Seq[(String, BagFormat.BagIndex)] = {
-    if (paths.isEmpty) return Seq.empty
-    // bounded pool, not Future.traverse on the global EC: blocking{}
-    // compensation threads scale with the FLEET size there (10k bags =
-    // thousands of threads each holding an open stream); 32 metadata
-    // readers saturate any filesystem's listing path
-    val par = math.min(32, paths.size)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    try {
-      val futs = paths.map { p =>
-        pool.submit(new java.util.concurrent.Callable[(String, BagFormat.BagIndex)] {
-          override def call(): (String, BagFormat.BagIndex) =
-            try p -> scanIndex(p)
-            catch { case _: java.io.FileNotFoundException if tolerant => null }
-        })
-      }
-      futs.map { f =>
-        // surface the ORIGINAL failure ("corrupt bag ...": the message
-        // callers and tests match on), not the pool's ExecutionException
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }.filter(_ != null)
-      // shutdownNow: on the failure path plain shutdown would drain
-      // the remaining queued scans after the caller already rethrew
-    } finally { pool.shutdownNow(); () }
-  }
+    graft.ros.DriverPool.parMap(paths) { p =>
+      try Some(p -> scanIndex(p)) catch { case _: java.io.FileNotFoundException => None }
+    }.flatten
 
   // Index cache: every Spark action re-plans the scan, and an uncached
   // scanIndex re-reads the WHOLE bag driver-side per action. ONE entry

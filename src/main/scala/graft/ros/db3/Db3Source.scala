@@ -68,7 +68,7 @@ class Db3DataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     Option(options.get("schema_name")) match {
       case Some(sn) =>
-        val t = Db3TypedRead.resolveTarget(Db3DataSource.pathSpec(options), sn,
+        val t = Db3TypedRead.resolveTarget(graft.ros.ContainerSource.pathSpec(options), sn,
           Option(options.get("schema_md5")), Option(options.get("schema_text")))
         Db3TypedRead.typedSchema(t.bundle, options.getBoolean("includeRaw", false))
       case None => Db3DataSource.SpineSchema
@@ -76,7 +76,7 @@ class Db3DataSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new Db3Table(Db3DataSource.pathSpec(opts), Option(opts.get("schema_name")),
+    new Db3Table(graft.ros.ContainerSource.pathSpec(opts), Option(opts.get("schema_name")),
       opts.getBoolean("includeRaw", false), Option(opts.get("schema_md5")),
       Option(opts.get("schema_text")),
       opts.getBoolean("timestamp_pruning", true),
@@ -87,12 +87,6 @@ class Db3DataSource extends TableProvider with DataSourceRegister {
 
 object Db3DataSource {
   import graft.ros.ContainerSource._
-
-  /** The "files" option (an explicit newline-separated list,
-    * [[graft.ros.ContainerSource.filesSpec]]) when present, else the
-    * load path.
-    */
-  def pathSpec(opts: CaseInsensitiveStringMap): String = graft.ros.ContainerSource.pathSpec(opts)
 
   /** The db3 files `spec` denotes (a directory lists its *.db3 and
     * *.db3.zstd children). A file a writer's sidecar marks inconsistent

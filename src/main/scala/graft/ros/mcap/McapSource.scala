@@ -39,9 +39,9 @@ class McapDataSource extends TableProvider with DataSourceRegister {
         s"options table='$t' and schema_name='$sn' contradict: side " +
           "tables carry no message payloads to decode — pick one")
       case (Some(t), None) =>
-        McapSideTables.tableFor(t, McapDataSource.pathSpec(options)).schema()
+        McapSideTables.tableFor(t, graft.ros.ContainerSource.pathSpec(options)).schema()
       case (None, Some(sn)) =>
-        val t = McapTypedRead.resolveTarget(McapDataSource.pathSpec(options), sn,
+        val t = McapTypedRead.resolveTarget(graft.ros.ContainerSource.pathSpec(options), sn,
           Option(options.get("schema_md5")))
         McapTypedRead.typedSchema(
           McapPayload.bundle(t.encoding, t.schemaName, t.schemaData),
@@ -59,9 +59,9 @@ class McapDataSource extends TableProvider with DataSourceRegister {
           s"options table='$t' and schema_name contradict: side tables " +
             "carry no message payloads to decode — pick one")
         // non-message payloads: attachments / metadata side tables
-        McapSideTables.tableFor(t, McapDataSource.pathSpec(opts))
+        McapSideTables.tableFor(t, graft.ros.ContainerSource.pathSpec(opts))
       case None =>
-        new McapTable(McapDataSource.pathSpec(opts), Option(opts.get("schema_name")),
+        new McapTable(graft.ros.ContainerSource.pathSpec(opts), Option(opts.get("schema_name")),
           opts.getBoolean("includeRaw", false), Option(opts.get("schema_md5")))
     }
   }
@@ -70,12 +70,6 @@ class McapDataSource extends TableProvider with DataSourceRegister {
 
 object McapDataSource {
   import graft.ros.ContainerSource._
-
-  /** The effective path spec of a read: the "files" option (an explicit
-    * newline-separated list, [[graft.ros.ContainerSource.filesSpec]])
-    * when present, else the load path.
-    */
-  def pathSpec(opts: CaseInsensitiveStringMap): String = graft.ros.ContainerSource.pathSpec(opts)
 
   def isMcap(name: String): Boolean = name.endsWith(".mcap")
 

@@ -51,7 +51,7 @@ class WarcDataSource extends TableProvider with DataSourceRegister {
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    new WarcTable(WarcDataSource.pathSpec(opts),
+    new WarcTable(ContainerSource.pathSpec(opts),
       opts.getBoolean("ordered_shards", false),
       opts.getBoolean("cdx", false))
   }
@@ -59,8 +59,6 @@ class WarcDataSource extends TableProvider with DataSourceRegister {
 }
 
 object WarcDataSource {
-  def pathSpec(opts: CaseInsensitiveStringMap): String = ContainerSource.pathSpec(opts)
-
   val Schema: StructType = StructType(Seq(
     StructField("file_path", StringType, nullable = false),
     // record ordinal within the file — with file_path the stable

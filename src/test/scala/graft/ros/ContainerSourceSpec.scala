@@ -61,19 +61,31 @@ class ContainerSourceSpec extends SparkTestBase {
       contentType = "application/http; msgtype=response")), gzipPerRecord = true)
   }
 
-  test("a file named twice in the list option, or by its directory and by itself, reads once") {
-    val cases = Seq(("rosbag", "bags", "a.bag", bag(10, 100)), ("mcap", "files", "a.mcap", mcap(9, 1000L)),
-      ("db3", "files", "a.db3", db3(40)), ("warc", "files", "a.warc.gz", warc(5)))
-    cases.foreach { case (format, list, name, bytes) =>
-      val dir = tmp(s"graft_dup_$format")
-      val f = write(dir, name, bytes)
-      def count(spec: String) = spark.read.format(format).option(list, spec).load().count()
-      val once = count(f)
-      assert(once > 0, format)
-      assert(count(f + "\n" + f) === once, s"$format: a file listed twice")
-      assert(count(dir.getAbsolutePath + "\n" + f) === once, s"$format: a directory and its file")
-      assert(count("file:" + f + "\n" + f) === once, s"$format: two spellings of one file")
-    }
+  /** A file named twice in the list option, by its directory and by
+    * itself, or by two spellings, reads as often as when named once.
+    */
+  private def readsOnce(format: String, list: String, name: String, bytes: Array[Byte]): Unit = {
+    val dir = tmp(s"graft_dup_$format")
+    val f = write(dir, name, bytes)
+    def count(spec: String) = spark.read.format(format).option(list, spec).load().count()
+    val once = count(f)
+    assert(once > 0)
+    assert(count(f + "\n" + f) === once, "a file listed twice")
+    assert(count(dir.getAbsolutePath + "\n" + f) === once, "a directory and its file")
+    assert(count("file:" + f + "\n" + f) === once, "two spellings of one file")
+  }
+
+  test("rosbag: a bag named twice in option(\"bags\") reads once") {
+    readsOnce("rosbag", "bags", "a.bag", bag(10, 100))
+  }
+  test("mcap: a file named twice in option(\"files\") reads once") {
+    readsOnce("mcap", "files", "a.mcap", mcap(9, 1000L))
+  }
+  test("db3: a file named twice in option(\"files\") reads once") {
+    readsOnce("db3", "files", "a.db3", db3(40))
+  }
+  test("warc: a shard named twice in option(\"files\") reads once") {
+    readsOnce("warc", "files", "a.warc.gz", warc(5))
   }
 
   test("mcap list entries are qualified like a load path, so exact file_path filters keep them") {
@@ -90,6 +102,17 @@ class ContainerSourceSpec extends SparkTestBase {
     // and the channel dimension joins back on the same value
     val channels = graft.ros.mcap.McapTables.channels(spark, dir.getAbsolutePath)
     assert(listed.join(channels, Seq("file_path", "channel_id")).count() === 15)
+  }
+
+  test("a tailed single bag streams the bag_path a batch read reports") {
+    val f = write(tmp("graft_tail_qualified"), "grow.bag", bag(4, 100))
+    val st = new graft.ros.bag.RosbagRead(f, None, false)
+      .stream(graft.ros.bag.RosbagDataSource.SpineSchema, Array.empty, -1)
+    val parts = st.planInputPartitions(st.initialOffset(), st.latestOffset())
+    val batch = spark.read.format("rosbag").load(f).select("bag_path").distinct()
+      .collect().map(_.getString(0)).toSeq
+    assert(batch === Seq("file:" + f))
+    assert(parts.map(_.asInstanceOf[graft.ros.bag.RosbagInputPartition].path).distinct.toSeq === batch)
   }
 
   test("pushed comparisons with unrecognized literal types keep rows, on every format's columns") {
